@@ -581,9 +581,11 @@ def _dup_clusters_loop(
         # removes is smaller than a full extra materialization).
         if _round % _CC_STATS_RESET_EVERY == 0:
             cached = cur.persist(StorageLevel.MEMORY_AND_DISK)
-            cached.count()
-            doubled = cached.localCheckpoint(eager=True)
-            cached.unpersist()
+            try:
+                cached.count()
+                doubled = cached.localCheckpoint(eager=True)
+            finally:  # release the cache when the count or checkpoint throws too
+                cached.unpersist()
         else:
             doubled = cur.localCheckpoint(eager=True)
         changed = doubled.filter(F.col("__changed")).limit(1).count()
@@ -655,7 +657,7 @@ def jaccard_pairs_prefix(
       the `+ rand(42)*0.0` term is the §4.4 optimizer barrier that
       stops the threshold filter being pushed into the join and
       re-inlining the set-op (pinned by
-      tests/test_dedup_ml.py::test_prefix_verify_single_setop_plan)."""
+      tests/test_queries_ext.py::test_single_evaluation_plan_pins)."""
     from pyspark.sql.window import Window
 
     t_eff = threshold - _ROUND4_MARGIN

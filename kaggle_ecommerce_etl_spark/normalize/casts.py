@@ -7,7 +7,9 @@ Reference behavior re-expressed:
 - month normalization: datetime-parse → full month name, else 3-letter
   prefix lookup (ecommerce_s3_to_pg.py:130-135, 157-169)
 
-Everything is a native Column expression (whole-stage codegen, no UDF).
+Each rule is ONE ``*_sql`` function over a column reference's SQL text
+(see ``normalize.sqltext``); the Column helpers of the same name wrap
+it. Everything is native SQL (whole-stage codegen, no UDF).
 pandas' ``to_datetime`` is format-sniffing per value; for deterministic
 distributed semantics we instead try a FIXED format list in priority
 order — documented divergence, same outcomes on all reference inputs.
@@ -16,10 +18,10 @@ order — documented divergence, same outcomes on all reference inputs.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import reduce
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from kaggle_ecommerce_etl_spark.normalize.sqltext import rule_column, sql_str
 
 #: priority-ordered formats covering the reference dataset's spellings
 DATE_FORMATS: tuple[str, ...] = (
@@ -39,50 +41,77 @@ MONTH_PREFIX_MAP: dict[str, str] = {
     "sep": "September", "oct": "October", "nov": "November", "dec": "December",
 }
 
+#: Java's ``\\s`` ([ \\t\\n\\x0B\\f\\r]) plus ``$,()``
+_NUMERIC_NOISE = "$,() \t\n\x0b\f\r"
 
-def strip_numeric_noise(col: Column) -> Column:
+
+def strip_numeric_noise_sql(c: str) -> str:
     """Remove ``$ , ( )`` and whitespace before a numeric cast.
 
     ``translate`` instead of ``regexp_replace(r"[\\$,()\\s]", "")``:
     per-char table lookup vs regex engine, measured 1.5× on the
-    tolerant_numeric scan at sf0.1. The char set IS Java's ``\\s``
-    ([ \\t\\n\\x0B\\f\\r]) plus ``$,()`` — byte-identical results,
-    and the DuckDB oracle keeps the regexp form as the cross-check."""
-    return F.translate(col, "$,() \t\n\x0b\f\r", "")
+    tolerant_numeric scan at sf0.1 — byte-identical results, and the
+    DuckDB oracle keeps the regexp form as the cross-check."""
+    return f"translate({c}, {sql_str(_NUMERIC_NOISE)}, '')"
+
+
+def numeric_sql(c: str) -> str:
+    """Noise-strip then cast-or-NULL."""
+    return f"try_cast({strip_numeric_noise_sql(c)} AS DOUBLE)"
+
+
+def tolerant_numeric_sql(c: str, round_digits: int = 2) -> str:
+    """The engine's ``to_numeric(errors='coerce').round(2)``."""
+    return f"round({numeric_sql(c)}, {int(round_digits)})"
+
+
+def tolerant_date_sql(c: str, formats: Sequence[str] = DATE_FORMATS) -> str:
+    """First format in the priority list that parses wins; else NULL."""
+    parsed = [f"CAST(try_to_timestamp(trim({c}), {sql_str(f)}) AS DATE)" for f in formats]
+    return f"coalesce({', '.join(parsed)})"
+
+
+def date_to_iso_sql(c: str, formats: Sequence[str] = DATE_FORMATS) -> str:
+    """Tolerant parse → canonical ``yyyy-MM-dd`` string (the reference
+    stores dates as ISO strings before the DATE-typed load)."""
+    return f"date_format({tolerant_date_sql(c, formats)}, 'yyyy-MM-dd')"
+
+
+def month_datetime_sql(c: str) -> str:
+    """Month branch 1: column is datetime-like → full month name
+    ('MMMM'); unparseable values → NULL."""
+    return f"date_format({tolerant_date_sql(c)}, 'MMMM')"
+
+
+def month_prefix_sql(c: str) -> str:
+    """Month branch 2: map lower 3-letter prefix via the 12-entry
+    lookup; unmapped → NULL. A CASE beats a 12-row join at any scale
+    (constant-folded, no shuffle, no broadcast)."""
+    arms = " ".join(
+        f"WHEN {sql_str(k)} THEN {sql_str(v)}" for k, v in MONTH_PREFIX_MAP.items()
+    )
+    return f"CASE lower(substring(trim({c}), 1, 3)) {arms} END"
+
+
+def strip_numeric_noise(col: Column) -> Column:
+    return rule_column(col, "STRING", strip_numeric_noise_sql)
 
 
 def tolerant_numeric(col: Column, round_digits: int = 2) -> Column:
-    """Noise-strip then cast-or-NULL then round — the engine's
-    ``to_numeric(errors='coerce').round(2)``."""
-    return F.round(strip_numeric_noise(col).try_cast("double"), round_digits)
+    return rule_column(col, "DOUBLE", tolerant_numeric_sql, round_digits)
 
 
 def tolerant_date(col: Column, formats: Sequence[str] = DATE_FORMATS) -> Column:
-    """First format in the priority list that parses wins; else NULL."""
-    parsed = [F.try_to_timestamp(F.trim(col), F.lit(f)).cast("date") for f in formats]
-    return F.coalesce(*parsed)
+    return rule_column(col, "DATE", tolerant_date_sql, tuple(formats))
 
 
 def date_to_iso(col: Column, formats: Sequence[str] = DATE_FORMATS) -> Column:
-    """Tolerant parse → canonical ``yyyy-MM-dd`` string (the reference
-    stores dates as ISO strings before the DATE-typed load)."""
-    return F.date_format(tolerant_date(col, formats), "yyyy-MM-dd")
+    return rule_column(col, "STRING", date_to_iso_sql, tuple(formats))
 
 
 def normalize_month_expr_datetime(col: Column) -> Column:
-    """Month branch 1: column is datetime-like → full month name
-    ('MMMM'); unparseable values → NULL."""
-    return F.date_format(tolerant_date(col), "MMMM")
+    return rule_column(col, "STRING", month_datetime_sql)
 
 
 def normalize_month_expr_prefix(col: Column) -> Column:
-    """Month branch 2: map lower 3-letter prefix via the 12-entry
-    lookup; unmapped → NULL. A when-chain beats a 12-row join at any
-    scale (constant-folded, no shuffle, no broadcast)."""
-    prefix = F.lower(F.substring(F.trim(col), 1, 3))
-    expr = reduce(
-        lambda acc, kv: acc.when(prefix == F.lit(kv[0]), F.lit(kv[1])),
-        MONTH_PREFIX_MAP.items(),
-        F.when(F.lit(False), F.lit(None)),
-    )
-    return expr.otherwise(F.lit(None))
+    return rule_column(col, "STRING", month_prefix_sql)

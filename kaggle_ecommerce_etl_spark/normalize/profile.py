@@ -32,11 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kaggle_ecommerce_etl_spark.normalize.casts import (
-    MONTH_PREFIX_MAP,
-    strip_numeric_noise,
-    tolerant_date,
+    month_prefix_sql,
+    numeric_sql,
+    tolerant_date_sql,
 )
-from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null
+from kaggle_ecommerce_etl_spark.normalize.sqltext import ident
+from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null_sql
 from kaggle_ecommerce_etl_spark.util import qcol
 
 
@@ -94,18 +95,15 @@ def column_role(name: str) -> str:
     return "candidate"
 
 
-def _prefix_mapped(col) -> F.Column:
-    prefix = F.lower(F.substring(F.trim(col), 1, 3))
-    return prefix.isin(list(MONTH_PREFIX_MAP)).cast("long")
-
-
 def column_profile(df: DataFrame, string_cols: Sequence[str] | None = None) -> dict:
     """ONE job computing every gate the transform layer needs.
 
     Returns ``{"__rows__": n, col: {"nulls", "numeric_ok", "date_ok",
     "prefix_ok", "role"}}`` — per-branch SUCCESS COUNTS, so the caller
     can both pick the coercion and know the post-coercion null count
-    without a second scan.
+    without a second scan. Each count is the non-null count of the
+    very rule text the transform applies, and the whole aggregate is
+    one ``selectExpr``.
     """
     if string_cols is None:
         string_cols = [
@@ -113,31 +111,24 @@ def column_profile(df: DataFrame, string_cols: Sequence[str] | None = None) -> d
         ]
     roles = {c: column_role(c) for c in string_cols}
 
-    aggs = [F.count(F.lit(1)).alias("__rows__")]
+    def nonnull(rule_sql: str, key: str) -> str:
+        return f"sum(CAST({rule_sql} IS NOT NULL AS BIGINT)) AS {ident(key)}"
+
+    aggs = ["count(1) AS __rows__"]
     for c in df.columns:
-        aggs.append(F.sum(qcol(c).isNull().cast("long")).alias(f"nulls__{c}"))
+        aggs.append(f"sum(CAST({ident(c)} IS NULL AS BIGINT)) AS {ident('nulls__' + c)}")
     for c in string_cols:
-        role = roles[c]
+        q, role = ident(c), roles[c]
         if role in ("date", "month"):
-            aggs.append(
-                F.sum(tolerant_date(qcol(c)).isNotNull().cast("long")).alias(f"dateok__{c}")
-            )
+            aggs.append(nonnull(tolerant_date_sql(q), f"dateok__{c}"))
         if role == "month":
-            aggs.append(F.sum(_prefix_mapped(qcol(c))).alias(f"prefixok__{c}"))
+            aggs.append(nonnull(month_prefix_sql(q), f"prefixok__{c}"))
         if role == "candidate":
-            aggs.append(
-                F.sum(
-                    strip_numeric_noise(qcol(c)).try_cast("double").isNotNull().cast("long")
-                ).alias(f"numok__{c}")
-            )
+            aggs.append(nonnull(numeric_sql(q), f"numok__{c}"))
             # non-null AFTER NA-token canonicalization + trim (the
             # else-branch's post-transform null count)
-            aggs.append(
-                F.sum(na_token_to_null(qcol(c)).isNotNull().cast("long")).alias(
-                    f"keepok__{c}"
-                )
-            )
-    row = df.agg(*aggs).collect()[0].asDict()
+            aggs.append(nonnull(na_token_to_null_sql(q), f"keepok__{c}"))
+    row = df.selectExpr(*aggs).collect()[0].asDict()
 
     out: dict = {"__rows__": row["__rows__"]}
     for c in df.columns:

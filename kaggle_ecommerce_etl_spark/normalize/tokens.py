@@ -7,7 +7,9 @@ Reference behavior re-expressed:
 - lower+trim on named columns (ecommerce_s3_to_pg.py:223, 237-240)
 - global trim of string columns (ecommerce_s3_to_pg.py:190-192)
 
-All pure projections: narrow, codegen'd, no shuffle.
+All pure projections: narrow, codegen'd, no shuffle. The NA-token
+rule is ONE ``*_sql`` function over a column reference's SQL text (see
+``normalize.sqltext``); every frame-level op here is one ``selectExpr``.
 """
 
 from __future__ import annotations
@@ -15,9 +17,14 @@ from __future__ import annotations
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from kaggle_ecommerce_etl_spark.util import qcol
+
+from kaggle_ecommerce_etl_spark.normalize.sqltext import (
+    ident,
+    rewrite_columns,
+    rule_column,
+    sql_str,
+)
 
 #: exact token spellings the reference maps to missing
 #: (ecommerce_s3_to_pg.py:137)
@@ -32,24 +39,27 @@ def _string_cols(df: DataFrame, cols: Iterable[str] | None) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
 
 
-def na_token_to_null(col: Column) -> Column:
+def na_token_to_null_sql(c: str) -> str:
     """NULL iff the (trimmed) value is an NA token or empty."""
-    trimmed = F.trim(col)
-    is_na = trimmed.isin([t.strip() for t in NA_TOKENS]) | (trimmed == F.lit(""))
-    return F.when(is_na, F.lit(None)).otherwise(col)
+    tokens = ", ".join(sql_str(t) for t in dict.fromkeys(t.strip() for t in NA_TOKENS))
+    return f"CASE WHEN trim({c}) IN ({tokens}) THEN NULL ELSE {c} END"
+
+
+def na_token_to_null(col: Column) -> Column:
+    return rule_column(col, "STRING", na_token_to_null_sql)
 
 
 def canonicalize_na(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Replace every NA-token spelling (and blank) with SQL NULL in the
     given (default: all string) columns."""
     targets = _string_cols(df, cols)
-    return df.withColumns({c: na_token_to_null(qcol(c)) for c in targets})
+    return rewrite_columns(df, {c: na_token_to_null_sql(ident(c)) for c in targets})
 
 
 def trim_string_columns(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Trim every (default: all string) column."""
     targets = _string_cols(df, cols)
-    return df.withColumns({c: F.trim(qcol(c)) for c in targets})
+    return rewrite_columns(df, {c: f"trim({ident(c)})" for c in targets})
 
 
 def standardize_text_columns(
@@ -63,10 +73,10 @@ def standardize_text_columns(
         for c in _string_cols(df, None)
         if any(s in c.lower() for s in name_contains)
     ]
-    return df.withColumns({c: F.upper(F.trim(qcol(c))) for c in targets})
+    return rewrite_columns(df, {c: f"upper(trim({ident(c)}))" for c in targets})
 
 
 def lower_trim_columns(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """lower(trim(c)) for the listed columns (skips absent)."""
     targets = [c for c in cols if c in df.columns]
-    return df.withColumns({c: F.lower(F.trim(qcol(c))) for c in targets})
+    return rewrite_columns(df, {c: f"lower(trim({ident(c)}))" for c in targets})

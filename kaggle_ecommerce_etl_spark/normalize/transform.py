@@ -17,27 +17,26 @@ Two-phase execution, made explicit:
    profile (each branch's success count IS its post-coercion non-null
    count), so no second scan.
 
-The emitted plan is pure Column expressions — Catalyst fuses it into
-one codegen stage over the scan; total data reads: profile scan + the
-consumer's execution. No UDFs anywhere.
+The emitted plan is one ``selectExpr`` over the rules' SQL text —
+Catalyst fuses it into one codegen stage over the scan; total data
+reads: profile scan + the consumer's execution. No UDFs anywhere.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kaggle_ecommerce_etl_spark.normalize.columns import normalize_column_names
 from kaggle_ecommerce_etl_spark.normalize.casts import (
-    date_to_iso,
-    normalize_month_expr_datetime,
-    normalize_month_expr_prefix,
-    tolerant_numeric,
+    date_to_iso_sql,
+    month_datetime_sql,
+    month_prefix_sql,
+    tolerant_numeric_sql,
 )
 from kaggle_ecommerce_etl_spark.normalize.profile import column_profile
-from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null
-from kaggle_ecommerce_etl_spark.util import qcol
+from kaggle_ecommerce_etl_spark.normalize.sqltext import ident
+from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null_sql
 
 NUMERIC_GATE = 0.9  # reference: converted.notna().sum() > 0.9*len(df)
 
@@ -45,7 +44,7 @@ NUMERIC_GATE = 0.9  # reference: converted.notna().sum() > 0.9*len(df)
 def transform(df: DataFrame, numeric_gate: float = NUMERIC_GATE) -> DataFrame:
     """Rule-driven cleanup of a raw all-string frame (see module doc).
 
-    Emits ONE ``select`` projection (not layered withColumns passes):
+    Emits ONE ``selectExpr`` projection (not layered withColumns passes):
     the coercion branches null out NA tokens inherently ('' / 'NA' fail
     every parse), and the keep-branch composes trim + NA-canonicalize
     at the expression level. A flat projection keeps Catalyst analysis
@@ -61,34 +60,23 @@ def transform(df: DataFrame, numeric_gate: float = NUMERIC_GATE) -> DataFrame:
     n_rows = prof["__rows__"]
 
     select_exprs = []
-    nonnull_after: dict[str, int] = {}
     for c in df.columns:
-        info = prof[c]
+        info, q = prof[c], ident(c)
         if c not in string_cols:
-            select_exprs.append(qcol(c))
-            nonnull_after[c] = n_rows - info["nulls"]
-            continue
-        role = info["role"]
-        if role == "date":
-            expr = date_to_iso(qcol(c))
-            nonnull_after[c] = info["date_ok"]
-        elif role == "month":
+            expr, nonnull_after = q, n_rows - info["nulls"]
+        elif info["role"] == "date":
+            expr, nonnull_after = date_to_iso_sql(q), info["date_ok"]
+        elif info["role"] == "month":
             if info["date_ok"]:
-                expr = normalize_month_expr_datetime(qcol(c))
-                nonnull_after[c] = info["date_ok"]
+                expr, nonnull_after = month_datetime_sql(q), info["date_ok"]
             else:
-                expr = normalize_month_expr_prefix(qcol(c))
-                nonnull_after[c] = info["prefix_ok"]
+                expr, nonnull_after = month_prefix_sql(q), info["prefix_ok"]
         elif n_rows > 0 and info["numeric_ok"] is not None and (
             info["numeric_ok"] / n_rows > numeric_gate
         ):
-            expr = tolerant_numeric(qcol(c))
-            nonnull_after[c] = info["numeric_ok"]
+            expr, nonnull_after = tolerant_numeric_sql(q), info["numeric_ok"]
         else:
-            expr = na_token_to_null(F.trim(qcol(c)))
-            nonnull_after[c] = info["keep_ok"]
-        select_exprs.append(expr.alias(c))
-
-    out = df.select(*select_exprs)
-    dead = [c for c in out.columns if nonnull_after.get(c, 1) == 0]
-    return out.drop(*dead) if dead else out
+            expr, nonnull_after = na_token_to_null_sql(f"trim({q})"), info["keep_ok"]
+        if nonnull_after != 0:  # all-null after coercion → dropped
+            select_exprs.append(f"{expr} AS {q}")
+    return df.selectExpr(*select_exprs)

@@ -17,16 +17,18 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from kaggle_ecommerce_etl_spark.util import qcol
+
+from kaggle_ecommerce_etl_spark.normalize.sqltext import ident
 
 
-def filter_mostly_null_rows(df: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Keep rows whose NULL fraction across all columns is < threshold."""
-    n = len(df.columns)
-    null_count = sum(
-        (qcol(c).isNull().cast("int") for c in df.columns), F.lit(0)
-    )
-    return df.filter((null_count / F.lit(float(n))) < F.lit(threshold))
+def filter_mostly_null_rows(
+    df: DataFrame, threshold: float = 0.5, cols: Sequence[str] | None = None
+) -> DataFrame:
+    """Keep rows whose NULL fraction across ``cols`` (default: all
+    columns) is < threshold. One SQL predicate, one JVM call."""
+    cols = df.columns if cols is None else list(cols)
+    null_count = "".join(f" + CAST({ident(c)} IS NULL AS INT)" for c in cols)
+    return df.filter(f"(0{null_count}) / {float(len(cols))!r}D < {float(threshold)!r}D")
 
 
 def drop_missing_critical(df: DataFrame, critical: Sequence[str]) -> DataFrame:
@@ -40,13 +42,13 @@ def align_columns(
 ) -> DataFrame:
     """Project to the target (name, sql_type) list; absent columns are
     NULL-typed literals. Output column order == target order."""
-    cols = [
-        qcol(name).cast(sql_type).alias(name)
-        if name in df.columns
-        else F.lit(None).cast(sql_type).alias(name)
-        for name, sql_type in target
-    ]
-    return df.select(*cols)
+    present = set(df.columns)
+    return df.selectExpr(
+        *[
+            f"CAST({ident(name) if name in present else 'NULL'} AS {sql_type}) AS {ident(name)}"
+            for name, sql_type in target
+        ]
+    )
 
 
 def add_audit_columns(

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.normalize.columns import normalize_name
-from kaggle_ecommerce_etl_spark.util import qcol
+from kaggle_ecommerce_etl_spark.normalize.sqltext import ident
 
 ORDINAL = "__row_ordinal"
 
@@ -41,14 +41,11 @@ def all_letter_string_row(df: DataFrame) -> Column:
     """Reference ``is_all_strings`` predicate (pg.py:45-55): every cell
     non-null and containing at least one ASCII letter."""
     conds = [
-        qcol(c).isNotNull() & qcol(c).rlike("[a-zA-Z]")
+        f"({ident(c)} IS NOT NULL AND {ident(c)} RLIKE '[a-zA-Z]')"
         for c in df.columns
         if c != ORDINAL
     ]
-    out = F.lit(True)
-    for c in conds:
-        out = out & c
-    return out
+    return F.expr(" AND ".join(["TRUE", *conds]))
 
 
 def split_misaligned_rowgroups(
@@ -79,7 +76,7 @@ def split_misaligned_rowgroups(
     part1 = ordered.filter(F.col(ORDINAL) < split_id).drop(ORDINAL)
 
     new_names = [(c, hdr[c]) for c in data_cols if hdr[c] is not None]
-    part2 = ordered.filter(F.col(ORDINAL) > split_id).select(
-        *[qcol(c).alias(normalize_name(str(new))) for c, new in new_names]
+    part2 = ordered.filter(F.col(ORDINAL) > split_id).selectExpr(
+        *[f"{ident(c)} AS {ident(normalize_name(str(new)))}" for c, new in new_names]
     )
     return part1, part2

@@ -15,21 +15,20 @@ row_number over the data columns ordered by ordinal — one shuffle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kaggle_ecommerce_etl_spark.normalize.columns import drop_columns, rename_columns
+from kaggle_ecommerce_etl_spark.normalize.sqltext import ident
 from kaggle_ecommerce_etl_spark.normalize.tokens import standardize_text_columns
 from kaggle_ecommerce_etl_spark.normalize.transform import transform
 from kaggle_ecommerce_etl_spark.operators.filters import (
     add_audit_columns,
     align_columns,
+    filter_mostly_null_rows,
 )
 from kaggle_ecommerce_etl_spark.operators.structural import (
     ORDINAL,
     split_misaligned_rowgroups,
 )
-from kaggle_ecommerce_etl_spark.util import qcol
 
 #: target column order (reference pg.py:584-589, 604-608; DDL pg.py:516-533)
 TARGET = [
@@ -41,11 +40,10 @@ TARGET = [
 
 
 def _dedup_keep_first(df: DataFrame) -> DataFrame:
-    data_cols = [c for c in df.columns if c != ORDINAL]
-    w = Window.partitionBy(*[qcol(c) for c in data_cols]).orderBy(F.col(ORDINAL))
+    keys = ", ".join(ident(c) for c in df.columns if c != ORDINAL)
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY {keys} ORDER BY {ORDINAL}) AS __rn")
+        .filter("__rn = 1")
         .drop("__rn")
     )
 
@@ -64,7 +62,8 @@ def clean_international_sale(df: DataFrame) -> DataFrame:
     if ORDINAL not in df.columns:
         raise ValueError("international pipeline needs __row_ordinal; read via with_file_order()")
     df = _dedup_keep_first(df)
-    df = _filter_mostly_null_keep_ordinal(df)
+    # <50%-NA filter over the data columns only (ordinal excluded)
+    df = filter_mostly_null_rows(df, 0.5, [c for c in df.columns if c != ORDINAL])
     df = drop_columns(df, ["index"])
     df = rename_columns(df, {"GROSS AMT": "gross_amount"})
     part1, part2 = split_misaligned_rowgroups(df)
@@ -72,11 +71,3 @@ def clean_international_sale(df: DataFrame) -> DataFrame:
     if part2 is not None:
         out = out.unionByName(_clean_part(part2, "part2"))
     return out
-
-
-def _filter_mostly_null_keep_ordinal(df: DataFrame) -> DataFrame:
-    """<50%-NA filter over the data columns only (ordinal excluded)."""
-    data_cols = [c for c in df.columns if c != ORDINAL]
-    n = len(data_cols)
-    null_count = sum((qcol(c).isNull().cast("int") for c in data_cols), F.lit(0))
-    return df.filter((null_count / F.lit(float(n))) < F.lit(0.5))

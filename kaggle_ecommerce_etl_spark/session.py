@@ -4,7 +4,8 @@ Local mode is a correctness harness; the config is chosen so the same
 code runs unchanged on a multi-executor cluster:
 - AQE on (runtime coalesce, skew-join splitting) so shuffle partition
   counts self-tune at any scale factor.
-- shuffle.partitions sized to cores locally; on a real cluster AQE's
+- shuffle.partitions sized to the master's thread count locally (so
+  ``SPARK_GRAFT_CPUS`` moves both together); on a real cluster AQE's
   coalescing makes the initial number mostly irrelevant.
 - UTC session timezone pinned for deterministic date/timestamp semantics
   (and DuckDB-oracle comparability).
@@ -13,8 +14,19 @@ code runs unchanged on a multi-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def master_threads(master: str) -> int:
+    """Task threads a master string runs: ``local`` → 1, ``local[n]`` /
+    ``local[n,retries]`` → n; ``local[*]`` and non-local masters → the
+    host's core count."""
+    m = re.fullmatch(r"local(?:\[(\d+)(?:,\d+)?\])?", master)
+    if m:
+        return int(m.group(1) or 1)
+    return os.cpu_count() or 1
 
 
 def get_spark(
@@ -28,7 +40,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 32
+        shuffle_partitions = master_threads(master)
 
     builder = SparkSession.builder.master(master).appName(app_name)
     conf = {

@@ -363,3 +363,55 @@ def test_cross_prefix_randomized_parity(spark):
                 want[(b, c)] = j
         assert got == want, (threshold, len(got), len(want))
         assert want  # every threshold regime must actually fire
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _assert_cache_released(spark, rdds_before: set[int]) -> None:
+    """No persisted RDD and no cache-manager entry left behind (the
+    test starts from an empty cache manager)."""
+    assert _persistent_rdd_ids(spark) - rdds_before == set()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _cc_loop_inputs(spark):
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    labels = spark.createDataFrame([(1, 1), (2, 2)], "id long, cluster long")
+    return edges, labels
+
+
+def test_cc_stats_reset_releases_cache_when_count_fails(spark):
+    """Round 0 is a stats-reset round (persist → count → checkpoint →
+    unpersist): a failing count must not leave the cache behind."""
+    import pytest
+
+    from kaggle_ecommerce_etl_spark.functions.dedup_ml import _dup_clusters_loop
+
+    edges, labels = _cc_loop_inputs(spark)
+    labels = labels.withColumn(
+        "cluster", F.col("cluster") + F.raise_error(F.lit("boom")).cast("long")
+    )
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(Exception, match="boom"):
+        _dup_clusters_loop(edges, labels, max_iter=1)
+    _assert_cache_released(spark, before)
+
+
+def test_cc_stats_reset_releases_cache_when_checkpoint_fails(spark, monkeypatch):
+    import pytest
+
+    from kaggle_ecommerce_etl_spark.functions.dedup_ml import _dup_clusters_loop
+
+    def failing_checkpoint(self, eager=True):
+        raise RuntimeError("checkpoint failed")
+
+    edges, labels = _cc_loop_inputs(spark)
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(type(labels), "localCheckpoint", failing_checkpoint)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        _dup_clusters_loop(edges, labels, max_iter=1)
+    _assert_cache_released(spark, before)

@@ -4,6 +4,9 @@ CSV outputs (the reference's lambda_handler flow, SURVEY.md §3 EP1)."""
 from __future__ import annotations
 
 import glob
+import uuid
+
+from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.pipelines.job import discover_files, run_batch
 
@@ -102,3 +105,51 @@ def test_run_batch_isolates_corrupt_file(spark, tmp_path):
     assert "sale_report" in results and results["sale_report"].count() == 4
     assert "amazon_sale" not in results
     assert list(errors) == ["amazon"] and errors["amazon"]
+
+
+def test_run_batch_tables_are_materialized_once(spark, tmp_path):
+    """Every returned table reads its stored rows: writing it again
+    (the caller's JDBC sinks) re-runs no cleaning plan — no Exchange,
+    no CSV scan."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_fixtures(raw)
+    results = run_batch(spark, str(raw), str(tmp_path / "cleaned"))
+    assert set(results) == {
+        "amazon_sale", "amazon_sale_version", "sale_report", "international_sale"
+    }
+    for table, df in results.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (table, plan)
+        assert "csv" not in plan.lower(), (table, plan)
+
+
+def test_international_csv_and_jdbc_load_hold_the_same_rows(spark, tmp_path):
+    """The CSV sink and a JDBC load of the returned table hold identical
+    rows, ``loaded_at`` included: ``current_timestamp()`` is evaluated
+    once, when the table is materialized, not once per sink."""
+    from kaggle_ecommerce_etl_spark.sinks.jdbc import (
+        DERBY_DRIVER,
+        derby_memory_url,
+        write_jdbc_append,
+    )
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_fixtures(raw)
+    out = tmp_path / "cleaned"
+    table = run_batch(spark, str(raw), str(out))["international_sale"]
+
+    url = derby_memory_url(f"intl_{uuid.uuid4().hex[:8]}")
+    props = {"driver": DERBY_DRIVER}
+    write_jdbc_append(table, url, "international_sale", properties=props)
+    loaded = spark.read.jdbc(url=url, table="international_sale", properties=props)
+    # the CSV writer's default timestamp format keeps milliseconds
+    loaded = loaded.withColumn("loaded_at", F.date_trunc("millisecond", "loaded_at"))
+    csv = spark.read.schema(table.schema).option("header", True).csv(
+        str(out / "international_sale")
+    )
+
+    assert csv.count() == loaded.count() == 8
+    assert csv.exceptAll(loaded).count() == 0
+    assert loaded.exceptAll(csv).count() == 0

@@ -129,3 +129,85 @@ def test_summary_stats_contract(spark, sf_dir):
         for pct, name in (("25%", "p25"), ("50%", "p50"), ("75%", "p75")):
             approx, ex = float(stats[pct][c]), exact[c][name]
             assert abs(approx - ex) <= max(0.01 * abs(ex), 1e-9), (c, pct, approx, ex)
+
+
+def _messy_wide_frame(spark):
+    """~20 all-string columns over a Range scan: numeric-with-noise
+    candidates plus date- and month-named columns."""
+    exprs = [
+        f"CASE WHEN id % 7 = 0 THEN 'NA' ELSE concat('$', CAST(id AS STRING)) END AS `c {i}`"
+        for i in range(16)
+    ]
+    exprs += [
+        "'2022-01-05' AS order_date", "'05-01-22' AS ship_date",
+        "'jan' AS month", "'2022-03-01' AS Months",
+    ]
+    return spark.range(200).selectExpr(*exprs)
+
+
+def test_transform_py4j_round_trip_budget(spark):
+    """Building the 20-column transform (profile job included) stays a
+    few JVM calls per column: the rules are spliced as SQL text into
+    one aggregate and one projection. Measured 123-125 round trips;
+    the Column-chain builders this replaced made ~10k."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    df = _messy_wide_frame(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        # garbage-collection notices for earlier tests' objects are not
+        # round trips this build made
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = transform(df)
+    finally:
+        client.send_command = send
+    assert len(out.columns) == 20
+    assert calls[0] <= 160, calls[0]
+
+
+def test_column_profile_is_one_aggregate_job(spark):
+    """Every gate of every column comes from ONE aggregation: the same
+    job count as a bare ``count(1)`` over the frame (AQE submits the
+    aggregate's map stage as a job of its own)."""
+    from kaggle_ecommerce_etl_spark.normalize.profile import column_profile
+
+    df = _messy_wide_frame(spark)
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    baseline = jobs("profile-baseline", lambda: df.selectExpr("count(1)").collect())
+    assert jobs("profile-all-gates", lambda: column_profile(df)) == baseline
+
+
+def test_column_helpers_match_frame_rules(spark):
+    """The Column helpers apply the same rule text the frame builders
+    splice, whatever Column they wrap."""
+    df = spark.createDataFrame(
+        [(" $1,234.5 ",), ("n/a",), ("05-01-22",), ("feb",)], "v string"
+    )
+    via_col = df.select(
+        tolerant_numeric(F.concat(F.col("v"), F.lit(""))).alias("n"),
+        date_to_iso(F.col("v")).alias("d"),
+        normalize_month_expr_prefix(F.col("v")).alias("m"),
+    ).collect()
+    assert [tuple(r) for r in via_col] == [
+        (1234.5, None, None),
+        (None, None, None),
+        (None, "2022-05-01", None),
+        (None, None, "February"),
+    ]
