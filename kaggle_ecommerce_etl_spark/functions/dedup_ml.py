@@ -496,7 +496,7 @@ def _dup_clusters_driver(spark, half: DataFrame) -> DataFrame | None:
 #: Pointer-doubling hops per materialized round of the distributed CC
 #: loop: one min-neighbor step (edges⋈labels + agg) plus this many
 #: label-of-label self-joins per barrier. MEASURED r11
-#: (scripts/cc_loop_probe.py, local[32], forced loop, noop sink,
+#: (OPTIMIZATION_r11.md §3b, local[32], forced loop, noop sink,
 #: deterministic xxhash64 random graphs — the supercritical avg-deg-4
 #: regime): extra hops DO NOT cut rounds there — label propagation is
 #: BFS-limited by the single neighbor-min step (rounds ≈ the min
@@ -516,19 +516,11 @@ _CC_DOUBLING_HOPS = 1
 #: BigInt size estimates under ~10k bits at any round count.
 _CC_STATS_RESET_EVERY = 4
 
-#: diagnostic only: materialized rounds the MOST RECENT
-#: _dup_clusters_loop call took to converge (None before any call).
-#: Read by scripts/cc_loop_probe.py to report the rounds×wall trade;
-#: never consulted by engine code.
-LAST_LOOP_ROUNDS: int | None = None
-
-
 def _dup_clusters_loop(
     edges: DataFrame, labels: DataFrame, max_iter: int
 ) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    global LAST_LOOP_ROUNDS
     for _round in range(max_iter):
         nbr_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -591,7 +583,6 @@ def _dup_clusters_loop(
         changed = doubled.filter(F.col("__changed")).limit(1).count()
         labels = doubled.drop("__changed")
         if changed == 0:
-            LAST_LOOP_ROUNDS = _round + 1
             return labels
     # Exhausting max_iter without a fixpoint means the labels are NOT
     # components yet — returning them silently would hand callers a
@@ -657,7 +648,13 @@ def jaccard_pairs_prefix(
       the `+ rand(42)*0.0` term is the §4.4 optimizer barrier that
       stops the threshold filter being pushed into the join and
       re-inlining the set-op (pinned by
-      tests/test_queries_ext.py::test_single_evaluation_plan_pins)."""
+      tests/test_queries_ext.py::test_single_evaluation_plan_pins).
+
+    Side effect at construction: because of that checkpoint, CALLING
+    this function runs a Spark job (explode → dfreq agg → rank window
+    over the whole input) before it returns the DataFrame. A caller
+    that only inspects the plan or schema still pays for the prefix
+    index."""
     from pyspark.sql.window import Window
 
     t_eff = threshold - _ROUND4_MARGIN

@@ -28,9 +28,6 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "y", "los", "de", "que", "es"),
 }
 
-#: a BPE-ish word/number/punct splitter (public GPT-2-style idea, simplified)
-BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
 PUNCT_CLASS = r"[^.!?,;:]"
 
 #: Whitespace split spelled as an EXPLICIT class, identical in Java
@@ -60,11 +57,6 @@ def token_count_expr(col: Column) -> Column:
     )
 
 
-def bpe_ish_token_count_expr(col: Column) -> Column:
-    """Count of BPE-ish tokens (words / numbers / single punct)."""
-    return F.size(F.regexp_extract_all(col, F.lit(BPE_ISH_PATTERN))).cast("long")
-
-
 def _stopword_hits(col: Column, words: tuple[str, ...]) -> Column:
     toks = tokens_expr(col)
     wordset = F.array(*[F.lit(w) for w in words])
@@ -84,18 +76,6 @@ def lang_id_expr(col: Column) -> Column:
         best = F.when(better, F.lit(lang)).otherwise(best)
         best_hits = F.when(better, hits[lang]).otherwise(best_hits)
     return best
-
-
-def punct_ratio_expr(col: Column) -> Column:
-    """(punctuation chars) / max(length, 1)."""
-    n_punct = F.length(F.regexp_replace(col, PUNCT_CLASS, ""))
-    return n_punct.cast("double") / F.greatest(F.length(col), F.lit(1)).cast("double")
-
-
-def stopword_ratio_expr(col: Column) -> Column:
-    """English-stopword tokens / max(token count, 1)."""
-    hits = _stopword_hits(col, STOPWORDS["en"])
-    return hits.cast("double") / F.greatest(token_count_expr(col), F.lit(1)).cast("double")
 
 
 def quality_score_expr(col: Column) -> Column:

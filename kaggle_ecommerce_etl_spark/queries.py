@@ -8,6 +8,11 @@ strings, messy dates) is CONSTRUCTED deterministically from integer key
 columns with identical CASE logic on both the Spark and SQL sides, so
 value hashes must match bit-for-bit.
 
+``REGISTRY`` at the end of this module lists every query: this
+module's and those of the wave modules (``queries_pipeline``,
+``queries_ext`` … ``queries_ext4``). The wave modules import only the
+shared helpers in ``queries_common``, so the import graph is one-way.
+
 Determinism rules used throughout:
 - every computed double is round()ed (2-6 digits depending on magnitude)
 - aggregates over doubles are rounded wide enough to absorb summation-
@@ -24,9 +29,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kaggle_ecommerce_etl_spark.functions.similarity import cosine_topk
+from kaggle_ecommerce_etl_spark import queries_ext as qx
+from kaggle_ecommerce_etl_spark import queries_ext2 as q2
+from kaggle_ecommerce_etl_spark import queries_ext3 as q3
+from kaggle_ecommerce_etl_spark import queries_ext4 as q4
+from kaggle_ecommerce_etl_spark import queries_pipeline as qp
 from kaggle_ecommerce_etl_spark.functions.text import (
-    STOPWORDS,
     fingerprint_expr,
     lang_id_expr,
     quality_score_expr,
@@ -58,47 +66,19 @@ from kaggle_ecommerce_etl_spark.operators.filters import (
     drop_missing_critical,
     filter_mostly_null_rows,
 )
+from kaggle_ecommerce_etl_spark.queries_common import (
+    ORACLE_SESSIONIZE,
+    _SHINGLE_SQL,
+    _band_sql,
+    _dsum,
+    _mh_sql,
+    _oracle_conflict,
+    _sw_list,
+    _t,
+)
 from kaggle_ecommerce_etl_spark.util import outgrows_broadcast
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # deterministic temporal semantics regardless of the caller's session
-    # (DuckDB oracles are UTC-naive)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # see session.py: avoids exponential optimizer cost on wide
-    # isNull-heavy filters (transform / mostly-null queries)
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    if name == "events":
-        # events.parquet has shipped as TIMESTAMP(NANOS) in some testdata
-        # generations, which Spark's vectorized reader rejects: with
-        # nanosAsLong set, ns arrives as long and is floor-div'ed to
-        # micros (identical to DuckDB's ns→µs truncation). Other
-        # generations store TIMESTAMP(MICROS), where the same read
-        # yields a timestamp directly — branch on the landed type.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        if dict(ev.dtypes)["ts"] == "bigint":
-            ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return ev
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _dsum(col: Column | str, scale: int = 2) -> Column:
-    """Order-independent SUM for oracle-compared doubles: accumulate in
-    DECIMAL(23,8) (exact addition — immune to the one-cent divergence a
-    double sum can show vs DuckDB when the two engines reduce in a
-    different order; it bit returned_revenue after an r3 testdata
-    regen), round, hand back double. The SQL twin is
-    ``CAST(round(sum(CAST(x AS DECIMAL(23,8))), s) AS DOUBLE)``.
-
-    Measured cost (sf0.1 Q1 shape, min-of-3): decimal sum 1.13 s vs
-    double 0.49 s — the determinism contract is worth the 2.3×, and
-    the cheaper exact alternative (scaled-long cents) silently wraps
-    past Long.MAX on 100 TB aggregates, so decimal stays."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c.cast("decimal(23,8)")), scale).cast("double")
 
 
 def _davg(col: Column | str, scale: int = 4) -> Column:
@@ -308,14 +288,6 @@ def q_conflict_split_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op 15 flagged side: every row of a >1-occurrence order_id."""
     _, flagged = conflict_split(_t(spark, sf_dir, "lineitem"), ["l_orderkey"])
     return flagged
-
-
-def _oracle_conflict(op: str) -> str:
-    return f"""
-SELECT l.* FROM lineitem l
-JOIN (SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-      HAVING count(*) {op} 1) k USING (l_orderkey)
-"""
 
 
 def q_dedup_full_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -710,31 +682,6 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SESSIONIZE = """
-WITH marks AS (
-  SELECT user_id, ts,
-         -- interval comparison, NOT date_diff('second', ...):
-         -- date_diff counts second-BOUNDARY crossings, so a 1799.2 s
-         -- gap between sub-second timestamps can read as 1800 and
-         -- split a session Spark's session_window (exact-microsecond
-         -- comparison) merges — bit at sf0.1 in the r4 scale probe
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-),
-sessions AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marks
-)
-SELECT user_id, min(ts) AS session_start, count(*) AS n_events
-FROM sessions GROUP BY user_id, sid
-"""
-
-
 def q_events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON field extraction from the events props column."""
     ev = _t(spark, sf_dir, "events")
@@ -809,10 +756,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = ensure_min_partitions(_t(spark, sf_dir, "documents"))
     return d.select("doc_id", lang_id_expr(F.col("text")).alias("lang_pred"))
-
-
-def _sw_list(lang: str) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "]"
 
 
 ORACLE_LANG_ID = f"""
@@ -1180,25 +1123,6 @@ FROM assigned GROUP BY 1, 2
 # north-star: near-duplicate detection (minhash / simhash / jaccard)
 # --------------------------------------------------------------------------
 
-_SHINGLE_SQL = """
-WITH t AS (SELECT doc_id, string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\x0B\\f]+') AS t
-           FROM documents),
-s AS (SELECT doc_id,
-             list_distinct([array_to_string(t[i:i+2], ' ')
-                            for i in range(1, greatest(len(t)-1, 2))]) AS sh
-      FROM t)
-"""
-
-
-def _mh_sql(i: int) -> str:
-    from kaggle_ecommerce_etl_spark.functions.dedup_ml import MH_A, MH_B, MH_P
-
-    return (
-        f"list_min([(({MH_A[i]} * (('0x' || substr(md5(x), 1, 8))::BIGINT)"
-        f" + {MH_B[i]}) % {MH_P}) for x in sh]) AS mh{i}"
-    )
-
-
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-component minhash signature per document (one md5 per shingle)."""
     from kaggle_ecommerce_etl_spark.functions.dedup_ml import minhash_signatures
@@ -1223,11 +1147,6 @@ def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sigs = minhash_signatures(_t(spark, sf_dir, "documents"))
     return lsh_candidate_pairs(sigs)
-
-
-def _band_sql(b: int) -> str:
-    lo, hi = 2 * b, 2 * b + 1
-    return f"md5(mh{lo} || ',' || mh{hi}) AS band{b}"
 
 
 ORACLE_LSH_PAIRS = (
@@ -1510,16 +1429,12 @@ def q_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registry
 # --------------------------------------------------------------------------
 
-#: name → (query fn, oracle SQL or None for rows-only checks)
-#:
-#: ORDER MATTERS: the driver's correctness gate checks the FIRST 50
-#: entries (r1/r2 CORRECTNESS files are exactly the first 50 in
-#: insertion order — a snapshot cap). The top-50 block is therefore
-#: curated for maximal SURVEY.md §2 operator coverage: one query per
-#: distinct operator first, breadth/duplicate-coverage queries after
-#: slot 50 (those are verified locally via scripts/check_oracle.py and
-#: the committed ORACLE_LOCAL evidence).
-REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+#: name → (query fn, oracle SQL or None for rows-only checks), in
+#: catalog order: this module's queries by SURVEY §2 family with the
+#: pipeline block and three extension queries placed among them, then
+#: each later wave module in turn. REGISTRY (below) is this order with
+#: DRIVER_WINDOW moved to the front.
+_CATALOG: dict[str, tuple[QueryFn, str | None]] = {
     "pricing_summary": (q_pricing_summary, ORACLE_PRICING),
     "revenue_by_nation": (q_revenue_by_nation, ORACLE_REVENUE_BY_NATION),
     "topk_per_group": (q_topk_per_group, ORACLE_TOPK),
@@ -1539,9 +1454,20 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "null_counts": (q_null_counts, ORACLE_NULL_COUNTS),
     "parse_gate": (q_parse_gate, ORACLE_PARSE_GATE),
     "drop_allnull_cols": (q_drop_allnull_cols, ORACLE_DROP_ALLNULL),
-    # pipeline layer (ops 1, 3, 5, 16, 19, 33-37) — spliced below via
-    # _merge_pipeline() to keep these inside the driver-checked window
-    "__PIPELINE__": (None, None),  # placeholder, replaced in-place
+    # messy-CSV pipelines, sources and sinks (queries_pipeline.py)
+    "pipeline_sale": (qp.q_pipeline_sale, qp.ORACLE_PIPELINE_SALE),
+    "pipeline_amazon_clean": (qp.q_pipeline_amazon_clean, qp._oracle_amazon("=")),
+    "pipeline_amazon_flagged": (qp.q_pipeline_amazon_flagged, qp._oracle_amazon(">")),
+    "pipeline_jdbc_load": (qp.q_pipeline_jdbc_load, qp._oracle_amazon("=")),
+    "pipeline_international": (qp.q_pipeline_international, qp.ORACLE_PIPELINE_INTL),
+    "upsert_roundtrip": (qp.q_upsert_roundtrip, qp.ORACLE_UPSERT),
+    "csv_roundtrip": (qp.q_csv_roundtrip, qp.ORACLE_CSV_ROUNDTRIP),
+    "incremental_read": (qp.q_incremental_read, qp.ORACLE_INCREMENTAL),
+    "ddl_roundtrip": (qp.q_ddl_roundtrip, qp.ORACLE_DDL_ROUNDTRIP),
+    "audit_columns": (qp.q_audit_columns, qp.ORACLE_AUDIT),
+    "summary_stats_exact": (qp.q_summary_stats_exact, qp.ORACLE_SUMMARY_EXACT),
+    "categorical_profile": (qp.q_categorical_profile, qp.ORACLE_CATEGORICAL),
+    # event-time windows
     "events_tumbling": (q_events_tumbling, ORACLE_TUMBLING),
     "events_sessionize": (q_events_sessionize, ORACLE_SESSIONIZE),
     "events_json_extract": (q_events_json_extract, ORACLE_JSON),
@@ -1561,16 +1487,14 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "simhash": (q_simhash, ORACLE_SIMHASH),
     "word_jaccard_pairs": (q_word_jaccard_pairs, ORACLE_WORD_JACCARD),
     "letters_predicate": (q_letters_predicate, ORACLE_LETTERS),
-    # r3 flagship capabilities promoted into the driver window:
-    # Structured Streaming (declarative + custom state) drained on the
-    # correctness surface, and the as-of temporal join. Spliced via
-    # _merge_extensions (they live in queries_ext.py); the three
-    # relational-breadth queries they displace (revenue_filter,
-    # sales_cube, parts_above_avg) moved below the boundary — still
-    # verified by scripts/check_oracle.py + committed evidence.
-    "__EXT_TOP__": (None, None),  # placeholder, replaced in-place
-    # ---------------- slot 50 boundary (with the 11 pipeline entries
-    # spliced in above, everything below is local-evidence-only) ------
+    # Structured Streaming drains and the as-of join (queries_ext.py)
+    "streaming_dedup_run": (qx.q_streaming_dedup_run, qx.ORACLE_STREAMING_DEDUP),
+    "streaming_sessionize_run": (
+        qx.q_streaming_sessionize_run,
+        qx.ORACLE_STREAMING_SESSIONIZE,
+    ),
+    "asof_join_orders": (qx.q_asof_join_orders, qx.ORACLE_ASOF),
+    # relational breadth
     "revenue_filter": (q_revenue_filter, ORACLE_REVENUE_FILTER),
     "sales_cube": (q_sales_cube, ORACLE_SALES_CUBE),
     "parts_above_avg": (q_parts_above_avg, ORACLE_PARTS_ABOVE_AVG),
@@ -1587,27 +1511,195 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "date_arithmetic": (q_date_arithmetic, ORACLE_DATE_ARITH),
     "explode_tokens": (q_explode_tokens, ORACLE_EXPLODE),
     "conditional_agg": (q_conditional_agg, ORACLE_CONDITIONAL_AGG),
+    # queries_ext.py: TPC-H shapes, statistical and scalar surface,
+    # set-similarity and embedding dedup
+    "jdbc_roundtrip": (qx.q_jdbc_roundtrip, qx.ORACLE_JDBC_ROUNDTRIP),
+    "word_jaccard_capped": (qx.q_word_jaccard_capped, qx.ORACLE_WORD_JACCARD_CAPPED),
+    "exists_late_orders": (qx.q_exists_late_orders, qx.ORACLE_EXISTS_LATE),
+    "nation_volume_pairs": (qx.q_nation_volume_pairs, qx.ORACLE_NATION_PAIRS),
+    "promo_revenue": (qx.q_promo_revenue, qx.ORACLE_PROMO),
+    "disjunctive_revenue": (qx.q_disjunctive_revenue, qx.ORACLE_DISJUNCTIVE),
+    "customers_no_orders": (qx.q_customers_no_orders, qx.ORACLE_NO_ORDERS),
+    "rollup_sales": (qx.q_rollup_sales, qx.ORACLE_ROLLUP),
+    "grouping_sets": (qx.q_grouping_sets, qx.ORACLE_GROUPING_SETS),
+    "full_outer_nation": (qx.q_full_outer_nation, qx.ORACLE_FULL_OUTER),
+    "semi_join_customers": (qx.q_semi_join_customers, qx.ORACLE_SEMI),
+    "quantile_stats": (qx.q_quantile_stats, qx.ORACLE_QUANTILE),
+    "corr_stats": (qx.q_corr_stats, qx.ORACLE_CORR),
+    "array_funcs": (qx.q_array_funcs, qx.ORACLE_ARRAY_FUNCS),
+    "regexp_stats": (qx.q_regexp_stats, qx.ORACLE_REGEXP_STATS),
+    "date_buckets": (qx.q_date_buckets, qx.ORACLE_DATE_BUCKETS),
+    "shingle_jaccard_pairs": (qx.q_shingle_jaccard_pairs, qx.ORACLE_SHINGLE_JACCARD),
+    "embedding_neardup_pairs": (qx.q_embedding_neardup_pairs, qx.ORACLE_EMB_NEARDUP),
+    "embedding_neardup_lsh": (qx.q_embedding_neardup_lsh, qx._emb_neardup_lsh_oracle()),
+    "ann_lsh_topk": (qx.q_ann_lsh_topk, qx._ann_lsh_oracle()),
+    "ann_ivf_topk": (qx.q_ann_ivf_topk, qx._ann_ivf_oracle()),
+    "latest_per_key": (qx.q_latest_per_key, qx.ORACLE_LATEST_PER_KEY),
+    "tfidf_top_terms": (qx.q_tfidf_top_terms, qx.ORACLE_TFIDF),
+    "bigram_doc_freq": (qx.q_bigram_doc_freq, qx.ORACLE_BIGRAM_DF),
+    "hash_sample": (qx.q_hash_sample, qx.ORACLE_HASH_SAMPLE),
+    # scale patterns
+    "bucketed_join_agg": (qx.q_bucketed_join_agg, qx.ORACLE_BUCKETED_JOIN),
+    "salted_skew_join": (qx.q_salted_skew_join, qx.ORACLE_SALTED_JOIN),
+    "partition_pruned_read": (qx.q_partition_pruned_read, qx.ORACLE_PARTITION_PRUNED),
+    # dedup clustering / versioning / corpus stats / schema drift
+    "dup_clusters": (qx.q_dup_clusters, qx.ORACLE_DUP_CLUSTERS),
+    "scd2_versions": (qx.q_scd2_versions, qx.ORACLE_SCD2),
+    "token_stats_by_lang": (qx.q_token_stats_by_lang, qx.ORACLE_TOKEN_STATS),
+    "event_attribution": (qx.q_event_attribution, qx.ORACLE_ATTRIBUTION),
+    "winnow_fingerprints": (qx.q_winnow_fingerprints, qx.ORACLE_WINNOW),
+    "multimodal_frame_sample": (qx.q_multimodal_frame_sample, qx.ORACLE_FRAME_SAMPLE),
+    "stratified_sample": (qx.q_stratified_sample, qx.ORACLE_STRATIFIED),
+    "jaccard_pairs_prefix": (qx.q_jaccard_pairs_prefix, qx.ORACLE_JACCARD_PREFIX),
+    "rank_functions": (qx.q_rank_functions, qx.ORACLE_RANK_FUNCS),
+    # corpus-hygiene ops: redaction, quality repetition, leakage guard
+    "pii_scrub": (qx.q_pii_scrub, qx.ORACLE_PII_SCRUB),
+    "repetition_ratio": (qx.q_repetition_ratio, qx.ORACLE_REPETITION),
+    "decontaminate": (qx.q_decontaminate, qx.ORACLE_DECONTAMINATE),
+    "embedding_quantize": (qx.q_embedding_quantize, qx.ORACLE_EMB_QUANTIZE),
+    "fuzzy_name_pairs": (qx.q_fuzzy_name_pairs, qx.ORACLE_FUZZY),
+    "funnel_conversion": (qx.q_funnel_conversion, qx.ORACLE_FUNNEL),
+    "market_share": (qx.q_market_share, qx.ORACLE_MARKET_SHARE),
+    "returned_revenue": (qx.q_returned_revenue, qx.ORACLE_RETURNED_REVENUE),
+    "asof_join_broadcast": (qx.q_asof_join_broadcast, qx.ORACLE_ASOF_BROADCAST),
+    "streaming_upsert_run": (qx.q_streaming_upsert_run, qx.ORACLE_STREAMING_UPSERT),
+    "compact_files": (qx.q_compact_files, qx.ORACLE_COMPACT),
+    "incremental_agg_merge": (qx.q_incremental_agg_merge, qx.ORACLE_INCR_AGG),
+    "zorder_code": (qx.q_zorder_code, qx.ORACLE_ZORDER),
+    "data_quality_report": (qx.q_data_quality_report, qx.ORACLE_DQ),
+    "price_histogram": (qx.q_price_histogram, qx.ORACLE_PRICE_HIST),
+    "asof_join_forward": (qx.q_asof_join_forward, qx.ORACLE_ASOF_FWD),
+    "doc_chunks": (qx.q_doc_chunks, qx.ORACLE_DOC_CHUNKS),
+    "incremental_neardup": (qx.q_incremental_neardup, qx.ORACLE_INCR_NEARDUP),
+    "streaming_window_run": (qx.q_streaming_window_run, qx.ORACLE_STREAMING_WINDOW),
+    "persist_reuse": (qx.q_persist_reuse, qx.ORACLE_PERSIST_REUSE),
+    "null_safe_join": (qx.q_null_safe_join, qx.ORACLE_NULL_SAFE),
+    "hierarchy_rollup": (qx.q_hierarchy_rollup, qx.ORACLE_HIERARCHY),
+    "resample_gapfill": (qx.q_resample_gapfill, qx.ORACLE_RESAMPLE),
+    "unpivot_metrics": (qx.q_unpivot_metrics, qx.ORACLE_UNPIVOT),
+    # defined with the pipelines, catalogued after the first extension wave
+    "schema_drift_merge": (qp.q_schema_drift_merge, qp.ORACLE_SCHEMA_DRIFT),
+    # queries_ext2.py: TPC-H Q12/Q13/Q17/Q21 shapes, corpus preparation,
+    # formats and streaming joins
+    "priority_line_counts": (q2.q_priority_line_counts, q2.ORACLE_PRIORITY_LINES),
+    "cust_order_distribution": (
+        q2.q_cust_order_distribution,
+        q2.ORACLE_CUST_ORDER_DIST,
+    ),
+    "small_qty_revenue": (q2.q_small_qty_revenue, q2.ORACLE_SMALL_QTY),
+    "late_supplier_blame": (q2.q_late_supplier_blame, q2.ORACLE_LATE_BLAME),
+    "pack_sequences": (q2.q_pack_sequences, q2.ORACLE_PACK_SEQUENCES),
+    "pack_materialize": (q2.q_pack_materialize, q2.ORACLE_PACK_MATERIALIZE),
+    "doc_truncate": (q2.q_doc_truncate, q2.ORACLE_DOC_TRUNCATE),
+    "corpus_shuffle": (q2.q_corpus_shuffle, q2.ORACLE_CORPUS_SHUFFLE),
+    "token_rarity": (q2.q_token_rarity, q2.ORACLE_TOKEN_RARITY),
+    "semantic_dedup_keep": (q2.q_semantic_dedup_keep, q2.ORACLE_SEMANTIC_DEDUP),
+    "semantic_dedup_auto": (q2.q_semantic_dedup_auto, q2.ORACLE_SEMANTIC_DEDUP),
+    "mix_rebalance": (q2.q_mix_rebalance, q2.ORACLE_MIX_REBALANCE),
+    "span_dedup": (q2.q_span_dedup, q2.ORACLE_SPAN_DEDUP),
+    "observed_metrics": (q2.q_observed_metrics, q2.ORACLE_OBSERVED_METRICS),
+    "corpus_pipeline": (q2.q_corpus_pipeline, q2.ORACLE_CORPUS_PIPELINE),
+    "rolling_features": (q2.q_rolling_features, q2.ORACLE_ROLLING_FEATURES),
+    "interpolate_ts": (q2.q_interpolate_ts, q2.ORACLE_INTERPOLATE_TS),
+    "variant_shred": (q2.q_variant_shred, q2.ORACLE_VARIANT_SHRED),
+    "set_ops_multiset": (q2.q_set_ops_multiset, q2.ORACLE_SET_OPS_MULTISET),
+    "range_frame_window": (q2.q_range_frame_window, q2.ORACLE_RANGE_FRAME),
+    "multimodal_dedup": (q2.q_multimodal_dedup, q2.ORACLE_MULTIMODAL_DEDUP),
+    "table_checksum": (q2.q_table_checksum, q2.ORACLE_TABLE_CHECKSUM),
+    "jdbc_partitioned_read": (q2.q_jdbc_partitioned_read, q2.ORACLE_JDBC_PARTITIONED),
+    "snapshot_diff": (q2.q_snapshot_diff, q2.ORACLE_SNAPSHOT_DIFF),
+    "conflict_split_flagged_aggjoin": (
+        q2.q_conflict_split_flagged_aggjoin,
+        _oracle_conflict(">"),
+    ),
+    "sessionize_dynamic_gap": (
+        q2.q_sessionize_dynamic_gap,
+        q2.ORACLE_SESSIONIZE_DYNAMIC,
+    ),
+    "join_hints": (q2.q_join_hints, q2.ORACLE_JOIN_HINTS),
+    "merge_upsert": (q2.q_merge_upsert, q2.ORACLE_MERGE_UPSERT),
+    "cdc_apply": (q2.q_cdc_apply, q2.ORACLE_CDC_APPLY),
+    "dedup_keep_richest": (q2.q_dedup_keep_richest, q2.ORACLE_DEDUP_RICHEST),
+    "jsonl_roundtrip": (q2.q_jsonl_roundtrip, q2.ORACLE_JSONL_ROUNDTRIP),
+    "jsonl_quarantine": (q2.q_jsonl_quarantine, q2.ORACLE_JSONL_QUARANTINE),
+    "orc_roundtrip": (q2.q_orc_roundtrip, q2.ORACLE_ORC_ROUNDTRIP),
+    "stream_stream_join_run": (
+        q2.q_stream_stream_join_run,
+        q2.ORACLE_STREAM_STREAM_JOIN,
+    ),
+    "medallion_stream_run": (q2.q_medallion_stream_run, q2.ORACLE_MEDALLION),
+    # queries_ext3.py: recursive SQL, sketches, Python data sources and UDTFs
+    "recursive_ancestors": (q3.q_recursive_ancestors, q3.ORACLE_RECURSIVE_ANCESTORS),
+    "lateral_topk_orders": (q3.q_lateral_topk_orders, q3.ORACLE_LATERAL_TOPK),
+    "heavy_hitters": (q3.q_heavy_hitters, q3.ORACLE_HEAVY_HITTERS),
+    "hll_distinct_gate": (q3.q_hll_distinct_gate, q3.ORACLE_HLL_GATE),
+    "theta_union_gate": (q3.q_theta_union_gate, q3.ORACLE_THETA_GATE),
+    "approx_quantile_gate": (q3.q_approx_quantile_gate, q3.ORACLE_APPROX_QUANTILE),
+    "listagg_nations": (q3.q_listagg_nations, q3.ORACLE_LISTAGG),
+    "text_roundtrip": (q3.q_text_roundtrip, q3.ORACLE_TEXT_ROUNDTRIP),
+    "pyds_manifest_read": (q3.q_pyds_manifest_read, q3.ORACLE_PYDS_MANIFEST),
+    # same semantics as the batch sessionizer, so the same oracle
+    "streaming_session_run": (q3.q_streaming_session_run, ORACLE_SESSIONIZE),
+    "topk_sketch_merge": (q3.q_topk_sketch_merge, q3.ORACLE_TOPK_MERGE),
+    "theta_set_algebra": (q3.q_theta_set_algebra, q3.ORACLE_THETA_SET_ALGEBRA),
+    "catalog_table_roundtrip": (
+        q3.q_catalog_table_roundtrip,
+        q3.ORACLE_CATALOG_ROUNDTRIP,
+    ),
+    "hll_union_gate": (q3.q_hll_union_gate, q3.ORACLE_HLL_UNION_GATE),
+    "param_bind_filter": (q3.q_param_bind_filter, q3.ORACLE_PARAM_BIND),
+    "collation_dedup": (q3.q_collation_dedup, q3.ORACLE_COLLATION_DEDUP),
+    "equidepth_histogram": (q3.q_equidepth_histogram, q3.ORACLE_EQUIDEPTH),
+    "id_gap_islands": (q3.q_id_gap_islands, q3.ORACLE_GAP_ISLANDS),
+    "bitmap_distinct_customers": (
+        q3.q_bitmap_distinct_customers,
+        q3.ORACLE_BITMAP_DISTINCT,
+    ),
+    "bitmap_union_distinct": (q3.q_bitmap_union_distinct, q3.ORACLE_BITMAP_UNION),
+    "interval_coverage": (q3.q_interval_coverage, q3.ORACLE_INTERVAL_COVERAGE),
+    "sql_udf_chunks": (q3.q_sql_udf_chunks, q3.ORACLE_SQL_UDF_CHUNKS),
+    "kll_quantile_gate": (q3.q_kll_quantile_gate, q3.ORACLE_KLL_GATE),
+    "cms_frequency_gate": (q3.q_cms_frequency_gate, q3.ORACLE_CMS_GATE),
+    "regr_fit_stats": (q3.q_regr_fit_stats, q3.ORACLE_REGR_FIT),
+    "xml_roundtrip": (q3.q_xml_roundtrip, q3.ORACLE_XML_ROUNDTRIP),
+    "kv_parse": (q3.q_kv_parse, q3.ORACLE_KV_PARSE),
+    "streaming_enrich_run": (q3.q_streaming_enrich_run, q3.ORACLE_STREAMING_ENRICH),
+    "udtf_repeat_runs": (q3.q_udtf_repeat_runs, q3.ORACLE_UDTF_REPEAT_RUNS),
+    "state_store_read": (q3.q_state_store_read, q3.ORACLE_STATE_STORE_READ),
+    "arrow_group_mad": (q3.q_arrow_group_mad, q3.ORACLE_ARROW_GROUP_MAD),
+    "pyds_stream_run": (q3.q_pyds_stream_run, q3.ORACLE_PYDS_STREAM),
+    "rolling_median": (q3.q_rolling_median, q3.ORACLE_ROLLING_MEDIAN),
+    # queries_ext4.py: corpus analytics, BPE and multimodal chunks
+    "jaccard_cross_gate": (q4.q_jaccard_cross_gate, q4.ORACLE_JACCARD_CROSS_GATE),
+    "source_token_drift": (q4.q_source_token_drift, q4.ORACLE_SOURCE_TOKEN_DRIFT),
+    "bpe_pair_counts": (q4.q_bpe_pair_counts, q4.ORACLE_BPE_PAIR_COUNTS),
+    "bpe_tokenize_counts": (q4.q_bpe_tokenize_counts, q4.ORACLE_BPE_TOKENIZE_COUNTS),
+    "source_quota_cap": (q4.q_source_quota_cap, q4.ORACLE_SOURCE_QUOTA_CAP),
+    "char_entropy": (q4.q_char_entropy, q4.ORACLE_CHAR_ENTROPY),
+    "ngram_novelty": (q4.q_ngram_novelty, q4.ORACLE_NGRAM_NOVELTY),
+    "streaming_drift_run": (q4.q_streaming_drift_run, q4.ORACLE_STREAMING_DRIFT),
+    "multimodal_byte_chunks": (
+        q4.q_multimodal_byte_chunks,
+        q4.ORACLE_MULTIMODAL_BYTE_CHUNKS,
+    ),
+    "multimodal_chunk_reassemble": (
+        q4.q_multimodal_chunk_reassemble,
+        q4.ORACLE_MULTIMODAL_REASSEMBLE,
+    ),
+    "invisible_char_scrub": (q4.q_invisible_char_scrub, q4.ORACLE_INVISIBLE_SCRUB),
+    "embedding_qc": (q4.q_embedding_qc, q4.ORACLE_EMBEDDING_QC),
+    "token_coverage_curve": (q4.q_token_coverage_curve, q4.ORACLE_TOKEN_COVERAGE),
+    "lang_confusion": (q4.q_lang_confusion, q4._lang_confusion_oracle()),
+    "pipe_syntax_revenue": (q4.q_pipe_syntax_revenue, q4.ORACLE_PIPE_SYNTAX_REVENUE),
+    "metrics_transpose": (q4.q_metrics_transpose, q4._metrics_transpose_oracle()),
+    "script_profile": (q4.q_script_profile, q4.ORACLE_SCRIPT_PROFILE),
+    "token_entropy_by_source": (
+        q4.q_token_entropy_by_source,
+        q4.ORACLE_TOKEN_ENTROPY_BY_SOURCE,
+    ),
+    "stopword_coverage": (q4.q_stopword_coverage, q4._stopword_coverage_oracle()),
+
 }
-
-
-def _merge_pipeline() -> None:
-    """Replace the __PIPELINE__ placeholder in-place, preserving
-    insertion order (dicts have no insert-at; rebuild once at import)."""
-    from kaggle_ecommerce_etl_spark.queries_pipeline import PIPELINE_REGISTRY
-
-    merged: dict[str, tuple[QueryFn, str | None]] = {}
-    for name, entry in list(REGISTRY.items()):
-        if name == "__PIPELINE__":
-            merged.update(PIPELINE_REGISTRY)
-        else:
-            merged[name] = entry
-    REGISTRY.clear()
-    REGISTRY.update(merged)
-
-
-#: ext-registry queries spliced INTO the driver-checked top-50 window
-#: (replacing the __EXT_TOP__ placeholder, in this order)
-EXT_TOP = ("streaming_dedup_run", "streaming_sessionize_run", "asof_join_orders")
 
 #: One representative per SURVEY §2 family that must NEVER rotate out
 #: of DRIVER_WINDOW (single source of truth for
@@ -1631,7 +1723,7 @@ WINDOW_ANCHORS = (
 )
 
 #: The driver hash-checks the FIRST 50 registry queries. This list IS
-#: the window, applied as a final reorder after all merges: rotated
+#: the window, moved to the front of the catalog by REGISTRY: rotated
 #: each round (scripts/rotate_window.py) so every oracle-bearing query
 #: eventually earns a driver-green CORRECTNESS row. Coverage by round
 #: close: r1-r3 64, r4 85, r5 125 of the frozen registry; never-green
@@ -1702,55 +1794,10 @@ DRIVER_WINDOW = (
     "latest_per_key",  # re-verify (last driver stamp r5)
 )
 
-
-def _order_window() -> None:
-    """Reorder REGISTRY so DRIVER_WINDOW occupies the first 50 slots.
-
-    No-op while merges are incomplete (circular-import window) — the
-    final merge pass re-runs it once every name resolves."""
-    if any(n not in REGISTRY for n in DRIVER_WINDOW):
-        return
-    head = {n: REGISTRY[n] for n in DRIVER_WINDOW}
-    rest = {n: e for n, e in REGISTRY.items() if n not in head}
-    REGISTRY.clear()
-    REGISTRY.update(head)
-    REGISTRY.update(rest)
-
-
-def _merge_extensions() -> None:
-    # bottom-of-module import: queries_ext imports _t from this module
-    try:
-        from kaggle_ecommerce_etl_spark.queries_ext import EXT_REGISTRY
-    except ImportError:
-        import sys
-
-        mod = sys.modules.get("kaggle_ecommerce_etl_spark.queries_ext")
-        if mod is not None and not hasattr(mod, "EXT_REGISTRY"):
-            # queries_ext is mid-import (a caller imported IT first and
-            # it pulled this module in): its tail calls back into
-            # _merge_extensions once EXT_REGISTRY exists, so the
-            # surface is identical under either import order.
-            return
-        # a GENUINE import failure inside queries_ext (its sys.modules
-        # entry is removed on failure) — swallowing it would leave the
-        # __EXT_TOP__ placeholder in REGISTRY and crash the driver /
-        # plan_audit later with a far less useful error. Re-raise.
-        raise
-    merged: dict[str, tuple[QueryFn, str | None]] = {}
-    for name, entry in list(REGISTRY.items()):
-        if name == "__EXT_TOP__":
-            for promoted in EXT_TOP:
-                merged[promoted] = EXT_REGISTRY[promoted]
-        elif name not in merged:
-            merged[name] = entry
-    for name, entry in EXT_REGISTRY.items():
-        if name not in merged:
-            merged[name] = entry
-    REGISTRY.clear()
-    REGISTRY.update(merged)
-    _order_window()
-
-
-_merge_pipeline()
-_merge_extensions()
-_order_window()
+#: ORDER MATTERS: the driver's correctness gate hash-checks the FIRST 50
+#: entries, so DRIVER_WINDOW leads and the rest keep catalog order.
+#: Names, order, functions and oracle text are pinned by
+#: tests/registry_snapshot.tsv (tests/test_registry.py).
+REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+    n: _CATALOG[n] for n in DRIVER_WINDOW
+} | _CATALOG

@@ -5,8 +5,8 @@ remaining north-star dedup/similarity entries (word-shingle Jaccard,
 embedding cosine near-dup pairs, LSH-bucketed approximate top-k).
 
 Same determinism rules as queries.py: rounded doubles, total-order
-tiebreaks, aliases matching the oracle exactly. Merged into
-``queries.REGISTRY`` (the driver-facing surface) at import time.
+tiebreaks, aliases matching the oracle exactly. Registered in
+``queries.REGISTRY`` (the driver-facing surface).
 """
 
 from __future__ import annotations
@@ -16,102 +16,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
+from kaggle_ecommerce_etl_spark.queries_common import (
+    _CC_REACH_SQL,
+    _dsum,
+    _fixture_tag,
+    _publish_fixture_dir,
+    _stream_fixture_dir,
+    _t,
+)
 from kaggle_ecommerce_etl_spark.util import outgrows_broadcast
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from kaggle_ecommerce_etl_spark.queries import _t as _base_t
-
-    return _base_t(spark, sf_dir, name)
-
-
-def _dsum(col, scale: int = 2):
-    """Order-independent decimal SUM → rounded double (see
-    queries._dsum; redeclared here to keep the module import-light)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c.cast("decimal(23,8)")), scale).cast("double")
-
-
-def _fixture_tag(prefix: str, sf_dir: str, table: str = "events") -> str:
-    """Staleness tag for any cached fixture derived from a testdata
-    table: keyed on the source's (mtime, size) so a driver testdata
-    regeneration invalidates the cache. ONE recipe for every fixture
-    site (streaming dirs, JDBC database names, format round-trips) —
-    it must never diverge between them."""
-    import hashlib
-    import os
-
-    st = os.stat(f"{sf_dir}/{table}.parquet")
-    return hashlib.md5(
-        f"{prefix}:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:8]
-
-
-def _stream_fixture_dir(prefix: str, sf_dir: str, table: str = "events") -> str:
-    """Cached streaming-fixture directory path (see _fixture_tag)."""
-    import tempfile
-
-    tag = _fixture_tag(prefix, sf_dir, table)
-    return f"{tempfile.gettempdir()}/spark_graft_stream_src/{tag}"
-
-
-def _publish_fixture_dir(src_dir: str, build) -> None:
-    """Publish a streaming-fixture directory exactly once, safely under
-    CONCURRENT callers (pytest alongside check_oracle/plan_audit, which
-    both execute these query fns): each caller builds into a private
-    pid-scoped stage dir, writes the ``_SPARK_GRAFT_READY`` marker
-    INSIDE it, then atomically ``os.rename``s into place. A losing
-    racer's rename fails (destination exists) and its stage is
-    discarded — no window where a reader can observe a half-written
-    ``src_dir`` carrying the marker."""
-    import os
-    import shutil
-
-    done = src_dir + "/_SPARK_GRAFT_READY"
-    if os.path.exists(done):
-        return
-    stage = f"{src_dir}.__stage__{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    build(stage)
-    with open(stage + "/_SPARK_GRAFT_READY", "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, src_dir)
-        return
-    except OSError:
-        pass
-    if os.path.exists(done):  # lost the race to a complete winner
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    # Destination exists but looked marker-less (a CRASHED earlier
-    # run). Never rmtree it in place — between our marker check and
-    # the delete, another racer may have just renamed a COMPLETE
-    # fixture there and begun streaming from it. Instead atomically
-    # CLAIM the old directory by renaming it aside (only one process
-    # can win that rename), re-check what we actually claimed, and
-    # only then dispose of it.
-    aside = f"{src_dir}.__dead__{os.getpid()}"
-    try:
-        os.rename(src_dir, aside)
-    except OSError:
-        # someone else claimed or replaced it; if a complete fixture
-        # now exists we are done either way
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    if os.path.exists(aside + "/_SPARK_GRAFT_READY"):
-        # we claimed a COMPLETE fixture that won the race moments ago
-        # — put it back (or drop it if yet another complete one landed)
-        try:
-            os.rename(aside, src_dir)
-        except OSError:
-            shutil.rmtree(aside, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        return
-    shutil.rmtree(aside, ignore_errors=True)
-    try:
-        os.rename(stage, src_dir)
-    except OSError:  # another racer completed the replacement first
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1203,34 +1116,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_dup_clusters() -> str:
-    from kaggle_ecommerce_etl_spark.queries import (
-        _SHINGLE_SQL,
-        _band_sql,
-        _mh_sql,
-    )
-
-    shingle = _SHINGLE_SQL.replace("WITH t AS", "WITH RECURSIVE t AS", 1)
-    cand_union = " UNION ".join(
-        f"SELECT a.doc_id AS id1, b.doc_id AS id2 FROM bands a "
-        f"JOIN bands b ON a.band{b} = b.band{b} AND a.doc_id < b.doc_id"
-        for b in range(4)
-    )
-    return (
-        shingle
-        + ", sigs AS (SELECT doc_id, "
-        + ", ".join(_mh_sql(i) for i in range(8))
-        + " FROM s), bands AS (SELECT doc_id, "
-        + ", ".join(_band_sql(b) for b in range(4))
-        + " FROM sigs), cand AS ("
-        + cand_union
-        + """),
-edges AS (SELECT id1 AS src, id2 AS dst FROM cand
-          UNION SELECT id2, id1 FROM cand),
-reach(id, r) AS (
-  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-  UNION
-  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id
+ORACLE_DUP_CLUSTERS = _CC_REACH_SQL + """
 ),
 cc AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id)
 SELECT d.doc_id,
@@ -1238,7 +1124,6 @@ SELECT d.doc_id,
        d.doc_id = COALESCE(cc.cluster_id, d.doc_id) AS is_canonical
 FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
 """
-    )
 
 
 def q_scd2_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2972,126 +2857,3 @@ ORACLE_JDBC_ROUNDTRIP = """
 SELECT o_orderkey, o_orderstatus, round(o_totalprice, 2) AS total_price
 FROM orders WHERE o_orderkey % 7 = 0
 """
-
-
-#: merged into queries.REGISTRY
-EXT_REGISTRY = {
-    "jdbc_roundtrip": (q_jdbc_roundtrip, ORACLE_JDBC_ROUNDTRIP),
-    "word_jaccard_capped": (q_word_jaccard_capped, ORACLE_WORD_JACCARD_CAPPED),
-    "exists_late_orders": (q_exists_late_orders, ORACLE_EXISTS_LATE),
-    "nation_volume_pairs": (q_nation_volume_pairs, ORACLE_NATION_PAIRS),
-    "promo_revenue": (q_promo_revenue, ORACLE_PROMO),
-    "disjunctive_revenue": (q_disjunctive_revenue, ORACLE_DISJUNCTIVE),
-    "customers_no_orders": (q_customers_no_orders, ORACLE_NO_ORDERS),
-    "rollup_sales": (q_rollup_sales, ORACLE_ROLLUP),
-    "grouping_sets": (q_grouping_sets, ORACLE_GROUPING_SETS),
-    "full_outer_nation": (q_full_outer_nation, ORACLE_FULL_OUTER),
-    "semi_join_customers": (q_semi_join_customers, ORACLE_SEMI),
-    "quantile_stats": (q_quantile_stats, ORACLE_QUANTILE),
-    "corr_stats": (q_corr_stats, ORACLE_CORR),
-    "array_funcs": (q_array_funcs, ORACLE_ARRAY_FUNCS),
-    "regexp_stats": (q_regexp_stats, ORACLE_REGEXP_STATS),
-    "date_buckets": (q_date_buckets, ORACLE_DATE_BUCKETS),
-    "shingle_jaccard_pairs": (q_shingle_jaccard_pairs, ORACLE_SHINGLE_JACCARD),
-    "embedding_neardup_pairs": (q_embedding_neardup_pairs, ORACLE_EMB_NEARDUP),
-    "embedding_neardup_lsh": (q_embedding_neardup_lsh, _emb_neardup_lsh_oracle()),
-    "ann_lsh_topk": (q_ann_lsh_topk, _ann_lsh_oracle()),
-    "ann_ivf_topk": (q_ann_ivf_topk, _ann_ivf_oracle()),
-    "latest_per_key": (q_latest_per_key, ORACLE_LATEST_PER_KEY),
-    "tfidf_top_terms": (q_tfidf_top_terms, ORACLE_TFIDF),
-    "bigram_doc_freq": (q_bigram_doc_freq, ORACLE_BIGRAM_DF),
-    "hash_sample": (q_hash_sample, ORACLE_HASH_SAMPLE),
-    # scale patterns
-    "bucketed_join_agg": (q_bucketed_join_agg, ORACLE_BUCKETED_JOIN),
-    "salted_skew_join": (q_salted_skew_join, ORACLE_SALTED_JOIN),
-    "partition_pruned_read": (q_partition_pruned_read, ORACLE_PARTITION_PRUNED),
-    # dedup clustering / versioning / corpus stats / schema drift
-    "dup_clusters": (q_dup_clusters, _oracle_dup_clusters()),
-    "scd2_versions": (q_scd2_versions, ORACLE_SCD2),
-    "token_stats_by_lang": (q_token_stats_by_lang, ORACLE_TOKEN_STATS),
-    # temporal joins (operators/temporal.py)
-    "asof_join_orders": (q_asof_join_orders, ORACLE_ASOF),
-    "event_attribution": (q_event_attribution, ORACLE_ATTRIBUTION),
-    "winnow_fingerprints": (q_winnow_fingerprints, ORACLE_WINNOW),
-    "multimodal_frame_sample": (q_multimodal_frame_sample, ORACLE_FRAME_SAMPLE),
-    "stratified_sample": (q_stratified_sample, ORACLE_STRATIFIED),
-    "jaccard_pairs_prefix": (q_jaccard_pairs_prefix, ORACLE_JACCARD_PREFIX),
-    "streaming_dedup_run": (q_streaming_dedup_run, ORACLE_STREAMING_DEDUP),
-    "rank_functions": (q_rank_functions, ORACLE_RANK_FUNCS),
-    # corpus-hygiene ops: redaction, quality repetition, leakage guard
-    "pii_scrub": (q_pii_scrub, ORACLE_PII_SCRUB),
-    "repetition_ratio": (q_repetition_ratio, ORACLE_REPETITION),
-    "decontaminate": (q_decontaminate, ORACLE_DECONTAMINATE),
-    "embedding_quantize": (q_embedding_quantize, ORACLE_EMB_QUANTIZE),
-    "fuzzy_name_pairs": (q_fuzzy_name_pairs, ORACLE_FUZZY),
-    "funnel_conversion": (q_funnel_conversion, ORACLE_FUNNEL),
-    "market_share": (q_market_share, ORACLE_MARKET_SHARE),
-    "returned_revenue": (q_returned_revenue, ORACLE_RETURNED_REVENUE),
-    "streaming_sessionize_run": (
-        q_streaming_sessionize_run,
-        ORACLE_STREAMING_SESSIONIZE,
-    ),
-    "asof_join_broadcast": (q_asof_join_broadcast, ORACLE_ASOF_BROADCAST),
-    "streaming_upsert_run": (q_streaming_upsert_run, ORACLE_STREAMING_UPSERT),
-    "compact_files": (q_compact_files, ORACLE_COMPACT),
-    "incremental_agg_merge": (q_incremental_agg_merge, ORACLE_INCR_AGG),
-    "zorder_code": (q_zorder_code, ORACLE_ZORDER),
-    "data_quality_report": (q_data_quality_report, ORACLE_DQ),
-    "price_histogram": (q_price_histogram, ORACLE_PRICE_HIST),
-    "asof_join_forward": (q_asof_join_forward, ORACLE_ASOF_FWD),
-    "doc_chunks": (q_doc_chunks, ORACLE_DOC_CHUNKS),
-    "incremental_neardup": (q_incremental_neardup, ORACLE_INCR_NEARDUP),
-    "streaming_window_run": (q_streaming_window_run, ORACLE_STREAMING_WINDOW),
-    "persist_reuse": (q_persist_reuse, ORACLE_PERSIST_REUSE),
-    "null_safe_join": (q_null_safe_join, ORACLE_NULL_SAFE),
-    "hierarchy_rollup": (q_hierarchy_rollup, ORACLE_HIERARCHY),
-    "resample_gapfill": (q_resample_gapfill, ORACLE_RESAMPLE),
-    "unpivot_metrics": (q_unpivot_metrics, ORACLE_UNPIVOT),
-}
-
-
-def _append_drift() -> None:
-    # bottom import: queries_pipeline is fully initialized by the time
-    # queries.py merges this module
-    from kaggle_ecommerce_etl_spark.queries_pipeline import (
-        ORACLE_SCHEMA_DRIFT,
-        q_schema_drift_merge,
-    )
-
-    EXT_REGISTRY["schema_drift_merge"] = (q_schema_drift_merge, ORACLE_SCHEMA_DRIFT)
-
-
-_append_drift()
-
-
-def _append_ext2() -> None:
-    # bottom import: queries_ext2 needs this module's _t/_dsum helpers,
-    # which are fully defined by the time module bottom runs. If
-    # queries_ext2 is the one mid-import (a caller imported IT first and
-    # it pulled us in), skip — its own bottom-of-module push completes
-    # the merge once EXT2_REGISTRY exists.
-    import sys
-
-    mod = sys.modules.get("kaggle_ecommerce_etl_spark.queries_ext2")
-    if mod is not None and not hasattr(mod, "EXT2_REGISTRY"):
-        return
-    from kaggle_ecommerce_etl_spark.queries_ext2 import EXT2_REGISTRY
-
-    EXT_REGISTRY.update(EXT2_REGISTRY)
-
-
-_append_ext2()
-
-
-def _push_into_base() -> None:
-    """Make the merged surface import-order-proof: if a caller imported
-    queries_ext FIRST, queries.py's bottom-of-module _merge_extensions
-    ran while EXT_REGISTRY didn't exist yet and skipped — re-run the
-    SAME merge (placeholder splice included) now that it exists
-    (idempotent under the normal order)."""
-    from kaggle_ecommerce_etl_spark import queries as _q
-
-    _q._merge_extensions()
-
-
-_push_into_base()

@@ -9,8 +9,8 @@ dedup with canonical selection, and target-mix rebalancing — and a
 fifth streaming paradigm (stream-stream interval join).
 
 Same determinism rules as queries.py: rounded doubles, total-order
-tiebreaks, aliases matching the oracle exactly. Merged into
-``queries.REGISTRY`` via queries_ext's EXT_REGISTRY at import time.
+tiebreaks, aliases matching the oracle exactly. Registered in
+``queries.REGISTRY``.
 
 Reference parity: the reference engine's ETL surface (pipelines,
 dedup, profiling) is already covered by queries.py/queries_ext.py;
@@ -22,12 +22,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
 from pyspark.sql.window import Window
 
-from kaggle_ecommerce_etl_spark.queries_ext import (
+from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
+from kaggle_ecommerce_etl_spark.queries_common import (
+    _CC_REACH_SQL,
     _dsum,
+    _fixture_tag,
+    _format_fixture,
     _publish_fixture_dir,
     _stream_fixture_dir,
     _t,
@@ -773,7 +775,6 @@ def q_jdbc_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single psycopg2 cursor). Partitioning is an execution detail:
     values equal the plain projection (the oracle); the 4-way split is
     asserted in pytest via rdd.getNumPartitions."""
-    from kaggle_ecommerce_etl_spark.queries_ext import _fixture_tag
     from kaggle_ecommerce_etl_spark.sinks.jdbc import (
         DERBY_DRIVER,
         derby_memory_url,
@@ -834,12 +835,6 @@ def q_conflict_split_flagged_aggjoin(
         _t(spark, sf_dir, "lineitem"), ["l_orderkey"]
     )
     return flagged
-
-
-def _oracle_conflict_flagged() -> str:
-    from kaggle_ecommerce_etl_spark.queries import _oracle_conflict
-
-    return _oracle_conflict(">")
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1369,34 +1364,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_corpus_pipeline() -> str:
-    from kaggle_ecommerce_etl_spark.queries import (
-        _SHINGLE_SQL,
-        _band_sql,
-        _mh_sql,
-    )
-
-    shingle = _SHINGLE_SQL.replace("WITH t AS", "WITH RECURSIVE t AS", 1)
-    cand_union = " UNION ".join(
-        f"SELECT a.doc_id AS id1, b.doc_id AS id2 FROM bands a "
-        f"JOIN bands b ON a.band{b} = b.band{b} AND a.doc_id < b.doc_id"
-        for b in range(4)
-    )
-    return (
-        shingle
-        + ", sigs AS (SELECT doc_id, "
-        + ", ".join(_mh_sql(i) for i in range(8))
-        + " FROM s), bands AS (SELECT doc_id, "
-        + ", ".join(_band_sql(b) for b in range(4))
-        + " FROM sigs), cand AS ("
-        + cand_union
-        + f"""),
-edges AS (SELECT id1 AS src, id2 AS dst FROM cand
-          UNION SELECT id2, id1 FROM cand),
-reach(id, r) AS (
-  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-  UNION
-  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+ORACLE_CORPUS_PIPELINE = _CC_REACH_SQL + f"""),
 cc AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
 base AS (SELECT doc_id,
                 len(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\x0B\\f]+')) AS n_tokens,
@@ -1421,7 +1389,6 @@ SELECT doc_id, n_tokens, pos,
        CAST(floor(run / {_PACK_CAPACITY}) AS BIGINT) AS bin_id
 FROM ordered
 """
-    )
 
 
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1684,20 +1651,6 @@ FROM ranked GROUP BY doc_id
 # source/sink formats beyond CSV/parquet/JDBC: JSONL (the training-data
 # interchange format) and ORC
 # --------------------------------------------------------------------------
-
-def _format_fixture(sf_dir: str, name: str, table: str) -> str:
-    """Cached format-fixture path keyed on the SOURCE table's
-    (mtime, size) via the shared _fixture_tag recipe — a testdata
-    regeneration under the same sf_dir must invalidate the cached
-    JSONL/ORC fixture, or the oracle (reading the fresh parquet)
-    diverges from a stale cache."""
-    import tempfile
-
-    from kaggle_ecommerce_etl_spark.queries_ext import _fixture_tag
-
-    tag = _fixture_tag(f"fmt:{name}", sf_dir, table)
-    return f"{tempfile.gettempdir()}/spark_graft_fixtures/{tag}/{name}"
-
 
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL sink → source round-trip: the documents corpus written as
@@ -1976,97 +1929,3 @@ FROM events p JOIN events c
  AND p.event_type = 'purchase' AND c.event_type = 'click'
  AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
 """
-
-
-#: merged into queries_ext.EXT_REGISTRY → queries.REGISTRY
-EXT2_REGISTRY = {
-    "priority_line_counts": (q_priority_line_counts, ORACLE_PRIORITY_LINES),
-    "cust_order_distribution": (
-        q_cust_order_distribution,
-        ORACLE_CUST_ORDER_DIST,
-    ),
-    "small_qty_revenue": (q_small_qty_revenue, ORACLE_SMALL_QTY),
-    "late_supplier_blame": (q_late_supplier_blame, ORACLE_LATE_BLAME),
-    "pack_sequences": (q_pack_sequences, ORACLE_PACK_SEQUENCES),
-    "pack_materialize": (q_pack_materialize, ORACLE_PACK_MATERIALIZE),
-    "doc_truncate": (q_doc_truncate, ORACLE_DOC_TRUNCATE),
-    "corpus_shuffle": (q_corpus_shuffle, ORACLE_CORPUS_SHUFFLE),
-    "token_rarity": (q_token_rarity, ORACLE_TOKEN_RARITY),
-    "semantic_dedup_keep": (q_semantic_dedup_keep, ORACLE_SEMANTIC_DEDUP),
-    "semantic_dedup_auto": (q_semantic_dedup_auto, ORACLE_SEMANTIC_DEDUP),
-    "mix_rebalance": (q_mix_rebalance, ORACLE_MIX_REBALANCE),
-    "span_dedup": (q_span_dedup, ORACLE_SPAN_DEDUP),
-    "observed_metrics": (q_observed_metrics, ORACLE_OBSERVED_METRICS),
-    "corpus_pipeline": (q_corpus_pipeline, _oracle_corpus_pipeline()),
-    "rolling_features": (q_rolling_features, ORACLE_ROLLING_FEATURES),
-    "interpolate_ts": (q_interpolate_ts, ORACLE_INTERPOLATE_TS),
-    "variant_shred": (q_variant_shred, ORACLE_VARIANT_SHRED),
-    "set_ops_multiset": (q_set_ops_multiset, ORACLE_SET_OPS_MULTISET),
-    "range_frame_window": (q_range_frame_window, ORACLE_RANGE_FRAME),
-    "multimodal_dedup": (q_multimodal_dedup, ORACLE_MULTIMODAL_DEDUP),
-    "table_checksum": (q_table_checksum, ORACLE_TABLE_CHECKSUM),
-    "jdbc_partitioned_read": (
-        q_jdbc_partitioned_read,
-        ORACLE_JDBC_PARTITIONED,
-    ),
-    "snapshot_diff": (q_snapshot_diff, ORACLE_SNAPSHOT_DIFF),
-    "conflict_split_flagged_aggjoin": (
-        q_conflict_split_flagged_aggjoin,
-        _oracle_conflict_flagged(),
-    ),
-    "sessionize_dynamic_gap": (
-        q_sessionize_dynamic_gap,
-        ORACLE_SESSIONIZE_DYNAMIC,
-    ),
-    "join_hints": (q_join_hints, ORACLE_JOIN_HINTS),
-    "merge_upsert": (q_merge_upsert, ORACLE_MERGE_UPSERT),
-    "cdc_apply": (q_cdc_apply, ORACLE_CDC_APPLY),
-    "dedup_keep_richest": (q_dedup_keep_richest, ORACLE_DEDUP_RICHEST),
-    "jsonl_roundtrip": (q_jsonl_roundtrip, ORACLE_JSONL_ROUNDTRIP),
-    "jsonl_quarantine": (q_jsonl_quarantine, ORACLE_JSONL_QUARANTINE),
-    "orc_roundtrip": (q_orc_roundtrip, ORACLE_ORC_ROUNDTRIP),
-    "stream_stream_join_run": (
-        q_stream_stream_join_run,
-        ORACLE_STREAM_STREAM_JOIN,
-    ),
-    "medallion_stream_run": (q_medallion_stream_run, ORACLE_MEDALLION),
-}
-
-
-def _push_into_ext() -> None:
-    """Import-order-proof merge (mirrors queries_ext._push_into_base):
-    if a caller imported THIS module first, queries_ext's bottom
-    _append_ext2 ran while EXT2_REGISTRY didn't exist and skipped —
-    re-run the same merge now that it does (idempotent otherwise)."""
-    from kaggle_ecommerce_etl_spark import queries as _q
-    from kaggle_ecommerce_etl_spark import queries_ext as _qx
-
-    _qx.EXT_REGISTRY.update(EXT2_REGISTRY)
-    _q._merge_extensions()
-
-
-_push_into_ext()
-
-
-def _append_ext3() -> None:
-    # bottom import: queries_ext3 needs queries_ext helpers plus this
-    # module's _format_fixture, all defined by now. Same mid-import
-    # guard as queries_ext._append_ext2: if queries_ext3 is the module
-    # being imported right now (a caller imported IT first and it
-    # pulled us in), skip — its own bottom-of-module push completes
-    # the merge once EXT3_REGISTRY exists.
-    import sys
-
-    mod = sys.modules.get("kaggle_ecommerce_etl_spark.queries_ext3")
-    if mod is not None and not hasattr(mod, "EXT3_REGISTRY"):
-        return
-    from kaggle_ecommerce_etl_spark.queries_ext3 import EXT3_REGISTRY
-
-    from kaggle_ecommerce_etl_spark import queries as _q
-    from kaggle_ecommerce_etl_spark import queries_ext as _qx
-
-    _qx.EXT_REGISTRY.update(EXT3_REGISTRY)
-    _q._merge_extensions()
-
-
-_append_ext3()

@@ -29,17 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
-
-from kaggle_ecommerce_etl_spark.queries_ext import _t
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Register ``name`` as a prefixed temp view for spark.sql text and
-    return the view name. Re-registered on every call so a session
-    that switches sf_dir never reads a stale path."""
-    v = f"__ext3_{name}"
-    _t(spark, sf_dir, name).createOrReplaceTempView(v)
-    return v
+from kaggle_ecommerce_etl_spark.queries_common import (
+    _dsum,
+    _format_fixture,
+    _publish_fixture_dir,
+    _stream_fixture_dir,
+    _t,
+    _view,
+)
 
 
 # --------------------------------------------------------------------------
@@ -413,9 +410,6 @@ def q_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides exclude those rows identically (zero in this corpus;
     the guard is the contract). Row-level output (id, lang, recomputed
     char length) so any line-splitting corruption hash-fails."""
-    from kaggle_ecommerce_etl_spark.queries_ext2 import _format_fixture
-    from kaggle_ecommerce_etl_spark.queries_ext import _publish_fixture_dir
-
     d = _t(spark, sf_dir, "documents").filter(
         ~F.col("text").contains("\n")
         & ~F.col("text").contains("\r")
@@ -463,8 +457,6 @@ def q_pyds_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     source's contract prescribes. The Python scan is the honest cost
     of a Python-only client boundary (reference s3.py:70); everything
     after the yield is codegen."""
-    from kaggle_ecommerce_etl_spark.queries_ext import _publish_fixture_dir
-    from kaggle_ecommerce_etl_spark.queries_ext2 import _format_fixture
     from kaggle_ecommerce_etl_spark.sources import pyds
 
     d = _t(spark, sf_dir, "documents").select(
@@ -638,9 +630,6 @@ def q_catalog_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata regen can't serve a stale definition."""
     import re as _re
 
-    from kaggle_ecommerce_etl_spark.queries_ext import _publish_fixture_dir
-    from kaggle_ecommerce_etl_spark.queries_ext2 import _format_fixture
-
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -657,7 +646,6 @@ def q_catalog_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"USING parquet LOCATION '{path}'"
     )
     spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
-    from kaggle_ecommerce_etl_spark.queries_ext import _dsum
 
     return (
         spark.table(tbl)
@@ -1158,11 +1146,6 @@ def q_streaming_enrich_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from kaggle_ecommerce_etl_spark.queries_ext import (
-        _publish_fixture_dir,
-        _stream_fixture_dir,
-    )
-
     ev = _t(spark, sf_dir, "events").select("user_id", "value")
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_nationkey")
@@ -1229,8 +1212,6 @@ def q_streaming_session_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
-    from kaggle_ecommerce_etl_spark.queries_ext import _stream_fixture_dir
-    from kaggle_ecommerce_etl_spark.queries_ext import _publish_fixture_dir
 
     src_dir = _stream_fixture_dir("sesswin:v1", sf_dir)
 
@@ -1271,13 +1252,6 @@ def q_streaming_session_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-
-
-def _oracle_streaming_session() -> str:
-    # identical semantics to the batch sessionizer — reuse its oracle
-    from kaggle_ecommerce_etl_spark.queries import ORACLE_SESSIONIZE
-
-    return ORACLE_SESSIONIZE
 
 
 # --------------------------------------------------------------------------
@@ -1396,10 +1370,6 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from kaggle_ecommerce_etl_spark.queries_ext import (
-        _publish_fixture_dir,
-        _stream_fixture_dir,
-    )
     from kaggle_ecommerce_etl_spark.streaming.dedup import dedup_stream_exact
 
     ev = _t(spark, sf_dir, "events").select(
@@ -1526,10 +1496,6 @@ def q_pyds_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from kaggle_ecommerce_etl_spark.queries_ext import (
-        _publish_fixture_dir,
-        _stream_fixture_dir,
-    )
     from kaggle_ecommerce_etl_spark.sources.pyds import register_stream
 
     ev = (
@@ -1629,86 +1595,3 @@ FROM events WHERE user_id % 7 = 0
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
              ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
 """
-
-
-EXT3_REGISTRY = {
-    "recursive_ancestors": (q_recursive_ancestors, ORACLE_RECURSIVE_ANCESTORS),
-    "lateral_topk_orders": (q_lateral_topk_orders, ORACLE_LATERAL_TOPK),
-    "heavy_hitters": (q_heavy_hitters, ORACLE_HEAVY_HITTERS),
-    "hll_distinct_gate": (q_hll_distinct_gate, ORACLE_HLL_GATE),
-    "theta_union_gate": (q_theta_union_gate, ORACLE_THETA_GATE),
-    "approx_quantile_gate": (q_approx_quantile_gate, ORACLE_APPROX_QUANTILE),
-    "listagg_nations": (q_listagg_nations, ORACLE_LISTAGG),
-    "text_roundtrip": (q_text_roundtrip, ORACLE_TEXT_ROUNDTRIP),
-    "pyds_manifest_read": (q_pyds_manifest_read, ORACLE_PYDS_MANIFEST),
-    "streaming_session_run": (
-        q_streaming_session_run,
-        _oracle_streaming_session(),
-    ),
-    "topk_sketch_merge": (q_topk_sketch_merge, ORACLE_TOPK_MERGE),
-    "theta_set_algebra": (q_theta_set_algebra, ORACLE_THETA_SET_ALGEBRA),
-    "catalog_table_roundtrip": (
-        q_catalog_table_roundtrip,
-        ORACLE_CATALOG_ROUNDTRIP,
-    ),
-    "hll_union_gate": (q_hll_union_gate, ORACLE_HLL_UNION_GATE),
-    "param_bind_filter": (q_param_bind_filter, ORACLE_PARAM_BIND),
-    "collation_dedup": (q_collation_dedup, ORACLE_COLLATION_DEDUP),
-    "equidepth_histogram": (q_equidepth_histogram, ORACLE_EQUIDEPTH),
-    "id_gap_islands": (q_id_gap_islands, ORACLE_GAP_ISLANDS),
-    "bitmap_distinct_customers": (
-        q_bitmap_distinct_customers,
-        ORACLE_BITMAP_DISTINCT,
-    ),
-    "bitmap_union_distinct": (q_bitmap_union_distinct, ORACLE_BITMAP_UNION),
-    "interval_coverage": (q_interval_coverage, ORACLE_INTERVAL_COVERAGE),
-    "sql_udf_chunks": (q_sql_udf_chunks, ORACLE_SQL_UDF_CHUNKS),
-    "kll_quantile_gate": (q_kll_quantile_gate, ORACLE_KLL_GATE),
-    "cms_frequency_gate": (q_cms_frequency_gate, ORACLE_CMS_GATE),
-    "regr_fit_stats": (q_regr_fit_stats, ORACLE_REGR_FIT),
-    "xml_roundtrip": (q_xml_roundtrip, ORACLE_XML_ROUNDTRIP),
-    "kv_parse": (q_kv_parse, ORACLE_KV_PARSE),
-    "streaming_enrich_run": (
-        q_streaming_enrich_run,
-        ORACLE_STREAMING_ENRICH,
-    ),
-    "udtf_repeat_runs": (q_udtf_repeat_runs, ORACLE_UDTF_REPEAT_RUNS),
-    "state_store_read": (q_state_store_read, ORACLE_STATE_STORE_READ),
-    "arrow_group_mad": (q_arrow_group_mad, ORACLE_ARROW_GROUP_MAD),
-    "pyds_stream_run": (q_pyds_stream_run, ORACLE_PYDS_STREAM),
-    "rolling_median": (q_rolling_median, ORACLE_ROLLING_MEDIAN),
-}
-
-
-def _push_into_ext() -> None:
-    """Import-order-proof merge (mirrors queries_ext2._push_into_ext)."""
-    from kaggle_ecommerce_etl_spark import queries as _q
-    from kaggle_ecommerce_etl_spark import queries_ext as _qx
-
-    _qx.EXT_REGISTRY.update(EXT3_REGISTRY)
-    _q._merge_extensions()
-
-
-_push_into_ext()
-
-
-def _append_ext4() -> None:
-    # bottom import chaining to the fifth wave — same mid-import guard
-    # as queries_ext2._append_ext3: if queries_ext4 is the module being
-    # imported right now, its own bottom-of-module push completes the
-    # merge once EXT4_REGISTRY exists.
-    import sys
-
-    mod = sys.modules.get("kaggle_ecommerce_etl_spark.queries_ext4")
-    if mod is not None and not hasattr(mod, "EXT4_REGISTRY"):
-        return
-    from kaggle_ecommerce_etl_spark.queries_ext4 import EXT4_REGISTRY
-
-    from kaggle_ecommerce_etl_spark import queries as _q
-    from kaggle_ecommerce_etl_spark import queries_ext as _qx
-
-    _qx.EXT_REGISTRY.update(EXT4_REGISTRY)
-    _q._merge_extensions()
-
-
-_append_ext4()

@@ -37,7 +37,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
-from kaggle_ecommerce_etl_spark.queries_ext import _t
+from kaggle_ecommerce_etl_spark.queries_common import (
+    _publish_fixture_dir,
+    _stream_fixture_dir,
+    _sw_list,
+    _t,
+    _view,
+)
 
 #: the same class, spliced verbatim into the DuckDB oracle strings
 #: (RE2 reads the \t/\n/\r/\x0B/\f escapes identically)
@@ -750,10 +756,6 @@ def q_streaming_drift_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = d.filter(F.col("source") == "src2").select(
         (F.col("doc_id") % 3).alias("batch_id"), "text"
     )
-    from kaggle_ecommerce_etl_spark.queries_ext import (
-        _publish_fixture_dir,
-        _stream_fixture_dir,
-    )
 
     src_dir = _stream_fixture_dir("driftmon:v1", sf_dir, "documents")
 
@@ -1228,8 +1230,6 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lang_confusion_oracle() -> str:
-    from kaggle_ecommerce_etl_spark.queries import _sw_list
-
     return f"""
 WITH toks AS (
   SELECT lang, string_split_regex(lower(trim(text)), '[^a-z]+') AS t
@@ -1276,8 +1276,6 @@ def q_pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair, filters pushed to the parquet scan), so this pins that the
     modern-SQL entry point hits the exact same engine path. Decimal
     sums: order-independent arithmetic at any scale."""
-    from kaggle_ecommerce_etl_spark.queries_ext3 import _view
-
     li = _view(spark, sf_dir, "lineitem")
     return spark.sql(
         f"""
@@ -1391,47 +1389,3 @@ SELECT in_id, ex_id,
        round(CAST(inter AS DOUBLE) / (s1 + s2 - inter), 4) AS jaccard
 FROM j WHERE round(CAST(inter AS DOUBLE) / (s1 + s2 - inter), 4) >= 0.8
 """
-
-
-EXT4_REGISTRY = {
-    "jaccard_cross_gate": (q_jaccard_cross_gate, ORACLE_JACCARD_CROSS_GATE),
-    "source_token_drift": (q_source_token_drift, ORACLE_SOURCE_TOKEN_DRIFT),
-    "bpe_pair_counts": (q_bpe_pair_counts, ORACLE_BPE_PAIR_COUNTS),
-    "bpe_tokenize_counts": (q_bpe_tokenize_counts, ORACLE_BPE_TOKENIZE_COUNTS),
-    "source_quota_cap": (q_source_quota_cap, ORACLE_SOURCE_QUOTA_CAP),
-    "char_entropy": (q_char_entropy, ORACLE_CHAR_ENTROPY),
-    "ngram_novelty": (q_ngram_novelty, ORACLE_NGRAM_NOVELTY),
-    "streaming_drift_run": (q_streaming_drift_run, ORACLE_STREAMING_DRIFT),
-    "multimodal_byte_chunks": (
-        q_multimodal_byte_chunks,
-        ORACLE_MULTIMODAL_BYTE_CHUNKS,
-    ),
-    "multimodal_chunk_reassemble": (
-        q_multimodal_chunk_reassemble,
-        ORACLE_MULTIMODAL_REASSEMBLE,
-    ),
-    "invisible_char_scrub": (q_invisible_char_scrub, ORACLE_INVISIBLE_SCRUB),
-    "embedding_qc": (q_embedding_qc, ORACLE_EMBEDDING_QC),
-    "token_coverage_curve": (q_token_coverage_curve, ORACLE_TOKEN_COVERAGE),
-    "lang_confusion": (q_lang_confusion, _lang_confusion_oracle()),
-    "pipe_syntax_revenue": (q_pipe_syntax_revenue, ORACLE_PIPE_SYNTAX_REVENUE),
-    "metrics_transpose": (q_metrics_transpose, _metrics_transpose_oracle()),
-    "script_profile": (q_script_profile, ORACLE_SCRIPT_PROFILE),
-    "token_entropy_by_source": (
-        q_token_entropy_by_source,
-        ORACLE_TOKEN_ENTROPY_BY_SOURCE,
-    ),
-    "stopword_coverage": (q_stopword_coverage, _stopword_coverage_oracle()),
-}
-
-
-def _push_into_ext() -> None:
-    """Import-order-proof merge (mirrors queries_ext3._push_into_ext)."""
-    from kaggle_ecommerce_etl_spark import queries as _q
-    from kaggle_ecommerce_etl_spark import queries_ext as _qx
-
-    _qx.EXT_REGISTRY.update(EXT4_REGISTRY)
-    _q._merge_extensions()
-
-
-_push_into_ext()

@@ -45,6 +45,7 @@ from kaggle_ecommerce_etl_spark.pipelines.international import (
     clean_international_sale,
 )
 from kaggle_ecommerce_etl_spark.pipelines.sale import clean_sale
+from kaggle_ecommerce_etl_spark.queries_common import _fixture_tag, _t
 from kaggle_ecommerce_etl_spark.sinks.csv_sink import timestamped_name, write_csv_file
 from kaggle_ecommerce_etl_spark.sinks.jdbc import write_upsert
 from kaggle_ecommerce_etl_spark.sources.csv_source import (
@@ -54,12 +55,6 @@ from kaggle_ecommerce_etl_spark.sources.csv_source import (
 )
 
 FIXTURE_ROOT = "/tmp/spark_graft_fixtures"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from kaggle_ecommerce_etl_spark.queries import _t as base_t
-
-    return base_t(spark, sf_dir, name)
 
 
 def _fixture_path(sf_dir: str, name: str) -> str:
@@ -264,8 +259,6 @@ def q_pipeline_jdbc_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         derby_memory_url,
         write_upsert_jdbc,
     )
-
-    from kaggle_ecommerce_etl_spark.queries_ext import _fixture_tag
 
     clean, _ = _run_amazon(spark, sf_dir)
     url = derby_memory_url("pjl_" + _fixture_tag("pjl:v1", sf_dir, "orders"))
@@ -740,22 +733,3 @@ uniq AS (SELECT col_name, count(*) AS n_unique FROM counts GROUP BY 1)
 SELECT u.col_name, u.n_unique, r.value AS top, r.cnt AS top_freq
 FROM uniq u JOIN ranked r ON u.col_name = r.col_name AND r.rn = 1
 """
-
-
-#: merged into queries.REGISTRY inside the driver-checked top-50 block
-PIPELINE_REGISTRY = {
-    "pipeline_sale": (q_pipeline_sale, ORACLE_PIPELINE_SALE),
-    "pipeline_amazon_clean": (q_pipeline_amazon_clean, _oracle_amazon("=")),
-    "pipeline_amazon_flagged": (q_pipeline_amazon_flagged, _oracle_amazon(">")),
-    "pipeline_jdbc_load": (q_pipeline_jdbc_load, _oracle_amazon("=")),
-    "pipeline_international": (q_pipeline_international, ORACLE_PIPELINE_INTL),
-    "upsert_roundtrip": (q_upsert_roundtrip, ORACLE_UPSERT),
-    "csv_roundtrip": (q_csv_roundtrip, ORACLE_CSV_ROUNDTRIP),
-    "incremental_read": (q_incremental_read, ORACLE_INCREMENTAL),
-    "ddl_roundtrip": (q_ddl_roundtrip, ORACLE_DDL_ROUNDTRIP),
-    "audit_columns": (q_audit_columns, ORACLE_AUDIT),
-    "summary_stats_exact": (q_summary_stats_exact, ORACLE_SUMMARY_EXACT),
-    "categorical_profile": (q_categorical_profile, ORACLE_CATEGORICAL),
-    # schema_drift_merge lives in queries_ext's registry region (not a
-    # §2 op, so it must not consume a driver-checked top-50 slot)
-}

@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench
 
 from kaggle_ecommerce_etl_spark.pipelines.amazon import clean_amazon_sale
-from kaggle_ecommerce_etl_spark.queries_ext import _publish_fixture_dir
+from kaggle_ecommerce_etl_spark.queries_common import _publish_fixture_dir
 from kaggle_ecommerce_etl_spark.queries_pipeline import _amazon_fixture
 from kaggle_ecommerce_etl_spark.session import get_spark
 from kaggle_ecommerce_etl_spark.sources.csv_source import (

@@ -32,10 +32,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench
 from pyspark.sql import functions as F
 
-from kaggle_ecommerce_etl_spark.queries import _t
-from kaggle_ecommerce_etl_spark.queries_ext import (
+from kaggle_ecommerce_etl_spark.queries_common import (
     _publish_fixture_dir,
     _stream_fixture_dir,
+    _t,
 )
 from kaggle_ecommerce_etl_spark.session import get_spark
 

@@ -13,12 +13,6 @@ import math
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark import queries_ext2 as q2
-from kaggle_ecommerce_etl_spark.queries import REGISTRY
-
-
-def test_ext2_registry_merged():
-    for name in q2.EXT2_REGISTRY:
-        assert name in REGISTRY
 
 
 def test_priority_line_counts_conserves_join(spark, sf_dir):
@@ -221,7 +215,7 @@ def test_jdbc_partitioned_read_bounds_never_drop_rows(spark, sf_dir):
     """Spark's stride bounds only shape partition sizes: rows OUTSIDE
     [lowerBound, upperBound) must still be read (first/last strides
     are unbounded)."""
-    from kaggle_ecommerce_etl_spark.queries_ext import _fixture_tag
+    from kaggle_ecommerce_etl_spark.queries_common import _fixture_tag
     from kaggle_ecommerce_etl_spark.sinks.jdbc import (
         DERBY_DRIVER,
         derby_memory_url,
@@ -249,22 +243,21 @@ def test_table_checksum_order_independent(spark, sf_dir):
         r.o_orderstatus: r.checksum
         for r in q2.q_table_checksum(spark, sf_dir).collect()
     }
-    import kaggle_ecommerce_etl_spark.queries as q
-
-    orig_t = q._t
+    # q_table_checksum reads its table through its own module's _t
+    orig_t = q2._t
 
     def shuffled_t(spark_, sf_dir_, name):
         df = orig_t(spark_, sf_dir_, name)
         return df.repartition(13) if name == "orders" else df
 
     try:
-        q._t = shuffled_t
+        q2._t = shuffled_t
         again = {
             r.o_orderstatus: r.checksum
             for r in q2.q_table_checksum(spark, sf_dir).collect()
         }
     finally:
-        q._t = orig_t
+        q2._t = orig_t
     assert again == base
 
     # sensitivity: perturbing ONE cell must change exactly that status
@@ -280,13 +273,13 @@ def test_table_checksum_order_independent(spark, sf_dir):
         )
 
     try:
-        q._t = perturbed_t
+        q2._t = perturbed_t
         tampered = {
             r.o_orderstatus: r.checksum
             for r in q2.q_table_checksum(spark, sf_dir).collect()
         }
     finally:
-        q._t = orig_t
+        q2._t = orig_t
     changed = [s for s in base if tampered[s] != base[s]]
     assert len(changed) == 1, (changed, base, tampered)
 
@@ -408,7 +401,9 @@ def test_jsonl_quarantine_catches_garbage(spark, sf_dir):
         read_jsonl_quarantine,
     )
 
-    path = q2._format_fixture(sf_dir, "docs_jsonl_corrupt", "documents")
+    from kaggle_ecommerce_etl_spark.queries_common import _format_fixture
+
+    path = _format_fixture(sf_dir, "docs_jsonl_corrupt", "documents")
     _good, bad = read_jsonl_quarantine(
         spark, path, "doc_id long, lang string, n_chars long", glob="part-*"
     )
@@ -450,7 +445,7 @@ def test_medallion_dedup_is_load_bearing(spark, sf_dir):
     # count what the pipeline ACTUALLY delivered from its own landing
     # files (not a re-derivation of the split predicates): the batches
     # must overlap, or the dedup guarantee was never exercised
-    from kaggle_ecommerce_etl_spark.queries_ext import _stream_fixture_dir
+    from kaggle_ecommerce_etl_spark.queries_common import _stream_fixture_dir
 
     landing = _stream_fixture_dir("med", sf_dir)
     delivered = (

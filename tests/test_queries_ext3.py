@@ -15,14 +15,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark import queries_ext3 as q3
-from kaggle_ecommerce_etl_spark.queries import REGISTRY
-
-
-def test_ext3_registry_merged():
-    for name in q3.EXT3_REGISTRY:
-        assert name in REGISTRY
-        fn, oracle = REGISTRY[name]
-        assert callable(fn) and isinstance(oracle, str)
 
 
 def test_heavy_hitters_vocab_within_sketch_budget(spark, sf_dir):
@@ -139,7 +131,7 @@ def test_text_roundtrip_preserves_embedded_tab(spark, tmp_path):
     """A tab INSIDE the text body must survive the line round-trip: the
     reader splits with limit 3, so only the first two tabs delimit
     fields and the rest belong to the payload."""
-    from kaggle_ecommerce_etl_spark.queries_ext import _publish_fixture_dir
+    from kaggle_ecommerce_etl_spark.queries_common import _publish_fixture_dir
 
     df = spark.createDataFrame(
         [(1, "en", "alpha\tbeta gamma"), (2, "fr", "plain text")],

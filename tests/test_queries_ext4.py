@@ -18,7 +18,6 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark import queries_ext4 as q4
-from kaggle_ecommerce_etl_spark.queries import REGISTRY
 
 
 def _texts(spark, sf_dir) -> dict[int, str]:
@@ -34,13 +33,6 @@ def _toks(text: str) -> list[str]:
     return [
         t for t in re.split("[ \t\n\r\x0b\f]+", text.strip().lower()) if t
     ]
-
-
-def test_ext4_registry_merged():
-    for name in q4.EXT4_REGISTRY:
-        assert name in REGISTRY
-        fn, oracle = REGISTRY[name]
-        assert callable(fn) and isinstance(oracle, str)
 
 
 def test_bpe_pair_counts_matches_naive(spark, sf_dir):
@@ -267,7 +259,7 @@ def test_pipe_syntax_lowers_to_same_plan_and_rows(spark, sf_dir):
     """The |> form must be pure sugar: same rows as the nested-SQL
     equivalent AND the same optimized plan shape (one scan with a
     pushed date filter, one aggregate pair — no extra exchange)."""
-    from kaggle_ecommerce_etl_spark.queries_ext3 import _view
+    from kaggle_ecommerce_etl_spark.queries_common import _view
 
     got = q4.q_pipe_syntax_revenue(spark, sf_dir)
     li = _view(spark, sf_dir, "lineitem")

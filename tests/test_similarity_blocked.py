@@ -15,7 +15,7 @@ from kaggle_ecommerce_etl_spark.functions.similarity import (
     cosine_topk,
     cosine_topk_matmul,
 )
-from kaggle_ecommerce_etl_spark.queries import _t
+from kaggle_ecommerce_etl_spark.queries_common import _t
 
 
 def _emb(spark, sf_dir, n=120):

@@ -129,7 +129,7 @@ def test_asof_rejects_collisions_and_bad_direction(frames):
 def test_range_join_matches_naive_theta_join(spark, sf_dir):
     """Bucketed plan ≡ naive key-equality + range filter, on real
     events at sf0.001 with a 1-hour window."""
-    from kaggle_ecommerce_etl_spark.queries import _t
+    from kaggle_ecommerce_etl_spark.queries_common import _t
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     iv = ev.select(
@@ -171,7 +171,7 @@ def test_asof_broadcast_equals_union_window(spark, frames, sf_dir):
     hand-built frames and real events×orders at sf0.001; plan has no
     shuffle on the left side (broadcast join only)."""
     from kaggle_ecommerce_etl_spark.operators.temporal import asof_join_broadcast
-    from kaggle_ecommerce_etl_spark.queries import _t
+    from kaggle_ecommerce_etl_spark.queries_common import _t
     from pyspark.sql import functions as F
 
     left, right = frames
