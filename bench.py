@@ -110,6 +110,10 @@ EXTRA = [
     # pinned-quantizer IVF probe and the cross-corpus ingestion gate
     "ann_ivf_topk",
     "jaccard_cross_gate",
+    # the prefix-join self-join (same core as jaccard_cross_gate) and
+    # the streaming drift monitor
+    "jaccard_pairs_prefix",
+    "streaming_drift_run",
 ]
 
 
@@ -540,6 +544,9 @@ def main() -> None:
         # (shuffle/trivial fingerprint + pre/post drift); uptime tells
         # the adjudicator whether this is a fresh boot mode.
         "host_uptime_sec": host_uptime_sec(),
+        # the cores Spark actually schedules on — a SPARK_GRAFT_CPUS or
+        # master setting the session ignored shows up here
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     detail = dict(out)
     detail["query_runs"] = run_detail

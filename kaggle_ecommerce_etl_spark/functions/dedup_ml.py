@@ -25,6 +25,8 @@ oracle-checkable.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
@@ -238,6 +240,15 @@ def ngram_jaccard_pairs(
     tokens are noise at any reasonable threshold. Cost when enabled:
     one tiny (vocab-sized) DF aggregate + a broadcast anti-join + a
     size-recount window — linear; the avoided join blowup is quadratic.
+
+    Not routed through the prefix-join core (:func:`_prefix_join`):
+    the capped Jaccard is a different value (sizes over the capped
+    vocabulary, which the ``max_df`` queries' oracles encode), and
+    with every df ≤ max_df the join is already linear, so prefixes
+    would only add the core's shuffles and construction-time
+    checkpoint. Measured (local[4], third build, build + execution):
+    ``word_jaccard_pairs`` 0.41 + 0.78 s vs ``jaccard_pairs_prefix``
+    0.96 + 0.39 s at sf0.01, 0.64 + 1.38 s vs 1.80 + 2.24 s at sf0.1.
     """
     tok_expr = (
         shingles_expr(qcol(text_col))
@@ -595,140 +606,6 @@ def _dup_clusters_loop(
     )
 
 
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_col: str | None = None,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact word-set Jaccard self-join with PREFIX FILTERING — the
-    SSJoin/PPJoin family (Chaudhuri et al. 2006; Xiao et al. 2008,
-    both public literature), the no-recall-loss alternative to
-    ``ngram_jaccard_pairs``'s ``max_df`` stopword guard.
-
-    Principle: order every document's tokens by a GLOBAL rank
-    (document frequency ascending, token ascending — rarest first)
-    and keep only the first ⌊(1−t)·|d|⌋+1 as its *prefix*. Any pair
-    with Jaccard ≥ t MUST share a prefix token, so the inverted-index
-    join runs over prefixes only: posting lists concentrate on RARE
-    tokens, and the stopword lists that make Σdf² quadratic never
-    enter the index at all. Survivors are verified exactly with
-    ``array_intersect`` on the full token sets — the result is
-    IDENTICAL to the unfiltered join at every scale (unlike max_df,
-    which redefines the vocabulary).
-
-    Plan: explode → df-count agg → token-rank join → per-doc window
-    (prefix cut) → prefix equi-join → two id joins + array verify.
-    More (bounded) shuffles than the max_df path, but candidate count
-    collapses from Σdf(token)² to Σdf(prefix-token)².
-
-    Measured trade (sf0.1, local[32], warm): max_df 1.4 s vs prefix
-    9.2 s — on a corpus with NO quadratic hot token the fixed extra
-    shuffles dominate. Use max_df for benign vocabularies; use this
-    when a stopword-frequency token would otherwise square a posting
-    list, or when exactness of the full vocabulary is contractual.
-
-    SHAPE (r11, VERDICT r10 next-round #2 — the r10 cross-gate tricks
-    applied to the self-join variant; every change is candidate-set-
-    or value-preserving, so the output is byte-identical):
-
-    - the ranked PREFIX index (~(1−t′) of exploded tokens, bounded) is
-      eagerly localCheckpoint-ed before the self-join — previously the
-      whole rank pipeline (explode → dfreq shuffle → rank window) was
-      planned ONCE PER SIDE of the join (same fault-tolerance caveat
-      as dup_clusters' loop: a lost executor forfeits the block).
-    - PPJoin size-compatibility + count/last-position filters (see
-      _cross_prefix_candidates for the exactness proof) prune
-      candidates at the same shuffle the old ``distinct`` paid — the
-      groupBy replaces it 1:1.
-    - the exact verify computes ONE ``array_union`` per candidate
-      (inter = s1+s2−|union|, exact integer arithmetic over distinct
-      arrays) instead of up to four ``array_intersect`` evaluations —
-      the `+ rand(42)*0.0` term is the §4.4 optimizer barrier that
-      stops the threshold filter being pushed into the join and
-      re-inlining the set-op (pinned by
-      tests/test_queries_ext.py::test_single_evaluation_plan_pins).
-
-    Side effect at construction: because of that checkpoint, CALLING
-    this function runs a Spark job (explode → dfreq agg → rank window
-    over the whole input) before it returns the DataFrame. A caller
-    that only inspects the plan or schema still pays for the prefix
-    index."""
-    from pyspark.sql.window import Window
-
-    t_eff = threshold - _ROUND4_MARGIN
-    df = ensure_min_partitions(df)
-    blk = [qcol(block_col).alias("__blk")] if block_col else []
-    base = df.select(
-        qcol(id_col).alias("__id"),
-        *blk,
-        F.array_distinct(tokens_ws(qcol(text_col))).alias("__toks"),
-    ).withColumn("__size", F.size("__toks"))
-
-    blk_cols = ["__blk"] if block_col else []
-    ex = base.select(
-        "__id", *blk_cols, "__size", F.explode("__toks").alias("__tok")
-    )
-    tok_cols = ["__tok", *blk_cols]
-    dfreq = ex.groupBy(*tok_cols).agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("__id").orderBy("__df", "__tok")
-    prefix = (
-        ex.join(dfreq, tok_cols)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(
-            F.col("__rn")
-            <= F.floor(F.lit(1.0 - t_eff) * F.col("__size")) + F.lit(1)
-        )
-        .select("__id", *blk_cols, "__size", "__rn", "__tok")
-        .localCheckpoint(eager=True)
-    )
-    p1 = prefix.select(
-        F.col("__id").alias("id1"), *blk_cols, "__tok",
-        F.col("__size").alias("__s1"), F.col("__rn").alias("__p1"),
-    )
-    p2 = prefix.select(
-        F.col("__id").alias("id2"), *blk_cols, "__tok",
-        F.col("__size").alias("__s2"), F.col("__rn").alias("__p2"),
-    )
-    alpha = F.lit(t_eff / (1.0 + t_eff)) * (F.col("__s1") + F.col("__s2"))
-    cand = (
-        p1.join(p2, tok_cols)
-        .filter(F.col("id1") < F.col("id2"))
-        .filter(
-            (F.col("__s2") * F.lit(t_eff) <= F.col("__s1"))
-            & (F.col("__s1") * F.lit(t_eff) <= F.col("__s2"))
-        )
-        .groupBy("id1", "id2", "__s1", "__s2")
-        .agg(
-            F.count(F.lit(1)).alias("__c"),
-            F.max("__p1").alias("__p1x"),
-            F.max("__p2").alias("__p2x"),
-        )
-        .filter(
-            F.col("__c")
-            + F.least(
-                F.col("__s1") - F.col("__p1x"),
-                F.col("__s2") - F.col("__p2x"),
-            )
-            >= alpha
-        )
-        .select("id1", "id2")
-    )
-    t1 = base.select(F.col("__id").alias("id1"), F.col("__toks").alias("__t1"))
-    t2 = base.select(F.col("__id").alias("id2"), F.col("__toks").alias("__t2"))
-    u = F.size(F.array_union("__t1", "__t2"))
-    inter = F.size("__t1") + F.size("__t2") - u
-    jac = F.round(inter.cast("double") / u.cast("double"), 4)
-    return (
-        cand.join(t1, "id1")
-        .join(t2, "id2")
-        .withColumn("jaccard", jac + F.rand(42) * F.lit(0.0))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
-
-
 #: Rounding guard for prefix lengths: outputs are filtered on
 #: round(jaccard, 4) >= t, so a pair whose TRUE jaccard lies in
 #: [t − 5e-5, t) still belongs in the result set. Prefixes are built
@@ -739,103 +616,66 @@ def jaccard_pairs_prefix(
 _ROUND4_MARGIN = 5e-5
 
 
-def _cross_prefix_candidates(
-    b_ex: DataFrame, c_ex: DataFrame, threshold: float
+def _word_sets(
+    df: DataFrame, text_col: str, id_col: str, block_col: str | None = None
 ) -> DataFrame:
-    """Candidate (in_id, ex_id) pairs from PREFIX posting lists only.
+    """(__id, [__blk], __toks, __size): each document's distinct
+    whitespace-word set and its size — one side of :func:`_prefix_join`."""
+    # tokenization is CPU-bound; single-file parquet arrives as one
+    # partition → force parallelism before the explode
+    return ensure_min_partitions(df).select(
+        qcol(id_col).alias("__id"),
+        *([qcol(block_col).alias("__blk")] if block_col else []),
+        F.array_distinct(tokens_ws(qcol(text_col))).alias("__toks"),
+    ).withColumn("__size", F.size("__toks"))
 
-    ``b_ex``/``c_ex`` are exploded token rows (__id, __size, __tok).
-    The global token order is document frequency over BOTH sides
-    ascending (ties by token), so each side's prefix is its
-    ⌊(1−t')·size⌋+1 rarest tokens. Any pair with jaccard ≥ t' must
-    share a prefix token: |A∩B| ≥ α forces prefixes of length
-    |X|−α+1 to intersect (Chaudhuri et al. 2006), and
-    α ≥ t'/(1+t')·(s1+s2) ≥ t'·max(s1,s2) for size-compatible pairs,
-    so ⌊(1−t')·s⌋+1 ≥ s−α+1 on both sides independently. Stopword
-    posting lists never reach the join — candidate volume is
-    Σ_rare-tok df_b·df_c, not Σ_all-tok df_b·df_c. A size-
-    compatibility conjunct (j ≥ t' forces min(s1,s2) ≥ t'·max) prunes
-    the equi-join output before the aggregation.
 
-    POSITIONAL FILTER (PPJoin-style, Xiao et al. 2008 — exact; r6
-    first-position form upgraded r9 to the full count+last-position
-    bound): both docs' token lists are sorted by the SAME global
-    (df, token) order, so prefixes are PREFIXES of that order. Let
-    cnt = number of shared prefix tokens and p1x/p2x the pair's LAST
-    matched prefix positions (1-based ranks). Any common token NOT
-    counted in cnt must rank after that last matched token in BOTH
-    docs — if it ranked before it anywhere, order consistency puts
-    it before rank p1x ≤ prefix-length in both docs, i.e. in both
-    prefixes, so it would have been counted. Hence
-    overlap ≤ cnt + min(s1−p1x, s2−p2x), and the pair is pruned when
-    that bound < α = t'/(1+t')·(s1+s2), the minimum intersection
-    Jaccard ≥ t' forces. This dominates the r6 first-position bound
-    1 + min(s1−p1min, s2−p2min): matched positions are distinct, so
-    p1x ≥ p1min + cnt − 1, giving cnt + (s−p1x) ≤ 1 + (s−p1min) on
-    each side. Using t_eff (the round-4 margin) loosens α → never
-    prunes a true pair; exact array verification downstream makes
-    any remaining false candidate harmless.
-
-    Measured honestly (r6, sf0.1, t=0.8, first-position form):
-    338k → 319k candidates and a time wash — 146.9k of the
-    candidates are TRUE pairs on this dup-dense synthetic corpus
-    (~46% precision bounds what ANY candidate filter can remove).
-    The filter's regime is the sparse one — a real crawl batch where
-    admitted pairs are ≪ candidates; it costs nothing here (the
-    groupBy replaces the distinct at the same shuffle), so it stays
-    on unconditionally. r9 re-measure with the count+last-position
-    bound: see q_jaccard_cross_gate's cost-profile note.
-
-    SHAPE (r10): both sides are ranked in ONE pass over a side-tagged
-    union — one dfreq aggregate and one window instead of one each per
-    side (the old per-side `_prefix` planned the dfreq subtree and the
-    exploded scans twice) — and the ranked PREFIX index (~(1−t') of
-    the exploded tokens) is eagerly localCheckpoint-ed before the pair
-    join, whose two inputs become filters over that materialization.
-    Without it the self-referencing join recomputes the full rank
-    pipeline (dfreq shuffle + window sort) once per side; with it the
-    pipeline runs once and the join re-reads a bounded ~(1−t')-sized
-    index from executor memory/disk — strictly less work at any scale
-    (same localCheckpoint fault-tolerance caveat as dup_clusters'
-    loop). Measured sf0.1 (t=0.8, min-of-4, same session):
-    3.65 → 2.72 s end-to-end, identical 146,875-row result. The
-    global (df, token) order is unchanged, so prefixes — and therefore
-    the candidate set — are byte-identical."""
+def _prefix_candidates(
+    sides: list[DataFrame], ids: tuple[str, str], threshold: float
+) -> DataFrame:
+    """Candidate pairs ``ids`` of :func:`_prefix_join`: the ranked,
+    checkpointed prefix index joined with itself, then the size and
+    count/last-position filters."""
     from pyspark.sql.window import Window
 
     t_eff = threshold - _ROUND4_MARGIN
-    ex = b_ex.select(
-        F.lit(True).alias("__b"), "__id", "__size", "__tok"
-    ).unionAll(
-        c_ex.select(F.lit(False).alias("__b"), "__id", "__size", "__tok")
-    )
-    dfreq = ex.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("__b", "__id").orderBy("__df", "__tok")
-    ranked = (
-        ex.join(dfreq, "__tok")
+    keys = ["__tok", *(["__blk"] if "__blk" in sides[0].columns else [])]
+    ex = functools.reduce(DataFrame.unionAll, [
+        side.select(
+            F.lit(i).alias("__side"), "__id", *keys[1:], "__size",
+            F.explode("__toks").alias("__tok"),
+        )
+        for i, side in enumerate(sides)
+    ])
+    dfreq = ex.groupBy(*keys).agg(F.count(F.lit(1)).alias("__df"))
+    w = Window.partitionBy("__side", "__id").orderBy("__df", "__tok")
+    prefix = (
+        ex.join(dfreq, keys)
         .withColumn("__rn", F.row_number().over(w))
         .filter(
             F.col("__rn")
             <= F.floor(F.lit(1.0 - t_eff) * F.col("__size")) + F.lit(1)
         )
+        .select("__side", "__id", *keys, "__size", "__rn")
         .localCheckpoint(eager=True)
     )
-    pb = ranked.filter(F.col("__b")).select(
-        F.col("__id").alias("in_id"), F.col("__size").alias("__s1"),
-        F.col("__rn").alias("__p1"), "__tok",
-    )
-    pc = ranked.filter(~F.col("__b")).select(
-        F.col("__id").alias("ex_id"), F.col("__size").alias("__s2"),
-        F.col("__rn").alias("__p2"), "__tok",
-    )
+
+    def postings(side: int, k: int) -> DataFrame:
+        return prefix.filter(F.col("__side") == side).select(
+            F.col("__id").alias(ids[k - 1]), *keys,
+            F.col("__size").alias(f"__s{k}"), F.col("__rn").alias(f"__p{k}"),
+        )
+
+    pairs = postings(0, 1).join(postings(len(sides) - 1, 2), keys)
+    if len(sides) == 1:
+        pairs = pairs.filter(F.col(ids[0]) < F.col(ids[1]))
     alpha = F.lit(t_eff / (1.0 + t_eff)) * (F.col("__s1") + F.col("__s2"))
     return (
-        pb.join(pc, "__tok")
-        .filter(
+        pairs.filter(
             (F.col("__s2") * F.lit(t_eff) <= F.col("__s1"))
             & (F.col("__s1") * F.lit(t_eff) <= F.col("__s2"))
         )
-        .groupBy("in_id", "ex_id", "__s1", "__s2")
+        .groupBy(*ids, "__s1", "__s2")
         .agg(
             F.count(F.lit(1)).alias("__c"),
             F.max("__p1").alias("__p1x"),
@@ -849,7 +689,98 @@ def _cross_prefix_candidates(
             )
             >= alpha
         )
-        .select("in_id", "ex_id")
+        .select(*ids)
+    )
+
+
+def _prefix_join(
+    sides: list[DataFrame], ids: tuple[str, str], threshold: float
+) -> DataFrame:
+    """Exact word-set Jaccard join with PREFIX FILTERING — the
+    SSJoin/PPJoin family (Chaudhuri et al. 2006; Xiao et al. 2008) —
+    behind :func:`jaccard_pairs_prefix` (one shared side, pairs
+    ``id1 < id2``) and :func:`jaccard_cross_prefix` (batch and corpus
+    sides). ``sides`` are :func:`_word_sets` frames; a ``__blk``
+    column makes the block an extra equi key of the df count and the
+    pair join. Output: ``ids`` + jaccard (round 4) ≥ ``threshold``.
+
+    Exactness: rank every token by document frequency over all sides
+    (within the block) ascending, ties by token, and keep each doc's
+    first ⌊(1−t')·|d|⌋+1 tokens as its prefix (t' = t −
+    ``_ROUND4_MARGIN``). |A∩B| ≥ α forces prefixes of length |X|−α+1
+    to intersect, and α ≥ t'/(1+t')·(s1+s2) ≥ t'·max(s1,s2) for
+    size-compatible pairs, so any pair with Jaccard ≥ t' shares a
+    prefix token. Stopword posting lists never reach the join, and the
+    result equals the unfiltered join at every scale (``max_df``
+    instead redefines the vocabulary). Candidates are pruned by size
+    compatibility (min(s1,s2) ≥ t'·max) and by the count +
+    last-position bound: with cnt shared prefix tokens and p1x/p2x the
+    last matched ranks, an uncounted common token ranks after both
+    (same global order), so overlap ≤ cnt + min(s1−p1x, s2−p2x) < α
+    prunes the pair. That bound dominates the first-position form
+    (p1x ≥ p1min + cnt − 1), and its groupBy replaces a ``distinct``
+    at the same shuffle.
+
+    Shape: all sides are ranked in ONE pass over a side-tagged union
+    (one df aggregate, one window), and the ranked prefix index
+    (≤(1−t')+1/|d| of the exploded tokens) is eagerly
+    ``localCheckpoint``-ed, so both pair-join inputs read one
+    materialization instead of each replanning explode → df shuffle →
+    rank window (a lost executor forfeits the block; SCALING.md's
+    ``localCheckpoint`` ledger). The verify computes ONE
+    ``array_union`` per candidate (inter = s1+s2−|union|, exact over
+    distinct arrays); ``+ rand(42)*0.0`` adds exactly 0.0 but makes
+    the column non-deterministic, so the optimizer cannot push the
+    threshold filter into the join and re-inline the set operation
+    (pinned by tests/test_queries_ext.py::test_single_evaluation_plan_pins).
+
+    Side effect at construction: because of the checkpoint, CALLING
+    either public wrapper runs Spark jobs (explode → df aggregate →
+    rank window over every side) before the DataFrame is returned,
+    even for a caller that only inspects the plan (pinned by
+    tests/test_dedup_ml.py::test_prefix_join_construction_jobs).
+
+    Measured (local[32]): prefix filtering is a HIGH-t tool — at
+    t=0.5 half of every doc enters the index, and a hot-token 15k-doc
+    replica ran slower than the naive join + size filter (313 vs
+    211 s, r5); use t ≥ 0.8. Without a hot token the extra shuffles
+    dominate (sf0.1 self-join: ``max_df`` 1.4 s vs prefix 9.2 s,
+    before the r11 checkpoint). Cross gate at sf0.1 (50k docs,
+    1.4k-doc batch, t=0.8): the verify dominated (~3.2 of 5.2 s, r6;
+    persisting the tokenized sides was a wash); the positional bound
+    cut candidates 338k → 319k → 300k (r6, r9) for no wall-time gain,
+    because 146.9k are true pairs on this dup-dense corpus; one-pass
+    ranking + checkpoint took 3.65 → 2.72 s and one ``array_union`` +
+    barrier 6.2 → 3.5 s (r10), identical 146,875-row result."""
+    cand = _prefix_candidates(sides, ids, threshold)
+    t1 = sides[0].select(F.col("__id").alias(ids[0]), F.col("__toks").alias("__t1"))
+    t2 = sides[-1].select(F.col("__id").alias(ids[1]), F.col("__toks").alias("__t2"))
+    u = F.size(F.array_union("__t1", "__t2"))
+    inter = F.size("__t1") + F.size("__t2") - u
+    jac = F.round(inter.cast("double") / u.cast("double"), 4)
+    return (
+        cand.join(t1, ids[0])
+        .join(t2, ids[1])
+        .withColumn("jaccard", jac + F.rand(42) * F.lit(0.0))
+        .filter(F.col("jaccard") >= threshold)
+        .select(*ids, "jaccard")
+    )
+
+
+def jaccard_pairs_prefix(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    block_col: str | None = None,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """(id1, id2, jaccard) for every pair id1 < id2 (within
+    ``block_col``, if given) with word-set Jaccard ≥ threshold (rounded
+    to 4dp) — EXACT, the no-recall-loss alternative to
+    ``ngram_jaccard_pairs``' ``max_df`` guard. Prefix-filtered self-join
+    on :func:`_prefix_join`, which runs Spark jobs at construction."""
+    return _prefix_join(
+        [_word_sets(df, text_col, id_col, block_col)], ("id1", "id2"), threshold
     )
 
 
@@ -862,82 +793,12 @@ def jaccard_cross_prefix(
 ) -> DataFrame:
     """(in_id, ex_id, jaccard) for every batch×corpus pair with word
     Jaccard ≥ threshold (rounded to 4dp) — EXACT, the two-sided
-    ingestion-gate sibling of ``jaccard_pairs_prefix``.
-
-    Only PREFIX tokens (each doc's ⌊(1−t')·size⌋+1 rarest) enter the
-    inverted-index join; survivors are verified exactly on the full
-    token arrays (``array_intersect`` over distinct arrays ≡ the
-    naive groupBy count), so the output is identical to the naive
-    all-token equi-join at every scale.
-
-    REGIME HONESTY (measured, r5): the filter's strength is
-    (1−t) — at t=0.5 the prefix keeps HALF of every doc, the
-    mid-frequency token band passes through, and on a hot-token 15k-
-    doc replica this path measured SLOWER than the naive join + size
-    filter (313 s vs 211 s) while both stayed ~quadratic. Use it at
-    t ≥ 0.8 where the prefix is the rarest ≤20% of each doc and the
-    candidate volume collapses (same threshold-regime lesson as
-    similarity.lsh_auto_params); at t ≈ 0.5 prefer the naive join +
-    size filter for exactness, or MinHash-LSH for the recall-trading
-    scale route. At 100 TB the batch side is small — its prefix
-    index broadcasts — and the df-count aggregation over the union
-    is one map-side-combined shuffle.
-
-    COST PROFILE (measured r6, sf0.1 = 50k docs, 1.4k-doc batch,
-    t=0.8, local[32], warm): tokenize+explode 0.5 s, prefix
-    candidates 1.5 s (338k pairs), exact verification ~3.2 s of the
-    5.2 s total — the array_intersect re-check of candidates
-    DOMINATES, not tokenization (persisting the tokenized projections
-    measured a wash, 5.5-6.1 s both ways, and was rejected). To make
-    this faster, shrink the CANDIDATE set (raise t, positional
-    filtering) — not the scan. r9: the count+last-position bound
-    (see _cross_prefix_candidates) cut candidates 319k → 300k at the
-    same shuffle cost; end-to-end a wash here (min-of-3 4.75 vs 5.1 s,
-    canaries in band) because 146.9k of the candidates are TRUE pairs
-    on this dup-dense corpus — the filter's payoff regime is a sparse
-    real crawl where false candidates dominate."""
-    b_base = ensure_min_partitions(batch).select(
-        qcol(id_col).alias("__id"),
-        F.array_distinct(tokens_ws(qcol(text_col))).alias("__toks"),
-    ).withColumn("__size", F.size("__toks"))
-    c_base = ensure_min_partitions(corpus).select(
-        qcol(id_col).alias("__id"),
-        F.array_distinct(tokens_ws(qcol(text_col))).alias("__toks"),
-    ).withColumn("__size", F.size("__toks"))
-    b_ex = b_base.select("__id", "__size", F.explode("__toks").alias("__tok"))
-    c_ex = c_base.select("__id", "__size", F.explode("__toks").alias("__tok"))
-    cand = _cross_prefix_candidates(b_ex, c_ex, threshold)
-    t1 = b_base.select(F.col("__id").alias("in_id"), F.col("__toks").alias("__t1"))
-    t2 = c_base.select(F.col("__id").alias("ex_id"), F.col("__toks").alias("__t2"))
-    # Verify cost shape (r10, guide §4.4's duplicated-evaluation trap —
-    # it applies to expensive EXPRESSIONS exactly as to UDFs): the
-    # original `withColumn(jaccard, f(intersect)).filter(jaccard >= t)`
-    # pushed the filter into the ex_id join condition, so
-    # array_intersect — a per-row hash set over ~2×|doc| STRING tokens,
-    # the dominant term of this query (measured r6: ~3.2 s of 5.2 s) —
-    # was evaluated once in the join condition and AGAIN in the output
-    # projection, and appeared twice per expression on top. Two exactly
-    # value-preserving rewrites:
-    #  1. |union| IS the Jaccard denominator: inter = s1+s2-|union| in
-    #     exact integer arithmetic, so ONE array_union subexpression
-    #     replaces two array_intersects and the single double division
-    #     (inter/|union|) is bit-identical to inter/(s1+s2-inter).
-    #  2. `+ rand(42)*0.0` — adds exactly 0.0 (rand ∈ [0,1), no NaN/inf)
-    #     but marks the column NON-DETERMINISTIC, which stops the
-    #     optimizer pushing the threshold filter into the join and
-    #     re-inlining the expression (the expression-level twin of
-    #     udf.asNondeterministic() in the optimization guide §4.4); the
-    #     set arithmetic now runs ONCE per candidate. Retry-safe: the
-    #     added term is the constant 0.0.
-    # Measured (sf0.1, 295k candidates, min-of-3): 6.2 s → 3.5 s with
-    # the identical 146,875-row result.
-    u = F.size(F.array_union("__t1", "__t2"))
-    inter = F.size("__t1") + F.size("__t2") - u
-    jac = F.round(inter.cast("double") / u.cast("double"), 4)
-    return (
-        cand.join(t1, "in_id")
-        .join(t2, "ex_id")
-        .withColumn("jaccard", jac + F.rand(42) * F.lit(0.0))
-        .filter(F.col("jaccard") >= threshold)
-        .select("in_id", "ex_id", "jaccard")
+    ingestion-gate sibling of :func:`jaccard_pairs_prefix`, on the same
+    :func:`_prefix_join` core (and its construction-time jobs). Use it
+    at t ≥ 0.8 (the measured regime note is on the core); at 100 TB
+    the batch side is small, so its prefix postings broadcast."""
+    return _prefix_join(
+        [_word_sets(batch, text_col, id_col), _word_sets(corpus, text_col, id_col)],
+        ("in_id", "ex_id"),
+        threshold,
     )

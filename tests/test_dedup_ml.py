@@ -265,12 +265,15 @@ def test_jaccard_cross_prefix_matches_naive(spark):
 
 
 def test_cross_prefix_stopword_never_indexed(spark):
-    """The quadratic-protection property itself: a token present in
-    EVERY doc (on both sides) never enters the candidate join when
-    each doc has >= 3 distinct tokens, so fully-disjoint docs produce
-    ZERO candidates — the naive join would produce |batch|x|corpus|."""
+    """The quadratic-protection property itself, for both callers of the
+    prefix-join core: a token present in EVERY doc (on both sides of the
+    cross gate; in every doc of a block for the blocked self-join) never
+    enters the candidate join when each doc has >= 3 distinct tokens, so
+    otherwise-disjoint docs produce ZERO candidates — the naive join
+    would produce |batch|x|corpus| (or every same-block pair)."""
     from kaggle_ecommerce_etl_spark.functions.dedup_ml import (
-        _cross_prefix_candidates,
+        _prefix_candidates,
+        _word_sets,
     )
 
     b = spark.createDataFrame(
@@ -280,18 +283,22 @@ def test_cross_prefix_stopword_never_indexed(spark):
         [(1000 + i, f"the x{i} y{i} z{i}") for i in range(40)],
         ["doc_id", "text"],
     )
-    toks = F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-    b_ex = (
-        b.select(F.col("doc_id").alias("__id"), toks.alias("__toks"))
-        .withColumn("__size", F.size("__toks"))
-        .select("__id", "__size", F.explode("__toks").alias("__tok"))
+    blocked = spark.createDataFrame(
+        [(i, f"src{i % 2}", f"the a{i} b{i} c{i}") for i in range(40)],
+        ["doc_id", "source", "text"],
     )
-    c_ex = (
-        c.select(F.col("doc_id").alias("__id"), toks.alias("__toks"))
-        .withColumn("__size", F.size("__toks"))
-        .select("__id", "__size", F.explode("__toks").alias("__tok"))
-    )
-    assert _cross_prefix_candidates(b_ex, c_ex, 0.5).count() == 0
+    cases = {
+        "cross": (
+            [_word_sets(b, "text", "doc_id"), _word_sets(c, "text", "doc_id")],
+            ("in_id", "ex_id"),
+        ),
+        "blocked self-join": (
+            [_word_sets(blocked, "text", "doc_id", "source")],
+            ("id1", "id2"),
+        ),
+    }
+    for case, (sides, ids) in cases.items():
+        assert _prefix_candidates(sides, ids, 0.5).count() == 0, case
 
 
 def test_cross_prefix_round_boundary_pair_included(spark):
@@ -415,3 +422,26 @@ def test_cc_stats_reset_releases_cache_when_checkpoint_fails(spark, monkeypatch)
     with pytest.raises(RuntimeError, match="checkpoint failed"):
         _dup_clusters_loop(edges, labels, max_iter=1)
     _assert_cache_released(spark, before)
+
+
+def test_prefix_join_construction_jobs(spark, sf_dir):
+    """Building either prefix-join query runs Spark jobs before any
+    action: the eager prefix-index checkpoint plus ``_t``'s parquet
+    footer reads. Pinned so the declared side effect cannot grow
+    unnoticed; a change that removes some of these jobs lowers the
+    pin deliberately."""
+    from kaggle_ecommerce_etl_spark.queries import REGISTRY
+
+    sc = spark.sparkContext
+
+    def build_jobs(name):
+        group = f"construct-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            REGISTRY[name][0](spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert build_jobs("jaccard_pairs_prefix") == 7
+    assert build_jobs("jaccard_cross_gate") == 9

@@ -147,3 +147,28 @@ def test_gen_catalog_newest_artifact():
     # and the generated QUERIES.md must cite an artifact that exists
     queries_md = open(os.path.join(gc.REPO, "QUERIES.md")).read()
     assert newest in queries_md, "QUERIES.md cites a stale oracle artifact"
+
+
+def test_queries_md_matches_generator():
+    """QUERIES.md is generated: the committed file must equal what
+    ``python scripts/gen_catalog.py`` prints today (registry order,
+    docstring first lines, newest evidence pointers), so it cannot go
+    stale silently. Fix by regenerating:
+    ``python scripts/gen_catalog.py > QUERIES.md``."""
+    import contextlib
+    import importlib
+    import io
+    import sys as _sys
+
+    scripts_dir = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts")
+    _sys.path.insert(0, scripts_dir)
+    try:
+        gc = importlib.import_module("gen_catalog")
+    finally:
+        _sys.path.remove(scripts_dir)
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        gc.main()
+    committed = open(os.path.join(gc.REPO, "QUERIES.md")).read()
+    assert out.getvalue() == committed
