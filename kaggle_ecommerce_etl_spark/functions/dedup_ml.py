@@ -127,6 +127,43 @@ def minhash_signatures(
     )
 
 
+def _banded_pairs(index: DataFrame) -> DataFrame:
+    """The banded LSH self-join core: candidate pairs (id1 < id2,
+    distinct) of rows that share a (band, key) in ``index``, an
+    ``(__id, __band, __key)`` frame with one row per (item, band).
+    :func:`lsh_candidate_pairs` feeds it MinHash bands;
+    ``similarity.lsh_neardup_pairs`` feeds it hyperplane buckets
+    (band = hyperplane table, key = bucket).
+
+    Single-join shape (the 100 TB path): each item's band keys are
+    computed ONCE per row in one projection upstream, then ONE
+    self-equi-join on (band, key) + a distinct. Exactly two shuffles
+    total (join on the band key, distinct on the pair), versus the
+    naive n_bands separate self-joins + union + distinct. Per-bucket
+    skew (a degenerate band value) is handled by AQE skew-join; shuffle
+    volume stays ∝ Σ bucket sizes, never n².
+
+    Construction-time side effect: the index is eagerly
+    localCheckpoint-ed before the self-join (r10) — the two join
+    inputs otherwise each recompute the whole upstream pipeline (for
+    MinHash, k md5 rehashes per shingle per doc; for hyperplanes, the
+    T×b plane projections per vector). The materialization is bounded
+    (n_bands small rows per item — exactly the index a production LSH
+    build persists); measured sf0.1 q_dup_clusters end-to-end 1.38 →
+    1.20 s (min-of-4, identical rows), and at scale it halves the
+    signature compute.
+    """
+    index = index.localCheckpoint(eager=True)
+    left = index.select(F.col("__id").alias("id1"), "__band", "__key")
+    right = index.select(F.col("__id").alias("id2"), "__band", "__key")
+    return (
+        left.join(right, ["__band", "__key"])
+        .filter(F.col("id1") < F.col("id2"))
+        .select("id1", "id2")
+        .dropDuplicates()
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
@@ -135,22 +172,11 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Candidate pairs (id1 < id2) sharing at least one LSH band.
 
-    Single-join shape (the 100 TB path, same as similarity.
-    lsh_bucket_topk): each signature explodes to n_bands (band, key)
-    rows — band keys computed ONCE per row in one projection — then ONE
-    self-equi-join on (band, key) + a distinct. Exactly two shuffles
-    total (join on the band key, distinct on the pair), versus the
-    naive n_bands separate self-joins + union + distinct. Per-bucket
-    skew (a degenerate band value) is handled by AQE skew-join; shuffle
-    volume stays ∝ Σ bucket sizes, never n².
-
-    r10: the banded index is eagerly localCheckpoint-ed before the
-    self-join — the two join inputs otherwise each recompute the whole
-    minhash pipeline (k md5 rehashes per shingle per doc, the dominant
-    per-row cost). The materialization is bounded (n_bands small rows
-    per doc — exactly the index a production LSH build persists);
-    measured sf0.1 q_dup_clusters end-to-end 1.38 → 1.20 s (min-of-4,
-    identical rows), and at scale it halves the signature compute.
+    Each signature explodes to n_bands (band, key) rows — band keys
+    computed ONCE per row in one projection, the key the md5 of the
+    band's ``band_size`` minhash values — and the banded self-join
+    core :func:`_banded_pairs` (eager index checkpoint, one
+    self-equi-join on (band, key), distinct) yields the pairs.
     """
     n_bands = k // band_size
     band_structs = F.array(
@@ -167,18 +193,12 @@ def lsh_candidate_pairs(
             for b in range(n_bands)
         ]
     )
-    exploded = signatures.select(
-        qcol(id_col).alias("__id"), F.explode(band_structs).alias("bk")
-    ).select(
-        "__id", F.col("bk.band").alias("__band"), F.col("bk.key").alias("__key")
-    ).localCheckpoint(eager=True)
-    left = exploded.select(F.col("__id").alias("id1"), "__band", "__key")
-    right = exploded.select(F.col("__id").alias("id2"), "__band", "__key")
-    return (
-        left.join(right, ["__band", "__key"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates()
+    return _banded_pairs(
+        signatures.select(
+            qcol(id_col).alias("__id"), F.explode(band_structs).alias("bk")
+        ).select(
+            "__id", F.col("bk.band").alias("__band"), F.col("bk.key").alias("__key")
+        )
     )
 
 

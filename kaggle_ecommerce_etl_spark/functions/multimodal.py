@@ -93,8 +93,6 @@ def extract_features(df: DataFrame, dim: int = 8, strict: bool = False) -> DataF
 
 FRAME_SCHEMA = "media_id bigint, frame_idx int, n_frames int, frame_md5 string"
 
-RESIZE_SCHEMA = "media_id bigint, width int, height int, pixels array<float>"
-
 
 def sample_frames(
     df: DataFrame,
@@ -137,43 +135,6 @@ def sample_frames(
             yield pd.DataFrame(out)
 
     return df.mapInPandas(batches, schema=FRAME_SCHEMA)
-
-
-def resize_image(
-    df: DataFrame, width: int = 4, height: int = 4, strict: bool = False
-) -> DataFrame:
-    """Image-style resize via mapInPandas: each blob becomes a
-    width×height float grid. Fake codec = evenly-strided byte samples
-    normalized to [0,1]; a real build swaps in PIL/opencv decode +
-    interpolation. Deterministic, so downstream embedding/similarity
-    stages can be tested end-to-end."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pixels = []
-            for blob in pdf["blob"]:
-                if strict:
-                    raise NotImplementedError(
-                        "no media codecs in this environment"
-                    )
-                b = bytes(blob) if blob is not None else b""
-                n_px = width * height
-                if not b:
-                    pixels.append([0.0] * n_px)
-                    continue
-                pixels.append(
-                    [round(b[(i * len(b)) // n_px] / 255.0, 6) for i in range(n_px)]
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "pixels": pixels,
-                }
-            )
-
-    return df.mapInPandas(batches, schema=RESIZE_SCHEMA)
 
 
 def dedup_by_content(df: DataFrame) -> DataFrame:

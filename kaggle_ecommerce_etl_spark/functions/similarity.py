@@ -1,18 +1,43 @@
 """Similarity search over embedding columns (north_star extension).
 
-Embeddings are ``array<float>`` columns. Two paths:
+Embeddings are ``array<float>`` columns. Every path has the same two
+stages — candidate generation, then one exact refine — and writes each
+stage once: top-k paths end in :func:`_rank_topk` (sim HALF_UP-rounded
+to 6 before ranking, ties by neighbor_id, self excluded), the blocked
+numpy paths score with the closures of :func:`_make_block_sims`, and
+the LSH paths share one hyperplane index (:func:`hyperplane_tables`,
+:func:`_bucket_index`).
 
-- :func:`cosine_topk` — exact brute-force top-k: broadcast the (small)
-  query set against the candidate corpus, score with a pure
-  ``zip_with``/``aggregate`` expression (JVM-side, no Python), window
-  top-k per query. At 100 TB the corpus side stays partitioned and
-  scanned once; only queries are broadcast. This is the correctness
-  baseline.
-- :func:`lsh_bucket_topk` — scale path: random-hyperplane (SimHash) LSH
-  buckets computed from a seed-derived constant hyperplane matrix; join
-  queries to candidates on bucket id, then exact re-rank inside buckets.
-  Trades recall for a (corpus ∞-scalable) equi-join instead of a cross
-  product.
+Top-k neighbors per query:
+
+- :func:`cosine_topk` — exact; broadcast the (small) query set against
+  the corpus, score each pair with the Arrow cosine UDF, window top-k.
+  The reference implementation the faster paths are tested against.
+- :func:`cosine_topk_matmul` — exact; the query side streams to the
+  driver in chunks (:func:`_chunked_blocks`), each chunk scores every
+  corpus Arrow batch in one numpy matmul that emits only its partial
+  top-k.
+- :func:`cosine_self_topk_blocked` — exact all-pairs top-k within one
+  table; both sides distributed as packed blocks, no driver stage.
+- :func:`ivf_topk` — approximate; k-means cells (inverted file), one
+  equi-join on cell id.
+- :func:`lsh_bucket_topk` — approximate; random-hyperplane (SimHash)
+  buckets from seed-derived constant planes, one equi-join on
+  (table, bucket).
+
+Near-duplicate pairs (id1 < id2, sim ≥ θ):
+
+- :func:`cosine_pairs_above` — exact; the chunked matmul scan with a
+  threshold mask.
+- :func:`lsh_neardup_pairs` — recall-trading; hyperplane buckets
+  through the banded self-join core
+  (:func:`~kaggle_ecommerce_etl_spark.functions.dedup_ml._banded_pairs`,
+  shared with MinHash banding), then an exact cosine verify.
+- :func:`semantic_pairs_auto` — picks one of the two from the corpus
+  size and θ.
+
+:func:`cosine_expr` is the pure-expression cosine the tests use as a
+second reference.
 """
 
 from __future__ import annotations
@@ -28,26 +53,92 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _round6(x: np.ndarray) -> np.ndarray:
-    """round-half-AWAY-FROM-ZERO to 6 decimals — matches Spark
-    ``F.round`` / DuckDB ``round`` (HALF_UP). ``np.round`` is
-    half-to-even, which can diverge from the SQL oracles on exact
-    .5 ties at the 6th decimal; this sign-aware floor form cannot."""
-    return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
+from kaggle_ecommerce_etl_spark.functions.dedup_ml import _banded_pairs
 
 
-def _make_round6():
-    """Fresh CLOSURE copy of :func:`_round6` for worker-side use.
-    cloudpickle serializes module-level functions BY REFERENCE (the
-    worker must import this package — breaks when only the driver
-    extended sys.path); a closure pickles by value. Every nested
-    mapInPandas body must capture this, never _round6 directly."""
+def _make_block_sims():
+    """CLOSURE ``(qmat, cmat) → sims``: the rounded cosine matrix of
+    two raw float64 row blocks — both sides L2-normalized (into new
+    arrays: a broadcast block is shared across tasks and must not be
+    normalized twice), one matmul, then round-half-AWAY-FROM-ZERO to
+    6 decimals. That rounding matches Spark ``F.round`` / DuckDB
+    ``round`` (HALF_UP); ``np.round`` is half-to-even and can diverge
+    from the SQL oracles on exact .5 ties at the 6th decimal. Sims are
+    rounded BEFORE any rank or threshold, as the oracles do.
 
-    def _r6(x: np.ndarray) -> np.ndarray:
+    A factory, not a module-level function: cloudpickle serializes
+    module-level functions BY REFERENCE (the worker must import this
+    package — breaks when only the driver extended sys.path); a
+    closure pickles by value. Every mapInPandas body captures closures
+    built here or in the kernel factories below."""
+
+    def _sims(qmat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+        qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
+        cn = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
+        x = qn @ cn.T
         return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
 
-    return _r6
+    return _sims
+
+
+def _make_block_topk(k: int):
+    """CLOSURE ``(qids, qmat, cids, cmat) → pandas frame`` of
+    (query_id, neighbor_id, sim): each query's top-``k`` candidates
+    within one (query block × candidate block), ordered by (-sim,
+    neighbor_id), self-matches dropped. The partial top-k of the
+    blocked matmul paths; :func:`_rank_topk` merges the partials."""
+    sims_of = _make_block_sims()
+
+    def _topk(qids, qmat, cids, cmat) -> pd.DataFrame:
+        sims = sims_of(qmat, cmat)
+        sims[qids[:, None] == cids[None, :]] = -np.inf  # self
+        # per-row sort by (-sim, neighbor_id): lexsort the block
+        order = np.lexsort(
+            (np.broadcast_to(cids, sims.shape), -sims), axis=-1
+        )[:, : min(k, sims.shape[1])]
+        top_s = np.take_along_axis(sims, order, axis=1)
+        keep = np.isfinite(top_s)
+        n_per_q = keep.sum(axis=1)
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(qids, n_per_q),
+                "neighbor_id": cids[order][keep],
+                "sim": top_s[keep],
+            }
+        )
+
+    return _topk
+
+
+def _make_block_pairs(threshold: float):
+    """CLOSURE ``(qids, qmat, cids, cmat) → pandas frame`` of (id1,
+    id2, sim): every pair of the block with qid < cid and rounded sim
+    ≥ ``threshold``."""
+    sims_of = _make_block_sims()
+
+    def _pairs(qids, qmat, cids, cmat) -> pd.DataFrame:
+        sims = sims_of(qmat, cmat)
+        mask = (sims >= threshold) & (qids[:, None] < cids[None, :])
+        ii, jj = np.nonzero(mask)
+        return pd.DataFrame(
+            {"id1": qids[ii], "id2": cids[jj], "sim": sims[ii, jj]}
+        )
+
+    return _pairs
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The exact refine stage of every top-k path: rank each query's
+    scored candidates by (sim desc, neighbor_id asc), keep rank ≤ k,
+    project (query_id, neighbor_id, sim, rank)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "sim", "rank")
+    )
 
 
 def _as_double(arr: Column) -> Column:
@@ -115,14 +206,7 @@ def cosine_topk(
         .withColumn("sim", F.round(cosine_udf()(F.col("__qv"), F.col("__cv")), 6))
         .drop("__qv", "__cv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 #: rows of the query side held on the driver at once. Caps BOTH driver
@@ -176,11 +260,50 @@ def _query_chunks(
 _CHUNK_WARN_LIMIT = 64
 
 
-def _normalized(ids: list, vecs: list) -> tuple[np.ndarray, np.ndarray]:
-    q_ids = np.asarray(ids, dtype=np.int64)
-    qmat = np.asarray(vecs, dtype=np.float64)
-    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
-    return q_ids, qmat
+def _chunked_blocks(
+    queries: DataFrame,
+    corpus: DataFrame,
+    kernel,
+    schema: str,
+    id_col: str,
+    vec_col: str,
+    chunk_rows: int,
+) -> DataFrame:
+    """The small-query-side scan of :func:`cosine_topk_matmul` and
+    :func:`cosine_pairs_above`: stream ``queries`` to the driver in
+    bounded chunks (:func:`_query_chunks`), broadcast each chunk as
+    (int64 ids, raw float64 matrix), scan ``corpus`` (already projected
+    to ``id_col, vec_col``) once per chunk with ``mapInPandas`` —
+    every Arrow batch is one ``kernel(qids, qmat, cids, cmat)`` call
+    returning rows of ``schema`` — and union the passes. ``kernel``
+    comes from a factory (:func:`_make_block_topk`,
+    :func:`_make_block_pairs`) so workers never import this package.
+    An empty query side yields an empty frame of ``schema``."""
+    spark = corpus.sparkSession
+    sc = spark.sparkContext
+    partials: list[DataFrame] = []
+    for ids, vecs in _query_chunks(queries, id_col, vec_col, chunk_rows):
+        bc = sc.broadcast(
+            (np.asarray(ids, dtype=np.int64), np.asarray(vecs, dtype=np.float64))
+        )
+
+        def _blocks(batches, _bc=bc):
+            qids, qmat = _bc.value
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                cmat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+                cids = pdf[id_col].to_numpy(dtype=np.int64)
+                yield kernel(qids, qmat, cids, cmat)
+
+        partials.append(corpus.mapInPandas(_blocks, schema))
+
+    if not partials:
+        return spark.createDataFrame([], schema)
+    out = partials[0]
+    for p in partials[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def cosine_topk_matmul(
@@ -212,60 +335,16 @@ def cosine_topk_matmul(
     int64 and the output schema pins long ids (string/UUID ids would
     need a surrogate-key projection first).
     """
-    spark = corpus.sparkSession
-    sc = spark.sparkContext
-    c = corpus.select(id_col, vec_col)
-    schema = "query_id long, neighbor_id long, sim double"
-
-    partials: list[DataFrame] = []
-    for ids, vecs in _query_chunks(queries, id_col, vec_col, chunk_rows):
-        bc = sc.broadcast(_normalized(ids, vecs))
-
-        _r6 = _make_round6()
-
-        def _partial_topk(batches, _bc=bc):
-            qids, qn = _bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                cmat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
-                cids = pdf[id_col].to_numpy(dtype=np.int64)
-                # round BEFORE rank (oracle parity; HALF_UP like SQL round)
-                sims = _r6(qn @ cmat.T)
-                sims[qids[:, None] == cids[None, :]] = -np.inf  # self
-                # per-row sort by (-sim, neighbor_id): lexsort the batch
-                order = np.lexsort(
-                    (np.broadcast_to(cids, sims.shape), -sims), axis=-1
-                )[:, : min(k, sims.shape[1])]
-                top_s = np.take_along_axis(sims, order, axis=1)
-                keep = np.isfinite(top_s)
-                n_per_q = keep.sum(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, n_per_q),
-                        "neighbor_id": cids[order][keep],
-                        "sim": top_s[keep],
-                    }
-                )
-
-        partials.append(c.mapInPandas(_partial_topk, schema))
-
-    if not partials:
-        empty = spark.createDataFrame([], schema + ", rank int")
-        return empty
-    partial = partials[0]
-    for p in partials[1:]:
-        partial = partial.unionByName(p)
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
+    partial = _chunked_blocks(
+        queries,
+        corpus.select(id_col, vec_col),
+        _make_block_topk(k),
+        "query_id long, neighbor_id long, sim double",
+        id_col,
+        vec_col,
+        chunk_rows,
     )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(partial, k)
 
 
 #: Corpus projections persisted by cosine_pairs_above that no caller
@@ -293,94 +372,98 @@ def cosine_pairs_above(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     chunk_rows: int = QUERY_CHUNK_ROWS,
-    cache_corpus: bool = True,
 ) -> DataFrame:
     """EXACT all-pairs (id1 < id2) with cosine ≥ threshold — blocked
     matmul, no cross join in the plan.
 
-    ``cache_corpus`` (default on) persists the 2-column corpus
-    projection MEMORY_AND_DISK for the duration of the plan: the
-    chunk loop re-scans the corpus |Q|/chunk_rows times, and each
-    re-scan paying a fresh parquet decode was the dominant variance
-    source in the 30× semantic-dedup band (r6; parquet decode
-    pressure is scheduling/GC-sensitive, a cached columnar scan is
-    not). The cached frame is attached to the returned DataFrame as
-    ``_graft_cached_side`` so callers that materialize the result
-    (e.g. q_semantic_dedup_keep via dup_clusters' eager checkpoint)
-    can unpersist immediately. This is a size-bounded cache by
-    CONTRACT: the exact-n² path is only routed to corpora small
-    enough that n/chunk full scans are acceptable (see the LSH
-    crossover in SCALING.md) — 2-column MEMORY_AND_DISK on such a
-    corpus is strictly cheaper than re-decoding parquet per chunk.
+    The 2-column corpus projection is persisted MEMORY_AND_DISK for
+    the duration of the plan: the chunk loop re-scans the corpus
+    |Q|/chunk_rows times, and each re-scan paying a fresh parquet
+    decode was the dominant variance source in the 30× semantic-dedup
+    band (r6; parquet decode pressure is scheduling/GC-sensitive, a
+    cached columnar scan is not). The cached frame is attached to the
+    returned DataFrame as ``_graft_cached_side`` so callers that
+    materialize the result (e.g. q_semantic_dedup_keep via
+    dup_clusters' eager checkpoint) can unpersist immediately; if
+    building the chunk loop fails, the projection is released before
+    the error propagates. This is a size-bounded cache by CONTRACT:
+    the exact-n² path is only routed to corpora small enough that
+    n/chunk full scans are acceptable (see the LSH crossover in
+    SCALING.md) — 2-column MEMORY_AND_DISK on such a corpus is
+    strictly cheaper than re-decoding parquet per chunk.
 
-    Same physical shape as :func:`cosine_topk_matmul`: one side
-    streamed in bounded driver chunks + broadcast, the other scanned
-    distributed; each (chunk × Arrow batch) block scores in one numpy
-    matmul and emits only the (qid < cid, sim ≥ threshold) survivors.
-    Every unordered pair is seen exactly once under qid < cid because
-    the chunk loop covers all rows on the query side. Exact — unlike
-    an LSH prefilter there is no recall loss, so results match the
-    brute-force SQL oracle (same HALF_UP rounding, see ``_round6``;
-    residual divergence limited to fp-summation-order ULPs feeding the
-    6th decimal); the O(n²/block) work runs vectorized inside numpy
+    Same physical shape as :func:`cosine_topk_matmul` (one
+    :func:`_chunked_blocks` loop): one side streamed in bounded driver
+    chunks + broadcast, the other scanned distributed; each (chunk ×
+    Arrow batch) block scores in one numpy matmul and emits only the
+    (qid < cid, sim ≥ threshold) survivors. Every unordered pair is
+    seen exactly once under qid < cid because the chunk loop covers
+    all rows on the query side. Exact — unlike an LSH prefilter there
+    is no recall loss, so results match the brute-force SQL oracle
+    (same HALF_UP rounding, see :func:`_make_block_sims`; residual
+    divergence limited to fp-summation-order ULPs feeding the 6th
+    decimal); the O(n²/block) work runs vectorized inside numpy
     instead of materializing pair rows. For corpora where even blocked
-    n² is too much, the recall-trading path is :func:`lsh_bucket_topk`
-    / minhash banding. ``id_col`` must be integral (int64-coerced,
-    long output schema).
+    n² is too much, the recall-trading path is
+    :func:`lsh_neardup_pairs` / minhash banding. ``id_col`` must be
+    integral (int64-coerced, long output schema).
     """
-    sc = df.sparkSession.sparkContext
-    side = df.select(id_col, vec_col)
-    if cache_corpus:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        # registry/bench callers run queries sequentially: a new call
-        # means any prior result has been materialized (or abandoned),
-        # so evict the previous projection before pinning a new one —
-        # this bounds live cache to ONE projection per session even for
-        # callers that never unpersist (the r6 leak in
-        # q_embedding_neardup_pairs). Harness callers can also release
-        # explicitly via release_corpus_caches().
+    # registry/bench callers run queries sequentially: a new call
+    # means any prior result has been materialized (or abandoned),
+    # so evict the previous projection before pinning a new one —
+    # this bounds live cache to ONE projection per session even for
+    # callers that never unpersist (the r6 leak in
+    # q_embedding_neardup_pairs). Harness callers can also release
+    # explicitly via release_corpus_caches().
+    release_corpus_caches()
+    side = df.select(id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
+    _ACTIVE_CORPUS_CACHES.append(side)
+    try:
+        # iterate the SAME (cached) projection the partials scan: the
+        # toLocalIterator pass populates the cache partition by
+        # partition, so every chunk's corpus scan hits memory
+        out = _chunked_blocks(
+            side,
+            side,
+            _make_block_pairs(threshold),
+            "id1 long, id2 long, sim double",
+            id_col,
+            vec_col,
+            chunk_rows,
+        )
+    except BaseException:
         release_corpus_caches()
-        side = side.persist(StorageLevel.MEMORY_AND_DISK)
-        _ACTIVE_CORPUS_CACHES.append(side)
-    schema = "id1 long, id2 long, sim double"
-
-    partials: list[DataFrame] = []
-    # iterate the SAME (cached) projection the partials scan: the
-    # toLocalIterator pass populates the cache partition by partition,
-    # so every chunk's corpus scan below hits memory
-    for ids, vecs in _query_chunks(side, id_col, vec_col, chunk_rows):
-        bc = sc.broadcast(_normalized(ids, vecs))
-
-        _r6 = _make_round6()
-
-        def _pairs(batches, _bc=bc):
-            qids, qn = _bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                cmat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
-                cids = pdf[id_col].to_numpy(dtype=np.int64)
-                sims = _r6(qn @ cmat.T)  # round BEFORE threshold (HALF_UP)
-                mask = (sims >= threshold) & (qids[:, None] < cids[None, :])
-                ii, jj = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {"id1": qids[ii], "id2": cids[jj], "sim": sims[ii, jj]}
-                )
-
-        partials.append(side.mapInPandas(_pairs, schema))
-
-    if not partials:
-        if cache_corpus:
-            side.unpersist()
-        return df.sparkSession.createDataFrame([], schema)
-    out = partials[0]
-    for p in partials[1:]:
-        out = out.unionByName(p)
-    if cache_corpus:
-        out._graft_cached_side = side  # caller unpersists post-materialize
+        raise
+    out._graft_cached_side = side  # caller unpersists post-materialize
     return out
+
+
+def _estimated_rows(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
+    """Row-count estimate WITHOUT a full scan: Catalyst's sizeInBytes
+    statistic divided by an estimated row width (vector dim from a
+    bounded 1-row probe unless ``dim`` is given). Sizes the blocked
+    grid of :func:`cosine_self_topk_blocked` and the LSH/route choice.
+
+    Stat-less sources (JDBC, RDD-backed frames) report the
+    defaultSizeInBytes sentinel (~Long.MaxValue): the derived "row
+    count" would put every row in its own singleton block and the
+    block cross join would degenerate to the exact n² that blocking
+    exists to prevent. The absurd estimate falls back to ONE real
+    count — a full pass, but a correct grid (callers with known
+    cardinality pass n_rows instead)."""
+    if dim is None:
+        probe = df.select(vec_col).head(1)
+        dim = len(probe[0][0]) if probe and probe[0][0] is not None else 0
+    size_bytes = int(
+        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    row_bytes = max(dim * 8 + 48, 64)
+    n_rows = max(1, size_bytes // row_bytes)
+    if n_rows > 10**12:
+        n_rows = max(1, df.count())
+    return n_rows
 
 
 def cosine_self_topk_blocked(
@@ -426,25 +509,8 @@ def cosine_self_topk_blocked(
     just moves block payloads within the same order of magnitude. Pass
     ``n_rows`` (and ``dim``) to skip estimation entirely.
     """
-    spark = df.sparkSession
     if n_rows is None:
-        if dim is None:
-            probe = df.select(vec_col).head(1)
-            dim = len(probe[0][0]) if probe and probe[0][0] is not None else 0
-        size_bytes = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        row_bytes = max(dim * 8 + 48, 64)
-        n_rows = max(1, size_bytes // row_bytes)
-        # stat-less sources (JDBC, RDD-backed frames) report the
-        # defaultSizeInBytes sentinel (~Long.MaxValue): the derived
-        # "row count" would put every row in its own singleton block
-        # and the block cross join would degenerate to the exact n²
-        # this blocking exists to prevent. Detect the absurd estimate
-        # and fall back to ONE real count — a full pass, but a correct
-        # grid (callers with known cardinality pass n_rows instead).
-        if n_rows > 10**12:
-            n_rows = max(1, df.count())
+        n_rows = _estimated_rows(df, vec_col, dim)
     n_blocks = max(1, math.ceil(n_rows / block_rows))
     src = df.select(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("__blk"),
@@ -462,63 +528,24 @@ def cosine_self_topk_blocked(
     ).crossJoin(
         packed.select(F.col("ids").alias("cids_l"), F.col("vecs").alias("cvecs_l"))
     )
-    schema = "query_id long, neighbor_id long, sim double"
-
-    _r6 = _make_round6()
+    topk = _make_block_topk(k)
 
     def _score(batches):
         for pdf in batches:
             for qi, qv, ci, cv in zip(
                 pdf["qids_l"], pdf["qvecs_l"], pdf["cids_l"], pdf["cvecs_l"]
             ):
-                qids = np.asarray(qi, dtype=np.int64)
-                cids = np.asarray(ci, dtype=np.int64)
-                qn = np.asarray([np.asarray(v) for v in qv], dtype=np.float64)
-                cn = np.asarray([np.asarray(v) for v in cv], dtype=np.float64)
-                qn /= np.linalg.norm(qn, axis=1, keepdims=True)
-                cn /= np.linalg.norm(cn, axis=1, keepdims=True)
-                sims = _r6(qn @ cn.T)
-                sims[qids[:, None] == cids[None, :]] = -np.inf
-                order = np.lexsort(
-                    (np.broadcast_to(cids, sims.shape), -sims), axis=-1
-                )[:, : min(k, sims.shape[1])]
-                top_s = np.take_along_axis(sims, order, axis=1)
-                keep = np.isfinite(top_s)
-                n_per_q = keep.sum(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, n_per_q),
-                        "neighbor_id": cids[order][keep],
-                        "sim": top_s[keep],
-                    }
+                yield topk(
+                    np.asarray(qi, dtype=np.int64),
+                    np.asarray([np.asarray(v) for v in qv], dtype=np.float64),
+                    np.asarray(ci, dtype=np.int64),
+                    np.asarray([np.asarray(v) for v in cv], dtype=np.float64),
                 )
 
-    partial = pairs.mapInPandas(_score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
+    partial = pairs.mapInPandas(
+        _score, "query_id long, neighbor_id long, sim double"
     )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
-def _estimated_rows(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
-    """Row-count estimate from Catalyst's sizeInBytes statistic — the
-    same no-full-scan sizing as the blocked-matmul grid above (and the
-    same stat-less-source fallback to one real count)."""
-    if dim is None:
-        probe = df.select(vec_col).head(1)
-        dim = len(probe[0][0]) if probe and probe[0][0] is not None else 0
-    size_bytes = int(
-        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
-    row_bytes = max(dim * 8 + 48, 64)
-    n_rows = max(1, size_bytes // row_bytes)
-    if n_rows > 10**12:
-        n_rows = max(1, df.count())
-    return n_rows
+    return _rank_topk(partial, k)
 
 
 def lsh_auto_params(
@@ -589,10 +616,12 @@ def lsh_neardup_pairs(
     passes are too much.
 
     Shape: both "sides" are the SAME table; each row explodes to its
-    (table, bucket) keys (ONE projection computes all tables' buckets),
-    a single self-equi-join on (table, bucket) yields candidates
-    (id1 < id2, deduped), and only candidates pay the exact cosine +
-    threshold. Shuffle ∝ Σ bucket sizes; the n² pair space is never
+    (table, bucket) keys (:func:`_bucket_index` — ONE projection
+    computes all tables' buckets), the banded self-join core
+    (:func:`~kaggle_ecommerce_etl_spark.functions.dedup_ml._banded_pairs`,
+    the one MinHash banding uses: eager checkpoint of the index, one
+    self-equi-join on (table, bucket), id1 < id2, distinct) yields
+    candidates, and only candidates pay the exact cosine + threshold. Shuffle ∝ Σ bucket sizes; the n² pair space is never
     materialized. Recall = P(any-table collision) of a qualifying pair
     — 1-(1-p^b)^T with p = 1-θ/π; at the default b=3/T=16 measured
     ≥0.98 on the test corpus (see tests/test_queries_ext.py).
@@ -607,29 +636,8 @@ def lsh_neardup_pairs(
         if n_rows is None:
             n_rows = _estimated_rows(df, vec_col, dim)
         n_planes, n_tables = lsh_auto_params(n_rows, threshold)
-    tables = [
-        hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
-    ]
-    buckets_fn = all_buckets_udf(tables)
-    # r10: checkpoint the bucket index once — the self-join otherwise
-    # plans the bucket UDF (T×b hyperplane projections per vector)
-    # on BOTH sides (same fix as dedup_ml.lsh_candidate_pairs; the
-    # index is n_tables small rows per vector, what a production LSH
-    # build persists anyway).
-    bucketed = df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(buckets_fn(F.col(vec_col))).alias("__table", "__bucket"),
-    ).localCheckpoint(eager=True)
-    cand = (
-        bucketed.select(F.col("__id").alias("id1"), "__table", "__bucket")
-        .join(
-            bucketed.select(F.col("__id").alias("id2"), "__table", "__bucket"),
-            on=["__table", "__bucket"],
-        )
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates()
-    )
+    tables = hyperplane_tables(dim, n_planes, n_tables, seed)
+    cand = _banded_pairs(_bucket_index(df, tables, id_col, vec_col))
     v1 = df.select(F.col(id_col).alias("id1"), F.col(vec_col).alias("__v1"))
     v2 = df.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("__v2"))
     # asNondeterministic: the threshold filter otherwise pushes below
@@ -984,14 +992,7 @@ def ivf_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("sim", F.round(cosine_udf()(F.col("__qv"), F.col("__cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float]]:
@@ -1003,15 +1004,44 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float
     ]
 
 
+def hyperplane_tables(
+    dim: int, n_planes: int, n_tables: int, seed: int
+) -> list[list[list[float]]]:
+    """The ``n_tables`` independent hyperplane sets of one LSH index —
+    table t draws from ``seed + 1000·t``. The one definition shared by
+    :func:`lsh_neardup_pairs`, :func:`lsh_bucket_topk` and the DuckDB
+    oracles that re-derive their buckets
+    (``queries_ext._lsh_bucket_union_sql``)."""
+    return [
+        hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
+    ]
+
+
+def _bucket_index(
+    df: DataFrame, tables: list[list[list[float]]], id_col: str, vec_col: str
+) -> DataFrame:
+    """The hyperplane bucket index ``(__id, __band, __key)``: one row
+    per (vector, table), ``__band`` the table number and ``__key`` the
+    vector's bucket in it — :func:`all_buckets_udf` computes every
+    table's bucket in ONE projection, ``posexplode`` spreads them."""
+    return df.select(
+        F.col(id_col).alias("__id"),
+        F.posexplode(all_buckets_udf(tables)(F.col(vec_col))).alias(
+            "__band", "__key"
+        ),
+    )
+
+
 def all_buckets_udf(tables: list[list[list[float]]]):
     """Arrow-batched bucket computation: ONE numpy matmul per batch
     yields every table's bucket id. Higher-order array expressions are
     interpreted per-row (≈2 ms/row for 8×4 planes — unusable at scale);
     the vectorized path is ~100× faster and is the sanctioned
     Pandas-UDF use: embedding math the built-ins can't express
-    efficiently. Sign convention matches :func:`bucket_expr`
-    (proj ≥ 0 → bit set); fp-summation-order differences can flip a
-    bucket only for vectors lying exactly on a hyperplane."""
+    efficiently. Sign convention matches the DuckDB oracles'
+    ``queries_ext._lsh_bucket_union_sql`` (proj ≥ 0 → bit 2ⁱ set);
+    fp-summation-order differences can flip a bucket only for vectors
+    lying exactly on a hyperplane."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     n_tables = len(tables)
@@ -1031,21 +1061,6 @@ def all_buckets_udf(tables: list[list[list[float]]]):
         return pd.Series(list(ids))
 
     return _buckets
-
-
-def bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id: sign bits of the vector against each hyperplane,
-    packed into a long. Pure expression — no UDF, no shuffle."""
-    v = _as_double(vec)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(p) for p in plane]), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(2**i).cast("long")).otherwise(F.lit(0))
-    return bucket
 
 
 def lsh_bucket_topk(
@@ -1068,26 +1083,17 @@ def lsh_bucket_topk(
     a pair at per-plane collision probability p is 1-(1-p^b)^T instead
     of p^b — the standard recall/cost dial.
 
-    Physical shape (the 100 TB path): each side computes ALL table
-    buckets in ONE projection, then explodes to (table, bucket) rows —
-    the plane dot products run once per input row, not once per table.
-    A single equi-join on (table, bucket) replaces T separate joins
-    (one shuffle; per-bucket skew handled by AQE skew-join). Candidates
-    are deduped before the exact re-rank, so each pair is scored once.
+    Physical shape (the 100 TB path): each side's :func:`_bucket_index`
+    computes ALL table buckets in ONE projection, then explodes to
+    (table, bucket) rows — the plane dot products run once per input
+    row, not once per table. A single equi-join on (table, bucket)
+    replaces T separate joins (one shuffle; per-bucket skew handled by
+    AQE skew-join). Candidates are deduped before the exact re-rank,
+    so each pair is scored once.
     """
-    tables = [
-        hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
-    ]
-    buckets_fn = all_buckets_udf(tables)
-
-    def _bucketed(df: DataFrame, out_id: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.posexplode(buckets_fn(F.col(vec_col))).alias(
-                "__table", "__bucket"
-            ),
-        )
-
+    tables = hyperplane_tables(dim, n_planes, n_tables, seed)
+    q_index = _bucket_index(queries, tables, id_col, vec_col)
+    c_index = _bucket_index(corpus, tables, id_col, vec_col)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
@@ -1095,8 +1101,11 @@ def lsh_bucket_topk(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     )
     cand = (
-        _bucketed(corpus, "neighbor_id")
-        .join(F.broadcast(_bucketed(queries, "query_id")), on=["__table", "__bucket"])
+        c_index.withColumnRenamed("__id", "neighbor_id")
+        .join(
+            F.broadcast(q_index.withColumnRenamed("__id", "query_id")),
+            on=["__band", "__key"],
+        )
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
@@ -1106,11 +1115,4 @@ def lsh_bucket_topk(
         .join(c, on="neighbor_id")
         .withColumn("sim", F.round(cosine_udf()(F.col("__qv"), F.col("__cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k)

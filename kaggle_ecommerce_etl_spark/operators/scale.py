@@ -203,55 +203,3 @@ def morton_code_expr(x, y, bits: int = 16):
         ybit = F.shiftleft(F.shiftright(yl, b).bitwiseAND(F.lit(1)), 2 * b + 1)
         code = code.bitwiseOR(xbit).bitwiseOR(ybit)
     return code
-
-
-class runtime_bloom_filters:
-    """Context manager enabling Spark's runtime BLOOM-FILTER join
-    pruning (``InjectRuntimeFilter``) for the queries built inside it.
-
-    The 100 TB shape this serves: a shuffle join whose build side is
-    made selective by a filter (e.g. urgent orders) but whose probe
-    side would still shuffle its FULL volume. With the rule enabled,
-    Spark aggregates a bloom filter of the build side's join keys
-    (``bloom_filter_agg``, partial+final — two tiny stages) and pushes
-    ``might_contain`` into the probe side's scan, so non-matching rows
-    are dropped BEFORE the exchange: shuffle volume ∝ semi-join
-    selectivity instead of table size. Complements (does not replace)
-    broadcast joins — it applies exactly when the build side is too
-    big to broadcast but still selective.
-
-    Scoped as a context manager because the aggressive thresholds that
-    make the demonstration deterministic at test scale
-    (``applicationSideScanSizeThreshold=0``) would over-inject
-    session-wide at production scale, where the defaults (10 GB scan
-    / 10 MB creation side) are the right gate. Confs are restored on
-    exit even on error."""
-
-    _CONFS = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold": "0",
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "creationSideThreshold": "1GB",
-    }
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._saved: dict[str, str | None] = {}
-
-    def __enter__(self):
-        for k, v in self._CONFS.items():
-            try:
-                self._saved[k] = self._spark.conf.get(k)
-            except Exception:  # unset — restore by unsetting
-                self._saved[k] = None
-            self._spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, old in self._saved.items():
-            if old is None:
-                self._spark.conf.unset(k)
-            else:
-                self._spark.conf.set(k, old)
-        return False

@@ -686,11 +686,10 @@ def _lsh_bucket_union_sql(n_planes: int, n_tables: int, dim: int, seed: int) -> 
     (repr() round-trips float64 exactly), bucket id = sign bits of the
     plane dot products packed exactly as `all_buckets_udf` packs them.
     Shared by the `ann_lsh_topk` and `embedding_neardup_lsh` oracles."""
-    from kaggle_ecommerce_etl_spark.functions.similarity import hyperplanes
+    from kaggle_ecommerce_etl_spark.functions.similarity import hyperplane_tables
 
     branches = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + 1000 * t)
+    for t, planes in enumerate(hyperplane_tables(dim, n_planes, n_tables, seed)):
         terms = []
         for i, plane in enumerate(planes):
             lits = ", ".join(repr(x) for x in plane)

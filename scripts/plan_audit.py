@@ -100,6 +100,22 @@ BNLJ_BOUNDED = {"scalar_agg", "local_table", "tiny_dim_scan"}
 
 
 def _walk(node):
+    """Pre-order walk of a physical plan that sees through adaptive
+    execution: an ``AdaptiveSparkPlan`` node stands for its current
+    plan (``executedPlan()`` — the initial plan before execution, the
+    final plan after), a query stage for the plan it wraps (``plan()``)
+    and a reused exchange for the exchange it reuses (``child()``). So
+    a walk finds the same operators before and after the query runs."""
+    nm = node.nodeName()
+    if "AdaptiveSparkPlan" in nm:
+        yield from _walk(node.executedPlan())
+        return
+    if "QueryStage" in nm:
+        yield from _walk(node.plan())
+        return
+    if nm == "ReusedExchange":
+        yield from _walk(node.child())
+        return
     yield node
     ch = node.children()
     for i in range(ch.size()):
@@ -140,26 +156,14 @@ def _classify_build_side(node) -> str:
 
 def _bnlj_build_classes(df) -> list[str]:
     """Classify every BroadcastNestedLoopJoin build side in the
-    (adaptively planned) physical tree."""
-    plan = df._jdf.queryExecution().executedPlan()
-    roots = [plan]
+    current physical plan (adaptive nodes and query stages walked
+    through, see :func:`_walk`)."""
     out = []
-    while roots:
-        node = roots.pop()
-        nm = node.nodeName()
-        if "AdaptiveSparkPlan" in nm:
-            roots.append(node.initialPlan())
-            continue
-        for n in _walk(node):
-            nn = n.nodeName()
-            if "AdaptiveSparkPlan" in nn and n is not node:
-                roots.append(n.initialPlan())
-                continue
-            if "BroadcastNestedLoopJoin" in nn:
-                side = str(n.buildSide())
-                ch = n.children()
-                build = ch.apply(1 if "Right" in side else 0)
-                out.append(_classify_build_side(build))
+    for n in _walk(df._jdf.queryExecution().executedPlan()):
+        if "BroadcastNestedLoopJoin" in n.nodeName():
+            side = str(n.buildSide())
+            build = n.children().apply(1 if "Right" in side else 0)
+            out.append(_classify_build_side(build))
     return out
 
 

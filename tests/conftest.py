@@ -21,3 +21,58 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(group, action)``: how many Spark jobs ``action()``
+    runs, counted under a job group of its own. Building a DataFrame
+    runs no job unless construction has side effects (eager
+    checkpoints, size probes, ``_t``'s parquet footer reads), so this
+    is how construction-time jobs are pinned."""
+    sc = spark.sparkContext
+
+    def count(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture(scope="session")
+def construction_jobs(spark, sf_dir, count_jobs):
+    """``construction_jobs(name)``: the Spark jobs that building
+    registry query ``name`` at ``sf_dir`` runs, before any action."""
+    from kaggle_ecommerce_etl_spark.queries import REGISTRY
+
+    def count(name):
+        return count_jobs(
+            f"construct-{name}", lambda: REGISTRY[name][0](spark, sf_dir)
+        )
+
+    return count
+
+
+@pytest.fixture
+def assert_cache_released(spark):
+    """Failure-path leak check. Set-up empties the cache manager and
+    records the persisted RDD ids (earlier tests' ``localCheckpoint``s
+    stay in ``getPersistentRDDs()``, so "nothing leaked" is checked as
+    "no new persisted RDD"); calling the returned function asserts that
+    no persisted RDD and no cache-manager entry was added since."""
+    spark.catalog.clearCache()
+
+    def persistent_rdd_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent_rdd_ids()
+
+    def check() -> None:
+        assert persistent_rdd_ids() - before == set()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    return check

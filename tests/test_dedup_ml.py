@@ -372,24 +372,15 @@ def test_cross_prefix_randomized_parity(spark):
         assert want  # every threshold regime must actually fire
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
-def _assert_cache_released(spark, rdds_before: set[int]) -> None:
-    """No persisted RDD and no cache-manager entry left behind (the
-    test starts from an empty cache manager)."""
-    assert _persistent_rdd_ids(spark) - rdds_before == set()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
 def _cc_loop_inputs(spark):
     edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
     labels = spark.createDataFrame([(1, 1), (2, 2)], "id long, cluster long")
     return edges, labels
 
 
-def test_cc_stats_reset_releases_cache_when_count_fails(spark):
+def test_cc_stats_reset_releases_cache_when_count_fails(
+    spark, assert_cache_released
+):
     """Round 0 is a stats-reset round (persist → count → checkpoint →
     unpersist): a failing count must not leave the cache behind."""
     import pytest
@@ -400,14 +391,14 @@ def test_cc_stats_reset_releases_cache_when_count_fails(spark):
     labels = labels.withColumn(
         "cluster", F.col("cluster") + F.raise_error(F.lit("boom")).cast("long")
     )
-    spark.catalog.clearCache()
-    before = _persistent_rdd_ids(spark)
     with pytest.raises(Exception, match="boom"):
         _dup_clusters_loop(edges, labels, max_iter=1)
-    _assert_cache_released(spark, before)
+    assert_cache_released()
 
 
-def test_cc_stats_reset_releases_cache_when_checkpoint_fails(spark, monkeypatch):
+def test_cc_stats_reset_releases_cache_when_checkpoint_fails(
+    spark, monkeypatch, assert_cache_released
+):
     import pytest
 
     from kaggle_ecommerce_etl_spark.functions.dedup_ml import _dup_clusters_loop
@@ -416,32 +407,17 @@ def test_cc_stats_reset_releases_cache_when_checkpoint_fails(spark, monkeypatch)
         raise RuntimeError("checkpoint failed")
 
     edges, labels = _cc_loop_inputs(spark)
-    spark.catalog.clearCache()
-    before = _persistent_rdd_ids(spark)
     monkeypatch.setattr(type(labels), "localCheckpoint", failing_checkpoint)
     with pytest.raises(RuntimeError, match="checkpoint failed"):
         _dup_clusters_loop(edges, labels, max_iter=1)
-    _assert_cache_released(spark, before)
+    assert_cache_released()
 
 
-def test_prefix_join_construction_jobs(spark, sf_dir):
+def test_prefix_join_construction_jobs(construction_jobs):
     """Building either prefix-join query runs Spark jobs before any
     action: the eager prefix-index checkpoint plus ``_t``'s parquet
     footer reads. Pinned so the declared side effect cannot grow
     unnoticed; a change that removes some of these jobs lowers the
     pin deliberately."""
-    from kaggle_ecommerce_etl_spark.queries import REGISTRY
-
-    sc = spark.sparkContext
-
-    def build_jobs(name):
-        group = f"construct-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            REGISTRY[name][0](spark, sf_dir)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    assert build_jobs("jaccard_pairs_prefix") == 7
-    assert build_jobs("jaccard_cross_gate") == 9
+    assert construction_jobs("jaccard_pairs_prefix") == 7
+    assert construction_jobs("jaccard_cross_gate") == 9

@@ -69,16 +69,3 @@ def test_sample_frames_chunking_and_digest(spark):
     # doc 2: one partial frame; doc 3: empty → no rows
     assert sorted(by_doc[2]) == [0] and by_doc[2][0].n_frames == 1
     assert 3 not in by_doc
-
-
-def test_resize_image_grid(spark):
-    rows = {r.media_id: r for r in mm.resize_image(_media(spark), 2, 2).collect()}
-    assert rows[1].width == 2 and rows[1].height == 2
-    assert len(rows[1].pixels) == 4
-    assert rows[1].pixels == rows[3].pixels          # same bytes → same grid
-    # array<float> storage is float32: compare to 6 decimals
-    assert rows[1].pixels == pytest.approx([round(ord("a") / 255.0, 6)] * 4,
-                                           abs=1e-6)
-    assert rows[4].pixels == [0.0] * 4               # empty blob
-    with pytest.raises(Exception):
-        mm.resize_image(_media(spark), strict=True).collect()

@@ -173,25 +173,17 @@ def test_transform_py4j_round_trip_budget(spark):
     assert calls[0] <= 160, calls[0]
 
 
-def test_column_profile_is_one_aggregate_job(spark):
+def test_column_profile_is_one_aggregate_job(spark, count_jobs):
     """Every gate of every column comes from ONE aggregation: the same
     job count as a bare ``count(1)`` over the frame (AQE submits the
     aggregate's map stage as a job of its own)."""
     from kaggle_ecommerce_etl_spark.normalize.profile import column_profile
 
     df = _messy_wide_frame(spark)
-    sc = spark.sparkContext
-
-    def jobs(group, action):
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    baseline = jobs("profile-baseline", lambda: df.selectExpr("count(1)").collect())
-    assert jobs("profile-all-gates", lambda: column_profile(df)) == baseline
+    baseline = count_jobs(
+        "profile-baseline", lambda: df.selectExpr("count(1)").collect()
+    )
+    assert count_jobs("profile-all-gates", lambda: column_profile(df)) == baseline
 
 
 def test_column_helpers_match_frame_rules(spark):

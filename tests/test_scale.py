@@ -268,52 +268,6 @@ def test_aqe_skew_join_splits_hot_partition(spark, sf_dir):
     assert got == expect
 
 
-def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
-    """Runtime bloom-filter injection: with a selective build side,
-    the probe side's scan must carry might_contain(bloom_filter_agg)
-    so rows drop BEFORE the shuffle — and values must equal the plain
-    join's exactly (a bloom false positive only wastes shuffle, never
-    changes the join result)."""
-    from kaggle_ecommerce_etl_spark.operators.scale import (
-        runtime_bloom_filters,
-    )
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-
-    def _q():
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
-    plain = {tuple(r) for r in _q().collect()}
-    saved_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with runtime_bloom_filters(spark):
-            df = _q()
-            plan = _plan(df)
-            assert "bloom_filter_agg" in plan
-            assert "might_contain" in plan
-            assert {tuple(r) for r in df.collect()} == plain
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", saved_thresh
-        )
-    # and the confs really were restored
-    assert (
-        spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled"
-        )
-        != "true"
-        or _plan(_q()).count("might_contain") == 0
-    )
-
-
 def test_replica_builder_writes_multifile_scans(spark, sf_dir, monkeypatch):
     """The derived scale-up dirs must NOT serialize scans: bench's
     _build_sf1 :v5 writes every replicated table — documents,

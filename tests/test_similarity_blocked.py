@@ -170,10 +170,61 @@ def test_pairs_above_corpus_cache_is_released(spark, sf_dir):
     assert pairs.count() > 0
     cached.unpersist()
     assert not cached.storageLevel.useMemory
-    # cache off → no handle attached, and results identical
-    uncached = cosine_pairs_above(emb, threshold=0.4, cache_corpus=False)
-    assert not hasattr(uncached, "_graft_cached_side")
-    assert uncached.count() == pairs.count()
+
+
+def test_pairs_above_releases_cache_when_chunk_loop_fails(
+    spark, sf_dir, monkeypatch, assert_cache_released
+):
+    """A failure inside the chunk loop must not strand the persisted
+    corpus projection: it is unpersisted and dropped from
+    _ACTIVE_CORPUS_CACHES before the error propagates. The loop here
+    fails after its first chunk has populated the cache."""
+    import pytest
+
+    from kaggle_ecommerce_etl_spark.functions import similarity as S
+
+    real_chunks = S._query_chunks
+
+    def one_chunk_then_fail(*args, **kwargs):
+        for chunk in real_chunks(*args, **kwargs):
+            yield chunk
+            raise RuntimeError("chunk loop failed")
+
+    S.release_corpus_caches()
+    monkeypatch.setattr(S, "_query_chunks", one_chunk_then_fail)
+    with pytest.raises(RuntimeError, match="chunk loop failed"):
+        S.cosine_pairs_above(_emb(spark, sf_dir), 0.4, chunk_rows=7)
+    assert S._ACTIVE_CORPUS_CACHES == []
+    assert_cache_released()
+
+
+def test_similarity_construction_jobs(construction_jobs):
+    """Spark jobs each embedding-similarity / LSH registry query runs
+    while its DataFrame is BUILT (sf0.001): ``_t``'s parquet footer
+    reads, the driver-side chunk stream of the matmul paths, the
+    dimension probe of the block grid, the eager banded-index and
+    dup_clusters checkpoints. Pinned so a construction-time side
+    effect cannot grow unnoticed."""
+    pins = {
+        "cosine_topk": 2,
+        "embedding_nearest": 3,
+        "ann_lsh_topk": 1,
+        "ann_ivf_topk": 1,
+        "embedding_neardup_pairs": 2,
+        "embedding_neardup_lsh": 2,
+        "semantic_dedup_keep": 6,
+        "semantic_dedup_auto": 6,
+        "lsh_candidate_pairs": 3,
+        "dup_clusters": 9,
+        "corpus_pipeline": 9,
+    }
+    from kaggle_ecommerce_etl_spark.functions.similarity import (
+        release_corpus_caches,
+    )
+
+    got = {name: construction_jobs(name) for name in pins}
+    release_corpus_caches()
+    assert got == pins
 
 
 def test_pairs_above_cache_auto_evicts_and_releases(spark, sf_dir):
