@@ -334,6 +334,11 @@ def cosine_topk_matmul(
     ``id_col`` must be integral on both sides — ids are coerced to
     int64 and the output schema pins long ids (string/UUID ids would
     need a surrogate-key projection first).
+
+    Construction-time side effect: building the returned DataFrame
+    already drains the whole query side to the driver through
+    ``toLocalIterator`` in :func:`_chunked_blocks` — one Spark job per
+    query-side partition, run before any action.
     """
     partial = _chunked_blocks(
         queries,
@@ -407,6 +412,11 @@ def cosine_pairs_above(
     n² is too much, the recall-trading path is
     :func:`lsh_neardup_pairs` / minhash banding. ``id_col`` must be
     integral (int64-coerced, long output schema).
+
+    Construction-time side effect: building the returned DataFrame
+    already drains (and so caches) the whole projection through
+    ``toLocalIterator`` in :func:`_chunked_blocks` — one Spark job per
+    partition, run before any action.
     """
     from pyspark import StorageLevel
 

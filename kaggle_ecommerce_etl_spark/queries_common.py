@@ -157,6 +157,27 @@ def _publish_fixture_dir(src_dir: str, build) -> None:
         shutil.rmtree(stage, ignore_errors=True)
 
 
+def _parquet_stream(
+    spark: SparkSession,
+    prefix: str,
+    sf_dir: str,
+    frame: DataFrame,
+    table: str = "events",
+) -> tuple[DataFrame, str]:
+    """Publish ``frame`` (two parquet files) once as the cached stream
+    fixture tagged ``prefix`` (see _stream_fixture_dir) and return a
+    file stream over it with the frame's schema, plus the fixture tag
+    (memory-sink table names carry it)."""
+    src_dir = _stream_fixture_dir(prefix, sf_dir, table)
+
+    def _build(stage: str) -> None:
+        frame.repartition(2).write.mode("overwrite").parquet(stage)
+
+    _publish_fixture_dir(src_dir, _build)
+    stream = spark.readStream.schema(frame.schema).parquet(src_dir)
+    return stream, os.path.basename(src_dir)
+
+
 # --------------------------------------------------------------------------
 # oracle SQL shared between query modules
 # --------------------------------------------------------------------------

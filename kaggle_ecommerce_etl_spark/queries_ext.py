@@ -20,10 +20,12 @@ from kaggle_ecommerce_etl_spark.queries_common import (
     _CC_REACH_SQL,
     _dsum,
     _fixture_tag,
+    _parquet_stream,
     _publish_fixture_dir,
     _stream_fixture_dir,
     _t,
 )
+from kaggle_ecommerce_etl_spark.streaming.file_source import run_available_now
 from kaggle_ecommerce_etl_spark.util import outgrows_broadcast
 
 
@@ -1401,10 +1403,6 @@ def q_streaming_dedup_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     The memory sink is the drain harness for THIS oracle check;
     production uses foreachBatch → upsert_anti_join (tested in
     tests/test_streaming_dedup.py)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
     from kaggle_ecommerce_etl_spark.streaming.dedup import dedup_stream_exact
 
     ev = _t(spark, sf_dir, "events").select(
@@ -1413,26 +1411,14 @@ def q_streaming_dedup_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tag includes the source file's (mtime, size): a regenerated
     # testdata drop invalidates the cached fixture instead of serving
     # stale duplicated events
-    src_dir = _stream_fixture_dir("dedup:v1", sf_dir)
-
-    def _build(stage: str) -> None:
-        dups = ev.filter(F.col("event_id") % 3 == 0)
-        ev.unionByName(dups).repartition(2).write.mode("overwrite").parquet(stage)
-
-    _publish_fixture_dir(src_dir, _build)
-
-    qname = "dedup_run_" + os.path.basename(src_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-    query = (
-        dedup_stream_exact(stream, ["event_id"])
-        .writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    dups = ev.filter(F.col("event_id") % 3 == 0)
+    stream, tag = _parquet_stream(
+        spark, "dedup:v1", sf_dir, ev.unionByName(dups)
     )
-    query.awaitTermination()
+    qname = "dedup_run_" + tag
+    run_available_now(
+        dedup_stream_exact(stream, ["event_id"]), query_name=qname, memory=True
+    )
     return spark.table(qname)
 
 
@@ -1911,10 +1897,6 @@ def q_streaming_sessionize_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     output equals batch sessionization exactly — checked against a
     microsecond-precision SQL twin (the operator splits on gaps
     STRICTLY > 30 min, unlike session_window's >=)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
     from kaggle_ecommerce_etl_spark.streaming.stateful import sessionize_stateful
 
     # watermarks require TIMESTAMP (LTZ); the parquet lands NTZ. The
@@ -1922,35 +1904,21 @@ def q_streaming_sessionize_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
+    sentinels = (
+        ev.select("user_id")
+        .distinct()
+        .withColumn("ts", F.lit("2030-01-01").cast("timestamp"))
+        .withColumn("value", F.lit(0.0))
+    )
     # "v2": fixture schema version (ts stored LTZ) — bump on any
     # change to what gets written, so stale cached fixtures die
-    src_dir = _stream_fixture_dir("sess:v2", sf_dir)
-
-    def _build(stage: str) -> None:
-        sentinels = (
-            ev.select("user_id")
-            .distinct()
-            .withColumn("ts", F.lit("2030-01-01").cast("timestamp"))
-            .withColumn("value", F.lit(0.0))
-        )
-        ev.unionByName(sentinels).repartition(2).write.mode("overwrite").parquet(
-            stage
-        )
-
-    _publish_fixture_dir(src_dir, _build)
-
-    qname = "sessionize_run_" + os.path.basename(src_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-    query = (
-        sessionize_stateful(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    stream, tag = _parquet_stream(
+        spark, "sess:v2", sf_dir, ev.unionByName(sentinels)
     )
-    query.awaitTermination()
+    qname = "sessionize_run_" + tag
+    run_available_now(
+        sessionize_stateful(stream), query_name=qname, memory=True
+    )
     return spark.table(qname)
 
 
@@ -2018,8 +1986,12 @@ def q_streaming_upsert_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     files OVERLAP (keys ≡1 mod 3 re-delivered) drain through
     foreachBatch → upsert_anti_join into a parquet target. The final
     table equals plain distinct orders — the DO-NOTHING idempotency
-    guarantee, value-checked."""
-    import hashlib as _hl
+    guarantee, value-checked.
+
+    The target lives in a temporary directory removed before return,
+    so the result is materialized first with one eager
+    ``localCheckpoint``; that barrier need not survive executor loss,
+    because rebuilding the query re-runs the stream."""
     import glob as _glob
     import os
     import shutil
@@ -2044,35 +2016,30 @@ def q_streaming_upsert_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(sub, ignore_errors=True)
 
     _publish_fixture_dir(src_dir, _build)
-
-    # unique parent, never-pre-created child: no delete-then-recreate
-    # window (same pattern as the medallion chain)
-    target = tempfile.mkdtemp(prefix="upsert_tgt_") + "/tgt"
-
-    def _apply(batch: DataFrame, _bid: int) -> None:
-        if os.path.exists(target):
-            # a real read failure must PROPAGATE — swallowing it would
-            # silently disable dedup and append duplicates
-            existing = spark.read.parquet(target)
-        else:  # first batch: target doesn't exist yet
-            existing = batch.sparkSession.createDataFrame([], batch.schema)
-        upsert_anti_join(batch, existing, ["o_orderkey"]).write.mode(
-            "append"
-        ).parquet(target)
-
     stream = (
         spark.readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    query = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(target).select(*cols)
+
+    # unique parent, never-pre-created child: no delete-then-recreate
+    # window (same pattern as the medallion chain)
+    with tempfile.TemporaryDirectory(prefix="upsert_tgt_") as base:
+        target = base + "/tgt"
+
+        def _apply(batch: DataFrame, _bid: int) -> None:
+            if os.path.exists(target):
+                # a real read failure must PROPAGATE — swallowing it
+                # would silently disable dedup and append duplicates
+                existing = spark.read.parquet(target)
+            else:  # first batch: target doesn't exist yet
+                existing = batch.sparkSession.createDataFrame([], batch.schema)
+            upsert_anti_join(batch, existing, ["o_orderkey"]).write.mode(
+                "append"
+            ).parquet(target)
+
+        run_available_now(stream, foreach_batch=_apply)
+        return spark.read.parquet(target).select(*cols).localCheckpoint()
 
 
 ORACLE_STREAMING_UPSERT = """
@@ -2492,31 +2459,20 @@ def q_streaming_window_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     advances the final watermark so every REAL window flushes, and the
     sentinel's own window is excluded. Fourth streaming paradigm on
     the oracle surface (after dedup, custom state, foreachBatch)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
-    src_dir = _stream_fixture_dir("win:v1", sf_dir)
-
-    def _build(stage: str) -> None:
-        sentinel = spark.createDataFrame(
-            [(0,)], "user_id long"
-        ).select(
-            "user_id",
-            F.lit("2030-01-01").cast("timestamp").alias("ts"),
-            F.lit(0.0).alias("value"),
-        )
-        ev.unionByName(sentinel).repartition(2).write.mode("overwrite").parquet(
-            stage
-        )
-
-    _publish_fixture_dir(src_dir, _build)
-
-    qname = "window_run_" + os.path.basename(src_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
+    sentinel = spark.createDataFrame(
+        [(0,)], "user_id long"
+    ).select(
+        "user_id",
+        F.lit("2030-01-01").cast("timestamp").alias("ts"),
+        F.lit(0.0).alias("value"),
+    )
+    stream, tag = _parquet_stream(
+        spark, "win:v1", sf_dir, ev.unionByName(sentinel)
+    )
+    qname = "window_run_" + tag
     agg = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -2525,15 +2481,7 @@ def q_streaming_window_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             _dsum("value").alias("sum_value"),
         )
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_available_now(agg, query_name=qname, memory=True)
     return (
         spark.table(qname)
         .filter(F.col("w.start") < F.lit("2029-01-01").cast("timestamp"))

@@ -30,9 +30,14 @@ from kaggle_ecommerce_etl_spark.queries_common import (
     _dsum,
     _fixture_tag,
     _format_fixture,
+    _parquet_stream,
     _publish_fixture_dir,
     _stream_fixture_dir,
     _t,
+)
+from kaggle_ecommerce_etl_spark.streaming.file_source import (
+    run_available_now,
+    stream_csv_directory,
 )
 
 
@@ -1750,21 +1755,19 @@ def q_medallion_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-explicit CSV file stream into parquet → SILVER streams
     bronze through foreachBatch + upsert_anti_join (idempotent keyed
     dedup) → GOLD is the per-type aggregate over silver. The landing
-    fixture is cached; bronze/silver/checkpoints live under ONE
-    per-call mkdtemp parent (unique by construction — children are
-    never pre-created, so there is no delete-then-recreate window),
-    and everything except silver (which feeds the returned lazy
-    frame) is reaped before returning. Oracle = the same aggregate
-    over the distinct event set."""
+    fixture is cached; bronze and silver live under ONE per-call
+    temporary parent (unique by construction — children are never
+    pre-created, so there is no delete-then-recreate window) and the
+    drains own their checkpoints. Gold is materialized with one eager
+    ``localCheckpoint`` before the parent is removed, so nothing
+    outlives the call; that barrier need not survive executor loss,
+    because rebuilding the query re-runs the stream. Oracle = the
+    same aggregate over the distinct event set."""
     import os
     import shutil
     import tempfile
 
     from kaggle_ecommerce_etl_spark.operators.dedup import upsert_anti_join
-    from kaggle_ecommerce_etl_spark.streaming.file_source import (
-        run_available_now,
-        stream_csv_directory,
-    )
 
     ev = _t(spark, sf_dir, "events").filter(
         F.col("user_id") % 10 == 0
@@ -1799,10 +1802,6 @@ def q_medallion_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _publish_fixture_dir(landing, _build)
 
-    base = tempfile.mkdtemp(prefix="med_")
-    bronze, silver = f"{base}/bronze", f"{base}/silver"
-    ck1, ck2 = f"{base}/ck1", f"{base}/ck2"
-
     from pyspark.sql import types as T
 
     schema = T.StructType.fromDDL(
@@ -1810,41 +1809,40 @@ def q_medallion_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type string, value double"
     )
     raw = stream_csv_directory(spark, landing, schema, glob="*.csv")
-    run_available_now(raw, ck1, parquet_path=bronze, query_name="bronze")
 
-    def _to_silver(batch: DataFrame, _bid: int) -> None:
-        if os.path.exists(silver):
-            # a real read failure here must PROPAGATE — swallowing it
-            # would silently disable dedup and append duplicates
-            existing = spark.read.parquet(silver)
-        else:  # first batch: silver doesn't exist yet
-            existing = batch.sparkSession.createDataFrame([], batch.schema)
-        upsert_anti_join(batch, existing, ["event_id"]).write.mode(
-            "append"
-        ).parquet(silver)
+    with tempfile.TemporaryDirectory(prefix="med_") as base:
+        bronze, silver = f"{base}/bronze", f"{base}/silver"
+        run_available_now(raw, parquet_path=bronze, query_name="bronze")
 
-    run_available_now(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bronze),
-        ck2,
-        foreach_batch=_to_silver,
-        query_name="silver",
-    )
+        def _to_silver(batch: DataFrame, _bid: int) -> None:
+            if os.path.exists(silver):
+                # a real read failure here must PROPAGATE — swallowing
+                # it would silently disable dedup and append duplicates
+                existing = spark.read.parquet(silver)
+            else:  # first batch: silver doesn't exist yet
+                existing = batch.sparkSession.createDataFrame([], batch.schema)
+            upsert_anti_join(batch, existing, ["event_id"]).write.mode(
+                "append"
+            ).parquet(silver)
 
-    gold = (
-        spark.read.parquet(silver)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            _dsum("value").alias("sum_value"),
+        run_available_now(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(bronze),
+            foreach_batch=_to_silver,
+            query_name="silver",
         )
-        .orderBy("event_type")
-    )
-    # silver feeds the returned lazy frame; everything else is done
-    for d in (bronze, ck1, ck2):
-        shutil.rmtree(d, ignore_errors=True)
-    return gold
+
+        return (
+            spark.read.parquet(silver)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                _dsum("value").alias("sum_value"),
+            )
+            .orderBy("event_type")
+            .localCheckpoint()
+        )
 
 
 ORACLE_MEDALLION = """
@@ -1869,22 +1867,11 @@ def q_stream_stream_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered rows; an unbounded stream-stream join would grow state
     forever. Inner joins emit eagerly, so no sentinel flush is needed
     (unlike the windowed-agg run)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )
-    src_dir = _stream_fixture_dir("ssj:v1", sf_dir)
-
-    def _build(stage: str) -> None:
-        ev.repartition(2).write.mode("overwrite").parquet(stage)
-
-    _publish_fixture_dir(src_dir, _build)
-
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
+    stream, tag = _parquet_stream(spark, "ssj:v1", sf_dir, ev)
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
         .select(
@@ -1909,16 +1896,8 @@ def q_stream_stream_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
         & (F.col("c_ts") <= F.col("p_ts")),
     )
-    qname = "ssj_run_" + os.path.basename(src_dir)
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    qname = "ssj_run_" + tag
+    run_available_now(joined, query_name=qname, memory=True)
     return spark.table(qname).select("purchase_id", "click_id")
 
 

@@ -32,11 +32,13 @@ from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
 from kaggle_ecommerce_etl_spark.queries_common import (
     _dsum,
     _format_fixture,
+    _parquet_stream,
     _publish_fixture_dir,
     _stream_fixture_dir,
     _t,
     _view,
 )
+from kaggle_ecommerce_etl_spark.streaming.file_source import run_available_now
 
 
 # --------------------------------------------------------------------------
@@ -1143,22 +1145,12 @@ def q_streaming_enrich_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation in complete mode. At 100 TB the static side is the
     broadcast dim table every enrichment topology carries; state is
     bounded by |nations|, not the stream."""
-    import os
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select("user_id", "value")
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_nationkey")
     )
-    src_dir = _stream_fixture_dir("enrich:v1", sf_dir)
-
-    def _build(stage: str) -> None:
-        ev.repartition(2).write.mode("overwrite").parquet(stage)
-
-    _publish_fixture_dir(src_dir, _build)
-
-    qname = "enrich_run_" + os.path.basename(src_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
+    stream, tag = _parquet_stream(spark, "enrich:v1", sf_dir, ev)
+    qname = "enrich_run_" + tag
     joined = stream.join(
         F.broadcast(cust), stream.user_id == cust.c_custkey
     )
@@ -1168,15 +1160,9 @@ def q_streaming_enrich_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sum_value"),
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        agg, query_name=qname, memory=True, output_mode="complete"
     )
-    query.awaitTermination()
     return spark.table(qname).select("c_nationkey", "n_events", "sum_value")
 
 
@@ -1206,27 +1192,16 @@ def q_streaming_session_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the same gap-island oracle restates it. Watermark-bounded
     state: sessions close 2 h after their last event at the latest —
     the state store never grows past the live-session set."""
-    import os
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
-
-    src_dir = _stream_fixture_dir("sesswin:v1", sf_dir)
-
-    def _build(stage: str) -> None:
-        sentinel = spark.createDataFrame([(0,)], "user_id long").select(
-            "user_id", F.lit("2030-01-01").cast("timestamp").alias("ts")
-        )
-        ev.unionByName(sentinel).repartition(2).write.mode(
-            "overwrite"
-        ).parquet(stage)
-
-    _publish_fixture_dir(src_dir, _build)
-
-    qname = "session_run_" + os.path.basename(src_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
+    sentinel = spark.createDataFrame([(0,)], "user_id long").select(
+        "user_id", F.lit("2030-01-01").cast("timestamp").alias("ts")
+    )
+    stream, tag = _parquet_stream(
+        spark, "sesswin:v1", sf_dir, ev.unionByName(sentinel)
+    )
+    qname = "session_run_" + tag
     agg = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(
@@ -1234,15 +1209,7 @@ def q_streaming_session_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_available_now(agg, query_name=qname, memory=True)
     return (
         spark.table(qname)
         .filter(F.col("w.start") < F.lit("2029-01-01").cast("timestamp"))
@@ -1366,8 +1333,10 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is BY CONTRACT exactly the distinct key set — so the state
     read is oracle-checkable as ``SELECT DISTINCT event_id`` over the
     ORIGINAL batch table (the duplicated fixture adds no new keys).
-    A fresh checkpoint per call keeps the drain deterministic."""
-    import os
+    A fresh checkpoint per call keeps the drain deterministic; the
+    state is materialized with one eager ``localCheckpoint`` before
+    the checkpoint directory is removed. That barrier need not survive
+    executor loss, because rebuilding the query re-runs the stream."""
     import tempfile
 
     from kaggle_ecommerce_etl_spark.streaming.dedup import dedup_stream_exact
@@ -1375,29 +1344,16 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
-    src_dir = _stream_fixture_dir("statekeys:v1", sf_dir)
-
-    def _build(stage: str) -> None:
-        dups = ev.filter(F.col("event_id") % 5 == 0)
-        ev.unionByName(dups).repartition(2).write.mode("overwrite").parquet(
-            stage
-        )
-
-    _publish_fixture_dir(src_dir, _build)
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_statekeys_")
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-    query = (
-        dedup_stream_exact(stream, ["event_id"])
-        .writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    dups = ev.filter(F.col("event_id") % 5 == 0)
+    stream, _ = _parquet_stream(
+        spark, "statekeys:v1", sf_dir, ev.unionByName(dups)
     )
-    query.awaitTermination()
-    state = spark.read.format("statestore").load(ckpt)
-    return state.select(F.col("key.event_id").alias("event_id"))
+    with tempfile.TemporaryDirectory(prefix="ckpt_statekeys_") as ckpt:
+        run_available_now(dedup_stream_exact(stream, ["event_id"]), ckpt)
+        state = spark.read.format("statestore").load(ckpt)
+        return state.select(
+            F.col("key.event_id").alias("event_id")
+        ).localCheckpoint()
 
 
 ORACLE_STATE_STORE_READ = """
@@ -1494,7 +1450,6 @@ def q_pyds_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     10 000 files, where the driver only lists names."""
     import csv as _csv
     import os
-    import tempfile
 
     from kaggle_ecommerce_etl_spark.sources.pyds import register_stream
 
@@ -1532,14 +1487,7 @@ def q_pyds_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columns", "event_id,user_id,event_type")
         .load()
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_available_now(stream, query_name=qname, memory=True)
     return spark.table(qname)
 
 

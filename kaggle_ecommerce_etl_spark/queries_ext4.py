@@ -38,12 +38,12 @@ from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
 from kaggle_ecommerce_etl_spark.queries_common import (
-    _publish_fixture_dir,
-    _stream_fixture_dir,
+    _parquet_stream,
     _sw_list,
     _t,
     _view,
 )
+from kaggle_ecommerce_etl_spark.streaming.file_source import run_available_now
 
 #: the same class, spliced verbatim into the DuckDB oracle strings
 #: (RE2 reads the \t/\n/\r/\x0B/\f escapes identically)
@@ -749,34 +749,19 @@ def q_streaming_drift_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary, not stream length; at 100 TB the reference counts
     frame is the persisted vocab-sized table the drift family
     documents."""
-    import os
-    import tempfile
-
     d = _t(spark, sf_dir, "documents")
     incoming = d.filter(F.col("source") == "src2").select(
         (F.col("doc_id") % 3).alias("batch_id"), "text"
     )
-
-    src_dir = _stream_fixture_dir("driftmon:v1", sf_dir, "documents")
-
-    def _build(stage: str) -> None:
-        incoming.repartition(2).write.mode("overwrite").parquet(stage)
-
-    _publish_fixture_dir(src_dir, _build)
-
-    qname = "drift_run_" + os.path.basename(src_dir)
-    stream = spark.readStream.schema(incoming.schema).parquet(src_dir)
+    stream, tag = _parquet_stream(
+        spark, "driftmon:v1", sf_dir, incoming, "documents"
+    )
+    qname = "drift_run_" + tag
     toks = _tok_explode(stream, "batch_id")
     counts = toks.groupBy("batch_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    query = (
-        counts.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        counts, query_name=qname, memory=True, output_mode="complete"
     )
-    query.awaitTermination()
     slice_counts = spark.table(qname)
 
     ref = (

@@ -20,6 +20,9 @@ the watermark.
 
 from __future__ import annotations
 
+import contextlib
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -91,24 +94,48 @@ def sessionized_stream(
 
 def run_available_now(
     stream_df: DataFrame,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     foreach_batch=None,
     query_name: str = "ingest",
     parquet_path: str | None = None,
+    memory: bool = False,
+    output_mode: str = "append",
 ):
     """Drain everything currently in the source, then stop — the
     event-driven micro-batch model of the reference, with exact
     file tracking. ``parquet_path`` selects the exactly-once parquet
     file sink (_spark_metadata tracking) — stronger than a
     foreachBatch append, which is only at-least-once under replay.
-    Returns the finished StreamingQuery."""
-    writer = stream_df.writeStream.option("checkpointLocation", checkpoint_dir)
-    if foreach_batch is not None:
-        writer = writer.foreachBatch(foreach_batch)
-    elif parquet_path is not None:
-        writer = writer.format("parquet").option("path", parquet_path)
-    else:
-        writer = writer.format("noop")
-    q = writer.queryName(query_name).trigger(availableNow=True).start()
-    q.awaitTermination()
+    ``memory`` selects the in-memory sink, whose rows live in the
+    driver as the table ``query_name``; with no sink named, the rows
+    go to ``noop``. ``output_mode`` is the streaming output mode
+    (``complete`` for an aggregate re-emitted whole every batch).
+
+    With no ``checkpoint_dir`` the drain owns a private temporary
+    checkpoint and removes it on return and on raise, stopping the
+    query first if it is still active (an interrupt mid-drain). A
+    directory the caller passes is kept, so a later drain can resume
+    from it. Returns the finished StreamingQuery."""
+    owned = (
+        tempfile.TemporaryDirectory(prefix="ckpt_")
+        if checkpoint_dir is None
+        else contextlib.nullcontext(checkpoint_dir)
+    )
+    with owned as ckpt:
+        writer = (
+            stream_df.writeStream.option("checkpointLocation", ckpt)
+            .outputMode(output_mode)
+        )
+        if foreach_batch is not None:
+            writer = writer.foreachBatch(foreach_batch)
+        elif parquet_path is not None:
+            writer = writer.format("parquet").option("path", parquet_path)
+        else:
+            writer = writer.format("memory" if memory else "noop")
+        q = writer.queryName(query_name).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            if q.isActive:
+                q.stop()
     return q

@@ -122,12 +122,35 @@ def _walk(node):
         yield from _walk(ch.apply(i))
 
 
+def _is_driver_literal(leaf) -> bool:
+    """Whether a plan leaf scans rows the driver holds: a local
+    relation, or an RDD scan whose lineage roots are all
+    driver-parallelized collections. PySpark's
+    ``createDataFrame(list)`` plans the latter (``Scan ExistingRDD``
+    over a ``ParallelCollectionRDD``), not a LocalTableScan; any other
+    RDD scan (a ``localCheckpoint`` result, say) stays unbounded."""
+    nm = leaf.nodeName()
+    if "LocalTableScan" in nm or "EmptyRelation" in nm:
+        return True
+    if "ExistingRDD" not in nm:
+        return False
+    stack, roots = [leaf.rdd()], []
+    while stack:
+        rdd = stack.pop()
+        deps = rdd.dependencies()
+        if deps.size() == 0:
+            roots.append(rdd.getClass().getSimpleName())
+        stack.extend(deps.apply(i).rdd() for i in range(deps.size()))
+    return all(r == "ParallelCollectionRDD" for r in roots)
+
+
 def _classify_build_side(node) -> str:
     """Mechanical boundedness class of one BNLJ build subtree:
     scalar_agg (an aggregate with NO grouping keys — 1 row at any
-    scale), local_table (driver-literal relation), tiny_dim_scan (the
-    constant dims: nation/region/month lookup), keyed_agg (grouped
-    aggregate — bounded only if the key domain is), else opaque."""
+    scale), local_table (driver-literal relation, see
+    :func:`_is_driver_literal`), tiny_dim_scan (the constant dims:
+    nation/region/month lookup), keyed_agg (grouped aggregate —
+    bounded only if the key domain is), else opaque."""
     first_agg = None
     for n in _walk(node):
         nm = n.nodeName()
@@ -139,9 +162,7 @@ def _classify_build_side(node) -> str:
     if first_agg == 0:
         return "scalar_agg"
     leaves = [n for n in _walk(node) if n.children().size() == 0]
-    leaf_names = {n.nodeName() for n in leaves}
-    if leaf_names and all("LocalTableScan" in n or "EmptyRelation" in n
-                          for n in leaf_names):
+    if leaves and all(_is_driver_literal(n) for n in leaves):
         return "local_table"
     if leaves and all(
         any(t in n.toString().splitlines()[0]

@@ -13,6 +13,9 @@ fixture dirs, the same dedup_stream_exact / sessionize_stateful
 operators, drained with Trigger.AvailableNow into a per-batch noop
 write. What grows with scale is exactly what would grow on a cluster:
 file-source listing, state-store rows, shuffle — not a driver array.
+Each drain is a fresh availableNow pass whose checkpoint
+``run_available_now`` owns and removes, even when the drain raises: at
+100x the sessionize state store holds ~10M user keys.
 
 Usage: python scripts/streaming_drain_probe.py [replica_list]
 Prints one JSON line shaped like scale_curve.py's output.
@@ -22,9 +25,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -38,29 +39,11 @@ from kaggle_ecommerce_etl_spark.queries_common import (
     _t,
 )
 from kaggle_ecommerce_etl_spark.session import get_spark
+from kaggle_ecommerce_etl_spark.streaming.file_source import run_available_now
 
 
 def _noop_batch(df, _batch_id) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def _drain(stream_df) -> None:
-    # Single-use checkpoint by construction (every drain is a fresh
-    # availableNow pass over the full fixture) — remove it after the
-    # drain: at 100x the sessionize state store holds ~10M user keys,
-    # and n_runs x drains x replicas leaked trees would accumulate
-    # real /tmp disk across sessions (ADVICE r9).
-    ckpt = tempfile.mkdtemp(prefix="ckpt_probe_")
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(_noop_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def publish_dedup_fixture(spark, sf_dir: str):
@@ -88,7 +71,9 @@ def drain_dedup(spark, sf_dir: str) -> None:
 
     schema, src_dir = publish_dedup_fixture(spark, sf_dir)
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    _drain(dedup_stream_exact(stream, ["event_id"]))
+    run_available_now(
+        dedup_stream_exact(stream, ["event_id"]), foreach_batch=_noop_batch
+    )
 
 
 def publish_sessionize_fixture(spark, sf_dir: str):
@@ -121,7 +106,7 @@ def drain_sessionize(spark, sf_dir: str) -> None:
 
     schema, src_dir = publish_sessionize_fixture(spark, sf_dir)
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    _drain(sessionize_stateful(stream))
+    run_available_now(sessionize_stateful(stream), foreach_batch=_noop_batch)
 
 
 DRAINS = {

@@ -22,6 +22,9 @@ BUILD_CLASSES = {
     "customers_no_orders": ["scalar_agg"],
     # after execution one build side is a reused broadcast exchange
     "source_token_drift": ["scalar_agg"] * 3,
+    # 1-row corpus total, then the 3-row k-list: createDataFrame(list)
+    # plans an RDD scan over a driver-parallelized collection
+    "token_coverage_curve": ["scalar_agg", "local_table"],
 }
 
 
@@ -38,3 +41,18 @@ def test_bnlj_build_class_same_before_and_after_execution(spark, sf_dir, name):
     walked = plan_audit._walk(df._jdf.queryExecution().executedPlan())
     assert "AQEShuffleRead" in {n.nodeName() for n in walked}
     assert plan_audit._bnlj_build_classes(df) == classes
+
+
+def test_rdd_scan_is_driver_literal_only_over_a_parallelized_collection(spark):
+    """A createDataFrame(list) scan is a driver literal; an RDD scan
+    over a localCheckpoint is not, though both plan as Scan ExistingRDD."""
+
+    def leaf(df):
+        plan = df._jdf.queryExecution().executedPlan()
+        return next(n for n in plan_audit._walk(plan) if n.children().size() == 0)
+
+    literal = leaf(spark.createDataFrame([(10,), (100,)], "k int"))
+    checkpointed = leaf(spark.range(3).localCheckpoint())
+    assert literal.nodeName() == checkpointed.nodeName() == "Scan ExistingRDD"
+    assert plan_audit._is_driver_literal(literal)
+    assert not plan_audit._is_driver_literal(checkpointed)

@@ -35,7 +35,8 @@ QUERY_MODULES = (
 #: helpers the query modules share; each is defined once, in queries_common
 SHARED_HELPERS = (
     "_t", "_dsum", "_fixture_tag", "_stream_fixture_dir",
-    "_publish_fixture_dir", "_format_fixture", "_view", "_sw_list",
+    "_publish_fixture_dir", "_parquet_stream", "_format_fixture",
+    "_view", "_sw_list",
     "_oracle_conflict", "_SHINGLE_SQL", "_mh_sql", "_band_sql",
     "ORACLE_SESSIONIZE", "_CC_REACH_SQL",
 )

@@ -1,7 +1,11 @@
 """Structured Streaming tests: AvailableNow drain, watermarked windows,
-foreachBatch upsert idempotency (SURVEY.md §2g)."""
+foreachBatch upsert idempotency (SURVEY.md §2g), and the drain's
+checkpoint cleanup on success and failure."""
 
 from __future__ import annotations
+
+import os
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -145,3 +149,61 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     run_available_now(stream(), str(ck), parquet_path=str(out))
     second = spark.read.parquet(str(out))
     assert sorted(r.k for r in second.collect()) == [1, 2, 3, 4, 5]
+
+
+def test_owned_checkpoint_removed_when_batch_raises(spark, tmp_path, monkeypatch):
+    """With no checkpoint_dir the drain owns its checkpoint: a batch
+    that raises propagates out of the drain, and the checkpoint
+    directory is gone all the same."""
+    src = tmp_path / "drop"
+    src.mkdir()
+    _write_batch(src, "b.csv", [(1, "2024-01-01 10:00:00", "view", 1.0)])
+    temp_root = tmp_path / "tmp"
+    temp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp_root))
+
+    def fail(df, epoch_id):
+        raise RuntimeError("injected batch failure")
+
+    with pytest.raises(Exception, match="injected batch failure"):
+        run_available_now(
+            stream_csv_directory(spark, str(src), CSV_SCHEMA),
+            foreach_batch=fail,
+            query_name="fails",
+        )
+    assert os.listdir(temp_root) == []
+
+
+#: every registry query that drains a stream while it is built
+STREAMING_QUERIES = (
+    "streaming_dedup_run",
+    "streaming_sessionize_run",
+    "streaming_upsert_run",
+    "streaming_window_run",
+    "medallion_stream_run",
+    "stream_stream_join_run",
+    "streaming_enrich_run",
+    "streaming_session_run",
+    "state_store_read",
+    "pyds_stream_run",
+    "streaming_drift_run",
+)
+
+
+@pytest.mark.parametrize("name", STREAMING_QUERIES)
+def test_streaming_query_leaves_no_temp_dirs(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """Building a streaming query leaves nothing under the temp dir
+    but its cached stream fixture: checkpoints, sink targets and the
+    medallion's bronze/silver are removed, and the returned frame
+    still reads after they are gone."""
+    from kaggle_ecommerce_etl_spark.queries import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = REGISTRY[name][0](spark, sf_dir)
+    assert set(os.listdir(tmp_path)) == {"spark_graft_stream_src"}
+    # and no staging leftovers beside the published fixture
+    fixtures = os.listdir(tmp_path / "spark_graft_stream_src")
+    assert all("__" not in d for d in fixtures)
+    assert df.count() > 0

@@ -9,8 +9,6 @@ Covers the two round-4 engine surfaces added in queries_ext3:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.queries_ext3 import (
@@ -241,10 +239,10 @@ def test_rolling_median_native_equals_pandas_udaf(spark, sf_dir):
     assert udaf == native
 
 
-def test_state_store_reader_standalone_roundtrip(spark):
+def test_state_store_reader_standalone_roundtrip(spark, tmp_path):
     """Independent of the registry fixture: tiny stream, known keys."""
-    src = tempfile.mkdtemp(prefix="st_src_")
-    ckpt = tempfile.mkdtemp(prefix="st_ckpt_")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
     df = spark.range(30).select(
         (F.col("id") % 11).alias("k"), F.col("id").alias("v")
     )
