@@ -58,7 +58,17 @@ def _clean_part(part: DataFrame, tag: str) -> DataFrame:
 
 def clean_international_sale(df: DataFrame) -> DataFrame:
     """ordinal-carrying raw all-string frame → unioned cleaned table
-    with data_source ∈ {part1, part2}."""
+    with data_source ∈ {part1, part2}.
+
+    Construction runs Spark jobs: one eager ``localCheckpoint`` of the
+    deduplicated, filtered and renamed frame, then the split's 1-row
+    header fetch and each part's profile in ``transform``. The
+    checkpoint makes the order-dependent keep-first window run once per
+    file: the header fetch, both profiles and the caller's final
+    materialization read its stored rows instead of each re-running
+    the window. Like ``run_batch``'s own checkpoints it does not
+    survive losing an executor, which a failed drop pays by re-running
+    from its raw files."""
     if ORDINAL not in df.columns:
         raise ValueError("international pipeline needs __row_ordinal; read via with_file_order()")
     df = _dedup_keep_first(df)
@@ -66,7 +76,7 @@ def clean_international_sale(df: DataFrame) -> DataFrame:
     df = filter_mostly_null_rows(df, 0.5, [c for c in df.columns if c != ORDINAL])
     df = drop_columns(df, ["index"])
     df = rename_columns(df, {"GROSS AMT": "gross_amount"})
-    part1, part2 = split_misaligned_rowgroups(df)
+    part1, part2 = split_misaligned_rowgroups(df.localCheckpoint(eager=True))
     out = _clean_part(part1, "part1")
     if part2 is not None:
         out = out.unionByName(_clean_part(part2, "part2"))

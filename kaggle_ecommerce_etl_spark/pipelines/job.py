@@ -14,7 +14,9 @@ Scale notes:
   ``try``. The CSV sink and the caller's JDBC upsert/append then read
   the same stored rows instead of each re-running the cleaning plan
   (so ``loaded_at`` is one instant per table), and a runtime failure
-  of the plan lands in ``errors``. Nothing is collected to the driver
+  of the plan lands in ``errors``. The international route also
+  checkpoints each file once after its keep-first dedup, before the
+  split (``clean_international_sale``). Nothing is collected to the driver
   except the 1-row embedded-header fetch of the international split
   (documented in operators.structural).
 - the international report needs file order → read single-partition

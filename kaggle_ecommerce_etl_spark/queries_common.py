@@ -16,13 +16,29 @@ import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kaggle_ecommerce_etl_spark.functions.dedup_ml import MH_A, MH_B, MH_P
 from kaggle_ecommerce_etl_spark.functions.text import STOPWORDS
 
 
+#: parquet schemas by (absolute path, size, mtime_ns, nanosAsLong):
+#: schemas only, never rows, so a rewritten file misses
+_SCHEMAS: dict[tuple[str, int, int, str], StructType] = {}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table; every query reads its inputs here."""
+    """Read one testdata table; every query reads its inputs here.
+
+    A table's schema is learned once per process: Spark's parquet
+    schema inference runs a footer-reading job on every read, so the
+    first read of a file caches its schema under the file's absolute
+    path, size, ``mtime_ns`` and the session's
+    ``spark.sql.legacy.parquet.nanosAsLong`` (which decides how a
+    nanosecond timestamp lands), and later reads pass it to
+    ``.schema(...)`` and run no job. Only the schema is cached: the
+    rows are read from the file every time, and a rewritten file (new
+    size or mtime) misses the cache."""
     # deterministic temporal semantics regardless of the caller's session
     # (DuckDB oracles are UTC-naive)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -37,11 +53,32 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # generations store TIMESTAMP(MICROS), where the same read
         # yields a timestamp directly — branch on the landed type.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev = _parquet(spark, f"{sf_dir}/events.parquet")
         if dict(ev.dtypes)["ts"] == "bigint":
             ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return ev
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+def _parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema of a file read
+    before (see :func:`_t`); a directory, a missing file or a
+    non-local path is read uncached (and Spark reports what is wrong)."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def _dsum(col: Column | str, scale: int = 2) -> Column:

@@ -1391,6 +1391,20 @@ FROM j WHERE round(CAST(inter AS DOUBLE) / (s1 + s2 - inter), 4) >= 0.8
 """
 
 
+def dedup_stream_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+    """``streaming_dedup_run``'s stream fixture as the (tag prefix,
+    frame) that ``_parquet_stream`` publishes: the events with every
+    3rd event twice. ``scripts/streaming_drain_probe.py`` drains the
+    same fixture. The tag is keyed on the source file's (mtime, size), so a regenerated
+    testdata drop invalidates the cached fixture instead of serving
+    stale duplicated events."""
+    ev = _t(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value", "ts"
+    )
+    dups = ev.filter(F.col("event_id") % 3 == 0)
+    return "dedup:v1", ev.unionByName(dups)
+
+
 def q_streaming_dedup_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming ON the correctness surface: a duplicated
     events drop (every 3rd event appears twice across two files) is
@@ -1405,16 +1419,8 @@ def q_streaming_dedup_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_dedup.py)."""
     from kaggle_ecommerce_etl_spark.streaming.dedup import dedup_stream_exact
 
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    )
-    # tag includes the source file's (mtime, size): a regenerated
-    # testdata drop invalidates the cached fixture instead of serving
-    # stale duplicated events
-    dups = ev.filter(F.col("event_id") % 3 == 0)
-    stream, tag = _parquet_stream(
-        spark, "dedup:v1", sf_dir, ev.unionByName(dups)
-    )
+    prefix, frame = dedup_stream_fixture(spark, sf_dir)
+    stream, tag = _parquet_stream(spark, prefix, sf_dir, frame)
     qname = "dedup_run_" + tag
     run_available_now(
         dedup_stream_exact(stream, ["event_id"]), query_name=qname, memory=True
@@ -1888,17 +1894,11 @@ LIMIT 20
 """
 
 
-def q_streaming_sessionize_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``applyInPandasWithState`` ON the correctness surface: the
-    custom stateful sessionizer (streaming/stateful.py) drained with
-    Trigger.AvailableNow over the events drop. A far-future sentinel
-    event per user gap-closes every REAL session inline (the
-    sentinel's own open session is never emitted), so the drained
-    output equals batch sessionization exactly — checked against a
-    microsecond-precision SQL twin (the operator splits on gaps
-    STRICTLY > 30 min, unlike session_window's >=)."""
-    from kaggle_ecommerce_etl_spark.streaming.stateful import sessionize_stateful
-
+def sessionize_stream_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+    """``streaming_sessionize_run``'s stream fixture as the (tag prefix,
+    frame) that ``_parquet_stream`` publishes: the events plus one
+    far-future sentinel event per user. ``scripts/streaming_drain_probe.py``
+    drains the same fixture."""
     # watermarks require TIMESTAMP (LTZ); the parquet lands NTZ. The
     # session TZ is pinned UTC (queries._t), so the cast is value-stable
     ev = _t(spark, sf_dir, "events").select(
@@ -1912,9 +1912,22 @@ def q_streaming_sessionize_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # "v2": fixture schema version (ts stored LTZ) — bump on any
     # change to what gets written, so stale cached fixtures die
-    stream, tag = _parquet_stream(
-        spark, "sess:v2", sf_dir, ev.unionByName(sentinels)
-    )
+    return "sess:v2", ev.unionByName(sentinels)
+
+
+def q_streaming_sessionize_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``applyInPandasWithState`` ON the correctness surface: the
+    custom stateful sessionizer (streaming/stateful.py) drained with
+    Trigger.AvailableNow over the events drop. A far-future sentinel
+    event per user gap-closes every REAL session inline (the
+    sentinel's own open session is never emitted), so the drained
+    output equals batch sessionization exactly — checked against a
+    microsecond-precision SQL twin (the operator splits on gaps
+    STRICTLY > 30 min, unlike session_window's >=)."""
+    from kaggle_ecommerce_etl_spark.streaming.stateful import sessionize_stateful
+
+    prefix, frame = sessionize_stream_fixture(spark, sf_dir)
+    stream, tag = _parquet_stream(spark, prefix, sf_dir, frame)
     qname = "sessionize_run_" + tag
     run_available_now(
         sessionize_stateful(stream), query_name=qname, memory=True

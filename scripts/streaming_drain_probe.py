@@ -31,12 +31,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
-from pyspark.sql import functions as F
 
-from kaggle_ecommerce_etl_spark.queries_common import (
-    _publish_fixture_dir,
-    _stream_fixture_dir,
-    _t,
+from kaggle_ecommerce_etl_spark.queries_common import _parquet_stream
+from kaggle_ecommerce_etl_spark.queries_ext import (
+    dedup_stream_fixture,
+    sessionize_stream_fixture,
 )
 from kaggle_ecommerce_etl_spark.session import get_spark
 from kaggle_ecommerce_etl_spark.streaming.file_source import run_available_now
@@ -47,65 +46,38 @@ def _noop_batch(df, _batch_id) -> None:
 
 
 def publish_dedup_fixture(spark, sf_dir: str):
-    """Publish (idempotently) the dedup stream fixture; return
-    (schema, src_dir). Split from the drain so main() can run it
-    UNTIMED — with SPARK_GRAFT_CURVE_RUNS=1 the one-time fixture write
-    (13.3M rows at 100x) would otherwise land inside the t0 window and
-    be misattributed to the operator (ADVICE r9)."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    )
-    src_dir = _stream_fixture_dir("dedup:v1", sf_dir)
-
-    def _build(stage: str) -> None:
-        dups = ev.filter(F.col("event_id") % 3 == 0)
-        ev.unionByName(dups).repartition(2).write.mode("overwrite").parquet(stage)
-
-    _publish_fixture_dir(src_dir, _build)
-    return ev.schema, src_dir
+    """Publish (idempotently) streaming_dedup_run's own stream fixture
+    and return a stream over it. Split from the drain so main() can run
+    it UNTIMED — with SPARK_GRAFT_CURVE_RUNS=1 the one-time fixture
+    write (13.3M rows at 100x) would otherwise land inside the t0
+    window and be misattributed to the operator (ADVICE r9)."""
+    prefix, frame = dedup_stream_fixture(spark, sf_dir)
+    return _parquet_stream(spark, prefix, sf_dir, frame)[0]
 
 
 def drain_dedup(spark, sf_dir: str) -> None:
     """streaming_dedup_run's fixture + operator, noop foreachBatch sink."""
     from kaggle_ecommerce_etl_spark.streaming.dedup import dedup_stream_exact
 
-    schema, src_dir = publish_dedup_fixture(spark, sf_dir)
-    stream = spark.readStream.schema(schema).parquet(src_dir)
+    stream = publish_dedup_fixture(spark, sf_dir)
     run_available_now(
         dedup_stream_exact(stream, ["event_id"]), foreach_batch=_noop_batch
     )
 
 
 def publish_sessionize_fixture(spark, sf_dir: str):
-    """Publish (idempotently) the sessionize stream fixture; return
-    (schema, src_dir). Same untimed-publication contract as
-    publish_dedup_fixture."""
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
-    src_dir = _stream_fixture_dir("sess:v2", sf_dir)
-
-    def _build(stage: str) -> None:
-        sentinels = (
-            ev.select("user_id")
-            .distinct()
-            .withColumn("ts", F.lit("2030-01-01").cast("timestamp"))
-            .withColumn("value", F.lit(0.0))
-        )
-        ev.unionByName(sentinels).repartition(2).write.mode("overwrite").parquet(
-            stage
-        )
-
-    _publish_fixture_dir(src_dir, _build)
-    return ev.schema, src_dir
+    """Publish (idempotently) streaming_sessionize_run's own stream
+    fixture and return a stream over it. Same untimed-publication
+    contract as publish_dedup_fixture."""
+    prefix, frame = sessionize_stream_fixture(spark, sf_dir)
+    return _parquet_stream(spark, prefix, sf_dir, frame)[0]
 
 
 def drain_sessionize(spark, sf_dir: str) -> None:
     """streaming_sessionize_run's fixture + operator, noop sink."""
     from kaggle_ecommerce_etl_spark.streaming.stateful import sessionize_stateful
 
-    schema, src_dir = publish_sessionize_fixture(spark, sf_dir)
-    stream = spark.readStream.schema(schema).parquet(src_dir)
+    stream = publish_sessionize_fixture(spark, sf_dir)
     run_available_now(sessionize_stateful(stream), foreach_batch=_noop_batch)
 
 

@@ -415,9 +415,9 @@ def test_cc_stats_reset_releases_cache_when_checkpoint_fails(
 
 def test_prefix_join_construction_jobs(construction_jobs):
     """Building either prefix-join query runs Spark jobs before any
-    action: the eager prefix-index checkpoint plus ``_t``'s parquet
-    footer reads. Pinned so the declared side effect cannot grow
-    unnoticed; a change that removes some of these jobs lowers the
-    pin deliberately."""
-    assert construction_jobs("jaccard_pairs_prefix") == 7
-    assert construction_jobs("jaccard_cross_gate") == 9
+    action: the eager prefix-index checkpoint (counted with ``_t``'s
+    schema cache warm, so no parquet footer read). Pinned so the
+    declared side effect cannot grow unnoticed; a change that removes
+    some of these jobs lowers the pin deliberately."""
+    assert construction_jobs("jaccard_pairs_prefix") == 6
+    assert construction_jobs("jaccard_cross_gate") == 8

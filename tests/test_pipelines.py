@@ -84,7 +84,7 @@ def test_clean_sale(spark):
     assert r["D-2."].stock is None
 
 
-def test_clean_international_sale_split(spark):
+def _international_fixture(spark):
     # 'index' is dropped BEFORE the split (reference pg.py:351-355), so the
     # embedded header's meaningful cells start at the second column; the
     # index-cell just needs letters for the is_all_strings detection.
@@ -97,8 +97,11 @@ def test_clean_international_sale_split(spark):
     ]
     cols = ["index", "DATE", "Months", "CUSTOMER", "Style", "SKU", "Size",
             "PCS", "RATE", "GROSS AMT"]
-    ordered = with_file_order(spark.createDataFrame(rows, cols))
-    out = clean_international_sale(ordered)
+    return with_file_order(spark.createDataFrame(rows, cols))
+
+
+def test_clean_international_sale_split(spark):
+    out = clean_international_sale(_international_fixture(spark))
     by_src = {(r.data_source, r.customer): r for r in out.collect()}
     assert ("part1", "CUST-A") in by_src
     assert ("part2", "CUST-C") in by_src
@@ -107,6 +110,32 @@ def test_clean_international_sale_split(spark):
     p2 = by_src[("part2", "CUST-C")]
     assert p2.gross_amount == 165.0
     assert out.columns[-2:] == ["data_source", "loaded_at"]
+
+
+def test_international_keep_first_window_runs_once(spark, monkeypatch):
+    """The order-dependent keep-first window runs once per file, in the
+    eager checkpoint before the split: the split's header fetch, both
+    part profiles and the final materialization read stored rows, so
+    no plan after it holds a Window."""
+    from kaggle_ecommerce_etl_spark.pipelines import international
+
+    split_inputs = []
+    split = international.split_misaligned_rowgroups
+
+    def spy(df):
+        split_inputs.append(df)
+        return split(df)
+
+    monkeypatch.setattr(international, "split_misaligned_rowgroups", spy)
+    out = clean_international_sale(_international_fixture(spark))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert len(split_inputs) == 1
+    assert "Window" not in plan(split_inputs[0])
+    assert "Window" not in plan(out)
+    assert out.count() == 3
 
 
 def test_classify_file():

@@ -80,3 +80,36 @@ def test_scale_curve_canaries_are_benchs():
         assert "def shuffle_canary" not in src
     assert callable(bench.trivial_canary)
     assert callable(bench.shuffle_canary)
+
+
+def test_drain_probe_publishes_the_queries_own_fixtures(spark, sf_dir, monkeypatch):
+    """The probe drains the very fixtures ``streaming_dedup_run`` and
+    ``streaming_sessionize_run`` publish: the same tag prefix and the
+    same frame, so a fixture change in a query moves the probe too."""
+    import pytest
+
+    from kaggle_ecommerce_etl_spark import queries_ext
+    from kaggle_ecommerce_etl_spark.queries import REGISTRY
+
+    probe = importlib.import_module("streaming_drain_probe")
+
+    class Published(Exception):
+        pass
+
+    def record(spark, prefix, sf_dir, frame, table="events"):
+        raise Published(prefix, frame)
+
+    monkeypatch.setattr(queries_ext, "_parquet_stream", record)
+    monkeypatch.setattr(probe, "_parquet_stream", record)
+    for query, publish in (
+        ("streaming_dedup_run", probe.publish_dedup_fixture),
+        ("streaming_sessionize_run", probe.publish_sessionize_fixture),
+    ):
+        with pytest.raises(Published) as by_query:
+            REGISTRY[query][0](spark, sf_dir)
+        with pytest.raises(Published) as by_probe:
+            publish(spark, sf_dir)
+        q_prefix, q_frame = by_query.value.args
+        p_prefix, p_frame = by_probe.value.args
+        assert q_prefix == p_prefix
+        assert q_frame.sameSemantics(p_frame), query

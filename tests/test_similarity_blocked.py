@@ -200,23 +200,23 @@ def test_pairs_above_releases_cache_when_chunk_loop_fails(
 
 def test_similarity_construction_jobs(construction_jobs):
     """Spark jobs each embedding-similarity / LSH registry query runs
-    while its DataFrame is BUILT (sf0.001): ``_t``'s parquet footer
-    reads, the driver-side chunk stream of the matmul paths, the
-    dimension probe of the block grid, the eager banded-index and
-    dup_clusters checkpoints. Pinned so a construction-time side
-    effect cannot grow unnoticed."""
+    while its DataFrame is BUILT (sf0.001, ``_t``'s schema cache warm,
+    so no parquet footer read): the driver-side chunk stream of the
+    matmul paths, the dimension probe of the block grid, the eager
+    banded-index and dup_clusters checkpoints. Pinned so a
+    construction-time side effect cannot grow unnoticed."""
     pins = {
-        "cosine_topk": 2,
-        "embedding_nearest": 3,
-        "ann_lsh_topk": 1,
-        "ann_ivf_topk": 1,
-        "embedding_neardup_pairs": 2,
-        "embedding_neardup_lsh": 2,
-        "semantic_dedup_keep": 6,
-        "semantic_dedup_auto": 6,
-        "lsh_candidate_pairs": 3,
-        "dup_clusters": 9,
-        "corpus_pipeline": 9,
+        "cosine_topk": 1,
+        "embedding_nearest": 2,
+        "ann_lsh_topk": 0,
+        "ann_ivf_topk": 0,
+        "embedding_neardup_pairs": 1,
+        "embedding_neardup_lsh": 1,
+        "semantic_dedup_keep": 5,
+        "semantic_dedup_auto": 5,
+        "lsh_candidate_pairs": 2,
+        "dup_clusters": 8,
+        "corpus_pipeline": 8,
     }
     from kaggle_ecommerce_etl_spark.functions.similarity import (
         release_corpus_caches,
