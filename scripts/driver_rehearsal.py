@@ -26,11 +26,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 import pandas as pd
 
 from kaggle_ecommerce_etl_spark.queries import DRIVER_WINDOW, REGISTRY
-from scripts.check_oracle import TABLES
+from scripts.check_oracle import oracle_connection
 
 
 def strict_sorted(df: pd.DataFrame) -> pd.DataFrame:
@@ -93,19 +92,10 @@ def main() -> int:
     from kaggle_ecommerce_etl_spark.session import get_spark
 
     spark = get_spark("driver-rehearsal")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        src = f"{p}/*.parquet" if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
-
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        release_corpus_caches,
-    )
+    con = oracle_connection(sf_dir)
 
     failures = []
     for name in only:
-        release_corpus_caches()  # drop any pair-query corpus cache
         fn, oracle = REGISTRY[name]
         t0 = time.time()
         try:

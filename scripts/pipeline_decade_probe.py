@@ -21,7 +21,8 @@ Shape choices, both deliberate:
   clean_amazon_sale → noop sink.
 
 Usage: python scripts/pipeline_decade_probe.py [replica_list]
-Prints one JSON line shaped like scale_curve.py's output.
+Prints one JSON line shaped like scale_curve.py's output, plus the
+CSV rows per point (``fixture_rows``) and their ``rows_ratio``.
 """
 
 from __future__ import annotations
@@ -31,7 +32,6 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,6 +44,7 @@ from kaggle_ecommerce_etl_spark.session import get_spark
 from kaggle_ecommerce_etl_spark.sources.csv_source import (
     read_csv_with_encoding_fallback,
 )
+from scripts.replica_sweep import sweep
 
 
 def publish_amazon_csv_dir(spark, run_dir: str, replicas: int) -> str:
@@ -76,65 +77,48 @@ def run_pipeline(spark, csv_dir: str, side: int) -> None:
     out.write.format("noop").mode("overwrite").save()
 
 
+def _pipeline_side(side: int):
+    """Prepare one output side: publish the point's CSV dir untimed
+    (idempotent — a marker stat once ``_csv_rows`` has published it),
+    then time the chain over it."""
+
+    def prepare(spark, run_dir: str, replicas: int):
+        csv_dir = publish_amazon_csv_dir(spark, run_dir, replicas)
+        return lambda: run_pipeline(spark, csv_dir, side)
+
+    return prepare
+
+
+def _csv_rows(spark, run_dir: str, replicas: int) -> int:
+    """The CSV row count per point, recorded as ``fixture_rows`` (the
+    data-volume denominator of the ratio readers): the fixture is
+    ~row-linear in replicas, but record it so nobody has to trust
+    that."""
+    csv_dir = publish_amazon_csv_dir(spark, run_dir, replicas)
+    return spark.read.option("header", True).csv(csv_dir).count()
+
+
 def main() -> None:
-    replicas = sorted(
+    replicas = [
         int(r) for r in (sys.argv[1] if len(sys.argv) > 1 else "10,100").split(",")
-    )
+    ]
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("SPARK_GRAFT_CURVE_RUNS", "3"))
     spark = get_spark("pipeline-decade-probe")
     spark.range(10).count()
 
-    sides = {"pipeline_amazon_clean": 0, "pipeline_amazon_flagged": 1}
-    points: dict[str, dict[str, float]] = {}
-    run_detail: dict[str, dict[str, list[float]]] = {}
-    canaries: dict[str, float] = {}
-    shuffle_canaries: dict[str, float] = {}
-    fixture_rows: dict[str, int] = {}
-    for r in replicas:
-        bench.SF1_REPLICAS = r
-        run_dir = bench._build_sf1(spark, src)
-        csv_dir = publish_amazon_csv_dir(spark, run_dir, r)  # untimed
-        # data-volume denominator for the ratio readers: the CSV row
-        # count per point (the fixture is ~row-linear in replicas, but
-        # print it so nobody has to trust that)
-        fixture_rows[str(r)] = spark.read.option("header", True).csv(
-            csv_dir
-        ).count()
-        canaries[str(r)] = min(bench.trivial_canary(spark, src) for _ in range(2))
-        shuffle_canaries[str(r)] = min(
-            bench.shuffle_canary(spark, src) for _ in range(2)
-        )
-        timings: dict[str, float] = {}
-        detail: dict[str, list[float]] = {}
-        for name, side in sides.items():
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.time()
-                run_pipeline(spark, csv_dir, side)
-                runs.append(time.time() - t0)
-            timings[name] = round(min(runs), 3)
-            detail[name] = [round(x, 2) for x in runs]
-            print(f"# {r}x {name}: {timings[name]}s (runs {detail[name]})",
-                  file=sys.stderr)
-        points[str(r)] = timings
-        run_detail[str(r)] = detail
-
-    out: dict = {"points": points, "unit": "sec", "agg": f"min-of-{n_runs}",
-                 "fixture_rows": fixture_rows,
-                 "canary_per_point": canaries,
-                 "shuffle_canary_per_point": shuffle_canaries,
-                 "run_detail": run_detail}
-    if len(replicas) >= 2:
-        lo, hi = str(replicas[0]), str(replicas[-1])
-        out[f"ratio_{hi}_over_{lo}"] = {
-            q: round(points[hi][q] / points[lo][q], 2)
-            for q in points[lo]
-            if points[lo].get(q)
-        }
-        out["rows_ratio"] = round(
-            fixture_rows[hi] / max(fixture_rows[lo], 1), 2
-        )
+    out = sweep(
+        spark,
+        src,
+        replicas,
+        {
+            "pipeline_amazon_clean": _pipeline_side(0),
+            "pipeline_amazon_flagged": _pipeline_side(1),
+        },
+        n_runs=n_runs,
+        canaries=(bench.trivial_canary, bench.shuffle_canary),
+        point_rows=_csv_rows,
+    )
     print(json.dumps(out))
 
 

@@ -24,13 +24,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from kaggle_ecommerce_etl_spark.queries import REGISTRY
 from kaggle_ecommerce_etl_spark.session import get_spark
+from scripts.replica_sweep import sweep
 
 DEFAULT_QUERIES = [
     "conflict_split_flagged",
@@ -45,13 +45,23 @@ DEFAULT_QUERIES = [
 ]
 
 
+def _noop_query(name: str):
+    """Prepare registry query ``name``: build + noop write is timed."""
+    fn, _oracle = REGISTRY[name]
+
+    def prepare(spark, run_dir: str, _replicas: int):
+        def timed() -> None:
+            fn(spark, run_dir).write.format("noop").mode("overwrite").save()
+
+        return timed
+
+    return prepare
+
+
 def main() -> None:
     replicas = [
         int(r) for r in (sys.argv[1] if len(sys.argv) > 1 else "10,30").split(",")
     ]
-    # ratio keys below read points[hi]/points[lo] with lo=first,
-    # hi=last — sort so '30,10' can't silently invert the ratio
-    replicas = sorted(replicas)
     names = sys.argv[2:] or DEFAULT_QUERIES
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # runs per (point, query): min-of-2 assumes a quiet host; on a
@@ -68,55 +78,14 @@ def main() -> None:
     # trivial_canary/shuffle_canary — ONE definition (ADVICE r8: a
     # verbatim copy here could drift and silently break cross-artifact
     # noise adjudication); scale_curve already imports bench.
-    # Each canary is min-of-2: when _build_sf1 returns a CACHED dir,
-    # the canary is this process's first real parquet work and a
-    # single reading pays one-time JIT (measured r9: 2.5 s trivial /
-    # 5.0 s shuffle against 0.1-0.3 / 0.6-1.0 bands — a false
-    # host-noise alarm, SCALE_CURVE_r09_DECADE_EXT.json). The second
-    # reading runs the identical frozen plan warm; min keeps the
-    # host-state stamp the band comparison needs.
-    def _canary() -> float:
-        return min(bench.trivial_canary(spark, src) for _ in range(2))
-
-    def _canary_shuffle() -> float:
-        return min(bench.shuffle_canary(spark, src) for _ in range(2))
-
-    points: dict[str, dict[str, float]] = {}
-    run_detail: dict[str, dict[str, list[float]]] = {}
-    canaries: dict[str, float] = {}
-    shuffle_canaries: dict[str, float] = {}
-    for r in replicas:
-        bench.SF1_REPLICAS = r  # tag includes r — each multiple caches apart
-        run_dir = bench._build_sf1(spark, src)
-        canaries[str(r)] = _canary()
-        shuffle_canaries[str(r)] = _canary_shuffle()
-        timings: dict[str, float] = {}
-        detail: dict[str, list[float]] = {}
-        for name in names:
-            fn, _oracle = REGISTRY[name]
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.time()
-                fn(spark, run_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            timings[name] = round(min(runs), 3)
-            detail[name] = [round(x, 2) for x in runs]
-            print(f"# {r}x {name}: {timings[name]}s (runs {detail[name]})",
-                  file=sys.stderr)
-        points[str(r)] = timings
-        run_detail[str(r)] = detail
-
-    out: dict = {"points": points, "unit": "sec", "agg": f"min-of-{n_runs}",
-                 "canary_per_point": canaries,
-                 "shuffle_canary_per_point": shuffle_canaries,
-                 "run_detail": run_detail}
-    if len(replicas) >= 2:
-        lo, hi = str(replicas[0]), str(replicas[-1])
-        out[f"ratio_{hi}_over_{lo}"] = {
-            q: round(points[hi][q] / points[lo][q], 2)
-            for q in names
-            if points[lo].get(q)
-        }
+    out = sweep(
+        spark,
+        src,
+        replicas,
+        {name: _noop_query(name) for name in names},
+        n_runs=n_runs,
+        canaries=(bench.trivial_canary, bench.shuffle_canary),
+    )
     print(json.dumps(out))
 
 

@@ -26,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -39,6 +38,7 @@ from kaggle_ecommerce_etl_spark.queries_ext import (
 )
 from kaggle_ecommerce_etl_spark.session import get_spark
 from kaggle_ecommerce_etl_spark.streaming.file_source import run_available_now
+from scripts.replica_sweep import sweep
 
 
 def _noop_batch(df, _batch_id) -> None:
@@ -96,54 +96,33 @@ PUBLISHERS = {
 }
 
 
+def _prepared(name: str):
+    """Prepare one drain: publish its fixture untimed, time the drain."""
+
+    def prepare(spark, run_dir: str, _replicas: int):
+        PUBLISHERS[name](spark, run_dir)
+        return lambda: DRAINS[name](spark, run_dir)
+
+    return prepare
+
+
 def main() -> None:
-    replicas = sorted(
+    replicas = [
         int(r) for r in (sys.argv[1] if len(sys.argv) > 1 else "10,100").split(",")
-    )
+    ]
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("SPARK_GRAFT_CURVE_RUNS", "3"))
     spark = get_spark("streaming-drain-probe")
     spark.range(10).count()
 
-    points: dict[str, dict[str, float]] = {}
-    run_detail: dict[str, dict[str, list[float]]] = {}
-    canaries: dict[str, float] = {}
-    shuffle_canaries: dict[str, float] = {}
-    for r in replicas:
-        bench.SF1_REPLICAS = r
-        run_dir = bench._build_sf1(spark, src)
-        # min-of-2 canaries: same cold-JIT rationale as scale_curve.py
-        canaries[str(r)] = min(bench.trivial_canary(spark, src) for _ in range(2))
-        shuffle_canaries[str(r)] = min(
-            bench.shuffle_canary(spark, src) for _ in range(2)
-        )
-        timings: dict[str, float] = {}
-        detail: dict[str, list[float]] = {}
-        for name, fn in DRAINS.items():
-            PUBLISHERS[name](spark, run_dir)  # untimed: fixture build
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.time()
-                fn(spark, run_dir)
-                runs.append(time.time() - t0)
-            timings[name] = round(min(runs), 3)
-            detail[name] = [round(x, 2) for x in runs]
-            print(f"# {r}x {name}: {timings[name]}s (runs {detail[name]})",
-                  file=sys.stderr)
-        points[str(r)] = timings
-        run_detail[str(r)] = detail
-
-    out: dict = {"points": points, "unit": "sec", "agg": f"min-of-{n_runs}",
-                 "canary_per_point": canaries,
-                 "shuffle_canary_per_point": shuffle_canaries,
-                 "run_detail": run_detail}
-    if len(replicas) >= 2:
-        lo, hi = str(replicas[0]), str(replicas[-1])
-        out[f"ratio_{hi}_over_{lo}"] = {
-            q: round(points[hi][q] / points[lo][q], 2)
-            for q in points[lo]
-            if points[lo].get(q)
-        }
+    out = sweep(
+        spark,
+        src,
+        replicas,
+        {name: _prepared(name) for name in DRAINS},
+        n_runs=n_runs,
+        canaries=(bench.trivial_canary, bench.shuffle_canary),
+    )
     print(json.dumps(out))
 
 

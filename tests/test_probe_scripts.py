@@ -113,3 +113,76 @@ def test_drain_probe_publishes_the_queries_own_fixtures(spark, sf_dir, monkeypat
         p_prefix, p_frame = by_probe.value.args
         assert q_prefix == p_prefix
         assert q_frame.sameSemantics(p_frame), query
+
+
+def test_replica_sweep_loop_with_fakes(capsys):
+    """The one sweep loop behind the three probes, driven by fakes: a
+    build that records each replica count, canaries and ops on a fake
+    clock. Ops are prepared once per point before their timed runs,
+    canaries are min-of-2, runs are min-of-N, points are sorted so the
+    ratio reads hi over lo, and ``point_rows`` adds ``fixture_rows`` and
+    ``rows_ratio``."""
+    sweep = importlib.import_module("replica_sweep").sweep
+    now = [0.0]
+    log: list = []
+
+    def clock():
+        return now[0]
+
+    def build(spark, src, r):
+        log.append(("build", r))
+        return f"{src}/x{r}"
+
+    def op(cost):
+        def prepare(spark, run_dir, r):
+            log.append(("prepare", cost, run_dir))
+            durations = iter([cost * r + 1, cost * r])
+
+            def timed():
+                now[0] += next(durations)
+
+            return timed
+
+        return prepare
+
+    readings = iter([0.3, 0.2, 0.9, 0.8, 0.5, 0.4, 1.1, 1.2])
+    out = sweep(
+        "spark",
+        "src",
+        [30, 10],
+        {"a": op(1), "b": op(2)},
+        n_runs=2,
+        canaries=(lambda spark, src: next(readings),) * 2,
+        point_rows=lambda spark, run_dir, r: 100 * r,
+        build=build,
+        clock=clock,
+    )
+    assert log == [
+        ("build", 10),
+        ("prepare", 1, "src/x10"),
+        ("prepare", 2, "src/x10"),
+        ("build", 30),
+        ("prepare", 1, "src/x30"),
+        ("prepare", 2, "src/x30"),
+    ]
+    assert list(out) == [
+        "points", "unit", "agg", "fixture_rows", "canary_per_point",
+        "shuffle_canary_per_point", "run_detail", "ratio_30_over_10",
+        "rows_ratio",
+    ]
+    assert out["points"] == {"10": {"a": 10, "b": 20}, "30": {"a": 30, "b": 60}}
+    assert out["agg"] == "min-of-2"
+    assert out["run_detail"]["10"] == {"a": [11, 10], "b": [21, 20]}
+    assert out["canary_per_point"] == {"10": 0.2, "30": 0.4}
+    assert out["shuffle_canary_per_point"] == {"10": 0.8, "30": 1.1}
+    assert out["ratio_30_over_10"] == {"a": 3.0, "b": 3.0}
+    assert out["fixture_rows"] == {"10": 1000, "30": 3000}
+    assert out["rows_ratio"] == 3.0
+    assert capsys.readouterr().err.count("# 10x a: 10") == 1
+
+    single = sweep(
+        "spark", "src", [10], {"a": op(1)}, n_runs=2,
+        canaries=(lambda spark, src: 0.1,) * 2, build=build, clock=clock,
+    )
+    assert "fixture_rows" not in single and "rows_ratio" not in single
+    assert not any(k.startswith("ratio_") for k in single)

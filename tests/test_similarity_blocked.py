@@ -49,18 +49,22 @@ def test_self_blocked_equals_matmul_and_window_baseline(spark, sf_dir):
         assert got[(r["query_id"], r["rank"])] == r["neighbor_id"]
 
 
+def _brute_pairs(emb, threshold):
+    """The pair-expression cross join ``cosine_pairs_above`` must match."""
+    a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"))
+    b = emb.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("v2"))
+    return (
+        a.join(b, F.col("id1") < F.col("id2"))
+        .withColumn("sim", F.round(cosine_expr(F.col("v1"), F.col("v2")), 6))
+        .filter(F.col("sim") >= threshold)
+        .select("id1", "id2", "sim")
+    )
+
+
 def test_pairs_above_chunked_equals_bruteforce(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     chunked = cosine_pairs_above(emb, 0.4, chunk_rows=7)
-    a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"))
-    b = emb.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("v2"))
-    brute = (
-        a.join(b, F.col("id1") < F.col("id2"))
-        .withColumn("sim", F.round(cosine_expr(F.col("v1"), F.col("v2")), 6))
-        .filter(F.col("sim") >= 0.4)
-        .select("id1", "id2", "sim")
-    )
-    assert _rows(chunked) == _rows(brute)
+    assert _rows(chunked) == _rows(_brute_pairs(emb, 0.4))
 
 
 def test_self_blocked_no_full_count_at_construction(monkeypatch, spark, sf_dir):
@@ -153,32 +157,36 @@ def test_pinned_ivf_centroids_invariants():
     assert sims.max() < 0.999, "duplicate/collapsed centroids"
 
 
-def test_pairs_above_corpus_cache_is_released(spark, sf_dir):
-    """cosine_pairs_above persists its corpus projection across chunk
-    scans and hands it to the caller via _graft_cached_side;
-    q_semantic_dedup_keep must release it once dup_clusters has
-    checkpointed the edges (a leaked cache accumulates across the
-    bench loop and distorts later queries' memory budget)."""
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        cosine_pairs_above,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = cosine_pairs_above(emb, threshold=0.4)
-    cached = pairs._graft_cached_side
-    assert cached.storageLevel.useMemory  # persisted
-    assert pairs.count() > 0
-    cached.unpersist()
-    assert not cached.storageLevel.useMemory
+def _cache_manager_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_pairs_above_releases_cache_when_chunk_loop_fails(
-    spark, sf_dir, monkeypatch, assert_cache_released
+def test_pairs_above_leaves_cache_manager_empty(spark, sf_dir):
+    """The corpus projection is a lazy ``localCheckpoint``, not a
+    ``persist``: building and collecting the pairs adds nothing to the
+    session's ``CacheManager``, so no caller has anything to release.
+
+    Only the ``CacheManager`` half of ``assert_cache_released`` applies
+    here: a ``localCheckpoint`` RDD sits in ``getPersistentRDDs()``
+    until the JVM garbage-collects the frame that holds it, so "no new
+    persisted RDD" cannot hold while the result is alive (SCALING.md,
+    the ``localCheckpoint`` ledger's exact-pairs entry)."""
+    spark.catalog.clearCache()
+    emb = _emb(spark, sf_dir)
+    pairs = cosine_pairs_above(emb, 0.4, chunk_rows=7)
+    assert _cache_manager_is_empty(spark)
+    assert _rows(pairs) == _rows(_brute_pairs(emb, 0.4))
+    assert _cache_manager_is_empty(spark)
+
+
+def test_pairs_above_chunk_loop_failure_leaves_cache_manager_empty(
+    spark, sf_dir, monkeypatch
 ):
-    """A failure inside the chunk loop must not strand the persisted
-    corpus projection: it is unpersisted and dropped from
-    _ACTIVE_CORPUS_CACHES before the error propagates. The loop here
-    fails after its first chunk has populated the cache."""
+    """A chunk loop that fails after its first chunk has filled the
+    checkpoint leaves the ``CacheManager`` empty too: there is no
+    release path to miss. Only the ``CacheManager`` half of
+    ``assert_cache_released`` applies, for the reason in
+    :func:`test_pairs_above_leaves_cache_manager_empty`."""
     import pytest
 
     from kaggle_ecommerce_etl_spark.functions import similarity as S
@@ -190,12 +198,24 @@ def test_pairs_above_releases_cache_when_chunk_loop_fails(
             yield chunk
             raise RuntimeError("chunk loop failed")
 
-    S.release_corpus_caches()
+    spark.catalog.clearCache()
     monkeypatch.setattr(S, "_query_chunks", one_chunk_then_fail)
     with pytest.raises(RuntimeError, match="chunk loop failed"):
         S.cosine_pairs_above(_emb(spark, sf_dir), 0.4, chunk_rows=7)
-    assert S._ACTIVE_CORPUS_CACHES == []
-    assert_cache_released()
+    assert _cache_manager_is_empty(spark)
+
+
+def test_pairs_above_back_to_back_frames_equal_bruteforce(spark, sf_dir):
+    """Two pair frames built back to back, before either is collected,
+    each keep their own projection: both collect the brute-force rows
+    (distinct inputs and thresholds, so neither can borrow the other's
+    plan)."""
+    emb = _emb(spark, sf_dir)
+    evens = emb.where("vec_id % 2 = 0")
+    first = cosine_pairs_above(emb, 0.4, chunk_rows=7)
+    second = cosine_pairs_above(evens, 0.3)
+    assert _rows(second) == _rows(_brute_pairs(evens, 0.3))
+    assert _rows(first) == _rows(_brute_pairs(emb, 0.4))
 
 
 def test_similarity_construction_jobs(construction_jobs):
@@ -218,44 +238,8 @@ def test_similarity_construction_jobs(construction_jobs):
         "dup_clusters": 8,
         "corpus_pipeline": 8,
     }
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        release_corpus_caches,
-    )
-
     got = {name: construction_jobs(name) for name in pins}
-    release_corpus_caches()
     assert got == pins
-
-
-def test_pairs_above_cache_auto_evicts_and_releases(spark, sf_dir):
-    """The r6 leak (q_embedding_neardup_pairs never unpersisted the
-    corpus projection) is bounded two ways: a NEW cosine_pairs_above
-    call evicts the previous cache (sequential-materialization
-    contract), and harnesses can release_corpus_caches() explicitly.
-    At most ONE projection is ever live."""
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        _ACTIVE_CORPUS_CACHES,
-        cosine_pairs_above,
-        release_corpus_caches,
-    )
-
-    release_corpus_caches()
-    emb = _t(spark, sf_dir, "embeddings")
-    first = cosine_pairs_above(emb, threshold=0.4)
-    first_side = first._graft_cached_side
-    assert first_side.storageLevel.useMemory
-    assert len(_ACTIVE_CORPUS_CACHES) == 1
-    # second call (DISTINCT plan — same-plan persists alias in the
-    # CacheManager, which would mask the eviction check) auto-evicts
-    # the first projection
-    second = cosine_pairs_above(emb.where("vec_id % 2 = 0"), threshold=0.5)
-    assert not first_side.storageLevel.useMemory, "previous cache leaked"
-    assert len(_ACTIVE_CORPUS_CACHES) == 1
-    assert second.count() >= 0
-    # explicit harness release drops the live one too
-    release_corpus_caches()
-    assert len(_ACTIVE_CORPUS_CACHES) == 0
-    assert not second._graft_cached_side.storageLevel.useMemory
 
 
 def test_cell_assign_tiebreak_and_zero_norm():
@@ -289,7 +273,6 @@ def test_semantic_pairs_auto_routing(spark, sf_dir):
     occupancy estimate says the prefilter pays for itself. Output
     schema is identical either way."""
     from kaggle_ecommerce_etl_spark.functions.similarity import (
-        release_corpus_caches,
         semantic_pairs_auto,
     )
 
@@ -346,7 +329,6 @@ def test_semantic_pairs_auto_routing(spark, sf_dir):
     # the LSH plan is still runnable on the small corpus it was
     # (deliberately mis-)sized for — recall is the only trade
     assert lsh.count() >= 0
-    release_corpus_caches()
 
 
 def test_semantic_router_drift_guard(spark, sf_dir):
@@ -372,7 +354,6 @@ def test_semantic_router_drift_guard(spark, sf_dir):
         LSH_ROUTE_DRIFT_GUARD,
         LSH_ROUTE_MARGIN,
         _route_inputs,
-        release_corpus_caches,
         semantic_pairs_auto,
     )
 
@@ -413,4 +394,3 @@ def test_semantic_router_drift_guard(spark, sf_dir):
     assert pinned._graft_route == "lsh"
     assert pinned._graft_drift_count is False
     assert pinned._graft_route_n == 950_000
-    release_corpus_caches()
