@@ -145,12 +145,13 @@ SF1_QUERIES = [
 SF1_REPLICAS = 10
 
 
-def _build_sf1(spark, src_dir: str) -> str:
-    """Derive a 10× scale-up of sf0.1 under /tmp (no sf1 testdata is
-    provided). Replicas are DECORRELATED so the scaled corpus behaves
-    like independent samples rather than 10 pathological copies —
-    otherwise pair-generating queries would measure quadratic DATA
-    (every doc meeting its 9 twins), not engine scaling:
+def _build_sf1(spark, src_dir: str, replicas: int = SF1_REPLICAS) -> str:
+    """Derive a ``replicas``× (by default 10×) scale-up of sf0.1 under
+    the temp dir (no sf1 testdata is provided). Replicas are
+    DECORRELATED so the scaled corpus behaves like independent samples
+    rather than 10 pathological copies — otherwise pair-generating
+    queries would measure quadratic DATA (every doc meeting its 9
+    twins), not engine scaling:
 
     - lineitem/orders/customer: key-offset replicas (join semantics and
       per-key group sizes preserved; group COUNT scales 10×)
@@ -161,13 +162,13 @@ def _build_sf1(spark, src_dir: str) -> str:
       distribution preserved, hyperplane/bucket projections decorrelated
     - supplier/nation/region: dims copied as-is
 
-    Cached under a source-mtime tag; staged + atomically renamed.
+    Cached under a source-mtime tag and published once through the
+    shared fixture publisher (``queries_common._publish_fixture_dir``).
     """
     import hashlib
-    import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
+    from kaggle_ecommerce_etl_spark.queries_common import _publish_fixture_dir
 
     sig = []
     for t in ("lineitem", "orders", "customer", "documents", "embeddings",
@@ -185,17 +186,21 @@ def _build_sf1(spark, src_dir: str) -> str:
     # multiples (e.g. 30×) through this same builder, and a count-less
     # tag would serve the 10× dir for every multiple.
     tag = hashlib.md5(
-        ("|".join(sig) + f":v5:r{SF1_REPLICAS}").encode()
+        ("|".join(sig) + f":v5:r{replicas}").encode()
     ).hexdigest()[:8]
     dst = f"{tempfile.gettempdir()}/spark_graft_sf1/{tag}"
-    done = f"{dst}/_SPARK_GRAFT_READY"
-    if os.path.exists(done):
-        return dst
-    stage = f"{dst}.__stage__{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage, exist_ok=True)
+    _publish_fixture_dir(
+        dst, lambda stage: _write_replicas(spark, src_dir, stage, replicas)
+    )
+    return dst
 
-    rep = spark.range(SF1_REPLICAS).select(F.col("id").alias("__r"))
+
+def _write_replicas(spark, src_dir: str, stage: str, replicas: int) -> None:
+    """Write every table of the ``replicas``× scale-up of ``src_dir``
+    into ``stage`` (see :func:`_build_sf1`)."""
+    from pyspark.sql import functions as F
+
+    rep = spark.range(replicas).select(F.col("id").alias("__r"))
     orders = spark.read.parquet(f"{src_dir}/orders.parquet")
     customer = spark.read.parquet(f"{src_dir}/customer.parquet")
     ok_span = orders.agg(F.max("o_orderkey") + 1).first()[0]
@@ -211,7 +216,7 @@ def _build_sf1(spark, src_dir: str) -> str:
     li = spark.read.parquet(f"{src_dir}/lineitem.parquet").crossJoin(rep)
     li.withColumn(
         "l_orderkey", F.col("l_orderkey") + F.col("__r") * ok_span
-    ).drop("__r").repartition(SF1_REPLICAS).write.mode(
+    ).drop("__r").repartition(replicas).write.mode(
         "overwrite"
     ).parquet(f"{stage}/lineitem.parquet")
 
@@ -219,13 +224,13 @@ def _build_sf1(spark, src_dir: str) -> str:
         "o_orderkey", F.col("o_orderkey") + F.col("__r") * ok_span
     ).withColumn(
         "o_custkey", F.col("o_custkey") + F.col("__r") * ck_span
-    ).drop("__r").repartition(SF1_REPLICAS).write.mode(
+    ).drop("__r").repartition(replicas).write.mode(
         "overwrite"
     ).parquet(f"{stage}/orders.parquet")
 
     customer.crossJoin(rep).withColumn(
         "c_custkey", F.col("c_custkey") + F.col("__r") * ck_span
-    ).drop("__r").repartition(SF1_REPLICAS).write.mode(
+    ).drop("__r").repartition(replicas).write.mode(
         "overwrite"
     ).parquet(f"{stage}/customer.parquet")
 
@@ -251,7 +256,7 @@ def _build_sf1(spark, src_dir: str) -> str:
     docs.crossJoin(rep).withColumn(
         "doc_id", F.col("doc_id") + F.col("__r") * doc_span
     ).withColumn("text", salted).drop("__r").repartition(
-        SF1_REPLICAS
+        replicas
     ).write.mode("overwrite").parquet(f"{stage}/documents.parquet")
 
     emb = spark.read.parquet(f"{src_dir}/embeddings.parquet")
@@ -264,7 +269,7 @@ def _build_sf1(spark, src_dir: str) -> str:
     emb.crossJoin(rep).withColumn(
         "vec_id", F.col("vec_id") + F.col("__r") * vec_span
     ).withColumn("embedding", rot).drop("__r").repartition(
-        SF1_REPLICAS  # same single-file scan-serialization fix as docs
+        replicas  # same single-file scan-serialization fix as docs
     ).write.mode("overwrite").parquet(f"{stage}/embeddings.parquet")
 
     # events: key-offset replicas (event ids and users shifted per
@@ -280,33 +285,13 @@ def _build_sf1(spark, src_dir: str) -> str:
     ).withColumn(
         "user_id", F.col("user_id") + F.col("__r") * uid_span
     ).drop("__r").repartition(
-        SF1_REPLICAS  # same single-file scan-serialization fix as docs
+        replicas  # same single-file scan-serialization fix as docs
     ).write.mode("overwrite").parquet(f"{stage}/events.parquet")
 
     for t in ("supplier", "nation", "region", "part"):
         spark.read.parquet(f"{src_dir}/{t}.parquet").write.mode(
             "overwrite"
         ).parquet(f"{stage}/{t}.parquet")
-
-    with open(f"{stage}/_SPARK_GRAFT_READY", "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(stage, dst)
-        return dst
-    except OSError:
-        pass
-    if os.path.exists(done):  # lost the race to a complete winner
-        shutil.rmtree(stage, ignore_errors=True)
-        return dst
-    # dst exists but is marker-less (a CRASHED earlier build): replace
-    # it with our complete stage — returning the half-written dst would
-    # bench partial data on every subsequent run
-    shutil.rmtree(dst, ignore_errors=True)
-    try:
-        os.rename(stage, dst)
-    except OSError:  # another racer completed the replacement first
-        shutil.rmtree(stage, ignore_errors=True)
-    return dst
 
 
 def next_round_tag() -> str:

@@ -5,6 +5,28 @@ The table reader every query builds on (``_t``), the exact decimal sum
 and the oracle SQL pieces that more than one module's oracles are
 built from. This is a leaf: it imports no query module, so every query
 module imports it at module top and the import graph stays one-way.
+
+Fixtures — the on-disk inputs the queries, ``bench.py`` and the probe
+scripts derive from testdata tables — are placed and published only
+here (FIXTURES.md, "Where fixtures live"):
+
+- **Paths.** Every fixture path and fixture-named database is tagged
+  by :func:`_fixture_tag` on its source table's (mtime, size) and
+  rooted at ``tempfile.gettempdir()``: ``spark_graft_fixtures/<tag>/``
+  (:func:`_format_fixture`), ``spark_graft_stream_src/<tag>``
+  (:func:`_stream_fixture_dir`); bench's replica dirs live under
+  ``spark_graft_sf1/<tag>``. A testdata regeneration changes the tag,
+  so a stale fixture is never read (it is left behind, not deleted).
+- **Publication.** A fixture that is only an input — the raw report
+  CSVs, the stream sources, the format fixtures, the replica dirs — is
+  written once per tag through :func:`_publish_fixture_dir`; later
+  builds read it and run no job for it.
+- **Per-build writes.** A query whose write IS the operation under
+  test rewrites its fixture on every build: the upsert, CSV,
+  incremental, DDL and schema-drift round-trips, the bucketed join,
+  the partition-pruned read and the compaction.
+- **Single files.** One exact CSV file is written only by
+  ``sinks.csv_sink.write_csv_file``.
 """
 
 from __future__ import annotations
@@ -139,7 +161,7 @@ def _format_fixture(sf_dir: str, name: str, table: str) -> str:
 
 
 def _publish_fixture_dir(src_dir: str, build) -> None:
-    """Publish a streaming-fixture directory exactly once, safely under
+    """Publish a fixture directory exactly once, safely under
     CONCURRENT callers (pytest alongside check_oracle/plan_audit, which
     both execute these query fns): each caller builds into a private
     pid-scoped stage dir, writes the ``_SPARK_GRAFT_READY`` marker

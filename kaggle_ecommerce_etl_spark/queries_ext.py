@@ -20,6 +20,7 @@ from kaggle_ecommerce_etl_spark.queries_common import (
     _CC_REACH_SQL,
     _dsum,
     _fixture_tag,
+    _format_fixture,
     _parquet_stream,
     _publish_fixture_dir,
     _stream_fixture_dir,
@@ -970,13 +971,6 @@ WHERE (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT) % 10 = 0
 # engine's 100 TB posture rests on, exercised end-to-end with oracles
 # --------------------------------------------------------------------------
 
-def _scale_fixture(sf_dir: str, name: str) -> str:
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"/tmp/spark_graft_fixtures/{tag}/{name}"
-
-
 def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders ⋈ lineitem with BOTH sides bucketed+sorted by the join
     key: the join plans with zero Exchange and zero per-query Sort
@@ -985,9 +979,9 @@ def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table every query and never shuffling it again."""
     from kaggle_ecommerce_etl_spark.operators.scale import write_bucketed
 
-    db = "graft_bkt_" + _scale_fixture(sf_dir, "")[-9:-1]
+    db = "graft_bkt_" + _fixture_tag("bkt", sf_dir, "orders")
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    loc = _scale_fixture(sf_dir, "bucketed_wh")
+    loc = _format_fixture(sf_dir, "bucketed_wh", "orders")
     import shutil
 
     shutil.rmtree(loc, ignore_errors=True)
@@ -1067,7 +1061,7 @@ def q_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_partitioned,
     )
 
-    path = _scale_fixture(sf_dir, "orders_partitioned")
+    path = _format_fixture(sf_dir, "orders_partitioned", "orders")
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -1624,30 +1618,11 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_entry.py::test_oracle_surface_has_no_complex_types.
     Callers who want the raw array use
     functions.similarity / embedding_quantize_codes below."""
-    emb = _t(spark, sf_dir, "embeddings")
-    # materialize the scale through its own projection: referencing it
-    # inside the transform lambda would re-run array_max per ELEMENT
-    # (CSE doesn't reach into higher-order functions — see
-    # dedup_ml.minhash_base_expr), turning O(d) into O(d²) per row
-    absmax = F.array_max(
-        F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
-    )
-    staged = emb.select(
-        "vec_id", "embedding", (absmax / F.lit(127.0)).alias("__scale")
-    )
-    codes = F.when(
-        F.col("__scale") == 0,
-        F.transform(F.col("embedding"), lambda x: F.lit(0)),
-    ).otherwise(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") / F.col("__scale")).cast("int"),
-        )
-    )
-    return staged.select(
+    q = embedding_quantize_codes(spark, sf_dir)
+    return q.select(
         "vec_id",
-        F.round("__scale", 6).alias("scale"),
-        F.array_join(codes.cast("array<string>"), ",").alias("codes"),
+        "scale",
+        F.array_join(F.col("codes").cast("array<string>"), ",").alias("codes"),
     )
 
 
@@ -1657,6 +1632,10 @@ def embedding_quantize_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     or storage sink). NOT on the oracle surface — see the complex-type
     contract note in q_embedding_quantize."""
     emb = _t(spark, sf_dir, "embeddings")
+    # materialize the scale through its own projection: referencing it
+    # inside the transform lambda would re-run array_max per ELEMENT
+    # (CSE doesn't reach into higher-order functions — see
+    # dedup_ml.minhash_base_expr), turning O(d) into O(d²) per row
     absmax = F.array_max(
         F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
     )
@@ -2071,8 +2050,8 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     orders = _t(spark, sf_dir, "orders").select(*cols)
-    scattered = _scale_fixture(sf_dir, "scattered")
-    compacted = _scale_fixture(sf_dir, "compacted")
+    scattered = _format_fixture(sf_dir, "scattered", "orders")
+    compacted = _format_fixture(sf_dir, "compacted", "orders")
     # simulate the streaming-sink aftermath: 64 small files
     orders.repartition(64).write.mode("overwrite").parquet(scattered)
     compact_sorted(
@@ -2781,9 +2760,6 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table must converge to exactly one row per key — oracle = the plain
     filtered projection. Idempotent by design, so re-runs inside one
     JVM (the in-memory DB persists) stay stable."""
-    import hashlib as _hl
-    import os
-
     from kaggle_ecommerce_etl_spark.sinks.jdbc import (
         DERBY_DRIVER,
         derby_memory_url,

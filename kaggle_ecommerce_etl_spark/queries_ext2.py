@@ -35,6 +35,7 @@ from kaggle_ecommerce_etl_spark.queries_common import (
     _stream_fixture_dir,
     _t,
 )
+from kaggle_ecommerce_etl_spark.sinks.csv_sink import write_csv_file
 from kaggle_ecommerce_etl_spark.streaming.file_source import (
     run_available_now,
     stream_csv_directory,
@@ -520,23 +521,17 @@ GROUP BY doc_id
 """
 
 
-def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic dedup decision: exact blocked-matmul
-    cosine pairs >= 0.4 (never a cross join) → connected components
+def _semantic_dedup(spark: SparkSession, sf_dir: str, pairs) -> DataFrame:
+    """The semantic dedup decision over the pair generator ``pairs``
+    (``pairs(emb, threshold=0.4)`` → edges): connected components
     (iterative min-label propagation, functions.dedup_ml.dup_clusters)
-    → keep the min vec_id per semantic cluster. The iterative Spark
-    algorithm is oracle-checked against a DuckDB RECURSIVE CTE
-    transitive closure over the same pair predicate — an exact-value
-    check of the full dedup DECISION, not just the pair list."""
+    → keep the min vec_id per cluster; unpaired vectors are their own
+    cluster. dup_clusters eagerly checkpoints the edge set, so the
+    pair scan runs exactly once."""
     from kaggle_ecommerce_etl_spark.functions.dedup_ml import dup_clusters
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        cosine_pairs_above,
-    )
 
     emb = _t(spark, sf_dir, "embeddings")
-    # dup_clusters eagerly checkpoints the edge set, so the O(n²) pair
-    # scan runs exactly once
-    labels = dup_clusters(cosine_pairs_above(emb, threshold=0.4))
+    labels = dup_clusters(pairs(emb, threshold=0.4))
     return (
         emb.select("vec_id")
         .join(labels, F.col("vec_id") == F.col("id"), "left")
@@ -546,6 +541,21 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("is_kept", F.col("vec_id") == F.col("cluster_id"))
     )
+
+
+def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup-style semantic dedup decision: exact blocked-matmul
+    cosine pairs >= 0.4 (never a cross join) → connected components
+    (iterative min-label propagation, functions.dedup_ml.dup_clusters)
+    → keep the min vec_id per semantic cluster. The iterative Spark
+    algorithm is oracle-checked against a DuckDB RECURSIVE CTE
+    transitive closure over the same pair predicate — an exact-value
+    check of the full dedup DECISION, not just the pair list."""
+    from kaggle_ecommerce_etl_spark.functions.similarity import (
+        cosine_pairs_above,
+    )
+
+    return _semantic_dedup(spark, sf_dir, cosine_pairs_above)
 
 
 def q_semantic_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -559,22 +569,11 @@ def q_semantic_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALING.md), so the result is oracle-exact against the same
     RECURSIVE-CTE closure as the keep variant;
     tests/test_similarity_blocked.py pins the route choice itself."""
-    from kaggle_ecommerce_etl_spark.functions.dedup_ml import dup_clusters
     from kaggle_ecommerce_etl_spark.functions.similarity import (
         semantic_pairs_auto,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    labels = dup_clusters(semantic_pairs_auto(emb, threshold=0.4))
-    return (
-        emb.select("vec_id")
-        .join(labels, F.col("vec_id") == F.col("id"), "left")
-        .select(
-            "vec_id",
-            F.coalesce("cluster", "vec_id").alias("cluster_id"),
-        )
-        .withColumn("is_kept", F.col("vec_id") == F.col("cluster_id"))
-    )
+    return _semantic_dedup(spark, sf_dir, semantic_pairs_auto)
 
 
 ORACLE_SEMANTIC_DEDUP = """
@@ -1755,7 +1754,6 @@ def q_medallion_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     because rebuilding the query re-runs the stream. Oracle = the
     same aggregate over the distinct event set."""
     import os
-    import shutil
     import tempfile
 
     from kaggle_ecommerce_etl_spark.operators.dedup import upsert_anti_join
@@ -1772,7 +1770,6 @@ def q_medallion_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = _stream_fixture_dir("med", sf_dir)
 
     def _build(stage: str) -> None:
-        os.makedirs(stage, exist_ok=True)
         batches = (
             ("a", ev.filter(F.col("event_id") % 2 == 0)),
             # batch b re-delivers every event_id % 4 == 0 (already in a)
@@ -1780,16 +1777,8 @@ def q_medallion_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("event_id") % 2 == 1) | (F.col("event_id") % 4 == 0)
             )),
         )
-        import glob as _glob
-
         for name, frame in batches:
-            sub = f"{stage}.__part_{name}"
-            frame.coalesce(1).write.option("header", True).mode(
-                "overwrite"
-            ).csv(sub)
-            part = _glob.glob(sub + "/part-*.csv")[0]
-            os.replace(part, f"{stage}/{name}.csv")
-            shutil.rmtree(sub, ignore_errors=True)
+            write_csv_file(frame, f"{stage}/{name}.csv")
 
     _publish_fixture_dir(landing, _build)
 

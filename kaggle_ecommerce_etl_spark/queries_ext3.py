@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
 from kaggle_ecommerce_etl_spark.queries_common import (
     _dsum,
+    _fixture_tag,
     _format_fixture,
     _parquet_stream,
     _publish_fixture_dir,
@@ -1273,15 +1274,11 @@ def q_udtf_repeat_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-op on multi-file inputs.
     from kaggle_ecommerce_etl_spark.util import ensure_min_partitions
 
-    # view name derived from sf_dir (ADVICE r10): a FIXED name could
+    # view name tagged on the source (ADVICE r10): a FIXED name could
     # race between createOrReplaceTempView and the spark.sql analysis
     # when two constructions with different sf_dirs interleave in one
     # session, silently binding the query to the wrong dataset
-    import hashlib
-
-    v = "__ext3_documents_minpart_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    v = "__ext3_documents_minpart_" + _fixture_tag("minpart", sf_dir, "documents")
     ensure_min_partitions(
         _t(spark, sf_dir, "documents")
     ).createOrReplaceTempView(v)

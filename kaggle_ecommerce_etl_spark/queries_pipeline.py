@@ -9,7 +9,8 @@ Method: each query SYNTHESIZES a deterministic messy CSV from the
 ``orders`` parquet table (noise built with pure CASE logic on
 ``o_orderkey``: duplicate rows, NA-token spellings, ``$1,234.56``
 amounts, an embedded second header, mostly-null rows — the exact noise
-classes the reference handles), writes it under ``/tmp``, reads it back
+classes the reference handles), publishes it once per source tag as a
+cached fixture (``queries_common._format_fixture``), reads it back
 through the REAL ingest path (``read_csv_with_encoding_fallback`` →
 ``with_file_order``) and runs the REAL pipeline. The oracle SQL
 reproduces the expected CLEANED output directly from ``orders`` with
@@ -18,17 +19,16 @@ end-to-end: CSV scan, drop/rename, dedup, mostly-null filter,
 rule-driven transform, critical dropna, conflict/row-group split,
 alignment and source tags.
 
-Scale note: the /tmp round-trip exists only to exercise the CSV ingest
+Scale note: the CSV round-trip exists only to exercise the CSV ingest
 operator at test scale; the pipelines themselves are lazy DataFrame
 chains whose plans are identical when pointed at a 100 TB file listing.
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +45,12 @@ from kaggle_ecommerce_etl_spark.pipelines.international import (
     clean_international_sale,
 )
 from kaggle_ecommerce_etl_spark.pipelines.sale import clean_sale
-from kaggle_ecommerce_etl_spark.queries_common import _fixture_tag, _t
+from kaggle_ecommerce_etl_spark.queries_common import (
+    _fixture_tag,
+    _format_fixture,
+    _publish_fixture_dir,
+    _t,
+)
 from kaggle_ecommerce_etl_spark.sinks.csv_sink import timestamped_name, write_csv_file
 from kaggle_ecommerce_etl_spark.sinks.jdbc import write_upsert
 from kaggle_ecommerce_etl_spark.sources.csv_source import (
@@ -54,35 +59,26 @@ from kaggle_ecommerce_etl_spark.sources.csv_source import (
     with_filename_timestamp,
 )
 
-FIXTURE_ROOT = "/tmp/spark_graft_fixtures"
+def _raw_report(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    fixture: Callable[[SparkSession, str], DataFrame],
+) -> str:
+    """Path of the raw report CSV ``name``: the rows of
+    ``fixture(spark, sf_dir)`` in ``__ord`` order as ONE headered file,
+    the raw-file shape the reference ingests. The file is an input, not
+    the operation under test, so it is published once per source tag
+    and later builds only read it. The single-partition sort is correct
+    for a per-file report (tens of MB), not a bulk path."""
+    src_dir = _format_fixture(sf_dir, name, "orders")
 
+    def _build(stage: str) -> None:
+        rows = fixture(spark, sf_dir).repartition(1).sortWithinPartitions("__ord")
+        write_csv_file(rows.drop("__ord"), f"{stage}/{name}.csv")
 
-def _fixture_path(sf_dir: str, name: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"{FIXTURE_ROOT}/{tag}/{name}"
-
-
-def _write_fixture_csv(df: DataFrame, path: str, order_col: str) -> None:
-    """ONE headered CSV file with deterministic row order — the raw-file
-    shape the reference ingests. Fixture-only: the single-partition sort
-    is correct for a per-file report (tens of MB), not a bulk path."""
-    df = df.repartition(1).sortWithinPartitions(order_col).drop(order_col)
-    # pid-scoped staging dir + atomic os.replace: concurrent writers
-    # (pytest alongside plan_audit) each stage privately and the last
-    # replace wins with a complete file either way
-    tmp = f"{path}.__tmp__{os.getpid()}"
-    (
-        df.write.option("header", True)
-        # keep cell whitespace bit-exact through the round-trip
-        .option("ignoreLeadingWhiteSpace", False)
-        .option("ignoreTrailingWhiteSpace", False)
-        .mode("overwrite")
-        .csv(tmp)
-    )
-    part = glob.glob(tmp + "/part-*.csv")[0]
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    os.replace(part, path)
-    shutil.rmtree(tmp, ignore_errors=True)
+    _publish_fixture_dir(src_dir, _build)
+    return f"{src_dir}/{name}.csv"
 
 
 # --------------------------------------------------------------------------
@@ -131,8 +127,7 @@ def q_pipeline_sale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full clean_sale chain over a synthesized messy CSV: drop index →
     full-row dedup → mostly-null filter → transform (numeric/date
     coercion, NA canonicalization, dead-column drop) → rename."""
-    path = _fixture_path(sf_dir, "sale_report.csv")
-    _write_fixture_csv(_sale_fixture(spark, sf_dir), path, "__ord")
+    path = _raw_report(spark, sf_dir, "sale_report", _sale_fixture)
     raw = read_csv_with_encoding_fallback(spark, path)
     return clean_sale(raw)
 
@@ -222,8 +217,7 @@ def _amazon_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_amazon(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    path = _fixture_path(sf_dir, "amazon_sale.csv")
-    _write_fixture_csv(_amazon_fixture(spark, sf_dir), path, "__ord")
+    path = _raw_report(spark, sf_dir, "amazon_sale", _amazon_fixture)
     raw = read_csv_with_encoding_fallback(spark, path)
     return clean_amazon_sale(raw)
 
@@ -251,9 +245,6 @@ def q_pipeline_jdbc_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     The same batch loads TWICE (README:119-123's duplicate-Lambda
     re-delivery); the table must equal ONE clean pass — oracle =
     the pipeline_amazon_clean oracle, read back through JDBC."""
-    import hashlib as _hl
-    import os
-
     from kaggle_ecommerce_etl_spark.sinks.jdbc import (
         DERBY_DRIVER,
         derby_memory_url,
@@ -390,8 +381,7 @@ def q_pipeline_international(spark: SparkSession, sf_dir: str) -> DataFrame:
     header row-group split (op 35) → per-part transform+standardize →
     align → part1/part2 union. loaded_at (current_timestamp) dropped
     for oracle determinism."""
-    path = _fixture_path(sf_dir, "international_sale.csv")
-    _write_fixture_csv(_intl_fixture(spark, sf_dir), path, "__ord")
+    path = _raw_report(spark, sf_dir, "international_sale", _intl_fixture)
     raw = with_file_order(read_csv_with_encoding_fallback(spark, path))
     return clean_international_sale(raw).drop("loaded_at")
 
@@ -447,7 +437,7 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pg.py:544-547 ON CONFLICT DO NOTHING) AND dedups duplicate keys
     WITHIN a batch (rows sharing uk are constructed identical, so the
     kept-row choice is invisible to the oracle)."""
-    path = _fixture_path(sf_dir, "upsert_table")
+    path = _format_fixture(sf_dir, "upsert_table", "orders")
     shutil.rmtree(path, ignore_errors=True)
 
     o = _t(spark, sf_dir, "orders")
@@ -491,7 +481,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fixed = dt.datetime(2024, 1, 2, 3, 4, 5)
     name = timestamped_name("sale_report", fixed) + ".csv"
-    path = _fixture_path(sf_dir, f"cleaned/{name}")
+    path = _format_fixture(sf_dir, f"cleaned/{name}", "orders")
 
     o = _t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
@@ -529,7 +519,7 @@ def q_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     file's mtime is its write time, always inside the 10-min window."""
     import time
 
-    base = _fixture_path(sf_dir, "incremental")
+    base = _format_fixture(sf_dir, "incremental", "orders")
     o = _t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     proj = ["o_orderkey", "o_orderstatus", "o_orderpriority"]
@@ -565,9 +555,8 @@ def q_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched); an INSERT OVERWRITE makes re-runs idempotent. Green iff
     the DDL schema, the writer, and the catalog read agree end-to-end.
     loaded_at is pinned to a literal so the oracle can reproduce it."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    db = f"graft_wh_{tag}"
-    loc = _fixture_path(sf_dir, "warehouse")
+    db = "graft_wh_" + _fixture_tag("ddl", sf_dir, "orders")
+    loc = _format_fixture(sf_dir, "warehouse", "orders")
     # a FRESH session's catalog doesn't know the table, but the managed
     # location persists on disk → LOCATION_ALREADY_EXISTS on re-create.
     # Reset both sides so the query is idempotent across sessions.
@@ -677,7 +666,7 @@ def q_schema_drift_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mergeSchema``: footer-level union of schemas, absent columns
     NULL-filled, no rewrite of old batches. At 100 TB this is how a
     years-old landing zone keeps reading after the producer evolves."""
-    base = _fixture_path(sf_dir, "drift")
+    base = _format_fixture(sf_dir, "drift", "orders")
     o = _t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     b1 = o.filter(k % 100 == 3).select(

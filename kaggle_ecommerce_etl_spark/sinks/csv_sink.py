@@ -36,13 +36,25 @@ def write_csv(
 
 def write_csv_file(df: DataFrame, file_path: str) -> None:
     """ONE exact CSV file at ``file_path`` — the reference's
-    one-object-per-table S3 put (pg.py:659-671). Spark writes
-    directories, so: single-partition write to a temp dir, then a
-    driver-side move of the part file. Local/NFS paths only (an object
-    store would use its own rename API); use :func:`write_csv` for the
-    scale path where each task writes its own part."""
-    tmp = file_path + ".__tmp__"
-    df.coalesce(1).write.option("header", True).mode("overwrite").csv(tmp)
+    one-object-per-table S3 put (pg.py:659-671), and the one writer of
+    every single-file CSV in the engine. Spark writes directories, so:
+    a single-partition write to a staging directory private to this
+    process, then a driver-side move of the part file (two processes
+    writing the same file each stage apart, and the last move wins
+    with a complete file either way). Cell whitespace is kept as
+    written, as pandas ``to_csv`` keeps it (Spark's CSV writer trims
+    it by default). Local/NFS paths only (an object store would use
+    its own rename API); use :func:`write_csv` for the scale path
+    where each task writes its own part."""
+    tmp = f"{file_path}.__tmp__{_os.getpid()}"
+    (
+        df.coalesce(1)
+        .write.option("header", True)
+        .option("ignoreLeadingWhiteSpace", False)
+        .option("ignoreTrailingWhiteSpace", False)
+        .mode("overwrite")
+        .csv(tmp)
+    )
     part = _glob.glob(tmp + "/part-*.csv")[0]
     _os.makedirs(_os.path.dirname(file_path) or ".", exist_ok=True)
     _os.replace(part, file_path)

@@ -197,11 +197,9 @@ def write_upsert_jdbc(
     # against the insert (and the returned frame would re-run the
     # anti-join against the post-write table, reporting zero appended)
     to_append = to_append.localCheckpoint(eager=True)
-    writer = to_append.write
-    if column_types:
-        writer = writer.option("createTableColumnTypes", column_types)
-    props.setdefault("batchsize", "10000")
-    writer.jdbc(url=url, table=table, mode="append", properties=props)
+    write_jdbc_append(
+        to_append, url, table, properties=props, column_types=column_types
+    )
     return to_append
 
 

@@ -49,8 +49,28 @@ except ImportError:  # pragma: no cover — pyspark < 4
 
 
 def _build_classes():
-    """Factory: everything the shipped classes touch lives in THIS
-    scope (or stdlib/pyspark, which workers always have)."""
+    """Factory for both landing-zone sources, the batch
+    ``csv_manifest`` and the streaming ``landing_stream``: everything
+    the shipped classes touch lives in THIS scope (or stdlib/pyspark,
+    which workers always have). Both list the landing directory the
+    same way, read one input partition per landed file and parse it
+    the same way; they differ only in how partitions are planned.
+
+    The streaming reader is partition-based (``DataSourceStreamReader``
+    — NOT the Simple driver-side variant), so file contents are parsed
+    on EXECUTORS, one input partition per newly-landed file, and the
+    driver handles only offsets (file counts) and listings. This is the
+    scale-correct split: at 100 TB the driver's work per micro-batch is
+    one directory listing; all byte-touching fans out.
+
+    Stream offset contract: ``{"n": k}`` = the first ``k`` files of the
+    SORTED listing are consumed. Correct for append-only landing zones
+    whose names sort monotonically (timestamped naming — exactly what
+    sinks/csv_sink.py produces) or zones immutable during a drain; a
+    late file sorting BEFORE a consumed name would shift indices (the
+    same class of hazard as the reference's modified-in-last-Δ
+    heuristic, pg.py:74-121, but detectable here: the listing prefix
+    can be revalidated against the checkpoint)."""
     import csv
     import io
     import os
@@ -58,6 +78,7 @@ def _build_classes():
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
+        DataSourceStreamReader,
         InputPartition,
     )
 
@@ -72,11 +93,13 @@ def _build_classes():
         # iso-8859-1 maps every byte; unreachable, kept for clarity
         return raw.decode("iso-8859-1", errors="replace")
 
-    class _ManifestPartition(InputPartition):
+    class _LandedFile(InputPartition):
         """One landed file = one partition. The value is the file path
         — a picklable primitive, shipped to the executor reading it."""
 
-    class CsvManifestReader(DataSourceReader):
+    class _LandingReader:
+        """The listing and the per-file parse both readers share."""
+
         def __init__(self, options: dict, fields):
             self._path = options["path"]
             self._fields = list(fields)
@@ -87,18 +110,17 @@ def _build_classes():
             # needle would otherwise silently select zero files)
             self._must_contain = options.get("name_contains", "").lower()
 
-        def partitions(self):
-            names = sorted(
+        def _listing(self):
+            return sorted(
                 n
                 for n in os.listdir(self._path)
                 if n.endswith(".csv")
                 and "%20" not in n
                 and self._must_contain in n.lower()
             )
-            return [
-                _ManifestPartition(os.path.join(self._path, n))
-                for n in names
-            ]
+
+        def _files(self, names):
+            return [_LandedFile(os.path.join(self._path, n)) for n in names]
 
         def read(self, partition):
             path = partition.value
@@ -122,20 +144,33 @@ def _build_classes():
                 vals = list(rec[:width]) + [None] * (width - len(rec))
                 yield (*vals, fname)
 
-    class CsvManifestDataSource(DataSource):
-        """``spark.read.format("csv_manifest").option("path", dir)
-        .option("columns", "a,b,c").load()`` → every column as string
-        plus ``_source_file``. Register via :func:`register`."""
+    class CsvManifestReader(_LandingReader, DataSourceReader):
+        def partitions(self):
+            return self._files(self._listing())
 
-        @classmethod
-        def name(cls) -> str:
-            return "csv_manifest"
+    class LandingStreamReader(_LandingReader, DataSourceStreamReader):
+        def initialOffset(self):
+            return {"n": 0}
+
+        def latestOffset(self):
+            return {"n": len(self._listing())}
+
+        def partitions(self, start, end):
+            return self._files(self._listing()[start["n"] : end["n"]])
+
+        def commit(self, end):
+            # landed files are immutable inputs; nothing to release
+            pass
+
+    class _LandingSource(DataSource):
+        """Every column as string plus ``_source_file``; the column
+        names come from the required ``columns`` option."""
 
         def _field_list(self):
             cols = self.options.get("columns")
             if not cols:
                 raise ValueError(
-                    "csv_manifest requires .option('columns', 'a,b,c')"
+                    f"{self.name()} requires .option('columns', 'a,b,c')"
                     " — a Python source cannot infer schema without an"
                     " extra full pass over the landing zone"
                 )
@@ -147,105 +182,21 @@ def _build_classes():
             )
             return f"{fields}, `_source_file` string"
 
+    class CsvManifestDataSource(_LandingSource):
+        """``spark.read.format("csv_manifest").option("path", dir)
+        .option("columns", "a,b,c").load()`` → every column as string
+        plus ``_source_file``. Register via :func:`register`."""
+
+        @classmethod
+        def name(cls) -> str:
+            return "csv_manifest"
+
         def reader(self, schema):
             return CsvManifestReader(
                 dict(self.options), self._field_list()
             )
 
-    return CsvManifestReader, CsvManifestDataSource
-
-
-def _build_stream_classes():
-    """Factory for the STREAMING landing-zone source (same pickling
-    contract as :func:`_build_classes`): a partition-based
-    ``DataSourceStreamReader`` — NOT the Simple driver-side variant —
-    so file contents are parsed on EXECUTORS, one input partition per
-    newly-landed file, and the driver handles only offsets (file
-    counts) and listings. This is the scale-correct split: at 100 TB
-    the driver's work per micro-batch is one directory listing; all
-    byte-touching fans out.
-
-    Offset contract: ``{"n": k}`` = the first ``k`` files of the
-    SORTED listing are consumed. Correct for append-only landing zones
-    whose names sort monotonically (timestamped naming — exactly what
-    sinks/csv_sink.py produces) or zones immutable during a drain; a
-    late file sorting BEFORE a consumed name would shift indices (the
-    same class of hazard as the reference's modified-in-last-Δ
-    heuristic, pg.py:74-121, but detectable here: the listing prefix
-    can be revalidated against the checkpoint)."""
-    import csv
-    import io
-    import os
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    def _decode_landed(raw: bytes) -> str:
-        for enc in ("utf-8", "iso-8859-1"):
-            try:
-                return raw.decode(enc)
-            except UnicodeDecodeError:
-                continue
-        return raw.decode("iso-8859-1", errors="replace")
-
-    class _StreamFilePart(InputPartition):
-        """One newly-landed file = one partition (value = path)."""
-
-    class LandingStreamReader(DataSourceStreamReader):
-        def __init__(self, options: dict, fields):
-            self._path = options["path"]
-            self._fields = list(fields)
-            self._header = options.get("header", "true").lower() == "true"
-            self._must_contain = options.get("name_contains", "").lower()
-
-        def _listing(self):
-            return sorted(
-                n
-                for n in os.listdir(self._path)
-                if n.endswith(".csv")
-                and "%20" not in n
-                and self._must_contain in n.lower()
-            )
-
-        def initialOffset(self):
-            return {"n": 0}
-
-        def latestOffset(self):
-            return {"n": len(self._listing())}
-
-        def partitions(self, start, end):
-            names = self._listing()[start["n"] : end["n"]]
-            return [
-                _StreamFilePart(os.path.join(self._path, n))
-                for n in names
-            ]
-
-        def read(self, partition):
-            path = partition.value
-            fname = os.path.basename(path)
-            with open(path, "rb") as fh:
-                text = _decode_landed(fh.read())
-            rows = csv.reader(io.StringIO(text))
-            width = len(self._fields)
-            first = True
-            for rec in rows:
-                if first and self._header:
-                    first = False
-                    continue
-                first = False
-                if not rec:
-                    continue
-                vals = list(rec[:width]) + [None] * (width - len(rec))
-                yield (*vals, fname)
-
-        def commit(self, end):
-            # landed files are immutable inputs; nothing to release
-            pass
-
-    class LandingStreamDataSource(DataSource):
+    class LandingStreamDataSource(_LandingSource):
         """``spark.readStream.format("landing_stream")
         .option("path", dir).option("columns", "a,b,c").load()`` —
         the streaming twin of ``csv_manifest``: every column as
@@ -256,33 +207,26 @@ def _build_stream_classes():
         def name(cls) -> str:
             return "landing_stream"
 
-        def _field_list(self):
-            cols = self.options.get("columns")
-            if not cols:
-                raise ValueError(
-                    "landing_stream requires .option('columns', "
-                    "'a,b,c') — a Python source cannot infer schema "
-                    "without an extra full pass over the landing zone"
-                )
-            return [c.strip() for c in cols.split(",") if c.strip()]
-
-        def schema(self) -> str:
-            fields = ", ".join(
-                f"`{c}` string" for c in self._field_list()
-            )
-            return f"{fields}, `_source_file` string"
-
         def streamReader(self, schema):
             return LandingStreamReader(
                 dict(self.options), self._field_list()
             )
 
-    return LandingStreamReader, LandingStreamDataSource
+    return (
+        CsvManifestReader,
+        CsvManifestDataSource,
+        LandingStreamReader,
+        LandingStreamDataSource,
+    )
 
 
 if HAS_PYDS:
-    CsvManifestReader, CsvManifestDataSource = _build_classes()
-    LandingStreamReader, LandingStreamDataSource = _build_stream_classes()
+    (
+        CsvManifestReader,
+        CsvManifestDataSource,
+        LandingStreamReader,
+        LandingStreamDataSource,
+    ) = _build_classes()
 else:  # pragma: no cover — pyspark < 4: keep the attributes defined so
     # accessing them degrades to the same clear error register() raises,
     # not an AttributeError at module-attribute lookup

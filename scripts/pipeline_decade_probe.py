@@ -27,7 +27,6 @@ CSV rows per point (``fixture_rows``) and their ``rows_ratio``.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import sys
@@ -38,7 +37,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench
 
 from kaggle_ecommerce_etl_spark.pipelines.amazon import clean_amazon_sale
-from kaggle_ecommerce_etl_spark.queries_common import _publish_fixture_dir
+from kaggle_ecommerce_etl_spark.queries_common import (
+    _fixture_tag,
+    _publish_fixture_dir,
+)
 from kaggle_ecommerce_etl_spark.queries_pipeline import _amazon_fixture
 from kaggle_ecommerce_etl_spark.session import get_spark
 from kaggle_ecommerce_etl_spark.sources.csv_source import (
@@ -48,9 +50,10 @@ from scripts.replica_sweep import sweep
 
 
 def publish_amazon_csv_dir(spark, run_dir: str, replicas: int) -> str:
-    """Idempotently publish the replica-scaled messy CSV under /tmp;
-    return the directory path. One headered part-file per replica."""
-    tag = hashlib.md5(f"{run_dir}:amazon_csv:v1".encode()).hexdigest()[:8]
+    """Idempotently publish the replica-scaled messy CSV under the temp
+    dir, tagged on the replica's orders table; return the directory
+    path. One headered part-file per replica."""
+    tag = _fixture_tag("amazon_csv:v1", run_dir, "orders")
     dst = f"{tempfile.gettempdir()}/spark_graft_pipeline_decade/{tag}"
 
     def _build(stage: str) -> None:

@@ -25,8 +25,7 @@ import bench
 def build_replica(spark, src: str, replicas: int) -> str:
     """bench's derived replica of ``src`` at ``replicas``× (decorrelated
     keys, salted tokens, rotated embeddings); cached per replica count."""
-    bench.SF1_REPLICAS = replicas  # tag includes r — each multiple caches apart
-    return bench._build_sf1(spark, src)
+    return bench._build_sf1(spark, src, replicas)
 
 
 def sweep(

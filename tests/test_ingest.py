@@ -45,3 +45,15 @@ def test_ingest_filters_reencodes_and_timestamps(spark, tmp_path):
     # re-encoded to clean UTF-8, content intact
     text = open(written[0], encoding="utf-8").read()
     assert "Zürich" in text and "�" not in text
+
+
+def test_ingest_keeps_padded_cells(spark, tmp_path):
+    """Re-serialization keeps cell whitespace, as the reference's
+    pandas ``to_csv`` does (Spark's CSV writer trims it by default)."""
+    src = tmp_path / "landing"
+    src.mkdir()
+    (src / "Sale Report.csv").write_text("sku,size\n  A1 ,M \n")
+    written = ingest_raw_files(
+        spark, str(src), str(tmp_path / "raw"), now=dt.datetime(2024, 1, 2)
+    )
+    assert open(written[0]).read().splitlines() == ["sku,size", "  A1 ,M "]

@@ -5,8 +5,12 @@ properties that must hold at any scale factor."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from kaggle_ecommerce_etl_spark.queries import REGISTRY
+from kaggle_ecommerce_etl_spark.queries_common import _format_fixture
 from kaggle_ecommerce_etl_spark.queries_pipeline import (
     q_audit_columns,
     q_categorical_profile,
@@ -61,6 +65,33 @@ def test_pipeline_international_parts(spark, sf_dir):
     assert out.filter((F.col("data_source") == "part1") & F.col("stock").isNull()).count() == 0
     assert dict(out.dtypes)["pcs"] == "double"
     assert dict(out.dtypes)["gross_amount"] == "double"
+
+
+#: construction jobs of a rebuild at sf0.001, once the raw report CSV
+#: is published (writing it takes 2 jobs more)
+RAW_REPORT_REBUILD_JOBS = {
+    "pipeline_sale": 3,
+    "pipeline_amazon_clean": 3,
+    "pipeline_amazon_flagged": 3,
+    "pipeline_international": 6,
+}
+
+
+def test_raw_reports_are_published_once(spark, sf_dir, construction_jobs):
+    """The raw report CSVs are the pipelines' inputs, not the operation
+    under test: the first build publishes each once per source tag,
+    and no later build of a query that reads one writes it again."""
+    for name in RAW_REPORT_REBUILD_JOBS:
+        REGISTRY[name][0](spark, sf_dir)
+    files = [
+        f"{_format_fixture(sf_dir, n, 'orders')}/{n}.csv"
+        for n in ("sale_report", "amazon_sale", "international_sale")
+    ]
+    before = {f: (os.stat(f).st_ino, os.stat(f).st_mtime_ns) for f in files}
+    got = {name: construction_jobs(name) for name in RAW_REPORT_REBUILD_JOBS}
+    REGISTRY["pipeline_jdbc_load"][0](spark, sf_dir)
+    assert got == RAW_REPORT_REBUILD_JOBS
+    assert {f: (os.stat(f).st_ino, os.stat(f).st_mtime_ns) for f in files} == before
 
 
 def test_upsert_roundtrip_idempotent(spark, sf_dir):

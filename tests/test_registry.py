@@ -145,6 +145,51 @@ def test_shared_helpers_defined_once():
     assert all(where == ["queries_common.py"] for where in defined.values()), defined
 
 
+def _fixture_path_decisions(tree: ast.Module) -> list[str]:
+    """The ``"/tmp"`` string literals (docstrings aside) and the hash
+    calls over ``sf_dir`` in one module: each is a fixture path decided
+    outside ``queries_common``."""
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    hashes = hashlib.algorithms_available | {"new"}
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "/tmp" in node.value
+            and id(node) not in docstrings
+        ):
+            found.append(f"{node.lineno}: literal {node.value!r}")
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in hashes
+            and any(isinstance(n, ast.Name) and n.id == "sf_dir" for n in ast.walk(node))
+        ):
+            found.append(f"{node.lineno}: {node.func.attr} over sf_dir")
+    return found
+
+
+def test_fixture_paths_decided_only_in_queries_common():
+    """Fixture paths are tagged by ``queries_common._fixture_tag`` and
+    rooted at ``tempfile.gettempdir()``: no other package module holds
+    a ``/tmp`` path or hashes ``sf_dir`` into a tag of its own."""
+    offenders = {
+        str(path.relative_to(PKG)): found
+        for path in PKG.rglob("*.py")
+        if path.name != "queries_common.py"
+        and (found := _fixture_path_decisions(ast.parse(path.read_text())))
+    }
+    assert offenders == {}, offenders
+
+
 if __name__ == "__main__":
     sys.path.insert(0, str(REPO))
     sys.stdout.write(registry_snapshot())

@@ -268,7 +268,7 @@ def test_aqe_skew_join_splits_hot_partition(spark, sf_dir):
     assert got == expect
 
 
-def test_replica_builder_writes_multifile_scans(spark, sf_dir, monkeypatch):
+def test_replica_builder_writes_multifile_scans(spark, sf_dir):
     """The derived scale-up dirs must NOT serialize scans: bench's
     _build_sf1 :v5 writes every replicated table — documents,
     embeddings, events, lineitem, orders, customer — as
@@ -282,8 +282,7 @@ def test_replica_builder_writes_multifile_scans(spark, sf_dir, monkeypatch):
 
     import bench
 
-    monkeypatch.setattr(bench, "SF1_REPLICAS", 2)
-    out = bench._build_sf1(spark, sf_dir)
+    out = bench._build_sf1(spark, sf_dir, replicas=2)
     for t in ("documents", "embeddings", "events",
               "lineitem", "orders", "customer"):
         parts = glob.glob(f"{out}/{t}.parquet/part-*.parquet")
