@@ -2,7 +2,6 @@ from kaggle_ecommerce_etl_spark.functions.dedup_ml import (
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash_expr,
 )
 from kaggle_ecommerce_etl_spark.functions.multimodal import (
     dedup_by_content,
@@ -34,7 +33,6 @@ __all__ = [
     "minhash_signatures",
     "ngram_jaccard_pairs",
     "quality_score_expr",
-    "simhash_expr",
     "token_count_expr",
     "tokens_expr",
     "wrap_as_media",

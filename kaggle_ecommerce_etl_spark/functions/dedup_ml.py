@@ -10,7 +10,8 @@ expressions (no Python UDFs):
   slices so candidate pairs come from an equi-join on band keys — the
   100 TB path: shuffle is proportional to Σ bucket sizes, never n².
 - **SimHash**: per-bit majority vote over token hashes, packed to an
-  int — a locality-sensitive fingerprint for hamming-distance dedup.
+  int — a locality-sensitive fingerprint for hamming-distance dedup
+  (hash array staged through its own projection, then the votes).
 - **n-gram Jaccard**: exact pairwise similarity via an inverted index
   (explode token → equi-join on token → count-based Jaccard) inside a
   blocking key; never materializes the full cross product.
@@ -32,6 +33,8 @@ from pyspark.sql import functions as F
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
 from kaggle_ecommerce_etl_spark.util import ensure_min_partitions, qcol
 
+#: minhash signature width (mh0..mh7) and minhash values per LSH band
+#: (so 4 bands)
 N_MINHASH = 8
 BAND_SIZE = 2
 
@@ -105,26 +108,25 @@ def minhash_base_expr(col: Column) -> Column:
     )
 
 
-def minhash_signature_exprs(bases: Column, k: int = N_MINHASH) -> list[Column]:
-    """k minhash columns mh0..mh{k-1} over an ALREADY-MATERIALIZED
-    base-hash array column (see minhash_base_expr)."""
+def minhash_signature_exprs(bases: Column) -> list[Column]:
+    """:data:`N_MINHASH` minhash columns mh0..mh7 over an
+    ALREADY-MATERIALIZED base-hash array column (see
+    minhash_base_expr)."""
     return [
         F.array_min(F.transform(bases, _affine_fn(i))).alias(f"mh{i}")
-        for i in range(k)
+        for i in range(N_MINHASH)
     ]
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = N_MINHASH
-) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh7): the minhash signature of each document's
+    ``text``."""
     # |shingles| md5 calls per row: CPU-bound → guarantee parallelism
     df = ensure_min_partitions(df)
     based = df.select(
-        qcol(id_col), minhash_base_expr(qcol(text_col)).alias("__bases")
+        F.col("doc_id"), minhash_base_expr(F.col("text")).alias("__bases")
     )
-    return based.select(
-        qcol(id_col), *minhash_signature_exprs(F.col("__bases"), k)
-    )
+    return based.select(F.col("doc_id"), *minhash_signature_exprs(F.col("__bases")))
 
 
 def _banded_pairs(index: DataFrame) -> DataFrame:
@@ -164,21 +166,16 @@ def _banded_pairs(index: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    k: int = N_MINHASH,
-    band_size: int = BAND_SIZE,
-) -> DataFrame:
-    """Candidate pairs (id1 < id2) sharing at least one LSH band.
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
+    """Candidate pairs (id1 < id2) of :func:`minhash_signatures` rows
+    sharing at least one LSH band.
 
-    Each signature explodes to n_bands (band, key) rows — band keys
-    computed ONCE per row in one projection, the key the md5 of the
-    band's ``band_size`` minhash values — and the banded self-join
-    core :func:`_banded_pairs` (eager index checkpoint, one
+    Each signature explodes to N_MINHASH/BAND_SIZE (band, key) rows —
+    band keys computed ONCE per row in one projection, the key the md5
+    of the band's :data:`BAND_SIZE` minhash values — and the banded
+    self-join core :func:`_banded_pairs` (eager index checkpoint, one
     self-equi-join on (band, key), distinct) yields the pairs.
     """
-    n_bands = k // band_size
     band_structs = F.array(
         *[
             F.struct(
@@ -186,16 +183,16 @@ def lsh_candidate_pairs(
                 F.md5(
                     F.concat_ws(
                         ",",
-                        *[qcol(f"mh{b * band_size + j}") for j in range(band_size)],
+                        *[F.col(f"mh{b * BAND_SIZE + j}") for j in range(BAND_SIZE)],
                     ).cast("binary")
                 ).alias("key"),
             )
-            for b in range(n_bands)
+            for b in range(N_MINHASH // BAND_SIZE)
         ]
     )
     return _banded_pairs(
         signatures.select(
-            qcol(id_col).alias("__id"), F.explode(band_structs).alias("bk")
+            F.col("doc_id").alias("__id"), F.explode(band_structs).alias("bk")
         ).select(
             "__id", F.col("bk.band").alias("__band"), F.col("bk.key").alias("__key")
         )
@@ -210,41 +207,38 @@ def simhash_hashes_expr(col: Column) -> Column:
     return F.transform(F.array_distinct(tokens_ws(col)), lambda t: _h64(99, t))
 
 
-def simhash_from_hashes(hashes: Column, bits: int = 16) -> Column:
-    """SimHash packed long from an already-materialized hash array:
-    per bit position, majority vote of the hash bits (+1/-1)."""
+#: SimHash fingerprint width in bits
+SIMHASH_BITS = 16
+
+
+def simhash_from_hashes(hashes: Column) -> Column:
+    """:data:`SIMHASH_BITS`-bit SimHash packed long from an
+    already-materialized hash array (:func:`simhash_hashes_expr`): per
+    bit position, majority vote of the hash bits (+1/-1)."""
 
     def _vote_fn(b: int):
         # exactly-2-arg merge lambda (see _seeded_hash_fn note)
         return lambda acc, h: acc + F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1
 
     total = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         vote = F.aggregate(hashes, F.lit(0).cast("long"), _vote_fn(b))
         total = total + F.when(vote > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0))
     return total
 
 
-def simhash_expr(col: Column, bits: int = 16) -> Column:
-    """One-shot SimHash of a text column. Convenience/compat path: in
-    a hot projection prefer staging simhash_hashes_expr first and
-    applying simhash_from_hashes to the materialized column."""
-    return simhash_from_hashes(simhash_hashes_expr(col), bits)
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     block_col: str | None = None,
     threshold: float = 0.5,
     use_shingles: bool = True,
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram (or word-set) Jaccard for all pairs (id1 < id2),
-    via inverted index: explode distinct tokens, equi-join on token
-    (+ optional blocking key), count intersections, derive |union| from
-    per-doc set sizes. Output: id1, id2, jaccard (round 4) ≥ threshold.
+    of ``doc_id``s over their ``text``, via inverted index: explode
+    distinct tokens, equi-join on token (+ optional blocking key),
+    count intersections, derive |union| from per-doc set sizes.
+    Output: id1, id2, jaccard (round 4) ≥ threshold.
 
     ``max_df`` — the scale guard. Inverted-index join work is
     Σ df(token)², so ONE stopword-frequency token ('the' in nearly
@@ -271,15 +265,15 @@ def ngram_jaccard_pairs(
     0.96 + 0.39 s at sf0.01, 0.64 + 1.38 s vs 1.80 + 2.24 s at sf0.1.
     """
     tok_expr = (
-        shingles_expr(qcol(text_col))
+        shingles_expr(F.col("text"))
         if use_shingles
-        else F.array_distinct(tokens_ws(qcol(text_col)))
+        else F.array_distinct(tokens_ws(F.col("text")))
     )
     # tokenization is CPU-bound; single-file parquet arrives as one
     # partition → force parallelism before the explode
     df = ensure_min_partitions(df)
     base = df.select(
-        qcol(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         *( [qcol(block_col).alias("__blk")] if block_col else [] ),
         tok_expr.alias("__toks"),
     ).withColumn("__size", F.size("__toks"))
@@ -351,16 +345,14 @@ def ngram_jaccard_pairs(
 #: sets never reach the driver.
 _DRIVER_CC_MAX_EDGES = 2_000_000
 
+#: Round cap of the distributed CC loop. With pointer doubling, 20
+#: rounds cover component diameters up to ~2^19; exhausting it raises.
+_CC_MAX_ITER = 20
 
-def dup_clusters(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 20,
-    driver_fastpath_max_edges: int | None = None,
-) -> DataFrame:
-    """Connected components over a near-duplicate pair set → cluster
-    label per member (min id in the component), the step that turns
+
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """Connected components over a near-duplicate (id1, id2) pair set →
+    cluster label per member (min id in the component), the step that turns
     pairwise dedup output into "keep one canonical doc per group".
 
     Iterative min-label propagation WITH pointer doubling
@@ -393,8 +385,7 @@ def dup_clusters(
     parallelism), restored on exit.
 
     SMALL-GRAPH FAST PATH (r10): when the materialized edge count is
-    ≤ ``driver_fastpath_max_edges`` (default
-    :data:`_DRIVER_CC_MAX_EDGES`), the checkpointed edge list is
+    ≤ :data:`_DRIVER_CC_MAX_EDGES`, the checkpointed edge list is
     collected and solved with an exact min-root union-find on the
     driver, and the labels return as a local relation. Rationale: the
     distributed loop's cost floor is (rounds × per-round scheduling),
@@ -407,8 +398,8 @@ def dup_clusters(
     tests/test_dedup_ml.py::test_dup_clusters_fastpath_matches_loop),
     and edge sets past the cap take the unchanged distributed loop —
     the same engine-routes-by-measured-size discipline as
-    similarity.semantic_pairs_auto. Pass ``driver_fastpath_max_edges=0``
-    to force the distributed loop (the convergence-contract tests do).
+    similarity.semantic_pairs_auto. The convergence-contract tests set
+    the cap to 0 to force the distributed loop.
 
     Both paths materialize the HALF edge set (one direction) first and
     derive the reversed direction from the checkpoint: the previous
@@ -417,12 +408,10 @@ def dup_clusters(
     """
     spark = pairs.sparkSession
     half = pairs.select(
-        F.col(id1).alias("src"), F.col(id2).alias("dst")
+        F.col("id1").alias("src"), F.col("id2").alias("dst")
     ).localCheckpoint(eager=True)
     n_half = half.count()  # cheap: scans the checkpoint just built
-    if driver_fastpath_max_edges is None:
-        driver_fastpath_max_edges = _DRIVER_CC_MAX_EDGES
-    if n_half <= driver_fastpath_max_edges:
+    if n_half <= _DRIVER_CC_MAX_EDGES:
         local = _dup_clusters_driver(spark, half)
         if local is not None:
             return local
@@ -448,7 +437,7 @@ def dup_clusters(
             .withColumn("cluster", F.col("id"))
             .localCheckpoint(eager=False)
         )
-        return _dup_clusters_loop(edges, labels, max_iter)
+        return _dup_clusters_loop(edges, labels)
     finally:
         spark.conf.set(conf_key, str(session_parts))
 
@@ -547,12 +536,10 @@ _CC_DOUBLING_HOPS = 1
 #: BigInt size estimates under ~10k bits at any round count.
 _CC_STATS_RESET_EVERY = 4
 
-def _dup_clusters_loop(
-    edges: DataFrame, labels: DataFrame, max_iter: int
-) -> DataFrame:
+def _dup_clusters_loop(edges: DataFrame, labels: DataFrame) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    for _round in range(max_iter):
+    for _round in range(_CC_MAX_ITER):
         nbr_min = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy(F.col("src").alias("nid"))
@@ -615,14 +602,13 @@ def _dup_clusters_loop(
         labels = doubled.drop("__changed")
         if changed == 0:
             return labels
-    # Exhausting max_iter without a fixpoint means the labels are NOT
-    # components yet — returning them silently would hand callers a
-    # wrong dedup decision. With pointer doubling, max_iter=20 covers
-    # component diameters up to ~2^19, so this firing means the input
-    # graph is nothing like near-dup data (or max_iter was lowered).
+    # Exhausting the round cap without a fixpoint means the labels are
+    # NOT components yet — returning them silently would hand callers a
+    # wrong dedup decision. This firing means the input graph is
+    # nothing like near-dup data.
     raise ValueError(
-        f"dup_clusters did not converge within max_iter={max_iter} "
-        "rounds; raise max_iter for graphs with extreme diameter"
+        f"dup_clusters did not converge within {_CC_MAX_ITER} rounds; "
+        "raise _CC_MAX_ITER for graphs with extreme diameter"
     )
 
 
@@ -636,17 +622,16 @@ def _dup_clusters_loop(
 _ROUND4_MARGIN = 5e-5
 
 
-def _word_sets(
-    df: DataFrame, text_col: str, id_col: str, block_col: str | None = None
-) -> DataFrame:
-    """(__id, [__blk], __toks, __size): each document's distinct
-    whitespace-word set and its size — one side of :func:`_prefix_join`."""
+def _word_sets(df: DataFrame, block_col: str | None = None) -> DataFrame:
+    """(__id, [__blk], __toks, __size): each ``doc_id``'s distinct
+    whitespace-word set of its ``text`` and its size — one side of
+    :func:`_prefix_join`."""
     # tokenization is CPU-bound; single-file parquet arrives as one
     # partition → force parallelism before the explode
     return ensure_min_partitions(df).select(
-        qcol(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         *([qcol(block_col).alias("__blk")] if block_col else []),
-        F.array_distinct(tokens_ws(qcol(text_col))).alias("__toks"),
+        F.array_distinct(tokens_ws(F.col("text"))).alias("__toks"),
     ).withColumn("__size", F.size("__toks"))
 
 
@@ -788,28 +773,18 @@ def _prefix_join(
 
 
 def jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_col: str | None = None,
-    threshold: float = 0.5,
+    df: DataFrame, block_col: str | None = None, threshold: float = 0.5
 ) -> DataFrame:
     """(id1, id2, jaccard) for every pair id1 < id2 (within
     ``block_col``, if given) with word-set Jaccard ≥ threshold (rounded
     to 4dp) — EXACT, the no-recall-loss alternative to
     ``ngram_jaccard_pairs``' ``max_df`` guard. Prefix-filtered self-join
     on :func:`_prefix_join`, which runs Spark jobs at construction."""
-    return _prefix_join(
-        [_word_sets(df, text_col, id_col, block_col)], ("id1", "id2"), threshold
-    )
+    return _prefix_join([_word_sets(df, block_col)], ("id1", "id2"), threshold)
 
 
 def jaccard_cross_prefix(
-    batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
+    batch: DataFrame, corpus: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """(in_id, ex_id, jaccard) for every batch×corpus pair with word
     Jaccard ≥ threshold (rounded to 4dp) — EXACT, the two-sided
@@ -818,7 +793,7 @@ def jaccard_cross_prefix(
     at t ≥ 0.8 (the measured regime note is on the core); at 100 TB
     the batch side is small, so its prefix postings broadcast."""
     return _prefix_join(
-        [_word_sets(batch, text_col, id_col), _word_sets(corpus, text_col, id_col)],
+        [_word_sets(batch), _word_sets(corpus)],
         ("in_id", "ex_id"),
         threshold,
     )

@@ -184,23 +184,17 @@ def cosine_udf():
     return _cos
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors per query.
 
     Output: query_id, neighbor_id, sim (round 6), rank. Self-matches
     (same id) are excluded. Ties broken by neighbor_id for determinism.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -216,18 +210,17 @@ def cosine_topk(
 QUERY_CHUNK_ROWS = 4096
 
 
-def _query_chunks(
-    queries: DataFrame, id_col: str, vec_col: str, chunk_rows: int
-):
-    """Stream the query side to the driver in bounded chunks.
+def _query_chunks(queries: DataFrame):
+    """Stream the query side to the driver in chunks of
+    :data:`QUERY_CHUNK_ROWS`.
 
     ``toLocalIterator`` materializes ONE partition at a time, so the
     PYTHON-side working set is O(chunk). NOTE: each chunk is then
     ``sc.broadcast``-ed and every broadcast stays referenced by the
     lazily-returned plan until it executes, so the driver BLOCK-MANAGER
     footprint across chunks is O(|queries|) — the query side is
-    contractually small. A huge query side means |Q|/chunk_rows corpus
-    scans AND O(|Q|) broadcast bytes: use :func:`lsh_bucket_topk` or
+    contractually small. A huge query side means |Q|/QUERY_CHUNK_ROWS
+    corpus scans AND O(|Q|) broadcast bytes: use :func:`lsh_bucket_topk` or
     :func:`cosine_self_topk_blocked` there (a warning fires past
     ``_CHUNK_WARN_LIMIT`` chunks). Yields (ids, raw vec lists)."""
     import warnings
@@ -235,18 +228,18 @@ def _query_chunks(
     n_chunks = 0
     ids: list = []
     vecs: list = []
-    for row in queries.select(id_col, vec_col).toLocalIterator(
+    for row in queries.select("vec_id", "embedding").toLocalIterator(
         prefetchPartitions=True
     ):
         ids.append(row[0])
         vecs.append(row[1])
-        if len(ids) >= chunk_rows:
+        if len(ids) >= QUERY_CHUNK_ROWS:
             n_chunks += 1
             if n_chunks == _CHUNK_WARN_LIMIT:
                 warnings.warn(
                     f"query side exceeds {_CHUNK_WARN_LIMIT} chunks of "
-                    f"{chunk_rows} rows; this path broadcasts O(|Q|) bytes "
-                    "and rescans the corpus per chunk — route through "
+                    f"{QUERY_CHUNK_ROWS} rows; this path broadcasts O(|Q|) "
+                    "bytes and rescans the corpus per chunk — route through "
                     "lsh_bucket_topk or cosine_self_topk_blocked instead",
                     stacklevel=3,
                 )
@@ -266,15 +259,12 @@ def _chunked_blocks(
     corpus: DataFrame,
     kernel,
     schema: str,
-    id_col: str,
-    vec_col: str,
-    chunk_rows: int,
 ) -> DataFrame:
     """The small-query-side scan of :func:`cosine_topk_matmul` and
     :func:`cosine_pairs_above`: stream ``queries`` to the driver in
     bounded chunks (:func:`_query_chunks`), broadcast each chunk as
     (int64 ids, raw float64 matrix), scan ``corpus`` (already projected
-    to ``id_col, vec_col``) once per chunk with ``mapInPandas`` —
+    to ``vec_id, embedding``) once per chunk with ``mapInPandas`` —
     every Arrow batch is one ``kernel(qids, qmat, cids, cmat)`` call
     returning rows of ``schema`` — and union the passes. ``kernel``
     comes from a factory (:func:`_make_block_topk`,
@@ -283,7 +273,7 @@ def _chunked_blocks(
     spark = corpus.sparkSession
     sc = spark.sparkContext
     partials: list[DataFrame] = []
-    for ids, vecs in _query_chunks(queries, id_col, vec_col, chunk_rows):
+    for ids, vecs in _query_chunks(queries):
         bc = sc.broadcast(
             (np.asarray(ids, dtype=np.int64), np.asarray(vecs, dtype=np.float64))
         )
@@ -293,8 +283,8 @@ def _chunked_blocks(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                cmat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                cids = pdf[id_col].to_numpy(dtype=np.int64)
+                cmat = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
+                cids = pdf["vec_id"].to_numpy(dtype=np.int64)
                 yield kernel(qids, qmat, cids, cmat)
 
         partials.append(corpus.mapInPandas(_blocks, schema))
@@ -308,12 +298,7 @@ def _chunked_blocks(
 
 
 def cosine_topk_matmul(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    chunk_rows: int = QUERY_CHUNK_ROWS,
+    queries: DataFrame, corpus: DataFrame, k: int = 5
 ) -> DataFrame:
     """Exact top-k via blocked matmul, corpus fully distributed.
 
@@ -329,12 +314,12 @@ def cosine_topk_matmul(
 
     Contract: the QUERY side fits on the driver in chunks (its chunks
     are re-broadcast per corpus pass, so a huge query side means
-    |Q|/chunk_rows corpus scans — use :func:`lsh_bucket_topk` there).
-    Output/determinism identical to :func:`cosine_topk`: sim rounded
-    to 6 BEFORE ranking, ties by neighbor_id, self-matches excluded.
-    ``id_col`` must be integral on both sides — ids are coerced to
-    int64 and the output schema pins long ids (string/UUID ids would
-    need a surrogate-key projection first).
+    |Q|/QUERY_CHUNK_ROWS corpus scans — use :func:`lsh_bucket_topk`
+    there). Output/determinism identical to :func:`cosine_topk`: sim
+    rounded to 6 BEFORE ranking, ties by neighbor_id, self-matches
+    excluded. ``vec_id`` must be integral on both sides — ids are
+    coerced to int64 and the output schema pins long ids (string/UUID
+    ids would need a surrogate-key projection first).
 
     Construction-time side effect: building the returned DataFrame
     already drains the whole query side to the driver through
@@ -343,12 +328,9 @@ def cosine_topk_matmul(
     """
     partial = _chunked_blocks(
         queries,
-        corpus.select(id_col, vec_col),
+        corpus.select("vec_id", "embedding"),
         _make_block_topk(k),
         "query_id long, neighbor_id long, sim double",
-        id_col,
-        vec_col,
-        chunk_rows,
     )
     return _rank_topk(partial, k)
 
@@ -360,19 +342,13 @@ def release_corpus_caches() -> None:
     ``perfbench/workloads.py`` still calls it."""
 
 
-def cosine_pairs_above(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    chunk_rows: int = QUERY_CHUNK_ROWS,
-) -> DataFrame:
+def cosine_pairs_above(df: DataFrame, threshold: float) -> DataFrame:
     """EXACT all-pairs (id1 < id2) with cosine ≥ threshold — blocked
     matmul, no cross join in the plan.
 
     The 2-column corpus projection is held in a lazy
     ``localCheckpoint``: the chunk loop re-scans the corpus
-    |Q|/chunk_rows times, and each re-scan paying a fresh parquet
+    |Q|/QUERY_CHUNK_ROWS times, and each re-scan paying a fresh parquet
     decode was the dominant variance source in the 30× semantic-dedup
     band (r6; parquet decode pressure is scheduling/GC-sensitive, a
     scan of stored blocks is not). The query-side drain (the
@@ -399,7 +375,7 @@ def cosine_pairs_above(
     decimal); the O(n²/block) work runs vectorized inside numpy
     instead of materializing pair rows. For corpora where even blocked
     n² is too much, the recall-trading path is
-    :func:`lsh_neardup_pairs` / minhash banding. ``id_col`` must be
+    :func:`lsh_neardup_pairs` / minhash banding. ``vec_id`` must be
     integral (int64-coerced, long output schema).
 
     Construction-time side effect: building the returned DataFrame
@@ -407,34 +383,24 @@ def cosine_pairs_above(
     ``toLocalIterator`` in :func:`_chunked_blocks` — one Spark job per
     partition, run before any action.
     """
-    side = df.select(id_col, vec_col).localCheckpoint(eager=False)
+    side = df.select("vec_id", "embedding").localCheckpoint(eager=False)
     return _chunked_blocks(
-        side,
-        side,
-        _make_block_pairs(threshold),
-        "id1 long, id2 long, sim double",
-        id_col,
-        vec_col,
-        chunk_rows,
+        side, side, _make_block_pairs(threshold), "id1 long, id2 long, sim double"
     )
 
 
-def _estimated_rows(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
+def _estimated_rows(df: DataFrame, dim: int) -> int:
     """Row-count estimate WITHOUT a full scan: Catalyst's sizeInBytes
-    statistic divided by an estimated row width (vector dim from a
-    bounded 1-row probe unless ``dim`` is given). Sizes the blocked
-    grid of :func:`cosine_self_topk_blocked` and the LSH/route choice.
+    statistic divided by the row width of a ``dim``-vector. Sizes the
+    blocked grid of :func:`cosine_self_topk_blocked` and the route
+    choice of :func:`semantic_pairs_auto`.
 
     Stat-less sources (JDBC, RDD-backed frames) report the
     defaultSizeInBytes sentinel (~Long.MaxValue): the derived "row
     count" would put every row in its own singleton block and the
     block cross join would degenerate to the exact n² that blocking
     exists to prevent. The absurd estimate falls back to ONE real
-    count — a full pass, but a correct grid (callers with known
-    cardinality pass n_rows instead)."""
-    if dim is None:
-        probe = df.select(vec_col).head(1)
-        dim = len(probe[0][0]) if probe and probe[0][0] is not None else 0
+    count — a full pass, but a correct grid."""
     size_bytes = int(
         str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     )
@@ -445,15 +411,12 @@ def _estimated_rows(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
     return n_rows
 
 
-def cosine_self_topk_blocked(
-    df: DataFrame,
-    k: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_rows: int = 4096,
-    n_rows: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
+#: rows per packed block of :func:`cosine_self_topk_blocked` — one
+#: block payload is BLOCK_ROWS × dim × 8 B
+BLOCK_ROWS = 4096
+
+
+def cosine_self_topk_blocked(df: DataFrame, k: int = 1) -> DataFrame:
     """Exact top-k cosine neighbors WITHIN one table (every row is both
     query and candidate), both sides fully distributed — the all-pairs
     sibling of :func:`cosine_topk_matmul` with ZERO driver
@@ -461,12 +424,12 @@ def cosine_self_topk_blocked(
 
     Physical shape (the 100 TB path for nearest-neighbor-per-row):
 
-    1. rows hash into B = ⌈n/block_rows⌉ coarse blocks; each block is
+    1. rows hash into B = ⌈n/BLOCK_ROWS⌉ coarse blocks; each block is
        packed into ONE (ids, matrix) row (one shuffle, block payload
-       ≈ block_rows × dim × 8 B);
+       ≈ BLOCK_ROWS × dim × 8 B);
     2. the B×B block-pair cross join gives each task exactly two block
        payloads; the |C|² pair space exists only inside that task's
-       numpy matmul, which emits ≤ block_rows·k candidate rows;
+       numpy matmul, which emits ≤ BLOCK_ROWS·k candidate rows;
     3. a window re-rank merges partial top-ks per query.
 
     Network cost is B·|C| vector bytes (every block meets every other
@@ -476,7 +439,7 @@ def cosine_self_topk_blocked(
 
     Output/determinism identical to :func:`cosine_topk`: sim HALF_UP-
     rounded to 6 BEFORE ranking, ties by neighbor_id, self excluded.
-    ``id_col`` must be integral (output schema pins long ids).
+    ``vec_id`` must be integral (output schema pins long ids).
 
     The block grid is sized WITHOUT a full-scan action (at 100 TB a
     plan-construction ``count()`` is a whole extra pass): row count is
@@ -485,16 +448,15 @@ def cosine_self_topk_blocked(
     same class of driver action as the sanctioned 1-row header fetch).
     Grid granularity only shapes task sizing, never results: the
     algorithm is exact under ANY blocking, so a 2-4× row-estimate error
-    just moves block payloads within the same order of magnitude. Pass
-    ``n_rows`` (and ``dim``) to skip estimation entirely.
+    just moves block payloads within the same order of magnitude.
     """
-    if n_rows is None:
-        n_rows = _estimated_rows(df, vec_col, dim)
-    n_blocks = max(1, math.ceil(n_rows / block_rows))
+    probe = df.select("embedding").head(1)
+    dim = len(probe[0][0]) if probe and probe[0][0] is not None else 0
+    n_blocks = max(1, math.ceil(_estimated_rows(df, dim) / BLOCK_ROWS))
     src = df.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("__blk"),
-        F.col(id_col).alias("__id"),
-        _as_double(F.col(vec_col)).alias("__vec"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).alias("__blk"),
+        F.col("vec_id").alias("__id"),
+        _as_double(F.col("embedding")).alias("__vec"),
     )
     # collect_list order is nondeterministic — harmless: scoring is
     # per-element and the output is (query, neighbor, sim) rows
@@ -527,13 +489,26 @@ def cosine_self_topk_blocked(
     return _rank_topk(partial, k)
 
 
-def lsh_auto_params(
-    n_rows: int,
-    threshold: float,
-    target_bucket_rows: int = 256,
-    recall_target: float = 0.9,
-    max_tables: int = 64,
-) -> tuple[int, int]:
+#: Embedding width the hyperplane planes are drawn for, and the row
+#: width the route estimate assumes (no probe needed): the corpus's
+#: 64-d vectors.
+EMBED_DIM = 64
+
+#: Seed of the hyperplane planes (table t draws from SEED + 1000·t)
+#: and of the k-means initial centroids. The DuckDB oracles re-derive
+#: the planes from the same value.
+SEED = 42
+
+#: :func:`lsh_auto_params` sizing: expected rows per bucket, the recall
+#: the table count must reach at the threshold, and the table cap past
+#: which the router treats LSH as the low-θ wall (or a logged recall
+#: trade — see :data:`LSH_CAPPED_RECALL_FLOOR`).
+LSH_TARGET_BUCKET_ROWS = 256
+LSH_RECALL_TARGET = 0.9
+LSH_MAX_TABLES = 64
+
+
+def lsh_auto_params(n_rows: int, threshold: float) -> tuple[int, int]:
     """(n_planes, n_tables) sized for the corpus and the threshold.
 
     The fixed-b failure mode this exists to prevent (measured, r5 —
@@ -543,28 +518,28 @@ def lsh_auto_params(
     path measures slower than the exact blocked matmul (608 s vs
     ~19 s at n=20k). Sizing rule:
 
-    - b = max(3, ⌈log₂(n / target_bucket_rows)⌉): expected bucket
-      occupancy stays ~target_bucket_rows at every corpus size, so
+    - b = max(3, ⌈log₂(n / LSH_TARGET_BUCKET_ROWS)⌉): expected bucket
+      occupancy stays ~LSH_TARGET_BUCKET_ROWS at every corpus size, so
       per-table candidate volume is ~n·target/2, linear in n.
     - T = ⌈ln(1/(1−recall)) / p₁ᵇ⌉ with p₁ = 1−arccos(θ)/π keeps
-      1−(1−p₁ᵇ)ᵀ ≥ recall_target.
+      1−(1−p₁ᵇ)ᵀ ≥ LSH_RECALL_TARGET.
 
     T explodes when θ is low — sign-LSH's exponent ρ = ln p₁/ln ½
     approaches 1 as θ→0 and no (b, T) beats blocked-exact. Hitting
-    ``max_tables`` logs that routing warning (→
+    ``LSH_MAX_TABLES`` logs that routing warning (→
     :func:`cosine_pairs_above`) and caps T, trading recall for
     boundedness. At θ ≥ 0.85 (the real near-dup regime) p₁ ≥ 0.86
     and T stays single-digit through b ≈ 12 (n ≈ 10⁶·target)."""
     import logging
 
     b = 3
-    if n_rows > target_bucket_rows:
-        b = max(3, min(24, math.ceil(math.log2(n_rows / target_bucket_rows))))
+    if n_rows > LSH_TARGET_BUCKET_ROWS:
+        b = max(3, min(24, math.ceil(math.log2(n_rows / LSH_TARGET_BUCKET_ROWS))))
     p1 = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    need = math.log(1.0 / (1.0 - recall_target))
+    need = math.log(1.0 / (1.0 - LSH_RECALL_TARGET))
     t = max(1, math.ceil(need / max(p1**b, 1e-300)))
-    if t > max_tables:
-        achieved = 1.0 - (1.0 - p1**b) ** max_tables
+    if t > LSH_MAX_TABLES:
+        achieved = 1.0 - (1.0 - p1**b) ** LSH_MAX_TABLES
         logging.getLogger("spark_graft").warning(
             "lsh_auto_params: recall %.2f at threshold %.2f needs %d "
             "tables at b=%d (capped to %d, achieved recall %.3f) — the "
@@ -572,22 +547,14 @@ def lsh_auto_params(
             "only when the capped recall collapses; a high-θ/huge-n cap "
             "with tolerable recall routes LSH best-effort instead of an "
             "infeasible n²/2 scan.",
-            recall_target, threshold, t, b, max_tables, achieved,
+            LSH_RECALL_TARGET, threshold, t, b, LSH_MAX_TABLES, achieved,
         )
-        t = max_tables
+        t = LSH_MAX_TABLES
     return b, t
 
 
 def lsh_neardup_pairs(
-    df: DataFrame,
-    threshold: float,
-    n_planes: int | str = 3,
-    n_tables: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_rows: int | None = None,
+    df: DataFrame, threshold: float, n_planes: int = 3, n_tables: int = 16
 ) -> DataFrame:
     """Near-duplicate pairs (id1 < id2, cosine ≥ threshold) with an LSH
     prefilter — the recall-trading scale sibling of
@@ -606,19 +573,15 @@ def lsh_neardup_pairs(
     ≥0.98 on the test corpus (see tests/test_queries_ext.py).
 
     The FIXED default (b=3, T=16) is only sane at small corpora and is
-    kept for the oracle-checked registry contract; at scale pass
-    ``n_planes="auto"`` to size (b, T) from the corpus cardinality and
-    the threshold via :func:`lsh_auto_params` — and read its docstring
-    for when LSH is the wrong route entirely (low θ → blocked exact).
+    kept for the oracle-checked registry contract. At scale call
+    :func:`semantic_pairs_auto`, which sizes (b, T) from the corpus
+    cardinality and the threshold via :func:`lsh_auto_params` and
+    routes low θ to blocked exact, where LSH is the wrong route.
     """
-    if n_planes == "auto":
-        if n_rows is None:
-            n_rows = _estimated_rows(df, vec_col, dim)
-        n_planes, n_tables = lsh_auto_params(n_rows, threshold)
-    tables = hyperplane_tables(dim, n_planes, n_tables, seed)
-    cand = _banded_pairs(_bucket_index(df, tables, id_col, vec_col))
-    v1 = df.select(F.col(id_col).alias("id1"), F.col(vec_col).alias("__v1"))
-    v2 = df.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("__v2"))
+    tables = hyperplane_tables(EMBED_DIM, n_planes, n_tables, SEED)
+    cand = _banded_pairs(_bucket_index(df, tables))
+    v1 = df.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("__v1"))
+    v2 = df.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("__v2"))
     # asNondeterministic: the threshold filter otherwise pushes below
     # the projection and the cosine UDF evaluates TWICE per candidate
     # (guide §4.4 — two ArrowEvalPython nodes in the r10 plan capture).
@@ -650,7 +613,7 @@ def lsh_neardup_pairs(
 #: both measurements and errs toward exact near the boundary, where a
 #: wrong exact pick costs a small constant factor but a wrong LSH pick
 #: measured 12-32×. At θ=0.85 the flip lands between n=500k and n=1M
-#: (the router's candidate estimate grows n·T·target_bucket_rows/2
+#: (the router's candidate estimate grows n·T·LSH_TARGET_BUCKET_ROWS/2
 #: ≈ n·T·128, exact n²/2) — where the unit costs above say the true
 #: crossover is.
 LSH_ROUTE_MARGIN = 128.0
@@ -675,10 +638,10 @@ LSH_ROUTE_MARGIN = 128.0
 #: grid.
 LSH_ROUTE_DRIFT_GUARD = 4.0
 
-#: When the T-cap fires, the fraction of ``recall_target`` that capped-T
-#: LSH must still achieve for the router to treat the cap as a recall
-#:  TRADE rather than the low-θ wall. Two capped regimes exist and they
-#: demand opposite routes:
+#: When the T-cap fires, the fraction of :data:`LSH_RECALL_TARGET`
+#: that capped-T LSH must still achieve for the router to treat the cap
+#: as a recall TRADE rather than the low-θ wall. Two capped regimes
+#: exist and they demand opposite routes:
 #:
 #: - **Low-θ wall** (the r5 lesson): sign-LSH's exponent ρ→1 as θ→0, so
 #:   at θ=0.4, n=10M the capped 64 tables achieve ~4% recall — LSH is a
@@ -696,183 +659,121 @@ LSH_ROUTE_DRIFT_GUARD = 4.0
 LSH_CAPPED_RECALL_FLOOR = 0.75
 
 
-def _route_inputs(
-    n_rows: int,
-    threshold: float,
-    target_bucket_rows: int,
-    recall_target: float,
-    max_tables: int,
-) -> tuple[int, int, bool, float, float, float]:
-    """(b, t, capped, capped_recall, exact_pairs, lsh_candidates) for
-    one candidate corpus size — the pure decision arithmetic of
-    :func:`semantic_pairs_auto`, factored out so the drift guard can
-    re-run it with a true ``count()`` without duplicating the formula
-    the crossover test pins. ``capped_recall`` is the recall the capped
-    table count actually achieves (1 when uncapped — the sizing met the
-    target by construction)."""
-    b, t = lsh_auto_params(
-        n_rows,
-        threshold,
-        target_bucket_rows=target_bucket_rows,
-        recall_target=recall_target,
-        max_tables=max_tables,
-    )
+def _route(n_rows: int, threshold: float) -> tuple[str, int, int, bool]:
+    """(route, b, t, near_flip) for a corpus of ``n_rows`` vectors at
+    ``threshold`` — the whole decision of :func:`semantic_pairs_auto`
+    as a pure function of (n, θ), so the crossover grid and the drift
+    guard band are pinned without building a frame.
+
+    ``route`` is "exact" or "lsh"; (b, t) are the
+    :func:`lsh_auto_params` sizing the LSH route runs with; ``near_flip``
+    says the decision lies within :data:`LSH_ROUTE_DRIFT_GUARD` of the
+    boundary, where an estimated n must be resolved by a count.
+
+    - **Wall**: when the recall target needs more than
+      :data:`LSH_MAX_TABLES` tables AND the capped-T recall collapses
+      below :data:`LSH_CAPPED_RECALL_FLOOR` × target (low θ: the LSH
+      exponent ρ→1 as θ→0), LSH cannot be both selective and
+      high-recall — exact. A cap whose capped-T recall still clears the
+      floor (high θ, huge n) is a recall trade, not a wall: exact there
+      is an infeasible n²/2 scan, so the margin rule decides with the
+      capped T (the trade is logged by :func:`lsh_auto_params`).
+    - **Margin**: LSH's candidate volume ≈ T·n·LSH_TARGET_BUCKET_ROWS/2
+      (each table's buckets hold ~target rows). LSH only when that
+      volume times :data:`LSH_ROUTE_MARGIN` is still below exact's
+      n(n−1)/2 — the prefilter must pay for its explode + shuffle join
+      + per-candidate verify.
+    - **Guard band**: exact_pairs ∝ n², the LSH volume ∝ n·T (T near
+      constant in n), so the decision ratio moves ~linearly with an n
+      drift — a ±4× n guard is the ratio band [1/4, 4]."""
+    b, t = lsh_auto_params(n_rows, threshold)
     p1 = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    need = math.log(1.0 / (1.0 - recall_target))
-    capped = math.ceil(need / max(p1**b, 1e-300)) > max_tables
+    need = math.log(1.0 / (1.0 - LSH_RECALL_TARGET))
+    capped = math.ceil(need / max(p1**b, 1e-300)) > LSH_MAX_TABLES
     capped_recall = 1.0 - (1.0 - p1**b) ** t if capped else 1.0
+    wall = capped_recall < LSH_CAPPED_RECALL_FLOOR * LSH_RECALL_TARGET
     exact_pairs = n_rows * (n_rows - 1) / 2.0
-    lsh_candidates = t * n_rows * target_bucket_rows / 2.0
-    return b, t, capped, capped_recall, exact_pairs, lsh_candidates
+    margin_cost = t * n_rows * LSH_TARGET_BUCKET_ROWS / 2.0 * LSH_ROUTE_MARGIN
+    route = "exact" if wall or margin_cost >= exact_pairs else "lsh"
+    near_flip = (
+        exact_pairs / LSH_ROUTE_DRIFT_GUARD
+        <= margin_cost
+        <= exact_pairs * LSH_ROUTE_DRIFT_GUARD
+    )
+    return route, b, t, near_flip
 
 
-def semantic_pairs_auto(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    recall_target: float = 0.9,
-    target_bucket_rows: int = 256,
-    max_tables: int = 64,
-    n_rows: int | None = None,
-) -> DataFrame:
+def semantic_pairs_auto(df: DataFrame, threshold: float) -> DataFrame:
     """Cosine near-dup pairs (id1 < id2, sim ≥ threshold) with the
     scale regime chosen by the ENGINE, not the user — the auto-routing
     front end over :func:`cosine_pairs_above` (exact, O(n²) blocked
     matmul) and :func:`lsh_neardup_pairs` (recall-trading prefilter).
 
-    Routing rule (the same Catalyst sizeInBytes row estimate as the
-    blocked-matmul grid; no full scan EXCEPT within
+    The decision is :func:`_route` on the Catalyst sizeInBytes row
+    estimate (rows of :data:`EMBED_DIM` doubles; no full scan). Within
     :data:`LSH_ROUTE_DRIFT_GUARD` of the flip boundary, where the
-    measured ~2.1× estimate drift could cross the line and one exact
-    ``count()`` — noise against either route at flip-scale n —
-    re-decides with the true n):
-
-    1. Size (b, T) for the corpus via :func:`lsh_auto_params`'
-       occupancy model. If the recall target needs T > max_tables AND
-       the capped-T recall collapses below
-       :data:`LSH_CAPPED_RECALL_FLOOR`×target (low-θ wall: the LSH
-       exponent ρ→1 as θ→0), LSH cannot be both selective and
-       high-recall — route EXACT. A cap whose capped-T recall still
-       clears the floor (high-θ, huge-n: first at θ=0.85 near n≈34M,
-       recall ~0.86) is a recall TRADE, not a wall — exact there is an
-       infeasible n²/2 scan, so fall through to the margin rule with
-       the capped T.
-    2. Estimated LSH candidate volume ≈ T·n·target_bucket_rows/2
-       (each table's buckets hold ~target rows → ~n·target/2
-       candidate pairs per table). Route LSH only when that volume
-       times :data:`LSH_ROUTE_MARGIN` is still below exact's
-       n(n−1)/2 — i.e. the prefilter is selective enough to pay for
-       its explode + shuffle join + per-candidate verify.
+    measured ~2.1× estimate drift (ROUTE_PROBE_r08) could cross the
+    line, one exact ``count()`` — noise against either route at
+    flip-scale n — re-decides with the true n.
 
     Crossover (measured — SCALING.md routing table): at θ=0.4 exact
     wins at every n — below n≈33k the margin rule rejects LSH (T≈58
     tables → more candidates than n²/2), above it the T-cap fires —
     matching the r5 measurement (LSH 608 s vs exact 19 s at n=20k);
     at θ=0.85 the margin rule holds exact through n=500k and flips to
-    LSH by n=1M, where candidate volume (n·T·target_bucket_rows/2 ≈
-    n·T·128, ~22 µs/candidate measured) finally undercuts the n²/2
+    LSH by n=1M, where candidate volume (n·T·LSH_TARGET_BUCKET_ROWS/2
+    ≈ n·T·128, ~22 µs/candidate measured) finally undercuts the n²/2
     matmul (~208 ns/pair measured) — the r7 head-to-head at n=20k,
     θ=0.85 (LSH 16.2 s vs
     exact 1.3 s) is what recalibrated :data:`LSH_ROUTE_MARGIN` from 4
     to 128. The chosen route is attached as ``_graft_route``
-    ("exact" | "lsh") for tests and audits; output schema is identical
-    either way.
+    ("exact" | "lsh") for tests and audits, with the n it was decided
+    on (``_graft_route_n``) and whether the guard paid the count
+    (``_graft_drift_count``); output schema is identical either way.
     """
-    estimated = n_rows is None
-    if estimated:
-        n_rows = _estimated_rows(df, vec_col, dim)
-    b, t, capped, capped_recall, exact_pairs, lsh_candidates = (
-        _route_inputs(
-            n_rows, threshold, target_bucket_rows, recall_target,
-            max_tables,
-        )
-    )
-    # Drift guard (ROUTE_PROBE_r08): the sizeInBytes estimate reads
-    # ~2.1× under true n on this layout. When the estimated decision
-    # lands within LSH_ROUTE_DRIFT_GUARD (4×) of the flip boundary —
-    # on either side — resolve it with one exact count() and re-decide.
-    # Only fires for estimated n (an explicit n_rows is the caller's
-    # contract, e.g. the crossover-grid test) and never below the
-    # guard's floor n, where exact is sub-second anyway and the flip
-    # is unreachable.
-    # exact_pairs ∝ n², lsh_candidates ∝ n·T (T near-constant in n), so
-    # the decision ratio exact_pairs/margin_cost shifts ~linearly with
-    # an n drift — a ±4× n guard is a ratio band of [1/4, 4].
-    margin_cost = lsh_candidates * LSH_ROUTE_MARGIN
-    drift_count_fired = (
-        estimated
-        and margin_cost > 0
-        and exact_pairs / LSH_ROUTE_DRIFT_GUARD
-        <= margin_cost
-        <= exact_pairs * LSH_ROUTE_DRIFT_GUARD
-    )
-    if drift_count_fired:
+    n_rows = _estimated_rows(df, EMBED_DIM)
+    route, b, t, near_flip = _route(n_rows, threshold)
+    if near_flip:
         n_rows = max(1, df.count())
-        b, t, capped, capped_recall, exact_pairs, lsh_candidates = (
-            _route_inputs(
-                n_rows, threshold, target_bucket_rows, recall_target,
-                max_tables,
-            )
-        )
-    # Cap disambiguation (LSH_CAPPED_RECALL_FLOOR): a cap with
-    # collapsed recall is the low-θ wall → exact; a cap whose capped-T
-    # recall still clears the floor is the high-θ/huge-n regime where
-    # exact is n²/2-infeasible → fall through to the margin rule with
-    # the capped T (and the recall trade already logged by
-    # lsh_auto_params).
-    wall = capped and capped_recall < LSH_CAPPED_RECALL_FLOOR * recall_target
-    if wall or lsh_candidates * LSH_ROUTE_MARGIN >= exact_pairs:
-        out = cosine_pairs_above(
-            df, threshold, id_col=id_col, vec_col=vec_col
-        )
-        out._graft_route = "exact"
+        route, b, t, _ = _route(n_rows, threshold)
+    if route == "exact":
+        out = cosine_pairs_above(df, threshold)
     else:
-        out = lsh_neardup_pairs(
-            df,
-            threshold,
-            n_planes=b,
-            n_tables=t,
-            dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_rows=n_rows,
-        )
-        out._graft_route = "lsh"
-    # Audit surface (tests + ROUTE_PROBE): the n the decision actually
-    # used and whether the drift guard paid the resolving count().
+        out = lsh_neardup_pairs(df, threshold, n_planes=b, n_tables=t)
+    out._graft_route = route
     out._graft_route_n = n_rows
-    out._graft_drift_count = drift_count_fired
+    out._graft_drift_count = near_flip
     return out
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    n_cells: int = 16,
-    sample_rows: int = 8192,
-    iters: int = 5,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+#: k-means training sample (rows, hash-ordered) and Lloyd iterations
+#: of :func:`kmeans_centroids`
+KMEANS_SAMPLE_ROWS = 8192
+KMEANS_ITERS = 5
+
+
+def kmeans_centroids(df: DataFrame, n_cells: int) -> np.ndarray:
     """Spherical k-means coarse quantizer for IVF, trained driver-side
     on a DETERMINISTIC hash-ordered sample (``TakeOrdered`` by
     xxhash64(id) → distributed partial top-N, driver holds only the
-    sample). At 100 TB the training set stays ``sample_rows`` no matter
-    the corpus size; the centroid matrix (n_cells × dim doubles) ships
-    to executors inside a closure. Returns L2-normalized centroids."""
+    sample). At 100 TB the training set stays
+    :data:`KMEANS_SAMPLE_ROWS` no matter the corpus size; the centroid
+    matrix (n_cells × dim doubles) ships to executors inside a closure.
+    Returns L2-normalized centroids. The offline fit behind
+    ``functions.ivf_centroids.IVF_PINNED_CENTROIDS``."""
     sample = (
-        df.select(id_col, vec_col)
-        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_003)), F.col(id_col))
-        .limit(sample_rows)
+        df.select("vec_id", "embedding")
+        .orderBy(
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(1_000_003)), F.col("vec_id")
+        )
+        .limit(KMEANS_SAMPLE_ROWS)
         .collect()
     )
     x = np.asarray([r[1] for r in sample], dtype=np.float64)
     x /= np.linalg.norm(x, axis=1, keepdims=True)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(SEED)
     cents = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         assign = np.argmax(x @ cents.T, axis=1)
         for c in range(len(cents)):
             members = x[assign == c]
@@ -903,66 +804,57 @@ def _cell_assign_udf(cents: np.ndarray, nprobe: int):
     return _cells
 
 
+#: IVF probe width: each query probes its IVF_NPROBE closest cells,
+#: each corpus vector is indexed under its IVF_N_ASSIGN closest. The
+#: DuckDB twin (``queries_ext._ann_ivf_oracle``) mirrors both.
+IVF_NPROBE = 6
+IVF_N_ASSIGN = 3
+
+
 def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 6,
-    n_assign: int = 3,
-    sample_rows: int = 8192,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents: np.ndarray | None = None,
+    queries: DataFrame, corpus: DataFrame, cents: np.ndarray, k: int = 5
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index — the
     data-dependent sibling of :func:`lsh_bucket_topk`.
 
-    ``cents``: a pre-trained quantizer matrix (n_cells × dim). When
-    given, the driver-side sampled Lloyd fit is skipped entirely —
-    the production shape, where the quantizer is an offline-trained
-    artifact reused across probes (and the oracle-exactness shape:
-    q_ann_ivf_topk passes the committed
-    functions.ivf_centroids.IVF_PINNED_CENTROIDS so the DuckDB twin
-    re-derives every cell assignment from the same literals).
+    ``cents``: the quantizer matrix (n_cells × dim, unit rows), trained
+    offline by :func:`kmeans_centroids` and reused across probes — the
+    production shape, and the oracle-exactness shape: q_ann_ivf_topk
+    passes the committed functions.ivf_centroids.IVF_PINNED_CENTROIDS
+    so the DuckDB twin re-derives every cell assignment from the same
+    literals.
 
-    Shape (the 100 TB path): a coarse spherical-k-means quantizer is
-    trained on a bounded sample (:func:`kmeans_centroids`); the corpus
-    is indexed under its ``n_assign`` nearest cells in ONE vectorized
-    projection (multi-assignment — the IVF analogue of LSH's
-    OR-amplification); each query probes its ``nprobe`` closest cells.
-    Candidates come from a single (cell) equi-join — the corpus is
+    Shape (the 100 TB path): the corpus is indexed under its
+    :data:`IVF_N_ASSIGN` nearest cells in ONE vectorized projection
+    (multi-assignment — the IVF analogue of LSH's OR-amplification);
+    each query probes its :data:`IVF_NPROBE` closest cells. Candidates
+    come from a single (cell) equi-join — the corpus is
     hash-partitioned by cell, never cross-joined — deduped (a pair can
-    meet in up to ``n_assign`` cells), then pay one exact re-rank.
+    meet in up to IVF_N_ASSIGN cells), then pay one exact re-rank.
 
-    Cost ≈ ``nprobe · n_assign / n_cells`` of the corpus per query.
-    The defaults are tuned for the UNIFORM synthetic test embeddings —
+    Cost ≈ IVF_NPROBE · IVF_N_ASSIGN / n_cells of the corpus per query.
+    The constants are tuned for the UNIFORM synthetic test embeddings —
     the adversarial case, where neighbors are barely closer than random
-    points so high coverage is required for recall. On real clustered
-    embeddings drop ``nprobe``/``n_assign`` (e.g. 4/1 with many more
-    cells) for sublinear probing at the same recall.
+    points so high coverage is required for recall. Real clustered
+    embeddings want a quantizer with many more cells and lower
+    constants (e.g. 4/1) for sublinear probing at the same recall; a
+    retune edits the constants and the oracle's mirror together.
 
     Output contract identical to :func:`cosine_topk` (sim HALF_UP round
     6 before rank, ties by neighbor_id, self excluded).
     """
-    if cents is None:
-        cents = kmeans_centroids(
-            corpus, n_cells=n_cells, sample_rows=sample_rows, seed=seed,
-            id_col=id_col, vec_col=vec_col,
-        )
-    c_cells = _cell_assign_udf(cents, n_assign)
-    q_cells = _cell_assign_udf(cents, nprobe)
+    c_cells = _cell_assign_udf(cents, IVF_N_ASSIGN)
+    q_cells = _cell_assign_udf(cents, IVF_NPROBE)
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.explode(c_cells(F.col(vec_col))).alias("__cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        F.explode(c_cells(F.col("embedding"))).alias("__cell"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.explode(q_cells(F.col(vec_col))).alias("__cell"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
+        F.explode(q_cells(F.col("embedding"))).alias("__cell"),
     )
     scored = (
         c.join(F.broadcast(q), on="__cell")
@@ -974,7 +866,7 @@ def ivf_topk(
     return _rank_topk(scored, k)
 
 
-def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float]]:
+def hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     """Seed-derived constant hyperplane matrix (driver-side, tiny —
     shipped to executors as literals inside the plan)."""
     rng = random.Random(seed)
@@ -996,16 +888,14 @@ def hyperplane_tables(
     ]
 
 
-def _bucket_index(
-    df: DataFrame, tables: list[list[list[float]]], id_col: str, vec_col: str
-) -> DataFrame:
+def _bucket_index(df: DataFrame, tables: list[list[list[float]]]) -> DataFrame:
     """The hyperplane bucket index ``(__id, __band, __key)``: one row
     per (vector, table), ``__band`` the table number and ``__key`` the
     vector's bucket in it — :func:`all_buckets_udf` computes every
     table's bucket in ONE projection, ``posexplode`` spreads them."""
     return df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(all_buckets_udf(tables)(F.col(vec_col))).alias(
+        F.col("vec_id").alias("__id"),
+        F.posexplode(all_buckets_udf(tables)(F.col("embedding"))).alias(
             "__band", "__key"
         ),
     )
@@ -1048,10 +938,6 @@ def lsh_bucket_topk(
     k: int = 5,
     n_planes: int = 12,
     n_tables: int = 1,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: equi-join on LSH bucket then exact re-rank.
     Scale path — the corpus is hash-partitioned by bucket, never
@@ -1070,14 +956,14 @@ def lsh_bucket_topk(
     AQE skew-join). Candidates are deduped before the exact re-rank,
     so each pair is scored once.
     """
-    tables = hyperplane_tables(dim, n_planes, n_tables, seed)
-    q_index = _bucket_index(queries, tables, id_col, vec_col)
-    c_index = _bucket_index(corpus, tables, id_col, vec_col)
+    tables = hyperplane_tables(EMBED_DIM, n_planes, n_tables, SEED)
+    q_index = _bucket_index(queries, tables)
+    c_index = _bucket_index(corpus, tables)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
     )
     cand = (
         c_index.withColumnRenamed("__id", "neighbor_id")

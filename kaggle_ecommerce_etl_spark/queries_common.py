@@ -26,7 +26,8 @@ here (FIXTURES.md, "Where fixtures live"):
   incremental, DDL and schema-drift round-trips, the bucketed join,
   the partition-pruned read and the compaction.
 - **Single files.** One exact CSV file is written only by
-  ``sinks.csv_sink.write_csv_file``.
+  ``sinks.csv_sink.write_csv_file``, one exact parquet file only by
+  the stage-then-move it shares, ``csv_sink._write_single_file``.
 """
 
 from __future__ import annotations

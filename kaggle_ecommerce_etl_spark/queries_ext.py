@@ -591,8 +591,8 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul (no cross join in the plan — see cosine_pairs_above). At
     θ=0.4 this IS the scale path: the LSH prefilter was measured
     strictly worse at sf1 (608 s vs ~19 s at n=20k — SCALING.md dedup
-    section); LSH only wins in the high-θ regime via
-    `lsh_neardup_pairs(n_planes="auto")`."""
+    section); LSH only wins in the high-θ, large-n regime, where
+    `semantic_pairs_auto` routes to it with sized (b, T)."""
     from kaggle_ecommerce_etl_spark.functions.similarity import cosine_pairs_above
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -617,7 +617,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     admits ~88% of all pairs as candidates (608 s vs ~19 s for the
     exact blocked `embedding_neardup_pairs` at n=20k). Scale routing
     lives in SCALING.md (dedup section): low θ → blocked exact;
-    high θ → `lsh_neardup_pairs(n_planes="auto")`.
+    high θ → `semantic_pairs_auto`, which sizes (b, T) for the corpus.
 
     ORACLE-CHECKED since r5 (same upgrade as `ann_lsh_topk`): the
     seeded hyperplanes are emitted as float literals into
@@ -635,7 +635,8 @@ def _emb_neardup_lsh_oracle(
     dim: int = 64, seed: int = 42,
 ) -> str:
     """DuckDB twin of `q_embedding_neardup_lsh` (defaults MUST mirror
-    `lsh_neardup_pairs`' signature defaults used above)."""
+    `lsh_neardup_pairs`' signature defaults used above and
+    similarity.EMBED_DIM / SEED)."""
     union = _lsh_bucket_union_sql(n_planes, n_tables, dim, seed)
     return f"""
 WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -768,8 +769,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docstring for the clustered-data parameterization.
     return ivf_topk(
         emb.filter(F.col("vec_id") < 20), emb,
-        k=5, n_cells=16, nprobe=6, n_assign=3,
-        cents=np.asarray(IVF_PINNED_CENTROIDS, dtype=np.float64),
+        np.asarray(IVF_PINNED_CENTROIDS, dtype=np.float64), k=5,
     )
 
 
@@ -781,7 +781,8 @@ def _ann_ivf_oracle(
     by RAW dot product (the engine ranks by normalized-vector dot;
     dividing by a positive per-vector norm is order-preserving, so
     skipping it here only REMOVES an fp divergence source). Parameters
-    MUST mirror the q_ann_ivf_topk call above."""
+    MUST mirror the q_ann_ivf_topk call above and
+    similarity.IVF_NPROBE / IVF_N_ASSIGN."""
     from kaggle_ecommerce_etl_spark.functions.ivf_centroids import (
         IVF_PINNED_CENTROIDS,
     )
@@ -1984,28 +1985,22 @@ def q_streaming_upsert_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the result is materialized first with one eager
     ``localCheckpoint``; that barrier need not survive executor loss,
     because rebuilding the query re-runs the stream."""
-    import glob as _glob
     import os
-    import shutil
     import tempfile
 
     from kaggle_ecommerce_etl_spark.operators.dedup import upsert_anti_join
+    from kaggle_ecommerce_etl_spark.sinks.csv_sink import _write_single_file
 
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
     orders = _t(spark, sf_dir, "orders").select(*cols)
     src_dir = _stream_fixture_dir("ups:v1", sf_dir, table="orders")
 
     def _build(stage: str) -> None:
-        os.makedirs(stage, exist_ok=True)
         for name, frame in (
             ("a", orders.filter(F.col("o_orderkey") % 3 != 2)),
             ("b", orders.filter(F.col("o_orderkey") % 3 != 0)),
         ):
-            sub = f"{stage}.__part_{name}"
-            frame.coalesce(1).write.mode("overwrite").parquet(sub)
-            part = _glob.glob(sub + "/part-*.parquet")[0]
-            os.replace(part, f"{stage}/{name}.parquet")
-            shutil.rmtree(sub, ignore_errors=True)
+            _write_single_file(frame, f"{stage}/{name}.parquet", "parquet")
 
     _publish_fixture_dir(src_dir, _build)
     stream = (

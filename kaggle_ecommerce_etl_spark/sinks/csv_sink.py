@@ -46,16 +46,24 @@ def write_csv_file(df: DataFrame, file_path: str) -> None:
     it by default). Local/NFS paths only (an object store would use
     its own rename API); use :func:`write_csv` for the scale path
     where each task writes its own part."""
-    tmp = f"{file_path}.__tmp__{_os.getpid()}"
-    (
-        df.coalesce(1)
-        .write.option("header", True)
-        .option("ignoreLeadingWhiteSpace", False)
-        .option("ignoreTrailingWhiteSpace", False)
-        .mode("overwrite")
-        .csv(tmp)
+    _write_single_file(
+        df,
+        file_path,
+        "csv",
+        header=True,
+        ignoreLeadingWhiteSpace=False,
+        ignoreTrailingWhiteSpace=False,
     )
-    part = _glob.glob(tmp + "/part-*.csv")[0]
+
+
+def _write_single_file(df: DataFrame, file_path: str, fmt: str, **options) -> None:
+    """Stage-then-move behind :func:`write_csv_file` and the parquet
+    stream fixtures: a single-partition ``fmt`` write (with
+    ``options``) to a staging directory private to this process, then
+    a driver-side move of its one part file to ``file_path``."""
+    tmp = f"{file_path}.__tmp__{_os.getpid()}"
+    df.coalesce(1).write.format(fmt).options(**options).mode("overwrite").save(tmp)
+    part = _glob.glob(tmp + "/part-*")[0]
     _os.makedirs(_os.path.dirname(file_path) or ".", exist_ok=True)
     _os.replace(part, file_path)
     _shutil.rmtree(tmp, ignore_errors=True)

@@ -1,11 +1,9 @@
 from kaggle_ecommerce_etl_spark.streaming.file_source import (
-    sessionized_stream,
     stream_csv_directory,
     windowed_event_counts,
 )
 
 __all__ = [
-    "sessionized_stream",
     "stream_csv_directory",
     "windowed_event_counts",
 ]

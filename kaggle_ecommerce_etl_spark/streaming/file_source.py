@@ -75,23 +75,6 @@ def windowed_event_counts(
     )
 
 
-def sessionized_stream(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Session windows per user (streaming: state pruned by watermark)."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.session_window(ts_col, gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )
-
-
 def run_available_now(
     stream_df: DataFrame,
     checkpoint_dir: str | None = None,

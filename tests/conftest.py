@@ -74,13 +74,19 @@ def construction_jobs(spark, sf_dir, count_jobs):
 def assert_cache_released(spark):
     """Failure-path leak check. Set-up empties the cache manager and
     records the persisted RDD ids (earlier tests' ``localCheckpoint``s
-    stay in ``getPersistentRDDs()``, so "nothing leaked" is checked as
-    "no new persisted RDD"); calling the returned function asserts that
-    no persisted RDD and no cache-manager entry was added since."""
+    stay persisted until the JVM collects them, so "nothing leaked" is
+    checked as "no new persisted RDD"); calling the returned function
+    asserts that no persisted RDD and no cache-manager entry was added
+    since.
+
+    The ids are read from the context's own weak-valued map and come
+    back as one string: ``getPersistentRDDs()`` returns a strong copy
+    of that map, and its py4j proxy kept every RDD in it alive."""
     spark.catalog.clearCache()
 
     def persistent_rdd_ids() -> set[int]:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        ids = spark.sparkContext._jsc.sc().persistentRdds().keys().mkString(",")
+        return {int(i) for i in ids.split(",") if i}
 
     before = persistent_rdd_ids()
 

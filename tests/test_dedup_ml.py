@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from kaggle_ecommerce_etl_spark.functions import dedup_ml as D
 from kaggle_ecommerce_etl_spark.functions.dedup_ml import (
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash_expr,
+    simhash_from_hashes,
+    simhash_hashes_expr,
 )
 
 
@@ -41,7 +44,10 @@ def test_lsh_pairs_catch_exact_dup(spark):
 
 
 def test_simhash_locality(spark):
-    df = _docs(spark).select("doc_id", simhash_expr(F.col("text")).alias("sh"))
+    staged = _docs(spark).select(
+        "doc_id", simhash_hashes_expr(F.col("text")).alias("__h")
+    )
+    df = staged.select("doc_id", simhash_from_hashes(F.col("__h")).alias("sh"))
     sh = {r.doc_id: r.sh for r in df.collect()}
     assert sh[1] == sh[4]
     ham_near = bin(sh[1] ^ sh[2]).count("1")
@@ -147,7 +153,7 @@ def test_max_df_cap_prunes_hot_token(spark):
     assert set(capped) < set(uncapped)
 
 
-def test_dup_clusters_long_path_converges_logarithmically(spark):
+def test_dup_clusters_long_path_converges_logarithmically(spark, monkeypatch):
     """Worst-case diameter: a 60-node PATH graph (near-dup data is
     near-cliques, a path is the adversarial shape). Pointer doubling
     must label every node with the path's minimum well inside the
@@ -160,24 +166,23 @@ def test_dup_clusters_long_path_converges_logarithmically(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "id1 long, id2 long"
     )
-    # driver_fastpath_max_edges=0 forces the DISTRIBUTED loop — this
-    # test pins the loop's convergence contract, which the r10
-    # small-graph union-find fast path would otherwise satisfy
-    # trivially (it ignores max_iter: union-find is single-pass exact).
-    labels = {
-        r.id: r.cluster
-        for r in dup_clusters(pairs, driver_fastpath_max_edges=0).collect()
-    }
+    # a 0-edge fast-path cap forces the DISTRIBUTED loop — this test
+    # pins the loop's convergence contract, which the r10 small-graph
+    # union-find fast path would otherwise satisfy trivially (it has
+    # no round cap: union-find is single-pass exact).
+    monkeypatch.setattr(D, "_DRIVER_CC_MAX_EDGES", 0)
+    labels = {r.id: r.cluster for r in dup_clusters(pairs).collect()}
     assert set(labels) == set(range(61))
     assert set(labels.values()) == {0}
 
     # one round reaches at most 2^(1 + _CC_DOUBLING_HOPS) = 4 steps
     # down the path — far short of 60 — so a 2-round cap must raise
+    monkeypatch.setattr(D, "_CC_MAX_ITER", 2)
     with pytest.raises(ValueError, match="did not converge"):
-        dup_clusters(pairs, max_iter=2, driver_fastpath_max_edges=0)
+        dup_clusters(pairs)
 
 
-def test_dup_clusters_fastpath_matches_loop(spark):
+def test_dup_clusters_fastpath_matches_loop(spark, monkeypatch):
     """The r10 driver union-find fast path must return EXACTLY the
     distributed loop's labels — same rows, same schema — on adversarial
     shapes (long path, near-cliques, singleton pairs) and for both int
@@ -199,7 +204,9 @@ def test_dup_clusters_fastpath_matches_loop(spark):
     for schema in ("id1 long, id2 long", "id1 int, id2 int"):
         pairs = spark.createDataFrame(edges, schema)
         fast = dup_clusters(pairs)          # n_edges ≪ cap → driver path
-        loop = dup_clusters(pairs, driver_fastpath_max_edges=0)
+        with monkeypatch.context() as m:    # 0-edge cap → distributed loop
+            m.setattr(D, "_DRIVER_CC_MAX_EDGES", 0)
+            loop = dup_clusters(pairs)
         assert fast.schema["id"].dataType == loop.schema["id"].dataType
         assert fast.schema["cluster"].dataType == \
             loop.schema["cluster"].dataType
@@ -289,11 +296,11 @@ def test_cross_prefix_stopword_never_indexed(spark):
     )
     cases = {
         "cross": (
-            [_word_sets(b, "text", "doc_id"), _word_sets(c, "text", "doc_id")],
+            [_word_sets(b), _word_sets(c)],
             ("in_id", "ex_id"),
         ),
         "blocked self-join": (
-            [_word_sets(blocked, "text", "doc_id", "source")],
+            [_word_sets(blocked, "source")],
             ("id1", "id2"),
         ),
     }
@@ -379,7 +386,7 @@ def _cc_loop_inputs(spark):
 
 
 def test_cc_stats_reset_releases_cache_when_count_fails(
-    spark, assert_cache_released
+    spark, monkeypatch, assert_cache_released
 ):
     """Round 0 is a stats-reset round (persist → count → checkpoint →
     unpersist): a failing count must not leave the cache behind."""
@@ -391,8 +398,9 @@ def test_cc_stats_reset_releases_cache_when_count_fails(
     labels = labels.withColumn(
         "cluster", F.col("cluster") + F.raise_error(F.lit("boom")).cast("long")
     )
+    monkeypatch.setattr(D, "_CC_MAX_ITER", 1)
     with pytest.raises(Exception, match="boom"):
-        _dup_clusters_loop(edges, labels, max_iter=1)
+        _dup_clusters_loop(edges, labels)
     assert_cache_released()
 
 
@@ -408,8 +416,9 @@ def test_cc_stats_reset_releases_cache_when_checkpoint_fails(
 
     edges, labels = _cc_loop_inputs(spark)
     monkeypatch.setattr(type(labels), "localCheckpoint", failing_checkpoint)
+    monkeypatch.setattr(D, "_CC_MAX_ITER", 1)
     with pytest.raises(RuntimeError, match="checkpoint failed"):
-        _dup_clusters_loop(edges, labels, max_iter=1)
+        _dup_clusters_loop(edges, labels)
     assert_cache_released()
 
 
@@ -421,3 +430,66 @@ def test_prefix_join_construction_jobs(construction_jobs):
     some of these jobs lowers the pin deliberately."""
     assert construction_jobs("jaccard_pairs_prefix") == 6
     assert construction_jobs("jaccard_cross_gate") == 8
+
+
+@pytest.mark.parametrize("computed", [False, True], ids=["uncomputed", "computed"])
+def test_assert_cache_released_catches_leaked_persist(
+    spark, assert_cache_released, computed
+):
+    """The leak check still fails on a deliberately leaked RDD
+    ``persist()``, whether or not an action filled it. An RDD persist
+    never reaches the ``CacheManager``, so only the persisted-RDD half
+    of the check can catch it."""
+    leaked = spark.sparkContext.parallelize(range(10)).persist()
+    try:
+        if computed:
+            leaked.count()
+        with pytest.raises(AssertionError):
+            assert_cache_released()
+    finally:
+        leaked.unpersist()
+    assert_cache_released()
+
+
+#: Every keyword option of the similarity and dedup layer, with its
+#: default. Each is ``k`` or ``threshold`` (they define a result) or a
+#: value some registry query sets; a tunable is a module constant,
+#: which tests reach by monkeypatching. An option comes back only
+#: through an edit of this set.
+LAYER_OPTIONS = {
+    "dedup_ml._word_sets(block_col=None)",
+    "dedup_ml.jaccard_cross_prefix(threshold=0.5)",
+    "dedup_ml.jaccard_pairs_prefix(block_col=None)",
+    "dedup_ml.jaccard_pairs_prefix(threshold=0.5)",
+    "dedup_ml.ngram_jaccard_pairs(block_col=None)",
+    "dedup_ml.ngram_jaccard_pairs(max_df=None)",
+    "dedup_ml.ngram_jaccard_pairs(threshold=0.5)",
+    "dedup_ml.ngram_jaccard_pairs(use_shingles=True)",
+    "dedup_ml.shingles_expr(n=3)",
+    "similarity.cosine_self_topk_blocked(k=1)",
+    "similarity.cosine_topk(k=5)",
+    "similarity.cosine_topk_matmul(k=5)",
+    "similarity.ivf_topk(k=5)",
+    "similarity.lsh_bucket_topk(k=5)",
+    "similarity.lsh_bucket_topk(n_planes=12)",
+    "similarity.lsh_bucket_topk(n_tables=1)",
+    "similarity.lsh_neardup_pairs(n_planes=3)",
+    "similarity.lsh_neardup_pairs(n_tables=16)",
+}
+
+
+def test_similarity_and_dedup_options_pinned():
+    import inspect
+
+    from kaggle_ecommerce_etl_spark.functions import similarity
+
+    got = set()
+    for mod in (similarity, D):
+        short = mod.__name__.rsplit(".", 1)[1]
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fn.__module__ != mod.__name__:
+                continue
+            for p in inspect.signature(fn).parameters.values():
+                if p.default is not inspect.Parameter.empty:
+                    got.add(f"{short}.{name}({p.name}={p.default!r})")
+    assert got == LAYER_OPTIONS

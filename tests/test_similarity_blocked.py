@@ -1,13 +1,15 @@
 """Chunk/block-path coverage for the exact similarity operators
 (ADVICE r2: the multi-chunk merge was never exercised — every
 test table is smaller than QUERY_CHUNK_ROWS). Forces tiny
-chunk/block sizes so the merge logic actually runs, and asserts
-bit-equality with the single-chunk and pure-expression baselines."""
+chunk/block sizes (by monkeypatching QUERY_CHUNK_ROWS / BLOCK_ROWS)
+so the merge logic actually runs, and asserts bit-equality with the
+single-chunk and pure-expression baselines."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kaggle_ecommerce_etl_spark.functions import similarity as S
 from kaggle_ecommerce_etl_spark.functions.similarity import (
     cosine_expr,
     cosine_pairs_above,
@@ -26,17 +28,21 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_matmul_chunked_equals_single_chunk(spark, sf_dir):
+def test_matmul_chunked_equals_single_chunk(spark, sf_dir, monkeypatch):
     emb = _emb(spark, sf_dir)
     single = cosine_topk_matmul(emb, emb, k=3)
-    chunked = cosine_topk_matmul(emb, emb, k=3, chunk_rows=7)
+    monkeypatch.setattr(S, "QUERY_CHUNK_ROWS", 7)
+    chunked = cosine_topk_matmul(emb, emb, k=3)
     assert _rows(single) == _rows(chunked)
 
 
-def test_self_blocked_equals_matmul_and_window_baseline(spark, sf_dir):
+def test_self_blocked_equals_matmul_and_window_baseline(
+    spark, sf_dir, monkeypatch
+):
     emb = _emb(spark, sf_dir)
     blocked1 = cosine_self_topk_blocked(emb, k=3)
-    blockedN = cosine_self_topk_blocked(emb, k=3, block_rows=17)
+    monkeypatch.setattr(S, "BLOCK_ROWS", 17)
+    blockedN = cosine_self_topk_blocked(emb, k=3)
     matmul = cosine_topk_matmul(emb, emb, k=3)
     assert _rows(blocked1) == _rows(blockedN) == _rows(matmul)
     # spot-check against the broadcast-join baseline too
@@ -61,9 +67,10 @@ def _brute_pairs(emb, threshold):
     )
 
 
-def test_pairs_above_chunked_equals_bruteforce(spark, sf_dir):
+def test_pairs_above_chunked_equals_bruteforce(spark, sf_dir, monkeypatch):
     emb = _emb(spark, sf_dir)
-    chunked = cosine_pairs_above(emb, 0.4, chunk_rows=7)
+    monkeypatch.setattr(S, "QUERY_CHUNK_ROWS", 7)
+    chunked = cosine_pairs_above(emb, 0.4)
     assert _rows(chunked) == _rows(_brute_pairs(emb, 0.4))
 
 
@@ -83,13 +90,6 @@ def test_self_blocked_no_full_count_at_construction(monkeypatch, spark, sf_dir):
     out = cosine_self_topk_blocked(emb, k=2)  # would raise pre-fix
     monkeypatch.undo()
     assert _rows(out) == expected
-    # explicit n_rows/dim → zero driver actions at construction
-    monkeypatch.setattr(DataFrame, "count", _boom)
-    monkeypatch.setattr(DataFrame, "head", _boom)
-    monkeypatch.setattr(DataFrame, "take", _boom)
-    out2 = cosine_self_topk_blocked(emb, k=2, n_rows=200, dim=16)
-    monkeypatch.undo()
-    assert _rows(out2) == expected
 
 
 def test_lsh_auto_params_sizing_math():
@@ -115,22 +115,6 @@ def test_lsh_auto_params_sizing_math():
     # the low-θ wall: T saturates the cap (routing warning case)
     b_low, t_low = lsh_auto_params(10_000_000, 0.4)
     assert t_low == 64
-
-
-def test_lsh_neardup_auto_equals_explicit_params(spark, sf_dir):
-    """n_planes="auto" must be a pure re-parameterization: same output
-    as calling with the (b, T) the sizing rule derives."""
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        lsh_auto_params,
-        lsh_neardup_pairs,
-    )
-
-    emb = _emb(spark, sf_dir)
-    n = emb.count()
-    b, t = lsh_auto_params(n, 0.4)
-    auto = lsh_neardup_pairs(emb, 0.4, n_planes="auto", n_rows=n)
-    explicit = lsh_neardup_pairs(emb, 0.4, n_planes=b, n_tables=t)
-    assert _rows(auto) == _rows(explicit)
 
 
 def test_pinned_ivf_centroids_invariants():
@@ -161,7 +145,7 @@ def _cache_manager_is_empty(spark):
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_pairs_above_leaves_cache_manager_empty(spark, sf_dir):
+def test_pairs_above_leaves_cache_manager_empty(spark, sf_dir, monkeypatch):
     """The corpus projection is a lazy ``localCheckpoint``, not a
     ``persist``: building and collecting the pairs adds nothing to the
     session's ``CacheManager``, so no caller has anything to release.
@@ -173,7 +157,8 @@ def test_pairs_above_leaves_cache_manager_empty(spark, sf_dir):
     the ``localCheckpoint`` ledger's exact-pairs entry)."""
     spark.catalog.clearCache()
     emb = _emb(spark, sf_dir)
-    pairs = cosine_pairs_above(emb, 0.4, chunk_rows=7)
+    monkeypatch.setattr(S, "QUERY_CHUNK_ROWS", 7)
+    pairs = cosine_pairs_above(emb, 0.4)
     assert _cache_manager_is_empty(spark)
     assert _rows(pairs) == _rows(_brute_pairs(emb, 0.4))
     assert _cache_manager_is_empty(spark)
@@ -189,8 +174,6 @@ def test_pairs_above_chunk_loop_failure_leaves_cache_manager_empty(
     :func:`test_pairs_above_leaves_cache_manager_empty`."""
     import pytest
 
-    from kaggle_ecommerce_etl_spark.functions import similarity as S
-
     real_chunks = S._query_chunks
 
     def one_chunk_then_fail(*args, **kwargs):
@@ -200,19 +183,24 @@ def test_pairs_above_chunk_loop_failure_leaves_cache_manager_empty(
 
     spark.catalog.clearCache()
     monkeypatch.setattr(S, "_query_chunks", one_chunk_then_fail)
+    monkeypatch.setattr(S, "QUERY_CHUNK_ROWS", 7)
     with pytest.raises(RuntimeError, match="chunk loop failed"):
-        S.cosine_pairs_above(_emb(spark, sf_dir), 0.4, chunk_rows=7)
+        S.cosine_pairs_above(_emb(spark, sf_dir), 0.4)
     assert _cache_manager_is_empty(spark)
 
 
-def test_pairs_above_back_to_back_frames_equal_bruteforce(spark, sf_dir):
+def test_pairs_above_back_to_back_frames_equal_bruteforce(
+    spark, sf_dir, monkeypatch
+):
     """Two pair frames built back to back, before either is collected,
     each keep their own projection: both collect the brute-force rows
-    (distinct inputs and thresholds, so neither can borrow the other's
-    plan)."""
+    (distinct inputs, thresholds and chunk sizes, so neither can borrow
+    the other's plan)."""
     emb = _emb(spark, sf_dir)
     evens = emb.where("vec_id % 2 = 0")
-    first = cosine_pairs_above(emb, 0.4, chunk_rows=7)
+    monkeypatch.setattr(S, "QUERY_CHUNK_ROWS", 7)
+    first = cosine_pairs_above(emb, 0.4)
+    monkeypatch.undo()
     second = cosine_pairs_above(evens, 0.3)
     assert _rows(second) == _rows(_brute_pairs(evens, 0.3))
     assert _rows(first) == _rows(_brute_pairs(emb, 0.4))
@@ -248,8 +236,6 @@ def test_cell_assign_tiebreak_and_zero_norm():
     r6: unstable argsort + NaN from 0/0 diverge from the oracle)."""
     import numpy as np
 
-    from kaggle_ecommerce_etl_spark.functions import similarity as S
-
     # two identical centroids → exact tie; stable argsort keeps cell 0
     # first. Exercise the inner numpy logic directly (the pandas_udf
     # wrapper only adds Arrow plumbing).
@@ -266,72 +252,62 @@ def test_cell_assign_tiebreak_and_zero_norm():
     assert not np.isnan(sims).any()
 
 
-def test_semantic_pairs_auto_routing(spark, sf_dir):
+def test_semantic_pairs_auto_routing(spark, sf_dir, monkeypatch):
     """The auto router must pick EXACT in the low-θ regime (the r5
     608s-vs-19s lesson: LSH at θ=0.4 is never selective AND
     high-recall) and LSH in the high-θ/large-n regime where the
-    occupancy estimate says the prefilter pays for itself. Output
-    schema is identical either way."""
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        semantic_pairs_auto,
-    )
-
+    occupancy estimate says the prefilter pays for itself. The grid is
+    pinned on the pure route function ``_route(n, θ)``; output schema
+    is identical either way."""
     emb = _t(spark, sf_dir, "embeddings")
-    # sf0.01 regime: 500 vectors, θ=0.4 → exact (margin rule)
-    pairs = semantic_pairs_auto(emb, threshold=0.4)
+    # testdata regime: a few hundred vectors, θ=0.4 → exact (margin rule)
+    pairs = S.semantic_pairs_auto(emb, threshold=0.4)
     assert pairs._graft_route == "exact"
     assert pairs.columns == ["id1", "id2", "sim"]
     # low-θ: exact at ALL n (T-cap wall — as θ→0 the LSH exponent
-    # ρ→1, so the recall target needs T>max_tables at any useful n;
-    # below the cap boundary the margin rule rejects LSH anyway)
+    # ρ→1, so the recall target needs T>LSH_MAX_TABLES at any useful
+    # n; below the cap boundary the margin rule rejects LSH anyway)
     for n_low in (500, 20_000, 200_000, 2_000_000, 10_000_000):
-        capped = semantic_pairs_auto(emb, threshold=0.4, n_rows=n_low)
-        assert capped._graft_route == "exact", f"θ=0.4 n={n_low}"
+        assert S._route(n_low, 0.4)[0] == "exact", f"θ=0.4 n={n_low}"
     # high-θ at MODERATE n must also route exact — the r7 measured
     # misroute: at n=20k, θ=0.85 LSH ran 16.2 s vs 1.3 s exact (the
     # matmul's cost is θ-independent; LSH's per-candidate overhead is
     # ~100× a matmul pair-score). LSH_ROUTE_MARGIN=128 encodes that;
     # this grid IS the crossover pin (VERDICT r7 #4) — editing the
-    # margin or the n·T·target_bucket_rows/2 candidate-volume formula
-    # without re-deriving the measured crossovers fails here.
+    # margin or the n·T·LSH_TARGET_BUCKET_ROWS/2 candidate-volume
+    # formula without re-deriving the measured crossovers fails here.
     for n_mid in (500, 20_000, 200_000, 500_000):
-        mid = semantic_pairs_auto(emb, threshold=0.85, n_rows=n_mid)
-        assert mid._graft_route == "exact", f"θ=0.85 n={n_mid}"
+        assert S._route(n_mid, 0.85)[0] == "exact", f"θ=0.85 n={n_mid}"
     # high-θ, large corpus: LSH engages (b,T sized, uncapped, and the
     # n·T·128 candidate volume finally undercuts n²/2 even at the
     # measured ~100× per-candidate cost gap); 2M doubly inside
-    lsh = semantic_pairs_auto(emb, threshold=0.85, n_rows=1_000_000)
-    assert lsh._graft_route == "lsh"
-    lsh2m = semantic_pairs_auto(emb, threshold=0.85, n_rows=2_000_000)
-    assert lsh2m._graft_route == "lsh"
+    for n_large in (1_000_000, 2_000_000):
+        route, _, t, _ = S._route(n_large, 0.85)
+        assert route == "lsh" and t < S.LSH_MAX_TABLES, n_large
     # T-cap disambiguation (r9): at θ=0.85 the cap first fires near
     # n≈34M (b=18 needs 77 > 64 tables) but capped-T recall is still
     # ~0.80-0.86 — a recall TRADE, not the low-θ wall. Exact there is
     # n²/2 ≈ 5.6e14 pair-scores (~10⁵ core-hours at the measured
     # 208 ns/pair) — infeasible at any cluster size — so the router
-    # must stay LSH (best-effort, trade logged). The θ=0.4 grid above
-    # pins the opposite case: capped recall ~4% = wall → exact.
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        LSH_CAPPED_RECALL_FLOOR,
-        _route_inputs,
-    )
-
+    # must stay LSH (best-effort, trade logged). At θ=0.4 the capped
+    # recall is ~4% = wall → exact.
     for n_huge in (40_000_000, 100_000_000):
-        _, _, capped, rec, _, _ = _route_inputs(n_huge, 0.85, 256, 0.9, 64)
-        assert capped and rec >= LSH_CAPPED_RECALL_FLOOR * 0.9, n_huge
-        huge = semantic_pairs_auto(emb, threshold=0.85, n_rows=n_huge)
-        assert huge._graft_route == "lsh", f"θ=0.85 n={n_huge}"
-    _, _, capped_low, rec_low, _, _ = _route_inputs(
-        10_000_000, 0.4, 256, 0.9, 64
-    )
-    assert capped_low and rec_low < LSH_CAPPED_RECALL_FLOOR * 0.9
+        route, _, t, _ = S._route(n_huge, 0.85)
+        assert (route, t) == ("lsh", S.LSH_MAX_TABLES), n_huge
+    route, _, t, _ = S._route(10_000_000, 0.4)
+    assert (route, t) == ("exact", S.LSH_MAX_TABLES)
+    # the LSH route builds and runs on the small corpus when the
+    # estimate reads large (10M: LSH, outside the drift-guard band) —
+    # recall is the only trade
+    monkeypatch.setattr(S, "_estimated_rows", lambda df, dim: 10_000_000)
+    lsh = S.semantic_pairs_auto(emb, threshold=0.85)
+    assert lsh._graft_route == "lsh"
+    assert lsh._graft_drift_count is False
     assert lsh.columns == ["id1", "id2", "sim"]
-    # the LSH plan is still runnable on the small corpus it was
-    # (deliberately mis-)sized for — recall is the only trade
     assert lsh.count() >= 0
 
 
-def test_semantic_router_drift_guard(spark, sf_dir):
+def test_semantic_router_drift_guard(spark, sf_dir, monkeypatch):
     """Estimate-drift guard near the route flip (VERDICT r8 watch-item
     1 / next-round #2). Calibration fact this pins: ROUTE_PROBE_r08
     measured the Catalyst sizeInBytes row estimate at ~2.1× UNDER true
@@ -342,55 +318,33 @@ def test_semantic_router_drift_guard(spark, sf_dir):
     LSH_ROUTE_DRIFT_GUARD (4×, ~2× headroom over the measured drift)
     of the boundary with one true count().
 
-    The guard's trigger arithmetic is tested directly on
-    ``_route_inputs`` (pure), and its behavioral contract on the real
-    corpus: estimated-n routing on sf0.01 (500 vectors, decision ratio
-    orders of magnitude from the flip) must NOT pay a count — pinned
-    by the route still being computed from the (deliberately wrong)
-    size-based estimate — while an explicit n_rows must NEVER trigger
-    the count (the crossover grid above passes n up to 10M on a
-    500-row frame and would break otherwise)."""
-    from kaggle_ecommerce_etl_spark.functions.similarity import (
-        LSH_ROUTE_DRIFT_GUARD,
-        LSH_ROUTE_MARGIN,
-        _route_inputs,
-        semantic_pairs_auto,
-    )
+    The guard band is pinned on the pure ``_route`` (its ``near_flip``
+    flag), and its behavioral contract on the real corpus: an estimate
+    far from the flip pays no count, and an estimate inside the band
+    pays one count and re-decides from the counted n."""
+    assert S.LSH_ROUTE_DRIFT_GUARD == 4.0  # measured 2.1× drift × ~2 safety
 
-    assert LSH_ROUTE_DRIFT_GUARD == 4.0  # measured 2.1× drift × ~2 safety
-
-    def ratio(n):
-        _, _, capped, _, exact_pairs, lsh_candidates = _route_inputs(
-            n, 0.85, 256, 0.9, 64
-        )
-        return capped, exact_pairs / (lsh_candidates * LSH_ROUTE_MARGIN)
-
-    # The θ=0.85 flip sits between 500k and 1M (crossover grid above;
-    # ratio=1 crosses between 700k and 800k). The guard band [1/4, 4]
-    # must cover the measured 2.1× drift on BOTH sides of the flip: a
-    # 2.1× under-read of a true-n=2M corpus reads ~950k — inside the
-    # band → count() fires → true n re-routes. Outside the band (500
-    # rows, or 100M where the ratio is ~48), no count.
-    capped_small, r_small = ratio(500)
-    assert not capped_small and r_small < 1 / LSH_ROUTE_DRIFT_GUARD
-    capped_950k, r_950k = ratio(950_000)
-    assert not capped_950k
-    assert 1 / LSH_ROUTE_DRIFT_GUARD <= r_950k <= LSH_ROUTE_DRIFT_GUARD
-    _, r_100m = ratio(100_000_000)
-    assert r_100m > LSH_ROUTE_DRIFT_GUARD
+    # The θ=0.85 flip sits between 700k and 800k (crossover grid
+    # above). The guard band must cover the measured 2.1× drift on
+    # BOTH sides of the flip: a true-n=2M corpus and its 2.1× under-read
+    # (~950k) both land inside it → count() fires → true n re-routes.
+    # Far outside the band (500 rows, or 100M where the decision ratio
+    # is ~48), no count.
+    for n in (950_000, 2_000_000):
+        assert S._route(n, 0.85)[3], n
+    for n in (500, 100_000_000):
+        assert not S._route(n, 0.85)[3], n
 
     emb = _t(spark, sf_dir, "embeddings")
-    # Estimated-n path far from the flip: route must come from the
-    # size estimate alone — the guard must NOT fire (asserted via the
-    # audit attribute) and the route is exact at this n.
-    auto = semantic_pairs_auto(emb, threshold=0.85)
+    # Estimated-n path far from the flip: the route comes from the
+    # size estimate alone — the guard must NOT fire.
+    auto = S.semantic_pairs_auto(emb, threshold=0.85)
     assert auto._graft_route == "exact"
     assert auto._graft_drift_count is False
-    # Explicit n_rows disables the guard even inside the band: a
-    # 950k claim on a 500-row frame must still route from 950k
-    # (LSH — ratio 1.21, just past the ~750k flip), not from a
-    # counted 500 (which would read exact).
-    pinned = semantic_pairs_auto(emb, threshold=0.85, n_rows=950_000)
-    assert pinned._graft_route == "lsh"
-    assert pinned._graft_drift_count is False
-    assert pinned._graft_route_n == 950_000
+    # An estimate inside the band (950k reads LSH) pays the count and
+    # routes from the true corpus size, which is exact.
+    monkeypatch.setattr(S, "_estimated_rows", lambda df, dim: 950_000)
+    guarded = S.semantic_pairs_auto(emb, threshold=0.85)
+    assert guarded._graft_drift_count is True
+    assert guarded._graft_route_n == emb.count()
+    assert guarded._graft_route == "exact"

@@ -13,7 +13,6 @@ from pyspark.sql import types as T
 
 from kaggle_ecommerce_etl_spark.streaming.file_source import (
     run_available_now,
-    sessionized_stream,
     stream_csv_directory,
     windowed_event_counts,
 )
@@ -104,20 +103,6 @@ def test_windowed_counts_streaming_matches_batch(spark, tmp_path):
     )
     q.awaitTermination()
     assert results == expected
-
-
-def test_sessionized_stream_batch_semantics(spark, sf_dir):
-    ev_schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    ev = spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:00:00", 7, "view", 1.0),
-            (2, "2024-01-01 10:10:00", 7, "view", 1.0),   # same session
-            (3, "2024-01-01 11:30:00", 7, "view", 1.0),   # gap > 30m → new
-        ],
-        ["event_id", "ts", "user_id", "event_type", "value"],
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    out = sessionized_stream(ev).collect()
-    assert sorted((r.user_id, r.n_events) for r in out) == [(7, 1), (7, 2)]
 
 
 def test_checkpoint_resume_exactly_once(spark, tmp_path):
