@@ -554,7 +554,7 @@ def lsh_auto_params(n_rows: int, threshold: float) -> tuple[int, int]:
 
 
 def lsh_neardup_pairs(
-    df: DataFrame, threshold: float, n_planes: int = 3, n_tables: int = 16
+    df: DataFrame, threshold: float, n_planes: int, n_tables: int
 ) -> DataFrame:
     """Near-duplicate pairs (id1 < id2, cosine ≥ threshold) with an LSH
     prefilter — the recall-trading scale sibling of
@@ -569,14 +569,12 @@ def lsh_neardup_pairs(
     self-equi-join on (table, bucket), id1 < id2, distinct) yields
     candidates, and only candidates pay the exact cosine + threshold. Shuffle ∝ Σ bucket sizes; the n² pair space is never
     materialized. Recall = P(any-table collision) of a qualifying pair
-    — 1-(1-p^b)^T with p = 1-θ/π; at the default b=3/T=16 measured
-    ≥0.98 on the test corpus (see tests/test_queries_ext.py).
+    — 1-(1-p^b)^T with p = 1-θ/π; at b=3/T=16 measured ≥0.98 on the
+    test corpus (see tests/test_queries_ext.py).
 
-    The FIXED default (b=3, T=16) is only sane at small corpora and is
-    kept for the oracle-checked registry contract. At scale call
-    :func:`semantic_pairs_auto`, which sizes (b, T) from the corpus
-    cardinality and the threshold via :func:`lsh_auto_params` and
-    routes low θ to blocked exact, where LSH is the wrong route.
+    At scale call :func:`semantic_pairs_auto`, which sizes (b, T) from
+    the corpus cardinality and the threshold via :func:`lsh_auto_params`
+    and routes low θ to blocked exact, where LSH is the wrong route.
     """
     tables = hyperplane_tables(EMBED_DIM, n_planes, n_tables, SEED)
     cand = _banded_pairs(_bucket_index(df, tables))

@@ -87,13 +87,15 @@ def conflict_split_aggjoin(
 
 def upsert_anti_join(
     incoming: DataFrame,
-    existing: DataFrame,
+    existing: DataFrame | None,
     keys: Sequence[str],
     order_by: Sequence[str] | None = None,
 ) -> DataFrame:
     """Rows of ``incoming`` whose key is NOT already in ``existing`` —
     the append set of an idempotent DO-NOTHING upsert (op 16).
     Only the key columns of ``existing`` are read (column pruning).
+    ``existing=None`` means the target does not exist yet: the append
+    set is the per-key dedup below and no join is planned.
 
     ``ON CONFLICT DO NOTHING`` (reference pg.py:544-547) also keeps only
     the FIRST row when ONE batch carries the same key twice (later
@@ -114,5 +116,7 @@ def upsert_anti_join(
         )
     else:
         incoming = incoming.dropDuplicates(list(keys))
+    if existing is None:
+        return incoming
     existing_keys = existing.select(*keys).dropDuplicates()
     return incoming.join(existing_keys, on=list(keys), how="left_anti")

@@ -608,6 +608,11 @@ WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.4
 """
 
 
+#: `embedding_neardup_lsh`'s threshold and LSH (b, T), read by the
+#: query and by its oracle twin
+NEARDUP_LSH_THRESHOLD, NEARDUP_LSH_PLANES, NEARDUP_LSH_TABLES = 0.4, 3, 16
+
+
 def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-prefiltered near-dup pairs: single (table,bucket)
     self-equi-join generates candidates, only candidates pay exact
@@ -627,17 +632,15 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaggle_ecommerce_etl_spark.functions.similarity import lsh_neardup_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
-    return lsh_neardup_pairs(emb, threshold=0.4)
+    return lsh_neardup_pairs(
+        emb, NEARDUP_LSH_THRESHOLD, NEARDUP_LSH_PLANES, NEARDUP_LSH_TABLES
+    )
 
 
-def _emb_neardup_lsh_oracle(
-    threshold: float = 0.4, n_planes: int = 3, n_tables: int = 16,
-    dim: int = 64, seed: int = 42,
-) -> str:
-    """DuckDB twin of `q_embedding_neardup_lsh` (defaults MUST mirror
-    `lsh_neardup_pairs`' signature defaults used above and
-    similarity.EMBED_DIM / SEED)."""
-    union = _lsh_bucket_union_sql(n_planes, n_tables, dim, seed)
+def _emb_neardup_lsh_oracle() -> str:
+    """DuckDB twin of `q_embedding_neardup_lsh`, rendered from the
+    query's constants."""
+    union = _lsh_bucket_union_sql(NEARDUP_LSH_PLANES, NEARDUP_LSH_TABLES)
     return f"""
 WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 b AS (
@@ -650,8 +653,15 @@ s AS (SELECT cand.id1, cand.id2,
              round(list_cosine_similarity(v1.v, v2.v), 6) AS sim
       FROM cand JOIN t v1 ON v1.vec_id = cand.id1
                 JOIN t v2 ON v2.vec_id = cand.id2)
-SELECT id1, id2, sim FROM s WHERE sim >= {threshold}
+SELECT id1, id2, sim FROM s WHERE sim >= {NEARDUP_LSH_THRESHOLD}
 """
+
+
+#: the ANN top-k queries' k and query side (vec_id < ANN_QUERY_MAX),
+#: and `ann_lsh_topk`'s LSH (b, T) — read by the queries and their
+#: oracle twins
+ANN_K, ANN_QUERY_MAX = 5, 20
+ANN_LSH_PLANES, ANN_LSH_TABLES = 3, 12
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -680,20 +690,23 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 (1.04 s vs 1.47 s). At larger corpora raise n_planes
     # ∝ log(n) to keep buckets sized, trading recall back via tables.
     return lsh_bucket_topk(
-        emb.filter(F.col("vec_id") < 20), emb, k=5, n_planes=3, n_tables=12
+        emb.filter(F.col("vec_id") < ANN_QUERY_MAX), emb, k=ANN_K,
+        n_planes=ANN_LSH_PLANES, n_tables=ANN_LSH_TABLES,
     )
 
 
-def _lsh_bucket_union_sql(n_planes: int, n_tables: int, dim: int, seed: int) -> str:
+def _lsh_bucket_union_sql(n_planes: int, n_tables: int) -> str:
     """Render the (vec_id, tbl, bucket) UNION ALL — one branch per LSH
     table, the seed-derived hyperplanes emitted as float literals
     (repr() round-trips float64 exactly), bucket id = sign bits of the
     plane dot products packed exactly as `all_buckets_udf` packs them.
-    Shared by the `ann_lsh_topk` and `embedding_neardup_lsh` oracles."""
-    from kaggle_ecommerce_etl_spark.functions.similarity import hyperplane_tables
+    Shared by the `ann_lsh_topk` and `embedding_neardup_lsh` oracles;
+    the planes come from the engine's `EMBED_DIM` and `SEED`."""
+    from kaggle_ecommerce_etl_spark.functions import similarity as S
 
     branches = []
-    for t, planes in enumerate(hyperplane_tables(dim, n_planes, n_tables, seed)):
+    tables = S.hyperplane_tables(S.EMBED_DIM, n_planes, n_tables, S.SEED)
+    for t, planes in enumerate(tables):
         terms = []
         for i, plane in enumerate(planes):
             lits = ", ".join(repr(x) for x in plane)
@@ -709,20 +722,16 @@ def _lsh_bucket_union_sql(n_planes: int, n_tables: int, dim: int, seed: int) -> 
     return "\n  UNION ALL\n".join(branches)
 
 
-def _ann_lsh_oracle(
-    k: int = 5, n_planes: int = 3, n_tables: int = 12, dim: int = 64,
-    seed: int = 42, query_max: int = 20,
-) -> str:
+def _ann_lsh_oracle() -> str:
     """DuckDB twin of `q_ann_lsh_topk`: recomputes every bucket
-    assignment bit-for-bit from the committed constants. Parameters
-    MUST mirror the q_ann_lsh_topk call above."""
-    union = _lsh_bucket_union_sql(n_planes, n_tables, dim, seed)
+    assignment bit-for-bit from the query's constants."""
+    union = _lsh_bucket_union_sql(ANN_LSH_PLANES, ANN_LSH_TABLES)
     return f"""
 WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 b AS (
 {union}
 ),
-q AS (SELECT vec_id AS query_id, tbl, bucket FROM b WHERE vec_id < {query_max}),
+q AS (SELECT vec_id AS query_id, tbl, bucket FROM b WHERE vec_id < {ANN_QUERY_MAX}),
 cand AS (SELECT DISTINCT c.vec_id AS neighbor_id, q.query_id
          FROM b c JOIN q ON c.tbl = q.tbl AND c.bucket = q.bucket
          WHERE c.vec_id <> q.query_id),
@@ -735,7 +744,7 @@ r AS (SELECT query_id, neighbor_id, sim,
                                 ORDER BY sim DESC, neighbor_id) AS rank
       FROM s)
 SELECT query_id, neighbor_id, sim, CAST(rank AS INT) AS rank
-FROM r WHERE rank <= {k}
+FROM r WHERE rank <= {ANN_K}
 """
 
 
@@ -768,24 +777,23 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is forced by the UNIFORM synthetic embeddings; see ivf_topk's
     # docstring for the clustered-data parameterization.
     return ivf_topk(
-        emb.filter(F.col("vec_id") < 20), emb,
-        np.asarray(IVF_PINNED_CENTROIDS, dtype=np.float64), k=5,
+        emb.filter(F.col("vec_id") < ANN_QUERY_MAX), emb,
+        np.asarray(IVF_PINNED_CENTROIDS, dtype=np.float64), k=ANN_K,
     )
 
 
-def _ann_ivf_oracle(
-    k: int = 5, nprobe: int = 6, n_assign: int = 3, query_max: int = 20,
-) -> str:
+def _ann_ivf_oracle() -> str:
     """DuckDB twin of `q_ann_ivf_topk`: re-derives every cell
     assignment from the committed centroid literals. Cell rank orders
     by RAW dot product (the engine ranks by normalized-vector dot;
     dividing by a positive per-vector norm is order-preserving, so
-    skipping it here only REMOVES an fp divergence source). Parameters
-    MUST mirror the q_ann_ivf_topk call above and
-    similarity.IVF_NPROBE / IVF_N_ASSIGN."""
+    skipping it here only REMOVES an fp divergence source). k, the
+    query side and the probe widths are the query's and the engine's
+    (`IVF_NPROBE`, `IVF_N_ASSIGN`)."""
     from kaggle_ecommerce_etl_spark.functions.ivf_centroids import (
         IVF_PINNED_CENTROIDS,
     )
+    from kaggle_ecommerce_etl_spark.functions.similarity import IVF_N_ASSIGN, IVF_NPROBE
 
     cent_rows = ",\n  ".join(
         f"({i}, [{', '.join(repr(x) for x in row)}])"
@@ -803,9 +811,9 @@ r AS (SELECT vec_id, cell,
              ROW_NUMBER() OVER (PARTITION BY vec_id
                                 ORDER BY s DESC, cell) AS rn
       FROM s),
-cc AS (SELECT vec_id AS neighbor_id, cell FROM r WHERE rn <= {n_assign}),
+cc AS (SELECT vec_id AS neighbor_id, cell FROM r WHERE rn <= {IVF_N_ASSIGN}),
 qc AS (SELECT vec_id AS query_id, cell FROM r
-       WHERE rn <= {nprobe} AND vec_id < {query_max}),
+       WHERE rn <= {IVF_NPROBE} AND vec_id < {ANN_QUERY_MAX}),
 cand AS (SELECT DISTINCT query_id, neighbor_id
          FROM cc JOIN qc USING (cell)
          WHERE neighbor_id <> query_id),
@@ -818,7 +826,7 @@ rk AS (SELECT query_id, neighbor_id, sim,
                                  ORDER BY sim DESC, neighbor_id) AS rank
        FROM sc)
 SELECT query_id, neighbor_id, sim, CAST(rank AS INT) AS rank
-FROM rk WHERE rank <= {k}
+FROM rk WHERE rank <= {ANN_K}
 """
 
 
@@ -2015,12 +2023,12 @@ def q_streaming_upsert_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         target = base + "/tgt"
 
         def _apply(batch: DataFrame, _bid: int) -> None:
-            if os.path.exists(target):
-                # a real read failure must PROPAGATE — swallowing it
-                # would silently disable dedup and append duplicates
-                existing = spark.read.parquet(target)
-            else:  # first batch: target doesn't exist yet
-                existing = batch.sparkSession.createDataFrame([], batch.schema)
+            # first batch: no target yet, nothing to join. A real read
+            # failure must PROPAGATE — swallowing it would silently
+            # disable dedup and append duplicates
+            existing = (
+                spark.read.parquet(target) if os.path.exists(target) else None
+            )
             upsert_anti_join(batch, existing, ["o_orderkey"]).write.mode(
                 "append"
             ).parquet(target)

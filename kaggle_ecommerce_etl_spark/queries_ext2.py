@@ -773,7 +773,7 @@ def q_jdbc_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaggle_ecommerce_etl_spark.sinks.jdbc import (
         DERBY_DRIVER,
         derby_memory_url,
-        is_missing_table_error,
+        jdbc_table_exists,
         read_jdbc_partitioned,
         write_jdbc_append,
     )
@@ -789,11 +789,7 @@ def q_jdbc_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     props = {"driver": DERBY_DRIVER}
     hi = o.agg(F.max("o_orderkey")).first()[0] or 1
-    try:
-        spark.read.jdbc(url=url, table="orders_pr", properties=props).schema
-    except Exception as e:  # noqa: BLE001 — only MISSING table may load
-        if not is_missing_table_error(e):
-            raise
+    if not jdbc_table_exists(spark, url, "orders_pr", props):
         write_jdbc_append(
             o, url, "orders_pr", properties=props,
             column_types="o_orderkey BIGINT, total DOUBLE",
@@ -1795,12 +1791,12 @@ def q_medallion_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now(raw, parquet_path=bronze, query_name="bronze")
 
         def _to_silver(batch: DataFrame, _bid: int) -> None:
-            if os.path.exists(silver):
-                # a real read failure here must PROPAGATE — swallowing
-                # it would silently disable dedup and append duplicates
-                existing = spark.read.parquet(silver)
-            else:  # first batch: silver doesn't exist yet
-                existing = batch.sparkSession.createDataFrame([], batch.schema)
+            # first batch: no silver yet, nothing to join. A real read
+            # failure must PROPAGATE — swallowing it would silently
+            # disable dedup and append duplicates
+            existing = (
+                spark.read.parquet(silver) if os.path.exists(silver) else None
+            )
             upsert_anti_join(batch, existing, ["event_id"]).write.mode(
                 "append"
             ).parquet(silver)

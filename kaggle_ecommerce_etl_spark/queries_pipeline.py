@@ -451,8 +451,7 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     def append(df: DataFrame) -> None:
         df.write.mode("append").parquet(path)
 
-    empty = spark.createDataFrame([], batch.schema)
-    write_upsert(batch, empty, ["uk"], append)                     # first load
+    write_upsert(batch, None, ["uk"], append)                      # first load
     write_upsert(batch, spark.read.parquet(path), ["uk"], append)  # re-delivery
     return spark.read.parquet(path)
 

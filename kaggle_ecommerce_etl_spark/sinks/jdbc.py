@@ -11,6 +11,14 @@ Spark-first shape:
   existing keys (column-pruned key scan), then append. The anti-join is
   the scalable idempotency mechanism: only key columns cross the wire,
   and Catalyst broadcasts whichever side is small.
+- first load → the reference's ``CREATE TABLE IF NOT EXISTS`` reads no
+  table that is not there, and neither does the upsert: one
+  ``jdbc_table_exists`` round trip (Spark's own ``JdbcUtils.tableExists``,
+  the check the JDBC writer runs before its CREATE) decides, and a
+  missing target plans no key scan and no join — the append set is the
+  per-key dedup of the batch. Only the dialect's "object not found"
+  means missing; any other failure (no such database, refused
+  connection, auth) propagates before a Spark job runs.
 
 No Postgres exists in this environment, but the PHYSICAL JDBC path is
 exercised for real against embedded Derby (`jdbc:derby:memory:` — the
@@ -37,24 +45,30 @@ def derby_memory_url(name: str, create: bool = True) -> str:
     return f"jdbc:derby:memory:{name}" + (";create=true" if create else "")
 
 
-def is_missing_table_error(e: Exception) -> bool:
-    """True iff a JDBC read failure means the TABLE does not exist —
-    the only failure first-load paths may treat as 'empty'. Everything
-    else (connection refused, auth, permissions) must propagate, or an
-    upsert would silently disable dedup. One classifier for every
-    caller, covering the phrasings of Derby, Postgres, and Spark's own
-    analyzer."""
-    msg = str(e).lower()
-    return any(
-        pat in msg
-        for pat in (
-            "does not exist",        # Derby/Postgres phrasing
-            "not found",             # generic
-            "table_or_view_not_found",
-            "42x05",                 # Derby SQLState for missing table
-            "42p01",                 # Postgres SQLState for missing table
-        )
-    )
+def jdbc_table_exists(
+    spark: SparkSession, url: str, table: str, properties: dict
+) -> bool:
+    """Whether ``table`` exists at ``url`` — Spark's
+    ``JdbcUtils.tableExists`` over a connection from the URL dialect's
+    ``createConnectionFactory``, the same check the JDBC writer runs
+    before its CREATE TABLE. It is False only when the dialect calls
+    the failure "object not found" (SQLState ``42…`` on Derby,
+    ``42P01`` on Postgres); any other error — a missing database, a
+    refused connection, bad credentials — raises, so no caller can
+    mistake it for an empty target. One JDBC round trip, no Spark job.
+    Reaches Spark's internal ``execution.datasources.jdbc`` package
+    through py4j (pinned by tests/test_jdbc_derby.py)."""
+    jvm = spark._jvm
+    jdbc = jvm.org.apache.spark.sql.execution.datasources.jdbc
+    params = {k: str(v) for k, v in properties.items()}
+    opts = jdbc.JdbcOptionsInWrite(url, table, jvm.PythonUtils.toScalaMap(params))
+    dialect = jvm.org.apache.spark.sql.jdbc.JdbcDialects.get(url)
+    conn = dialect.createConnectionFactory(opts).apply(-1)
+    try:
+        return jdbc.JdbcUtils.tableExists(conn, opts)
+    finally:
+        conn.close()
+
 
 #: Spark-SQL type → JDBC column type for createTableColumnTypes
 _JDBC_TYPES = {
@@ -146,7 +160,7 @@ def write_jdbc_append(
 
 def write_upsert(
     incoming: DataFrame,
-    existing: DataFrame,
+    existing: DataFrame | None,
     keys: Sequence[str],
     append_fn,
     order_by: Sequence[str] | None = None,
@@ -155,7 +169,8 @@ def write_upsert(
     ``append_fn(to_append)``. Returns the appended subset (for tests /
     metrics). Re-running the same batch appends zero rows; duplicate
     keys WITHIN one batch keep one row (``order_by`` picks which —
-    see upsert_anti_join)."""
+    see upsert_anti_join). ``existing=None`` is a target that does not
+    exist yet: nothing is joined."""
     to_append = upsert_anti_join(incoming, existing, keys, order_by=order_by)
     append_fn(to_append)
     return to_append
@@ -176,26 +191,23 @@ def write_upsert_jdbc(
     reaches the JDBC scan — ``ReadSchema`` carries just the keys, so
     a 100 TB-history target ships keys, not payloads, over the wire),
     anti-join the incoming batch, append the remainder. Returns the
-    appended subset. A missing target table counts as empty (first
-    load creates it, typed via ``column_types`` when given)."""
+    appended subset. A target that :func:`jdbc_table_exists` does not
+    find is not read at all: the batch's per-key dedup is appended and
+    the first write creates the table (typed via ``column_types`` when
+    given)."""
     spark: SparkSession = incoming.sparkSession
     props = dict(properties or {})
-    try:
+    existing = None
+    if jdbc_table_exists(spark, url, table, props):
         existing = spark.read.jdbc(url=url, table=table, properties=props)
-        existing.schema  # force resolution now — missing table raises here
-    except Exception as e:  # noqa: BLE001
-        # ONLY a missing table counts as empty (first load creates it);
-        # see is_missing_table_error for why anything else propagates.
-        if not is_missing_table_error(e):
-            raise
-        existing = spark.createDataFrame([], incoming.schema)
-    to_append = upsert_anti_join(
-        incoming, existing.select(*keys), keys, order_by=order_by
-    )
-    # materialize BEFORE writing: the anti-join reads the very table the
-    # write appends to, so executing them in one job would race the scan
-    # against the insert (and the returned frame would re-run the
-    # anti-join against the post-write table, reporting zero appended)
+    to_append = upsert_anti_join(incoming, existing, keys, order_by=order_by)
+    # materialize BEFORE writing, with or without a target: the
+    # anti-join reads the very table the write appends to, so executing
+    # them in one job would race the scan against the insert (and the
+    # returned frame would re-run the anti-join against the post-write
+    # table, reporting zero appended); on a first load the per-key pick
+    # is arbitrary, so the returned frame must be the stored rows that
+    # were written, not a re-run that may keep other ones
     to_append = to_append.localCheckpoint(eager=True)
     write_jdbc_append(
         to_append, url, table, properties=props, column_types=column_types

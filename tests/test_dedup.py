@@ -87,6 +87,10 @@ def test_upsert_within_batch_duplicate_keys(spark):
     out = upsert_anti_join(batch, empty, ["order_id", "date"], order_by=["amount"])
     rows = {(r.order_id, r.date): r.amount for r in out.collect()}
     assert rows == {("o1", "2022-01-01"): 10.0, ("o2", "2022-01-01"): 12.0}
+    # no target at all (existing=None): the same rows, and no join
+    absent = upsert_anti_join(batch, None, ["order_id", "date"], order_by=["amount"])
+    assert {(r.order_id, r.date): r.amount for r in absent.collect()} == rows
+    assert "Join" not in absent._jdf.queryExecution().optimizedPlan().toString()
     # without order_by: still exactly one row per key (arbitrary pick)
     out2 = upsert_anti_join(batch, empty, ["order_id", "date"])
     assert out2.count() == 2

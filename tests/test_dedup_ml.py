@@ -473,8 +473,6 @@ LAYER_OPTIONS = {
     "similarity.lsh_bucket_topk(k=5)",
     "similarity.lsh_bucket_topk(n_planes=12)",
     "similarity.lsh_bucket_topk(n_tables=1)",
-    "similarity.lsh_neardup_pairs(n_planes=3)",
-    "similarity.lsh_neardup_pairs(n_tables=16)",
 }
 
 

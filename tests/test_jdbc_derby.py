@@ -17,10 +17,12 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from kaggle_ecommerce_etl_spark.sinks import jdbc as J
 from kaggle_ecommerce_etl_spark.sinks.jdbc import (
     DERBY_DRIVER,
     derby_memory_url,
     jdbc_column_types,
+    jdbc_table_exists,
     write_jdbc_append,
     write_upsert_jdbc,
 )
@@ -155,3 +157,81 @@ def test_nullable_string_requires_clob_columns(spark):
     back = {r["k"]: r["s"] for r in
             spark.read.jdbc(url, "t", properties=PROPS).collect()}
     assert back == {"k1": None, "k2": "v"}
+
+
+def test_jdbc_table_exists_is_sparks_writer_check(spark, batch):
+    """``jdbc_table_exists`` reaches Spark's ``JdbcUtils.tableExists``
+    through py4j (internal API, pinned on PySpark 4.1.2): False for a
+    missing table, True once the writer created it, and a missing
+    DATABASE raises instead of reading as "no table"."""
+    url = derby_memory_url("t_exists")
+    assert jdbc_table_exists(spark, url, "amazon_sale", PROPS) is False
+    write_jdbc_append(batch, url, "amazon_sale", properties=PROPS)
+    assert jdbc_table_exists(spark, url, "amazon_sale", PROPS) is True
+    with pytest.raises(Exception, match="not found"):
+        jdbc_table_exists(
+            spark, derby_memory_url("t_exists_nodb", create=False),
+            "amazon_sale", PROPS,
+        )
+
+
+def test_upsert_into_missing_database_raises_before_any_job(spark, batch):
+    """Only a missing TABLE is a first load. A missing database (Derby
+    XJ004 "Database … not found") must fail the upsert before any Spark
+    job runs — not read as an empty target and run the dedup first."""
+    sc = spark.sparkContext
+    group = "upsert-missing-db"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(Exception, match="not found"):
+            write_upsert_jdbc(
+                batch, derby_memory_url("t_nodb", create=False),
+                "amazon_sale", ["order_id", "date"], properties=PROPS,
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _append_set_plans(spark, monkeypatch, url, incoming, passes):
+    """Run ``passes`` upserts of ``incoming`` and return, per pass, the
+    executed plan of the append set the sink checkpointed and the
+    number of rows it returned."""
+    real, seen = J.upsert_anti_join, []
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(J, "upsert_anti_join", spy)
+    out = []
+    for _ in range(passes):
+        rows = write_upsert_jdbc(
+            incoming, url, "amazon_sale", ["order_id", "date"],
+            properties=PROPS,
+        ).count()
+        out.append((seen[-1]._jdf.queryExecution().executedPlan().toString(), rows))
+    return out
+
+
+def test_upsert_first_load_plans_no_join_and_no_python_scan(spark, monkeypatch):
+    """A first load reads no table: the append set is the per-key dedup
+    of the batch, with no Join and no Python-backed scan (an empty
+    ``createDataFrame([])`` side is an RDD only a Python worker reads).
+    The re-delivery still scans only the key columns over JDBC,
+    anti-joins, and appends zero rows."""
+    incoming = spark.sql(
+        "SELECT order_id, CAST(d AS DATE) AS date, amount FROM VALUES "
+        "('A1', '2022-04-30', 1.0), ('A1', '2022-04-30', 2.0), "
+        "('A2', '2022-05-01', 3.0) AS t(order_id, d, amount)"
+    )
+    (first_plan, first), (again_plan, again) = _append_set_plans(
+        spark, monkeypatch, derby_memory_url("t_first_load"), incoming, 2
+    )
+    assert first == 2
+    assert "Join" not in first_plan, first_plan
+    assert "ExistingRDD" not in first_plan, first_plan
+    assert "JDBCRelation" not in first_plan, first_plan
+    assert again == 0
+    assert "LeftAnti" in again_plan, again_plan
+    assert "ReadSchema: struct<order_id:string,date:date>" in again_plan, again_plan
