@@ -31,7 +31,7 @@ import functools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from kaggle_ecommerce_etl_spark.functions.text import WS_SPLIT
-from kaggle_ecommerce_etl_spark.util import ensure_min_partitions, qcol
+from kaggle_ecommerce_etl_spark.util import checkpoint_profiled, ensure_min_partitions, qcol
 
 #: minhash signature width (mh0..mh7) and minhash values per LSH band
 #: (so 4 bands)
@@ -407,10 +407,12 @@ def dup_clusters(pairs: DataFrame) -> DataFrame:
     which executed the (potentially expensive) pair generator TWICE.
     """
     spark = pairs.sparkSession
-    half = pairs.select(
-        F.col("id1").alias("src"), F.col("id2").alias("dst")
-    ).localCheckpoint(eager=True)
-    n_half = half.count()  # cheap: scans the checkpoint just built
+    # the edge count rides the checkpoint (observed), not a second job
+    half, stats = checkpoint_profiled(
+        pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst")),
+        ["count(1) AS n"],
+    )
+    n_half = stats["n"]
     if n_half <= _DRIVER_CC_MAX_EDGES:
         local = _dup_clusters_driver(spark, half)
         if local is not None:
@@ -589,18 +591,20 @@ def _dup_clusters_loop(edges: DataFrame, labels: DataFrame) -> DataFrame:
         # n-row label pass only 1/K of the time (an every-round reset
         # measured +42 % wall at 10M edges — the planner cost it
         # removes is smaller than a full extra materialization).
+        # The fixpoint test is observed on the round's checkpoint: no
+        # probe job over the stored labels.
+        count_changed = ["count_if(__changed) AS changed"]
         if _round % _CC_STATS_RESET_EVERY == 0:
             cached = cur.persist(StorageLevel.MEMORY_AND_DISK)
             try:
                 cached.count()
-                doubled = cached.localCheckpoint(eager=True)
+                doubled, stats = checkpoint_profiled(cached, count_changed)
             finally:  # release the cache when the count or checkpoint throws too
                 cached.unpersist()
         else:
-            doubled = cur.localCheckpoint(eager=True)
-        changed = doubled.filter(F.col("__changed")).limit(1).count()
+            doubled, stats = checkpoint_profiled(cur, count_changed)
         labels = doubled.drop("__changed")
-        if changed == 0:
+        if stats["changed"] == 0:
             return labels
     # Exhausting the round cap without a fixpoint means the labels are
     # NOT components yet — returning them silently would hand callers a

@@ -21,7 +21,6 @@ from kaggle_ecommerce_etl_spark.normalize.casts import (
     tolerant_numeric,
 )
 from kaggle_ecommerce_etl_spark.normalize.profile import (
-    column_profile,
     drop_all_null_columns,
     null_counts,
     summary_stats,
@@ -32,7 +31,6 @@ __all__ = [
     "NA_TOKENS",
     "DATE_FORMATS",
     "canonicalize_na",
-    "column_profile",
     "date_to_iso",
     "drop_all_null_columns",
     "drop_columns",

@@ -10,12 +10,15 @@ Reference behavior re-expressed:
 
 Scale design: ALL gates for one table — including the post-coercion
 null counts that decide the drop-all-null-columns projection — are
-batched into ONE aggregation job (single scan, map-side partial
-aggregation, one tiny result row). A naive implementation profiles
-once to pick coercions and scans again to find dead columns; here the
-per-branch success counts collected up front make the second scan
-unnecessary. At 100 TB, each profiling scan IS the cost of the
-pipeline, so the count matters.
+one aggregate observed on the eager ``localCheckpoint`` that stores
+the table (``util.checkpoint_profiled``): the rows are parsed, stored
+and profiled in ONE job, and the coercions then read the stored rows.
+A naive implementation profiles once to pick coercions and scans again
+to find dead columns; here the per-branch success counts collected up
+front make the second scan unnecessary, and observing them on the
+materialization makes the separate profile scan unnecessary too. At
+100 TB each scan of the raw input IS the cost of the pipeline, so the
+count matters.
 
 Per-column work is role-aware (role derived from the column name, as
 in the reference): date columns only pay the date-parse probe, month
@@ -29,7 +32,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kaggle_ecommerce_etl_spark.normalize.casts import (
     month_prefix_sql,
@@ -38,7 +40,7 @@ from kaggle_ecommerce_etl_spark.normalize.casts import (
 )
 from kaggle_ecommerce_etl_spark.normalize.sqltext import ident
 from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null_sql
-from kaggle_ecommerce_etl_spark.util import qcol
+from kaggle_ecommerce_etl_spark.util import checkpoint_profiled, qcol
 
 
 def null_counts(df: DataFrame) -> DataFrame:
@@ -95,20 +97,19 @@ def column_role(name: str) -> str:
     return "candidate"
 
 
-def column_profile(df: DataFrame, string_cols: Sequence[str] | None = None) -> dict:
-    """ONE job computing every gate the transform layer needs.
+def checkpoint_column_profile(
+    df: DataFrame, string_cols: Sequence[str]
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` once and return ``(stored, profile)``: the
+    stored rows, and every gate the transform layer needs, computed in
+    the SAME job (``util.checkpoint_profiled``).
 
-    Returns ``{"__rows__": n, col: {"nulls", "numeric_ok", "date_ok",
-    "prefix_ok", "role"}}`` — per-branch SUCCESS COUNTS, so the caller
-    can both pick the coercion and know the post-coercion null count
-    without a second scan. Each count is the non-null count of the
-    very rule text the transform applies, and the whole aggregate is
-    one ``selectExpr``.
+    ``profile`` is ``{"__rows__": n, col: {"nulls", "numeric_ok",
+    "keep_ok", "date_ok", "prefix_ok", "role"}}`` — per-branch SUCCESS
+    COUNTS, so the caller can both pick the coercion and know the
+    post-coercion null count without a second scan. Each count is the
+    non-null count of the very rule text the transform applies.
     """
-    if string_cols is None:
-        string_cols = [
-            f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
-        ]
     roles = {c: column_role(c) for c in string_cols}
 
     def nonnull(rule_sql: str, key: str) -> str:
@@ -128,7 +129,7 @@ def column_profile(df: DataFrame, string_cols: Sequence[str] | None = None) -> d
             # non-null AFTER NA-token canonicalization + trim (the
             # else-branch's post-transform null count)
             aggs.append(nonnull(na_token_to_null_sql(q), f"keepok__{c}"))
-    row = df.selectExpr(*aggs).collect()[0].asDict()
+    stored, row = checkpoint_profiled(df, aggs)
 
     out: dict = {"__rows__": row["__rows__"]}
     for c in df.columns:
@@ -140,7 +141,7 @@ def column_profile(df: DataFrame, string_cols: Sequence[str] | None = None) -> d
             "prefix_ok": row.get(f"prefixok__{c}"),
             "role": roles.get(c),
         }
-    return out
+    return stored, out
 
 
 def categorical_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -197,14 +198,12 @@ def categorical_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     )
 
 
-def drop_all_null_columns(df: DataFrame, profile: dict | None = None) -> DataFrame:
+def drop_all_null_columns(df: DataFrame) -> DataFrame:
     """Drop columns whose values are all NULL (op 31). Data-dependent
-    projection: needs a profile pass (reused if supplied)."""
-    if profile is None:
-        counts = null_counts(df).collect()[0].asDict()
-        total = df.count()
-        dead = [c for c in df.columns if counts[c] == total]
-    else:
-        total = profile["__rows__"]
-        dead = [c for c in df.columns if c in profile and profile[c]["nulls"] == total]
+    projection: the row count and every column's null count come from
+    one aggregate."""
+    row = df.agg(
+        F.count(F.lit(1)), *[F.sum(qcol(c).isNull().cast("long")) for c in df.columns]
+    ).collect()[0]
+    dead = [c for c, nulls in zip(df.columns, row[1:]) if nulls == row[0]]
     return df.drop(*dead) if dead else df

@@ -1,12 +1,16 @@
 """The shared rule-driven normalization pass (SURVEY.md §2f op 37's
 inner ``transform()``, reference ecommerce_s3_to_pg.py:123-214).
 
-Two-phase execution, made explicit:
+Execution, made explicit:
 
-1. **Profile** — ONE aggregation job over the already NA-canonicalized
-   frame computes every data-dependent gate: per-branch success counts
-   (numeric / date / month-prefix) and per-column null counts.
-2. **Plan** — emit a single lazy projection applying, per column:
+1. **Materialize + profile** — ONE job: an eager ``localCheckpoint``
+   of the input frame with every data-dependent gate observed on it
+   (``profile.checkpoint_column_profile``): per-branch success counts
+   (numeric / date / month-prefix) and per-column null counts. The
+   input plan (a route's CSV parse, dedup shuffle and filters) runs
+   once, for the profile and the consumer alike.
+2. **Plan** — emit a single lazy projection over the stored rows
+   applying, per column:
    - name contains ``date``  → tolerant parse → ISO ``yyyy-MM-dd`` string
    - name contains ``month`` → month-name normalization (datetime branch
      iff any value parses, else 3-letter-prefix branch)  [pg.py:157-169]
@@ -18,8 +22,11 @@ Two-phase execution, made explicit:
    count), so no second scan.
 
 The emitted plan is one ``selectExpr`` over the rules' SQL text —
-Catalyst fuses it into one codegen stage over the scan; total data
-reads: profile scan + the consumer's execution. No UDFs anywhere.
+Catalyst fuses it into one codegen stage over the stored rows; total
+data reads: the input's one execution + the consumer's scan of the
+stored blocks. No UDFs anywhere. The stored blocks are a
+``localCheckpoint``: they live on executors and do not survive losing
+one (SCALING.md's ledger says why that is enough here).
 """
 
 from __future__ import annotations
@@ -34,7 +41,7 @@ from kaggle_ecommerce_etl_spark.normalize.casts import (
     month_prefix_sql,
     tolerant_numeric_sql,
 )
-from kaggle_ecommerce_etl_spark.normalize.profile import column_profile
+from kaggle_ecommerce_etl_spark.normalize.profile import checkpoint_column_profile
 from kaggle_ecommerce_etl_spark.normalize.sqltext import ident
 from kaggle_ecommerce_etl_spark.normalize.tokens import na_token_to_null_sql
 
@@ -43,6 +50,8 @@ NUMERIC_GATE = 0.9  # reference: converted.notna().sum() > 0.9*len(df)
 
 def transform(df: DataFrame, numeric_gate: float = NUMERIC_GATE) -> DataFrame:
     """Rule-driven cleanup of a raw all-string frame (see module doc).
+    Construction materializes the input once: the profiled checkpoint
+    is its only Spark action.
 
     Emits ONE ``selectExpr`` projection (not layered withColumns passes):
     the coercion branches null out NA tokens inherently ('' / 'NA' fail
@@ -56,7 +65,7 @@ def transform(df: DataFrame, numeric_gate: float = NUMERIC_GATE) -> DataFrame:
     string_cols = [
         f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
     ]
-    prof = column_profile(df, string_cols)
+    df, prof = checkpoint_column_profile(df, string_cols)
     n_rows = prof["__rows__"]
 
     select_exprs = []

@@ -6,8 +6,9 @@ drop noisy cols → lower/trim 6 cols → rename → full-row dedup →
 <50%-NA row filter → rule-driven transform → critical-column dropna →
 order_id conflict split → (clean, flagged).
 
-The whole chain is ONE lazy plan with a single shuffle (the window in
-conflict_split); dedup's hash-aggregate shares AQE-coalesced partitions.
+``transform`` stores the deduplicated, filtered rows in the one job
+that profiles them; the rest of the chain is a lazy plan over those
+stored rows with a single shuffle (the window in conflict_split).
 """
 
 from __future__ import annotations

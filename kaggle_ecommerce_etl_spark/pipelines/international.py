@@ -62,13 +62,12 @@ def clean_international_sale(df: DataFrame) -> DataFrame:
 
     Construction runs Spark jobs: one eager ``localCheckpoint`` of the
     deduplicated, filtered and renamed frame, then the split's 1-row
-    header fetch and each part's profile in ``transform``. The
-    checkpoint makes the order-dependent keep-first window run once per
-    file: the header fetch, both profiles and the caller's final
-    materialization read its stored rows instead of each re-running
-    the window. Like ``run_batch``'s own checkpoints it does not
-    survive losing an executor, which a failed drop pays by re-running
-    from its raw files."""
+    header fetch and each part's profiled checkpoint in ``transform``.
+    The first checkpoint makes the order-dependent keep-first window run
+    once per file: the header fetch and both parts read its stored rows
+    instead of each re-running the window. Like ``run_batch``'s own
+    checkpoints it does not survive losing an executor, which a failed
+    drop pays by re-running from its raw files."""
     if ORDINAL not in df.columns:
         raise ValueError("international pipeline needs __row_ordinal; read via with_file_order()")
     df = _dedup_keep_first(df)

@@ -14,9 +14,13 @@ Scale notes:
   ``try``. The CSV sink and the caller's JDBC upsert/append then read
   the same stored rows instead of each re-running the cleaning plan
   (so ``loaded_at`` is one instant per table), and a runtime failure
-  of the plan lands in ``errors``. The international route also
-  checkpoints each file once after its keep-first dedup, before the
-  split (``clean_international_sale``). Nothing is collected to the driver
+  of the plan lands in ``errors``. That checkpoint re-runs only the
+  cleaning AFTER ``transform``: ``transform`` itself stores its input
+  (the route's parsed, deduplicated and filtered raw rows) in the one
+  job that profiles it, so each route parses its CSV and runs its dedup
+  shuffle once. The international route also checkpoints each file
+  once after its keep-first dedup, before the split
+  (``clean_international_sale``). Nothing is collected to the driver
   except the 1-row embedded-header fetch of the international split
   (documented in operators.structural).
 - the international report needs file order → read single-partition

@@ -3,8 +3,9 @@
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -62,6 +63,25 @@ def outgrows_broadcast(df, margin: float = 1.0) -> bool:
         return True
     sz = plan_size_bytes(df)
     return sz > thr * margin if sz >= 0 else False
+
+
+def checkpoint_profiled(df: DataFrame, aggs: Sequence[str]) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` that also returns the
+    aggregates ``aggs`` (SQL text, each ``<expr> AS <name>``) over the
+    rows it stores, as ``(stored, {name: value})``.
+
+    The aggregates ride the checkpoint as ONE observed ``struct``
+    (``DataFrame.observe``), so storing the rows and profiling them is
+    one Spark job, not a checkpoint plus a separate aggregate that
+    re-runs the plan. One struct, not one metric per aggregate, keeps
+    the JVM round trips flat in the aggregate count. The Observation
+    is filled when the checkpoint returns, also for zero rows or zero
+    partitions (``count`` is 0, ``sum`` NULL); a checkpoint that fails
+    raises before ``get`` could wait."""
+    obs = Observation()
+    stored = df.observe(obs, F.expr(f"struct({', '.join(aggs)}) AS p"))
+    stored = stored.localCheckpoint(eager=True)
+    return stored, obs.get["p"].asDict()
 
 
 def qcol(name: str) -> Column:

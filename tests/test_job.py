@@ -124,6 +124,50 @@ def test_run_batch_tables_are_materialized_once(spark, tmp_path):
         assert "csv" not in plan.lower(), (table, plan)
 
 
+AMAZON_COLUMNS = [
+    "order_id", "date", "status", "fulfillment", "sales_channel",
+    "ship_service_level", "sku", "category", "size", "asin", "courier_status",
+    "quantity", "amount", "ship_city", "ship_state", "ship_postal_code",
+    "ship_country", "b2b",
+]
+
+
+def test_run_batch_on_reports_without_surviving_rows(spark, tmp_path):
+    """A header-only drop and a drop whose every row is filtered as
+    mostly empty load every table with no rows and no error: each
+    route's profiled checkpoint stores zero rows, its gates stay NULL,
+    so no coercion applies and no column is dropped."""
+    intl_header = "index,DATE,Months,CUSTOMER,Style,SKU,Size,PCS,RATE,GROSS AMT"
+    sale_header = "index,SKU Code,Design No.,Stock,Category,Size,Color"
+
+    def report(header, empty_rows):
+        blank = "," * header.count(",")
+        return "\n".join([header] + [f"{i}{blank}" for i in range(empty_rows)]) + "\n"
+
+    for empty_rows in (0, 5):
+        raw = tmp_path / f"raw_{empty_rows}"
+        raw.mkdir()
+        for name, header in (
+            ("Amazon Sale Report", AMAZON_HEADER),
+            ("Sale Report", sale_header),
+            ("International Sale Report", intl_header),
+        ):
+            (raw / f"{name}_2022-05-01_00-00-00.csv").write_text(report(header, empty_rows))
+        errors: dict[str, str] = {}
+        results = run_batch(spark, str(raw), errors=errors)
+        assert errors == {}
+        assert {t: df.columns for t, df in results.items()} == {
+            "amazon_sale": AMAZON_COLUMNS,
+            "amazon_sale_version": AMAZON_COLUMNS,
+            "sale_report": ["sku_code", "design_no", "stock", "category", "size", "color"],
+            "international_sale": [
+                "customer", "date", "months", "style", "sku", "pcs", "rate",
+                "gross_amount", "size", "stock", "data_source", "loaded_at",
+            ],
+        }
+        assert {t: df.count() for t, df in results.items()} == dict.fromkeys(results, 0)
+
+
 def test_international_csv_and_jdbc_load_hold_the_same_rows(spark, tmp_path):
     """The CSV sink and a JDBC load of the returned table hold identical
     rows, ``loaded_at`` included: ``current_timestamp()`` is evaluated

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kaggle_ecommerce_etl_spark.normalize import (
@@ -173,17 +174,78 @@ def test_transform_py4j_round_trip_budget(spark):
     assert calls[0] <= 160, calls[0]
 
 
-def test_column_profile_is_one_aggregate_job(spark, count_jobs):
-    """Every gate of every column comes from ONE aggregation: the same
-    job count as a bare ``count(1)`` over the frame (AQE submits the
-    aggregate's map stage as a job of its own)."""
-    from kaggle_ecommerce_etl_spark.normalize.profile import column_profile
-
+def test_transform_runs_one_job_its_checkpoint(spark, count_jobs):
+    """Every gate of every column is observed on the one eager
+    checkpoint that stores the input: building ``transform`` runs
+    exactly one Spark job, and the projection it returns reads the
+    stored rows, not the input plan."""
     df = _messy_wide_frame(spark)
-    baseline = count_jobs(
-        "profile-baseline", lambda: df.selectExpr("count(1)").collect()
+    out = []
+    assert count_jobs("transform-checkpoint", lambda: out.append(transform(df))) == 1
+    plan = out[0]._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan and "Range" not in plan, plan
+
+
+def _within(seconds, fn):
+    """``fn()``'s result, run on a thread that must finish within
+    ``seconds``: an Observation that is never filled would block
+    ``get`` forever instead of failing."""
+    import threading
+
+    box = {}
+
+    def run():
+        try:
+            box["value"] = fn()
+        except Exception as e:  # noqa: BLE001 — re-raised below
+            box["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), "the observed checkpoint did not return"
+    if "error" in box:
+        raise box["error"]
+    return box["value"]
+
+
+def test_observed_checkpoint_fills_on_empty_input(spark, tmp_path):
+    """Zero rows and zero partitions still fill the Observation:
+    ``count`` is 0 and ``sum`` NULL, whatever the empty input's shape."""
+    from kaggle_ecommerce_etl_spark.util import checkpoint_profiled
+
+    header_only = tmp_path / "header_only.csv"
+    header_only.write_text("a,b\n")
+    empties = {
+        "range0": spark.range(0),
+        "limit0": spark.range(10).limit(0),
+        "header_only_csv": spark.read.option("header", True).csv(str(header_only)),
+        "empty_dedup": spark.range(0).dropDuplicates(),
+    }
+    for name, df in empties.items():
+        stored, got = _within(
+            120, lambda: checkpoint_profiled(df, ["count(1) AS n", "sum(1) AS s"])
+        )
+        assert got == {"n": 0, "s": None}, name
+        assert stored.count() == 0, name
+
+
+def test_transform_raises_on_a_failing_row(spark):
+    """A row that fails at run time fails the checkpoint, so
+    ``transform`` raises instead of waiting on an unfilled Observation."""
+    df = spark.range(50).selectExpr(
+        "CASE WHEN id = 37 THEN raise_error('bad row') ELSE CAST(id AS STRING) END AS v"
     )
-    assert count_jobs("profile-all-gates", lambda: column_profile(df)) == baseline
+    with pytest.raises(Exception, match="bad row"):
+        _within(120, lambda: transform(df))
+
+
+def test_profile_query_construction_jobs(construction_jobs):
+    """Building the profile-gated registry queries: ``parse_gate`` runs
+    only ``transform``'s checkpoint, ``drop_allnull_cols`` one aggregate
+    (AQE runs its map stage as a job of its own)."""
+    got = {name: construction_jobs(name) for name in ("parse_gate", "drop_allnull_cols")}
+    assert got == {"parse_gate": 1, "drop_allnull_cols": 2}
 
 
 def test_column_helpers_match_frame_rules(spark):

@@ -70,10 +70,10 @@ def test_pipeline_international_parts(spark, sf_dir):
 #: construction jobs of a rebuild at sf0.001, once the raw report CSV
 #: is published (writing it takes 2 jobs more)
 RAW_REPORT_REBUILD_JOBS = {
-    "pipeline_sale": 3,
-    "pipeline_amazon_clean": 3,
-    "pipeline_amazon_flagged": 3,
-    "pipeline_international": 6,
+    "pipeline_sale": 2,
+    "pipeline_amazon_clean": 2,
+    "pipeline_amazon_flagged": 2,
+    "pipeline_international": 4,
 }
 
 

@@ -220,11 +220,11 @@ def test_similarity_construction_jobs(construction_jobs):
         "ann_ivf_topk": 0,
         "embedding_neardup_pairs": 1,
         "embedding_neardup_lsh": 1,
-        "semantic_dedup_keep": 5,
-        "semantic_dedup_auto": 5,
+        "semantic_dedup_keep": 3,
+        "semantic_dedup_auto": 3,
         "lsh_candidate_pairs": 2,
-        "dup_clusters": 8,
-        "corpus_pipeline": 8,
+        "dup_clusters": 6,
+        "corpus_pipeline": 6,
     }
     got = {name: construction_jobs(name) for name in pins}
     assert got == pins
